@@ -64,8 +64,11 @@ def ingest_wide_matrix(
     out[id_col] = out[id_col].astype(str)
     for t in terms:
         # nullable Int64 keeps NaN-bearing columns integral (plain astype
-        # would round-trip through float and change values > 2^53)
-        out[t] = pd.array(out[t], dtype="Int64")
+        # would round-trip through float and change values > 2^53), handed
+        # over as Python ints with None for NA: the non-Arrow
+        # createDataFrame rejects the float a NaN-bearing column holds, and
+        # both paths accept these as LongType
+        out[t] = pd.array(out[t], dtype="Int64").to_numpy(dtype=object, na_value=None)
     return spark.createDataFrame(out, schema=wide_matrix_schema(terms, id_col))
 
 
@@ -77,10 +80,15 @@ def run_trends_ingest(
     terms: tuple[str, ...] = DEFAULT_TERMS,
 ) -> DataFrame:
     """Fetch-to-ranked composition: the reference DAG's extract->transform
-    chain (W:36-112) with the extract already in hand."""
+    chain (W:36-112) with the extract already in hand.
+
+    The matrix lives on the driver and has one row per country (~250 by
+    construction), so it is coalesced to ONE partition. The melt keeps that
+    partitioning, which satisfies every per-country window of the pipeline:
+    the week plans with no exchange and runs as a single Spark job."""
     from ..operators.trends import trends_pipeline
 
-    wide = ingest_wide_matrix(spark, pdf, terms)
+    wide = ingest_wide_matrix(spark, pdf, terms).coalesce(1)
     return trends_pipeline(wide, week_start, week_end, terms)
 
 

@@ -7,9 +7,9 @@ Reference parity (SURVEY.md §2 rows 4-5):
 - create-table-if-absent with declared schema -> ``...py:130-145``
   (``client.get_table`` probe + ``SchemaField`` list)
 
-Spark-first mapping: ``spark.catalog.tableExists`` + ``saveAsTable`` handles
-both in one call path; ``mode("append")`` creates the table with the
-DataFrame's schema when missing, exactly the reference's net behavior. The
+Spark-first mapping: ``saveAsTable`` in ``mode("append")`` handles both in one
+call, with no exists-probe: it creates the table with the DataFrame's schema
+when missing, exactly the reference's net behavior. The
 partitioned writer is the 100 TB discipline the reference lacks: partition by
 a low-cardinality date/key column so downstream reads get partition pruning,
 and cap file sizes so a 1000-executor scan parallelizes.
@@ -25,10 +25,7 @@ def append_to_table(spark: SparkSession, df: DataFrame, table: str) -> None:
     schema) if absent — the reference's create-if-missing + WRITE_APPEND in
     one declarative call. Blocking, like ``job.result()``."""
     # mode("append") on a missing table creates it; on an existing table it
-    # schema-checks and appends. No explicit exists-probe needed, but we keep
-    # one so callers can observe the same two-phase semantics as the
-    # reference when they care (e.g. logging "created" vs "appended").
-    _ = spark.catalog.tableExists(table)
+    # schema-checks and appends, so no exists-probe is needed
     df.write.mode("append").saveAsTable(table)
 
 

@@ -107,6 +107,16 @@ def test_partial_country_kept(spark):
     assert kept.count() == 2
 
 
+def test_null_country_dropped(spark):
+    # the reference's groupby drops a NaN country, so it never reaches the
+    # keep-list (W:76-85)
+    wide = spark.createDataFrame(
+        [(None, 1, 2), ("A", 1, 2)], "country string, vpn long, hack long"
+    )
+    out = trends.trends_pipeline(wide, *WEEK, terms=("vpn", "hack"))
+    assert {r.country for r in out.collect()} == {"A"}
+
+
 def test_ingest_wide_matrix_from_pytrends_shape(spark):
     """The live-ingestion seam (reference W:36-38 analog): a pandas frame
     in the raw interest_by_region shape — countries in a named index, an
@@ -158,3 +168,140 @@ def test_ingest_wide_matrix_missing_term_raises(spark):
     pdf = pd.DataFrame({"country": ["X"], "vpn": [1]})
     with _pytest.raises(ValueError, match="missing term columns"):
         ingest_wide_matrix(spark, pdf)
+
+
+def test_ingest_wide_matrix_with_arrow_off(spark):
+    """The non-Arrow createDataFrame path takes the same NaN-bearing
+    pytrends matrix: NaN becomes NULL and the other cells stay integral."""
+    import pandas as pd
+
+    from data_engineer_interview_task_spark.sources import ingest_wide_matrix
+
+    pdf = pd.DataFrame(
+        {t: [47.0, float("nan")] for t in trends.DEFAULT_TERMS},
+        index=pd.Index(["A", "B"], name="geoName"),
+    )
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        rows = sorted(ingest_wide_matrix(spark, pdf).collect())
+    finally:
+        spark.conf.set(key, before)
+    assert [tuple(r) for r in rows] == [("A", 47, 47, 47, 47, 47), ("B",) + (None,) * 5]
+
+
+# -- differential test against a pandas twin of W:70-112 ----------------------
+
+TERMS = trends.DEFAULT_TERMS
+
+
+def _pytrends_matrix(seed: int, n: int = 60):
+    """A pytrends-shaped ``interest_by_region()`` matrix (countries in a
+    ``geoName`` index, float columns where a cell is NaN) with the edge
+    rows of the same-interest rule appended."""
+    import numpy as np
+    import pandas as pd
+
+    rng = np.random.default_rng(seed)
+    vals = rng.integers(0, 101, size=(n, len(TERMS))).astype(float)
+    same = rng.random(n) < 0.15
+    vals[same] = rng.integers(0, 101, size=(int(same.sum()), 1))
+    for i in np.flatnonzero(~same & (rng.random(n) < 0.3)):
+        a, b = rng.choice(len(TERMS), 2, replace=False)
+        vals[i, b] = vals[i, a]
+    vals[rng.random(vals.shape) < 0.05] = np.nan
+    nan = float("nan")
+    edge = [
+        ("AllNaN", [nan] * 5),  # one NULL group of 5 terms: dropped
+        ("NaNPlusFourSame", [nan, 7, 7, 7, 7]),  # groups of 1 and 4: kept
+        ("Dup", [3, 3, 3, 3, 3]),  # duplicate country rows: kept, the
+        ("Dup", [3, 9, 3, 3, 3]),  # first row's 3-group has 4 terms
+        ("DupSame", [5] * 5),  # duplicate all-same rows: dropped
+        ("DupSame", [5] * 5),
+    ]
+    countries = [f"C{i:03d}" for i in range(n)] + [c for c, _ in edge]
+    vals = np.vstack([vals, [v for _, v in edge]])
+    return pd.DataFrame(vals, index=pd.Index(countries, name="geoName"), columns=list(TERMS))
+
+
+def _melted(pdf, terms=TERMS):
+    long = (
+        pdf[list(terms)]
+        .reset_index()
+        .melt(id_vars="geoName", var_name="search_term", value_name="interest")
+        .rename(columns={"geoName": "country"})
+    )
+    long["interest"] = long["interest"].astype("Int64")
+    long["week_start"], long["week_end"] = WEEK
+    return long
+
+
+def _pandas_pipeline(long, n_terms: int = 5):
+    """W:70-112 in pandas: keep a country when one of its (country,
+    interest) groups has fewer than ``n_terms`` distinct terms (a NaN
+    interest is a group, as Spark's NULL group), then the W:100-103 sort and
+    ``rank(method='first')``. NaN interests rank last, as the engine's
+    ``interest DESC`` puts NULLs last."""
+    distinct = long.groupby(["country", "interest"], dropna=False).search_term.nunique()
+    keep = distinct[distinct < n_terms].index.get_level_values("country").unique()
+    out = long[long.country.isin(keep)].copy()
+    out["sort_priority"] = (out.search_term != "vpn").astype(int)
+    out = out.sort_values(
+        ["country", "week_start", "interest", "sort_priority", "search_term"],
+        ascending=[True, True, False, False, True],
+    )
+    out["ranking"] = (
+        out.groupby(["country", "week_start"])
+        .interest.rank(method="first", ascending=False, na_option="bottom")
+        .astype("int32")
+    )
+    return out
+
+
+def _canonical(df):
+    cols = ["country", "week_start", "week_end", "search_term", "interest", "ranking"]
+    df = df[cols].astype({"interest": "Int64", "ranking": "int32"})
+    return df.sort_values(cols, na_position="first").reset_index(drop=True)
+
+
+@pytest.mark.parametrize("seed", [0, 1, 2])
+@pytest.mark.parametrize("path", ["ingest", "shuffled"])
+def test_pipeline_matches_pandas_twin(spark, seed, path):
+    """The engine's rows equal the pandas twin's on seeded matrices, on the
+    single-partition ingest path and on a multi-partition input, where the
+    per-country windows run after a hash exchange."""
+    from pandas.testing import assert_frame_equal
+
+    from data_engineer_interview_task_spark.sources import ingest_wide_matrix, run_trends_ingest
+
+    pdf = _pytrends_matrix(seed)
+    if path == "ingest":
+        out = run_trends_ingest(spark, pdf, *WEEK)
+    else:
+        wide = ingest_wide_matrix(spark, pdf).repartition(3)
+        out = trends.trends_pipeline(wide, *WEEK)
+    expected = _pandas_pipeline(_melted(pdf))
+    assert {"AllNaN", "DupSame"}.isdisjoint(expected.country)
+    assert {"NaNPlusFourSame", "Dup"} <= set(expected.country)
+    assert_frame_equal(_canonical(out.toPandas()), _canonical(expected))
+
+
+def test_partial_country_matches_pandas_twin(spark):
+    """Fewer than n_terms term rows per country (the
+    ``test_partial_country_kept`` case): every value-group is short of
+    n_terms distinct terms, so every country is kept."""
+    import pandas as pd
+    from pandas.testing import assert_frame_equal
+
+    terms = ("vpn", "hack")
+    pdf = pd.DataFrame(
+        {"vpn": [3, 4, 8], "hack": [3, 6, 8]},
+        index=pd.Index(["OnlyTwo", "Other", "Same"], name="geoName"),
+    )
+    wide = spark.createDataFrame(pdf.rename_axis("country").reset_index())
+    long_df = trends.transform_data(wide, *WEEK, terms=terms)
+    out = trends.filter_same_interest_countries(trends.rank_search_terms(long_df), n_terms=5)
+    expected = _pandas_pipeline(_melted(pdf, terms), n_terms=5)
+    assert set(expected.country) == {"OnlyTwo", "Other", "Same"}
+    assert_frame_equal(_canonical(out.toPandas()), _canonical(expected))
