@@ -153,14 +153,15 @@ def run_tick_stream_rollup_once(spark: SparkSession, work_dir: str):
 
     from pyspark.sql import functions as F
 
-    from ..streaming.util import drain_memory_sink, state_partitions
+    from ..streaming.util import (
+        drain_memory_sink,
+        shuffle_partitions,
+        state_partitions,
+    )
 
     register_tick_stream_source(spark)
     sink = f"mem_ticks_{uuid.uuid4().hex[:8]}"
-    conf_key = "spark.sql.shuffle.partitions"
-    prior = spark.conf.get(conf_key)
-    spark.conf.set(conf_key, state_partitions(spark))
-    try:
+    with shuffle_partitions(spark, state_partitions(spark)):
         stream = spark.readStream.format("tick_stream").load()
         agg = stream.groupBy("page").agg(
             F.count(F.lit(1)).cast("long").alias("n_rows"),
@@ -178,8 +179,6 @@ def run_tick_stream_rollup_once(spark: SparkSession, work_dir: str):
         q.processAllAvailable()
         q.stop()
         q.awaitTermination()
-    finally:
-        spark.conf.set(conf_key, prior)
     return drain_memory_sink(spark, sink)
 
 
@@ -200,15 +199,12 @@ def run_tick_stream_restart_once(spark: SparkSession, work_dir: str):
     hash-mismatches, not just row-counts."""
     from pyspark.sql import functions as F
 
-    from ..streaming.util import state_partitions
+    from ..streaming.util import shuffle_partitions, state_partitions
 
     register_tick_stream_source(spark)
     out = f"{work_dir}/out"
     ckpt = f"{work_dir}/ckpt"
-    conf_key = "spark.sql.shuffle.partitions"
-    prior = spark.conf.get(conf_key)
-    spark.conf.set(conf_key, state_partitions(spark))
-    try:
+    with shuffle_partitions(spark, state_partitions(spark)):
         for pages in (3, 6):
             q = (
                 spark.readStream.format("tick_stream")
@@ -233,5 +229,3 @@ def run_tick_stream_restart_once(spark: SparkSession, work_dir: str):
                 F.max("v").cast("long").alias("max_v"),
             )
         )
-    finally:
-        spark.conf.set(conf_key, prior)

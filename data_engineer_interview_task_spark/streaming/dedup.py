@@ -16,13 +16,11 @@ oracle-checkable — rare for a streaming op.
 
 from __future__ import annotations
 
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 
 from ..plans import prep_session
 from .weekly import EVENTS_SCHEMA
-from .util import drain_memory_sink, staged_events, state_partitions
+from .util import run_to_memory, staged_events, state_partitions
 
 
 def first_events_stream(
@@ -46,26 +44,13 @@ def run_first_events_once(
     ``run_weekly_rollup_once``)."""
     prep_session(spark)
     src = staged_events(spark, sf_dir, "plain")
-    sink = f"mem_firstev_{uuid.uuid4().hex[:8]}"
-    # r13: volume-derived state-store partition window (A/B at sf0.1:
-    # 1.9s at the session's 32 partitions -> 0.8s, identical rows)
-    conf_key = "spark.sql.shuffle.partitions"
-    prior = spark.conf.get(conf_key)
-    spark.conf.set(conf_key, state_partitions(spark, src))
-    try:
-        q = (
-            first_events_stream(spark, src)
-            .writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .option("checkpointLocation", f"{work_dir}/ckpt_{sink}")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set(conf_key, prior)
-    return drain_memory_sink(spark, sink)
+    return run_to_memory(
+        spark,
+        first_events_stream(spark, src),
+        work_dir,
+        output_mode="append",
+        partitions=state_partitions(spark, src),
+    )
 
 
 def first_events_stream_bounded(
@@ -101,26 +86,13 @@ def run_first_events_bounded_once(
     ``run_first_events_once``)."""
     prep_session(spark)
     src = staged_events(spark, sf_dir, "plain")
-    sink = f"mem_firstev_wm_{uuid.uuid4().hex[:8]}"
-    # r13: volume-derived state-store partition window (the
-    # run_first_events_once A/B applies — same single-store shape)
-    conf_key = "spark.sql.shuffle.partitions"
-    prior = spark.conf.get(conf_key)
-    spark.conf.set(conf_key, state_partitions(spark, src))
-    try:
-        q = (
-            first_events_stream_bounded(spark, src, watermark)
-            .writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .option("checkpointLocation", f"{work_dir}/ckpt_{sink}")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set(conf_key, prior)
-    return drain_memory_sink(spark, sink)
+    return run_to_memory(
+        spark,
+        first_events_stream_bounded(spark, src, watermark),
+        work_dir,
+        output_mode="append",
+        partitions=state_partitions(spark, src),
+    )
 
 
 def dedup_then_rollup_stream(
@@ -172,24 +144,10 @@ def run_dedup_then_rollup_once(
     """availableNow harness (complete mode -> every window emitted)."""
     prep_session(spark)
     src = staged_events(spark, sf_dir, "plain")
-    sink = f"mem_ddrl_{uuid.uuid4().hex[:8]}"
-    # r12 opt: state-store partition conf window (shared
-    # util.state_partitions — volume-derived, r13; r12 A/B in OPTIMIZATION_r12.md) —
-    # opens AFTER the last read_table, checkpoint created inside it
-    conf_key = "spark.sql.shuffle.partitions"
-    prior = spark.conf.get(conf_key)
-    spark.conf.set(conf_key, state_partitions(spark, src))
-    try:
-        q = (
-            dedup_then_rollup_stream(spark, src)
-            .writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .option("checkpointLocation", f"{work_dir}/ckpt_{sink}")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set(conf_key, prior)
-    return drain_memory_sink(spark, sink)
+    return run_to_memory(
+        spark,
+        dedup_then_rollup_stream(spark, src),
+        work_dir,
+        output_mode="complete",
+        partitions=state_partitions(spark, src),
+    )

@@ -27,7 +27,12 @@ from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from ..plans import prep_session
 from ..sources import read_table
-from .util import bump_new_files_mtime, snapshot_parquet_files
+from .util import (
+    bump_new_files_mtime,
+    key_lock,
+    snapshot_parquet_files,
+    staged_custom,
+)
 
 DOCS_SCHEMA = StructType(
     [
@@ -125,12 +130,11 @@ def run_dhash_index_maintenance_once(
     (the driver's correctness gate) still exercises the full loop, and
     the old per-call append bug (repeats re-fed the corpus as new
     batches and returned duplicated rows when callers shared a
-    work_dir) is gone — pinned by the r13 idempotence test. The
-    ``work_dir`` parameter is kept for the harness signature contract
-    (unused)."""
+    work_dir) is gone — pinned by the idempotence test. Concurrent
+    callers share that checkpoint, so the stream pass runs under a lock
+    per feed. The ``work_dir`` parameter is kept for the harness
+    signature contract (unused)."""
     del work_dir
-    from .util import staged_custom
-
     src = staged_custom(
         spark,
         sf_dir,
@@ -139,5 +143,6 @@ def run_dhash_index_maintenance_once(
         input_table="documents",
     )
     index_dir = f"{src}_index"
-    run_dhash_index_stream(spark, src, index_dir, f"{src}_ckpt")
+    with key_lock(("dhash_stream", src)):
+        run_dhash_index_stream(spark, src, index_dir, f"{src}_ckpt")
     return read_dhash_index(spark, index_dir)

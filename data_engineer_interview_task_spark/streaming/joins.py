@@ -6,17 +6,74 @@ condition bound that state, which is what lets it run forever.
 
 from __future__ import annotations
 
-import uuid
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans import prep_session
 from .weekly import EVENTS_SCHEMA
-from .util import (
-    drain_memory_sink,
-    staged_events,
-    state_partitions,
+from .util import run_to_memory, staged_events, state_partitions
+
+#: side column -> events column it is projected from
+_SIDE_SOURCES = {
+    "c_user": "user_id",
+    "click_id": "event_id",
+    "click_ts": "ts",
+    "p_user": "user_id",
+    "purchase_id": "event_id",
+    "purchase_ts": "ts",
+    "purchase_value": "value",
+}
+
+
+def _click_purchase_sides(
+    spark: SparkSession,
+    source_dir: str,
+    within: str,
+    watermark: str,
+    max_files_per_trigger: int | None,
+    clicks: tuple[str, ...] = ("c_user", "click_id", "click_ts"),
+    purchases: tuple[str, ...] = (
+        "p_user",
+        "purchase_id",
+        "purchase_ts",
+        "purchase_value",
+    ),
+) -> tuple[DataFrame, DataFrame, Column]:
+    """The two watermarked sides of every click→purchase join, projected
+    to the named ``clicks`` / ``purchases`` columns, plus the join
+    condition: same user, purchase strictly after the click and at most
+    ``within`` later. The time range is what lets Spark evict buffered
+    rows once the other side's watermark passes their window."""
+    reader = spark.readStream.schema(EVENTS_SCHEMA)
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    src = reader.parquet(source_dir)
+
+    def side(event_type: str, cols: tuple[str, ...], ts: str) -> DataFrame:
+        return (
+            src.filter(F.col("event_type") == event_type)
+            .select(*(F.col(_SIDE_SOURCES[c]).alias(c) for c in cols))
+            .withWatermark(ts, watermark)
+        )
+
+    cond = (
+        (F.col("c_user") == F.col("p_user"))
+        & (F.col("purchase_ts") > F.col("click_ts"))
+        & (F.col("purchase_ts") <= F.col("click_ts") + F.expr(f"INTERVAL {within}"))
+    )
+    return (
+        side("click", clicks, "click_ts"),
+        side("purchase", purchases, "purchase_ts"),
+        cond,
+    )
+
+
+_PAIR_COLUMNS = (
+    "click_id",
+    "purchase_id",
+    "click_ts",
+    "purchase_ts",
+    "purchase_value",
 )
 
 
@@ -33,38 +90,11 @@ def click_purchase_stream_join(
     range, so Spark evicts buffered rows once the other side's watermark
     passes their window — state is O(events within the horizon), not
     O(stream)."""
-    src = spark.readStream.schema(EVENTS_SCHEMA).parquet(source_dir)
-    clicks = (
-        src.filter(F.col("event_type") == "click")
-        .select(
-            F.col("user_id").alias("c_user"),
-            F.col("event_id").alias("click_id"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", watermark)
+    clicks, purchases, cond = _click_purchase_sides(
+        spark, source_dir, within, watermark, None
     )
-    purchases = (
-        src.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("p_user"),
-            F.col("event_id").alias("purchase_id"),
-            F.col("ts").alias("purchase_ts"),
-            F.col("value").alias("purchase_value"),
-        )
-        .withWatermark("purchase_ts", watermark)
-    )
-    return clicks.join(
-        purchases,
-        (F.col("c_user") == F.col("p_user"))
-        & (F.col("purchase_ts") > F.col("click_ts"))
-        & (F.col("purchase_ts") <= F.col("click_ts") + F.expr(f"INTERVAL {within}")),
-    ).select(
-        F.col("c_user").alias("user_id"),
-        "click_id",
-        "purchase_id",
-        "click_ts",
-        "purchase_ts",
-        "purchase_value",
+    return clicks.join(purchases, cond).select(
+        F.col("c_user").alias("user_id"), *_PAIR_COLUMNS
     )
 
 
@@ -79,24 +109,13 @@ def run_click_purchase_join_once(
     partitions → 2.2s sized to state volume, identical rows)."""
     prep_session(spark)
     src = staged_events(spark, sf_dir, "plain")
-    sink = f"mem_ssj_{uuid.uuid4().hex[:8]}"
-    conf_key = "spark.sql.shuffle.partitions"
-    prior = spark.conf.get(conf_key)
-    spark.conf.set(conf_key, state_partitions(spark, src))
-    try:
-        q = (
-            click_purchase_stream_join(spark, src)
-            .writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .option("checkpointLocation", f"{work_dir}/ckpt_{sink}")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set(conf_key, prior)
-    return drain_memory_sink(spark, sink)
+    return run_to_memory(
+        spark,
+        click_purchase_stream_join(spark, src),
+        work_dir,
+        output_mode="append",
+        partitions=state_partitions(spark, src),
+    )
 
 
 def click_purchase_left_join(
@@ -116,60 +135,15 @@ def click_purchase_left_join(
     The run harness appends far-future flush rows so that proof arrives
     for every real click before the availableNow query drains (see
     ``run_click_purchase_left_join_once``)."""
-    reader = spark.readStream.schema(EVENTS_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    src = reader.parquet(source_dir)
-    clicks = (
-        src.filter(F.col("event_type") == "click")
-        .select(
-            F.col("user_id").alias("c_user"),
-            F.col("event_id").alias("click_id"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", watermark)
+    clicks, purchases, cond = _click_purchase_sides(
+        spark, source_dir, within, watermark, max_files_per_trigger
     )
-    purchases = (
-        src.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("p_user"),
-            F.col("event_id").alias("purchase_id"),
-            F.col("ts").alias("purchase_ts"),
-            F.col("value").alias("purchase_value"),
-        )
-        .withWatermark("purchase_ts", watermark)
-    )
-    return clicks.join(
-        purchases,
-        (F.col("c_user") == F.col("p_user"))
-        & (F.col("purchase_ts") > F.col("click_ts"))
-        & (F.col("purchase_ts") <= F.col("click_ts") + F.expr(f"INTERVAL {within}")),
-        "leftOuter",
-    ).select(
-        F.col("c_user").alias("user_id"),
-        "click_id",
-        "purchase_id",
-        "click_ts",
-        "purchase_ts",
-        "purchase_value",
+    return clicks.join(purchases, cond, "leftOuter").select(
+        F.col("c_user").alias("user_id"), *_PAIR_COLUMNS
     )
 
 
-# State-store partition sizing for the join harnesses: an outer
-# stream-stream join maintains FOUR state stores per shuffle partition
-# (keyToNumValues + keyWithIndexToValue per side), and every micro-batch
-# pays each instance's snapshot/commit regardless of row count — at the
-# session's 32 shuffle partitions that is 128 commits per batch, ~3.5s
-# of fixed cost (measured at sf0.1: batches with FOUR input rows cost
-# the same as the 200k-row bulk batch). util.state_partitions derives
-# the count from the staged source volume (floor 2 at bench scale,
-# env-overridable, scaling with input at production volumes) — sized to
-# state volume, never to the batch side's CPU (VERDICT r5 item 6
-# profile; SCALE.md streaming block; r12 opt A/B in util.py; r13
-# volume-derived default per VERDICT r12 item 1).
-
-
-def _run_outer_join_once(spark, sf_dir, work_dir, builder, prefix) -> DataFrame:
+def _run_outer_join_once(spark, sf_dir, work_dir, builder) -> DataFrame:
     """Shared availableNow harness for the OUTER stream-stream joins,
     making the emission COMPLETE and therefore equal to the batch join
     (the oracle):
@@ -194,26 +168,13 @@ def _run_outer_join_once(spark, sf_dir, work_dir, builder, prefix) -> DataFrame:
     real-row set with one fewer micro-batch and one fewer tiny write."""
     prep_session(spark)
     src = staged_events(spark, sf_dir, "flushed")
-    sink = f"{prefix}_{uuid.uuid4().hex[:8]}"
-    # conf window AFTER the last read_table: the checkpoint is created
-    # fresh each run, so the reduced partition count binds this query only
-    conf_key = "spark.sql.shuffle.partitions"
-    prior = spark.conf.get(conf_key)
-    spark.conf.set(conf_key, state_partitions(spark, src))
-    try:
-        q = (
-            builder(spark, src, max_files_per_trigger=1)
-            .writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .option("checkpointLocation", f"{work_dir}/ckpt_{sink}")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set(conf_key, prior)
-    return drain_memory_sink(spark, sink).filter(F.col("user_id") >= 0)
+    return run_to_memory(
+        spark,
+        builder(spark, src, max_files_per_trigger=1),
+        work_dir,
+        output_mode="append",
+        partitions=state_partitions(spark, src),
+    ).filter(F.col("user_id") >= 0)
 
 
 def click_purchase_join_rollup(
@@ -229,41 +190,21 @@ def click_purchase_join_rollup(
     attribution-dashboard shape (join state + aggregation state in one
     lineage, watermark propagated through the join into the window
     eviction). Revenue sums in exact cents."""
-    reader = spark.readStream.schema(EVENTS_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    src = reader.parquet(source_dir)
-    clicks = (
-        src.filter(F.col("event_type") == "click")
-        .select(
-            F.col("user_id").alias("c_user"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", watermark)
-    )
-    purchases = (
-        src.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("purchase_ts"),
-            F.col("value").alias("purchase_value"),
-        )
-        .withWatermark("purchase_ts", watermark)
-    )
-    conv = clicks.join(
-        purchases,
-        (F.col("c_user") == F.col("p_user"))
-        & (F.col("purchase_ts") > F.col("click_ts"))
-        & (
-            F.col("purchase_ts")
-            <= F.col("click_ts") + F.expr(f"INTERVAL {within}")
-        ),
+    clicks, purchases, cond = _click_purchase_sides(
+        spark,
+        source_dir,
+        within,
+        watermark,
+        max_files_per_trigger,
+        clicks=("c_user", "click_ts"),
+        purchases=("p_user", "purchase_ts", "purchase_value"),
     )
     cents = (
         F.col("purchase_value").cast("decimal(18,2)") * 100
     ).cast("long")
     return (
-        conv.groupBy(F.window("click_ts", "1 day"))
+        clicks.join(purchases, cond)
+        .groupBy(F.window("click_ts", "1 day"))
         .agg(
             F.count(F.lit(1)).alias("n_conversions"),
             F.sum(cents).alias("revenue_cents"),
@@ -289,24 +230,13 @@ def run_click_purchase_join_rollup_once(
     watermark: the documented lesson)."""
     prep_session(spark)
     src = staged_events(spark, sf_dir, "flushed")
-    sink = f"mem_ssjr_{uuid.uuid4().hex[:8]}"
-    conf_key = "spark.sql.shuffle.partitions"
-    prior = spark.conf.get(conf_key)
-    spark.conf.set(conf_key, state_partitions(spark, src))
-    try:
-        q = (
-            click_purchase_join_rollup(spark, src, max_files_per_trigger=1)
-            .writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .option("checkpointLocation", f"{work_dir}/ckpt_{sink}")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set(conf_key, prior)
-    return drain_memory_sink(spark, sink)
+    return run_to_memory(
+        spark,
+        click_purchase_join_rollup(spark, src, max_files_per_trigger=1),
+        work_dir,
+        output_mode="append",
+        partitions=state_partitions(spark, src),
+    )
 
 
 def run_click_purchase_left_join_once(
@@ -314,9 +244,7 @@ def run_click_purchase_left_join_once(
 ) -> DataFrame:
     """availableNow harness for the LEFT OUTER stream-stream join — see
     :func:`_run_outer_join_once` for the flush/completeness protocol."""
-    return _run_outer_join_once(
-        spark, sf_dir, work_dir, click_purchase_left_join, "mem_ssloj"
-    )
+    return _run_outer_join_once(spark, sf_dir, work_dir, click_purchase_left_join)
 
 
 def click_purchase_full_join(
@@ -337,42 +265,12 @@ def click_purchase_full_join(
     then emits its NULL-extended row. Since the null side determines
     which id column survives, ``user_id`` is COALESCEd across sides.
     Same bounded-state argument, now on both buffers."""
-    reader = spark.readStream.schema(EVENTS_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    src = reader.parquet(source_dir)
-    clicks = (
-        src.filter(F.col("event_type") == "click")
-        .select(
-            F.col("user_id").alias("c_user"),
-            F.col("event_id").alias("click_id"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", watermark)
+    clicks, purchases, cond = _click_purchase_sides(
+        spark, source_dir, within, watermark, max_files_per_trigger
     )
-    purchases = (
-        src.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("p_user"),
-            F.col("event_id").alias("purchase_id"),
-            F.col("ts").alias("purchase_ts"),
-            F.col("value").alias("purchase_value"),
-        )
-        .withWatermark("purchase_ts", watermark)
-    )
-    return clicks.join(
-        purchases,
-        (F.col("c_user") == F.col("p_user"))
-        & (F.col("purchase_ts") > F.col("click_ts"))
-        & (F.col("purchase_ts") <= F.col("click_ts") + F.expr(f"INTERVAL {within}")),
-        "fullOuter",
-    ).select(
+    return clicks.join(purchases, cond, "fullOuter").select(
         F.coalesce(F.col("c_user"), F.col("p_user")).alias("user_id"),
-        "click_id",
-        "purchase_id",
-        "click_ts",
-        "purchase_ts",
-        "purchase_value",
+        *_PAIR_COLUMNS,
     )
 
 
@@ -381,9 +279,7 @@ def run_click_purchase_full_join_once(
 ) -> DataFrame:
     """availableNow harness for the FULL OUTER stream-stream join — see
     :func:`_run_outer_join_once` for the flush/completeness protocol."""
-    return _run_outer_join_once(
-        spark, sf_dir, work_dir, click_purchase_full_join, "mem_ssfoj"
-    )
+    return _run_outer_join_once(spark, sf_dir, work_dir, click_purchase_full_join)
 
 
 def stream_static_enrich(
@@ -441,18 +337,9 @@ def run_stream_static_enrich_once(
     (stateless — every stream row passes through once)."""
     prep_session(spark)
     src = staged_events(spark, sf_dir, "plain")
-    sink = f"mem_sse_{uuid.uuid4().hex[:8]}"
-    q = (
-        stream_static_enrich(spark, src, sf_dir)
-        .writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .option("checkpointLocation", f"{work_dir}/ckpt_{sink}")
-        .trigger(availableNow=True)
-        .start()
+    return run_to_memory(
+        spark, stream_static_enrich(spark, src, sf_dir), work_dir, output_mode="append"
     )
-    q.awaitTermination()
-    return drain_memory_sink(spark, sink)
 
 
 def click_purchase_semi_join(
@@ -473,31 +360,17 @@ def click_purchase_semi_join(
     family. Under the availableNow harness every purchase is seen, so the
     emitted set equals the batch EXISTS semi join exactly.
     """
-    src = spark.readStream.schema(EVENTS_SCHEMA).parquet(source_dir)
-    clicks = (
-        src.filter(F.col("event_type") == "click")
-        .select(
-            F.col("user_id").alias("c_user"),
-            F.col("event_id").alias("click_id"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", watermark)
+    clicks, purchases, cond = _click_purchase_sides(
+        spark,
+        source_dir,
+        within,
+        watermark,
+        None,
+        purchases=("p_user", "purchase_ts"),
     )
-    purchases = (
-        src.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", watermark)
+    return clicks.join(purchases, cond, "left_semi").select(
+        F.col("c_user").alias("user_id"), "click_id", "click_ts"
     )
-    return clicks.join(
-        purchases,
-        (F.col("c_user") == F.col("p_user"))
-        & (F.col("purchase_ts") > F.col("click_ts"))
-        & (F.col("purchase_ts") <= F.col("click_ts") + F.expr(f"INTERVAL {within}")),
-        "left_semi",
-    ).select(F.col("c_user").alias("user_id"), "click_id", "click_ts")
 
 
 def run_click_purchase_semi_join_once(
@@ -508,26 +381,13 @@ def run_click_purchase_semi_join_once(
     harnesses (``util.state_partitions``): a stream-stream join
     pays per-partition state snapshot/commit cost on EVERY micro-batch
     regardless of row count, and the semi join keeps the same four
-    instances per partition as the inner join — the conf window opens
-    AFTER the last ``read_table`` (whose ``prep_session`` would reset
-    it) and before the checkpoint is created."""
+    instances per partition as the inner join."""
     prep_session(spark)
     src = staged_events(spark, sf_dir, "plain")
-    sink = f"mem_sssj_{uuid.uuid4().hex[:8]}"
-    conf_key = "spark.sql.shuffle.partitions"
-    prior = spark.conf.get(conf_key)
-    spark.conf.set(conf_key, state_partitions(spark, src))
-    try:
-        q = (
-            click_purchase_semi_join(spark, src)
-            .writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .option("checkpointLocation", f"{work_dir}/ckpt_{sink}")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set(conf_key, prior)
-    return drain_memory_sink(spark, sink)
+    return run_to_memory(
+        spark,
+        click_purchase_semi_join(spark, src),
+        work_dir,
+        output_mode="append",
+        partitions=state_partitions(spark, src),
+    )

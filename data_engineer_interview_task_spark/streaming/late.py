@@ -47,13 +47,22 @@ never midnight.
 
 from __future__ import annotations
 
+import os
+import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans import prep_session
-from .util import bump_new_files_mtime, drain_memory_sink, snapshot_parquet_files, state_partitions
+from .util import (
+    bump_new_files_mtime,
+    run_to_memory,
+    shuffle_partitions,
+    snapshot_parquet_files,
+    staged_custom,
+    state_partitions,
+)
 from .weekly import EVENTS_SCHEMA
 
 #: calendar split: events at/after this land first (on-time), earlier
@@ -90,42 +99,57 @@ def daily_counts_stream(
     )
 
 
-#: per-(sf_dir) cached source layout — the 4-file arrival order is a
-#: pure function of the immutable corpus, so repeated driver/bench
-#: sweeps rebuild only the checkpoint, not the files (the graph
-#: edge-artifact pattern).
-_SRC_CACHE: dict[str, str] = {}
-
-
 def _late_source_dir(spark: SparkSession, sf_dir: str) -> str:
-    import tempfile
-
+    """The four-file arrival order of the module docstring, staged once
+    per corpus."""
     from ..sources import read_table
 
-    path = _SRC_CACHE.get(sf_dir)
-    if path is not None:
-        return path
-    events = read_table(spark, sf_dir, "events")
-    src = tempfile.mkdtemp(prefix="events_late_src_")
-    on_time = events.filter(F.col("ts") >= F.lit(SPLIT))
-    late = events.filter(F.col("ts") < F.lit(SPLIT))
-    on_time.repartition(1).write.mode("overwrite").parquet(src)
-    before = snapshot_parquet_files(src)
-    # empty spacer: the batch where the on-time watermark takes effect
-    on_time.limit(0).coalesce(1).write.mode("append").parquet(src)
-    bump_new_files_mtime(src, before)
-    before = snapshot_parquet_files(src)
-    late.repartition(1).write.mode("append").parquet(src)
-    bump_new_files_mtime(src, before)
-    before = snapshot_parquet_files(src)
+    def build(src: str) -> None:
+        events = read_table(spark, sf_dir, "events")
+        on_time = events.filter(F.col("ts") >= F.lit(SPLIT))
+        late = events.filter(F.col("ts") < F.lit(SPLIT))
+        on_time.repartition(1).write.parquet(src)
+        before = snapshot_parquet_files(src)
+        # empty spacer: the batch where the on-time watermark takes effect
+        on_time.limit(0).coalesce(1).write.mode("append").parquet(src)
+        bump_new_files_mtime(src, before)
+        before = snapshot_parquet_files(src)
+        late.repartition(1).write.mode("append").parquet(src)
+        bump_new_files_mtime(src, before)
+        before = snapshot_parquet_files(src)
+        _flush_row(spark, events).write.mode("append").parquet(src)
+        bump_new_files_mtime(src, before)
+
+    return staged_custom(spark, sf_dir, "events_late", build)
+
+
+def _flush_row(spark: SparkSession, events: DataFrame) -> DataFrame:
+    """The one-row sentinel at ``max(ts) + 24 days`` that pushes the final
+    watermark past every real day window."""
     max_ts = events.agg(F.max("ts")).collect()[0][0]
-    flush = spark.createDataFrame(
-        [(-1, max_ts, -1, "flush", 0.0, "{}")], schema=EVENTS_SCHEMA
-    ).withColumn("ts", F.col("ts") + F.expr("INTERVAL 24 DAYS"))
-    flush.coalesce(1).write.mode("append").parquet(src)
-    bump_new_files_mtime(src, before)
-    _SRC_CACHE[sf_dir] = src
-    return src
+    return (
+        spark.createDataFrame(
+            [(-1, max_ts, -1, "flush", 0.0, "{}")], schema=EVENTS_SCHEMA
+        )
+        .withColumn("ts", F.col("ts") + F.expr("INTERVAL 24 DAYS"))
+        .coalesce(1)
+    )
+
+
+def _audit(events: DataFrame, streamed: DataFrame) -> DataFrame:
+    """Left-join the streamed per-day counts onto the batch ground truth:
+    (day, n_total, n_streamed, n_dropped_late) for every event day, with
+    fully dropped days at n_streamed = 0."""
+    truth = events.groupBy(F.to_date("ts").alias("day")).agg(
+        F.count(F.lit(1)).alias("n_total")
+    )
+    n_streamed = F.coalesce(F.col("n_streamed"), F.lit(0))
+    return truth.join(streamed, "day", "left_outer").select(
+        "day",
+        F.col("n_total").cast("long").alias("n_total"),
+        n_streamed.cast("long").alias("n_streamed"),
+        (F.col("n_total") - n_streamed).cast("long").alias("n_dropped_late"),
+    )
 
 
 def run_late_data_audit_once(
@@ -142,46 +166,14 @@ def run_late_data_audit_once(
     prep_session(spark)
     events = read_table(spark, sf_dir, "events")
     src = _late_source_dir(spark, sf_dir)
-    sink = f"mem_late_{uuid.uuid4().hex[:8]}"
-    # five micro-batches of day-window-sized state: the per-batch state
-    # commit cost dominates at 32 shuffle partitions (the outer-join
-    # harness profile — 128 commits/batch of fixed cost); 8 partitions
-    # hold the ~30-row state trivially. Conf window opens AFTER the last
-    # read_table (its prep_session resets confs) and the checkpoint is
-    # created fresh inside it, so the reduced count binds this query only.
-    conf_key = "spark.sql.shuffle.partitions"
-    prior = spark.conf.get(conf_key)
-    spark.conf.set(conf_key, state_partitions(spark, src))
-    try:
-        q = (
-            daily_counts_stream(spark, src)
-            .writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .option("checkpointLocation", f"{work_dir}/ckpt_{sink}")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set(conf_key, prior)
-    streamed = drain_memory_sink(spark, sink)
-    truth = events.groupBy(F.to_date("ts").alias("day")).agg(
-        F.count(F.lit(1)).alias("n_total")
+    streamed = run_to_memory(
+        spark,
+        daily_counts_stream(spark, src),
+        work_dir,
+        output_mode="append",
+        partitions=state_partitions(spark, src),
     )
-    return (
-        truth.join(streamed, "day", "left_outer")
-        .select(
-            "day",
-            F.col("n_total").cast("long").alias("n_total"),
-            F.coalesce(F.col("n_streamed"), F.lit(0))
-            .cast("long")
-            .alias("n_streamed"),
-            (F.col("n_total") - F.coalesce(F.col("n_streamed"), F.lit(0)))
-            .cast("long")
-            .alias("n_dropped_late"),
-        )
-    )
+    return _audit(events, streamed)
 
 
 #: second calendar split for the INCREMENTAL audit: the late rows are
@@ -190,42 +182,30 @@ def run_late_data_audit_once(
 #: filtered against the watermark RESTORED from the checkpoint.
 INC_SPLIT = "2024-01-10"
 
-_INC_STAGE_CACHE: dict[str, str] = {}
-
 
 def _inc_stage_dir(spark: SparkSession, sf_dir: str) -> str:
     """The five arrival tranches as separate parquet dirs (a pure
-    function of the immutable corpus, cached per process): on-time,
+    function of the immutable corpus, staged once per corpus): on-time,
     spacer, late tranche A (days >= INC_SPLIT), late tranche B, flush
     sentinel. Each call of the audit hard-copies them into a fresh
     source dir in two phases, so the run-1/append/run-2 shape is
     reproduced per call without re-running the Spark writes."""
-    import tempfile
-
     from ..sources import read_table
 
-    path = _INC_STAGE_CACHE.get(sf_dir)
-    if path is not None:
-        return path
-    events = read_table(spark, sf_dir, "events")
-    base = tempfile.mkdtemp(prefix="events_inc_stage_")
-    on_time = events.filter(F.col("ts") >= F.lit(SPLIT))
-    on_time.repartition(1).write.parquet(f"{base}/t0")
-    on_time.limit(0).coalesce(1).write.parquet(f"{base}/t1")
-    events.filter(
-        (F.col("ts") < F.lit(SPLIT)) & (F.col("ts") >= F.lit(INC_SPLIT))
-    ).repartition(1).write.parquet(f"{base}/t2")
-    events.filter(F.col("ts") < F.lit(INC_SPLIT)).repartition(1).write.parquet(
-        f"{base}/t3"
-    )
-    max_ts = events.agg(F.max("ts")).collect()[0][0]
-    spark.createDataFrame(
-        [(-1, max_ts, -1, "flush", 0.0, "{}")], schema=EVENTS_SCHEMA
-    ).withColumn("ts", F.col("ts") + F.expr("INTERVAL 24 DAYS")).coalesce(
-        1
-    ).write.parquet(f"{base}/t4")
-    _INC_STAGE_CACHE[sf_dir] = base
-    return base
+    def build(base: str) -> None:
+        events = read_table(spark, sf_dir, "events")
+        on_time = events.filter(F.col("ts") >= F.lit(SPLIT))
+        on_time.repartition(1).write.parquet(f"{base}/t0")
+        on_time.limit(0).coalesce(1).write.parquet(f"{base}/t1")
+        events.filter(
+            (F.col("ts") < F.lit(SPLIT)) & (F.col("ts") >= F.lit(INC_SPLIT))
+        ).repartition(1).write.parquet(f"{base}/t2")
+        events.filter(F.col("ts") < F.lit(INC_SPLIT)).repartition(
+            1
+        ).write.parquet(f"{base}/t3")
+        _flush_row(spark, events).write.parquet(f"{base}/t4")
+
+    return staged_custom(spark, sf_dir, "events_inc_tranches", build)
 
 
 def _copy_tranches(stage: str, src: str, tranches, start_seq: int) -> None:
@@ -233,7 +213,6 @@ def _copy_tranches(stage: str, src: str, tranches, start_seq: int) -> None:
     with strictly increasing mtimes (the file source processes files in
     mtime order; equal mtimes are undefined — the EWMA lesson)."""
     import glob
-    import os
     import shutil
     import time
 
@@ -271,25 +250,21 @@ def run_incremental_late_audit(
     oracle SQL is reused verbatim — the incremental delivery must be
     indistinguishable from the single-run delivery, which is exactly
     the exactly-once promise being audited."""
-    import tempfile
-    import uuid as _uuid
-
     from ..sources import read_table
 
     prep_session(spark)
     events = read_table(spark, sf_dir, "events")
     stage = _inc_stage_dir(spark, sf_dir)
     src = tempfile.mkdtemp(prefix="events_inc_src_")
-    ckpt = f"{work_dir}/ckpt_inc_{_uuid.uuid4().hex[:8]}"
+    run_id = uuid.uuid4().hex[:8]
+    ckpt = f"{work_dir}/ckpt_inc_{run_id}"
     # the memory sink cannot recover a checkpoint; the FILE sink is the
     # recoverable (and production) choice — run 2 appends to the same
     # output dir under the same checkpoint, and the sink's commit log
     # keeps the emitted set exactly-once across the restart
-    out = f"{work_dir}/out_inc_{_uuid.uuid4().hex[:8]}"
-    conf_key = "spark.sql.shuffle.partitions"
-    prior = spark.conf.get(conf_key)
-    spark.conf.set(conf_key, state_partitions(spark, src))
-    try:
+    out = f"{work_dir}/out_inc_{run_id}"
+    # sized on the staged tranches: the volume both runs together feed
+    with shuffle_partitions(spark, state_partitions(spark, stage)):
         # run 1: on-time, spacer, late tranche A
         _copy_tranches(stage, src, ("t0", "t1", "t2"), 0)
         for run in range(2):
@@ -307,22 +282,8 @@ def run_incremental_late_audit(
                 # append the new tranche + flush, restart from the
                 # SAME checkpoint
                 _copy_tranches(stage, src, ("t3", "t4"), 100)
-    finally:
-        spark.conf.set(conf_key, prior)
     streamed = spark.read.schema("day date, n_streamed long").parquet(out)
-    truth = events.groupBy(F.to_date("ts").alias("day")).agg(
-        F.count(F.lit(1)).alias("n_total")
-    )
-    return truth.join(streamed, "day", "left_outer").select(
-        "day",
-        F.col("n_total").cast("long").alias("n_total"),
-        F.coalesce(F.col("n_streamed"), F.lit(0))
-        .cast("long")
-        .alias("n_streamed"),
-        (F.col("n_total") - F.coalesce(F.col("n_streamed"), F.lit(0)))
-        .cast("long")
-        .alias("n_dropped_late"),
-    )
+    return _audit(events, streamed)
 
 
 #: mid-DAY split for the update-mode replay: day 2024-01-20 straddles
@@ -330,29 +291,22 @@ def run_incremental_late_audit(
 #: — the delta semantics under test.
 UPDATE_SPLIT = "2024-01-20 12:00:00"
 
-_UPD_SRC_CACHE: dict[str, str] = {}
-
 
 def _update_source_dir(spark: SparkSession, sf_dir: str) -> str:
-    import tempfile
-
     from ..sources import read_table
 
-    path = _UPD_SRC_CACHE.get(sf_dir)
-    if path is not None:
-        return path
-    events = read_table(spark, sf_dir, "events")
-    src = tempfile.mkdtemp(prefix="events_upd_src_")
-    events.filter(F.col("ts") >= F.lit(UPDATE_SPLIT)).repartition(
-        1
-    ).write.mode("overwrite").parquet(src)
-    before = snapshot_parquet_files(src)
-    events.filter(F.col("ts") < F.lit(UPDATE_SPLIT)).repartition(
-        1
-    ).write.mode("append").parquet(src)
-    bump_new_files_mtime(src, before)
-    _UPD_SRC_CACHE[sf_dir] = src
-    return src
+    def build(src: str) -> None:
+        events = read_table(spark, sf_dir, "events")
+        events.filter(F.col("ts") >= F.lit(UPDATE_SPLIT)).repartition(
+            1
+        ).write.parquet(src)
+        before = snapshot_parquet_files(src)
+        events.filter(F.col("ts") < F.lit(UPDATE_SPLIT)).repartition(
+            1
+        ).write.mode("append").parquet(src)
+        bump_new_files_mtime(src, before)
+
+    return staged_custom(spark, sf_dir, "events_update_split", build)
 
 
 def run_update_mode_rollup_once(
@@ -391,22 +345,10 @@ def run_update_mode_rollup_once(
             F.col("window.start").cast("date").alias("day"), "n_events"
         )
     )
-    sink = f"mem_upd_{uuid.uuid4().hex[:8]}"
-    conf_key = "spark.sql.shuffle.partitions"
-    prior = spark.conf.get(conf_key)
-    spark.conf.set(conf_key, state_partitions(spark, src))
-    try:
-        q = (
-            counts.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("update")
-            .option("checkpointLocation", f"{work_dir}/ckpt_{sink}")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set(conf_key, prior)
-    return drain_memory_sink(spark, sink).select(
-        "day", F.col("n_events").cast("long").alias("n_events")
-    )
+    return run_to_memory(
+        spark,
+        counts,
+        work_dir,
+        output_mode="update",
+        partitions=state_partitions(spark, src),
+    ).select("day", F.col("n_events").cast("long").alias("n_events"))

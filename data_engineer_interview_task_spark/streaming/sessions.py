@@ -24,8 +24,6 @@ session must eventually emit: it adds an event-time timeout at
 
 from __future__ import annotations
 
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming.state import GroupStateTimeout
 from pyspark.sql.types import (
@@ -39,7 +37,7 @@ from pyspark.sql.types import (
 
 from ..plans import prep_session
 from .weekly import EVENTS_SCHEMA
-from .util import drain_memory_sink, staged_events
+from .util import run_to_memory, staged_events
 
 SESSION_SCHEMA = StructType(
     [
@@ -226,19 +224,12 @@ def run_sessionize_once(
     table once and return the emitted (closed) sessions as a batch frame."""
     prep_session(spark)
     src = staged_events(spark, sf_dir, "plain")
-    sink = f"mem_sessions_{uuid.uuid4().hex[:8]}"
-    q = (
-        sessionize_stream(spark, src, gap_minutes)
-        .writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .option("checkpointLocation", f"{work_dir}/ckpt_{sink}")
-        .trigger(availableNow=True)
-        .start()
+    return run_to_memory(
+        spark,
+        sessionize_stream(spark, src, gap_minutes),
+        work_dir,
+        output_mode="append",
     )
-    q.awaitTermination()
-    return drain_memory_sink(spark, sink)
-
 
 def session_window_stream(
     spark: SparkSession,
@@ -290,15 +281,9 @@ def run_session_window_once(
     watermark exceeds the fixture's 30-day span so no event is late)."""
     prep_session(spark)
     src = staged_events(spark, sf_dir, "plain")
-    sink = f"mem_swin_{uuid.uuid4().hex[:8]}"
-    q = (
-        session_window_stream(spark, src, gap_minutes)
-        .writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .option("checkpointLocation", f"{work_dir}/ckpt_{sink}")
-        .trigger(availableNow=True)
-        .start()
+    return run_to_memory(
+        spark,
+        session_window_stream(spark, src, gap_minutes),
+        work_dir,
+        output_mode="complete",
     )
-    q.awaitTermination()
-    return drain_memory_sink(spark, sink)

@@ -33,11 +33,11 @@ key across executors (RocksDB-backed in production).
 
 from __future__ import annotations
 
-import uuid
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import functions as F
 from pyspark.sql.streaming.stateful_processor import (
     StatefulProcessor,
     StatefulProcessorHandle,
@@ -50,7 +50,12 @@ from pyspark.sql.types import (
 )
 
 from ..plans import prep_session
-from .util import drain_memory_sink
+from .util import (
+    bump_new_files_mtime,
+    run_to_memory,
+    snapshot_parquet_files,
+    staged_custom,
+)
 
 #: emitted per (user, batch): running totals + the batch sequence number
 RUNNING_SCHEMA = StructType(
@@ -182,6 +187,44 @@ def running_user_stats_stream_gs(spark: SparkSession, source_dir: str) -> DataFr
     )
 
 
+def _staged_time_split(
+    spark: SparkSession, sf_dir: str, name: str, cols: tuple[str, ...]
+) -> str:
+    """The events table's ``cols`` staged as TWO files split at a time
+    cutoff, the later split strictly newer. With maxFilesPerTrigger=1 the
+    folds see two micro-batches in time order, so cross-batch state is
+    actually exercised. FileStreamSource orders files by modification
+    time, and two back-to-back writes can land with equal mtimes, so the
+    second split is mtime-bumped: the order-sensitive EWMA recurrence
+    depends on it."""
+    from ..sources import read_table
+
+    def build(path: str) -> None:
+        events = read_table(spark, sf_dir, "events")
+        cutoff = F.lit("2024-01-15").cast("timestamp")
+        events.filter(F.col("ts") < cutoff).select(*cols).coalesce(1).write.parquet(
+            path
+        )
+        before = snapshot_parquet_files(path)
+        events.filter(F.col("ts") >= cutoff).select(*cols).coalesce(1).write.mode(
+            "append"
+        ).parquet(path)
+        bump_new_files_mtime(path, before)
+
+    return staged_custom(spark, sf_dir, name, build)
+
+
+def _last_emission(emitted: DataFrame) -> DataFrame:
+    """Each user's LAST emission (max batch_seq) — for a monotone running
+    fold, the final per-user answer."""
+    w = Window.partitionBy("user_id").orderBy(F.col("batch_seq").desc())
+    return (
+        emitted.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") == 1)
+        .drop("rn")
+    )
+
+
 FINAL_SCHEMA = StructType(
     [
         StructField("user_id", LongType()),
@@ -202,54 +245,22 @@ def run_running_user_stats_once(
     state persistence is actually exercised). The final answer per user
     is its LAST emission (max batch_seq) — running totals are monotone
     folds, so this equals the batch groupBy regardless of file order."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from ..sources import read_table
-
     prep_session(spark)
-
-    def _build(path: str) -> None:
-        events = read_table(spark, sf_dir, "events").select(
-            "user_id", "value", "ts"
-        )
-        cutoff = F.lit("2024-01-15").cast("timestamp")
-        events.filter(F.col("ts") < cutoff).drop("ts").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(path)
-        events.filter(F.col("ts") >= cutoff).drop("ts").coalesce(1).write.mode(
-            "append"
-        ).parquet(path)
-
-    from .util import staged_custom
-
-    src = staged_custom(spark, sf_dir, "events_split_running", _build)
+    src = _staged_time_split(
+        spark, sf_dir, "events_split_running", ("user_id", "value")
+    )
     stream_fn = (
         running_user_stats_stream
         if use_transform_with_state
         else running_user_stats_stream_gs
     )
-    sink = f"mem_running_{uuid.uuid4().hex[:8]}"
-    q = (
-        stream_fn(spark, src)
-        .writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .option("checkpointLocation", f"{work_dir}/ckpt_{sink}")
-        .trigger(availableNow=True)
-        .start()
+    emitted = run_to_memory(
+        spark, stream_fn(spark, src), work_dir, output_mode="append"
     )
-    q.awaitTermination()
-    w = Window.partitionBy("user_id").orderBy(F.col("batch_seq").desc())
-    return (
-        drain_memory_sink(spark, sink)
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(
-            "user_id",
-            "n_events",
-            (F.col("total_cents").cast("double") / 100.0).alias("total_value"),
-        )
+    return _last_emission(emitted).select(
+        "user_id",
+        "n_events",
+        (F.col("total_cents").cast("double") / 100.0).alias("total_value"),
     )
 
 
@@ -325,52 +336,11 @@ def run_user_ewma_once(
     two files (maxFilesPerTrigger=1 ⇒ two micro-batches in time order —
     the cross-batch recurrence is genuinely exercised); the final answer
     per user is its LAST emission."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from ..sources import read_table
-
     prep_session(spark)
-
-    def _build(path: str) -> None:
-        events = read_table(spark, sf_dir, "events").select(
-            "user_id", "event_id", "ts", "value"
-        )
-        cutoff = F.lit("2024-01-15").cast("timestamp")
-        events.filter(F.col("ts") < cutoff).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(path)
-        # FileStreamSource orders micro-batches by file MODIFICATION
-        # TIME; two back-to-back writes can land with equal mtimes,
-        # leaving the order — and hence the order-sensitive EWMA
-        # recurrence — undefined (ADVICE r4). Force the second split
-        # strictly newer.
-        from .util import bump_new_files_mtime, snapshot_parquet_files
-
-        before = snapshot_parquet_files(path)
-        events.filter(F.col("ts") >= cutoff).coalesce(1).write.mode(
-            "append"
-        ).parquet(path)
-        bump_new_files_mtime(path, before)
-
-    from .util import staged_custom
-
-    src = staged_custom(spark, sf_dir, "events_split_ewma", _build)
-    sink = f"mem_ewma_{uuid.uuid4().hex[:8]}"
-    q = (
-        user_ewma_stream_gs(spark, src)
-        .writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .option("checkpointLocation", f"{work_dir}/ckpt_{sink}")
-        .trigger(availableNow=True)
-        .start()
+    src = _staged_time_split(
+        spark, sf_dir, "events_split_ewma", ("user_id", "event_id", "ts", "value")
     )
-    q.awaitTermination()
-    w = Window.partitionBy("user_id").orderBy(F.col("batch_seq").desc())
-    return (
-        drain_memory_sink(spark, sink)
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("user_id", "n_events", "ewma_value")
+    emitted = run_to_memory(
+        spark, user_ewma_stream_gs(spark, src), work_dir, output_mode="append"
     )
+    return _last_emission(emitted).select("user_id", "n_events", "ewma_value")

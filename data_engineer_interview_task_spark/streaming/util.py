@@ -1,22 +1,36 @@
-"""Shared micro-batch harness hygiene.
+"""The one availableNow runner behind every streaming harness, plus the
+staging memo that feeds it.
 
-Every ``run_*_once`` harness here terminates an availableNow query into a
-memory sink and used to return ``spark.table(sink)`` lazily — leaving the
-sink's driver-held row buffer AND its temp view alive for the life of the
-session. In a shared session (the driver's correctness sweep, bench.py,
-check_oracle) those buffers accumulate: a complete-mode session-window
-sink holds ~1M rows at sf1, and twelve streaming queries × repeated runs
-turned into GC pressure that inflated UNRELATED queries' wall time
-(measured: streaming_session_window 3.6s in a fresh session vs 31s late
-in a 12-run session — the same failure class bench.py's clearCache()
-fixed for persisted blocks).
+A ``run_*_once`` harness builds its streaming frame and hands it to
+:func:`run_to_memory`, which owns the whole query lifecycle: sink name,
+checkpoint path, the availableNow trigger, the wait, the optional
+state-store partition window (:func:`shuffle_partitions`), cleanup on
+failure, and the drain. The drain matters in a shared session
+(correctness sweeps, bench.py, check_oracle): a memory sink keeps
+its rows in a driver-held buffer behind a temp view for the life of the
+session, and left alive those buffers accumulate into GC pressure that
+inflates UNRELATED queries' wall time (measured: streaming_session_window
+3.6s in a fresh session vs 31s late in a 12-run session). A failing
+micro-batch must leave nothing behind either: the runner stops the query
+and drops the sink view before re-raising.
+
+Harness inputs are staged copies of the corpus (a FileStreamSource-
+readable layout: bulk file, flush sentinels, time splits). The staged
+bytes are a pure function of the input table, so :func:`staged_custom`
+builds each layout once per process per input fingerprint — into a temp
+sibling dir that is renamed into place, under a lock per key — and every
+run replays the full micro-batch pipeline from it against a fresh
+checkpoint.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
 import tempfile
 import threading
+import uuid
+from contextlib import contextmanager, nullcontext
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -33,14 +47,6 @@ STATE_PARTITIONS_FLOOR = 2
 #: partition keeps each store's snapshot small while never exceeding the
 #: session's core count.
 STATE_TARGET_BYTES = 64 * 1024 * 1024
-
-#: Backwards-compatible constant (r12 shape): the env override or the
-#: floor. Call sites that know their source dir should prefer
-#: :func:`state_partitions`, which scales the default with input volume
-#: (VERDICT r12 "What's wrong" item 1 — a literal default encodes bench
-#: scale; the derived one is ~bench-identical at sf0.1 but spreads GB
-#: state at production volumes).
-STATE_PARTITIONS = os.environ.get(STATE_PARTITIONS_ENV, str(STATE_PARTITIONS_FLOOR))
 
 
 def _dir_bytes(path: str) -> int:
@@ -83,6 +89,71 @@ def state_partitions(spark: SparkSession, src: str | None = None) -> str:
     return str(n)
 
 
+@contextmanager
+def shuffle_partitions(spark: SparkSession, n: str):
+    """Run the body with ``spark.sql.shuffle.partitions`` set to ``n``,
+    restoring the prior value on exit. A new streaming query records the
+    count in its checkpoint's first offset entry and keeps it for its
+    whole life; the window stays open until the query has finished, so
+    the count it records is ``n``."""
+    key = "spark.sql.shuffle.partitions"
+    prior = spark.conf.get(key)
+    spark.conf.set(key, n)
+    try:
+        yield
+    finally:
+        spark.conf.set(key, prior)
+
+
+def run_to_memory(
+    spark: SparkSession,
+    frame: DataFrame,
+    work_dir: str,
+    *,
+    output_mode: str,
+    partitions: str | None = None,
+) -> DataFrame:
+    """Run the streaming ``frame`` to completion (availableNow) into a
+    fresh memory sink checkpointed under ``work_dir`` and return the
+    drained rows (see :func:`drain_memory_sink`). ``partitions``, when
+    given, is the state-store partition count the query runs under
+    (:func:`shuffle_partitions`). If the query fails, it is stopped and
+    its sink view dropped before the error propagates."""
+    sink = f"mem_{uuid.uuid4().hex[:12]}"
+    window = nullcontext() if partitions is None else shuffle_partitions(
+        spark, partitions
+    )
+    with window:
+        q = None
+        try:
+            q = (
+                frame.writeStream.format("memory")
+                .queryName(sink)
+                .outputMode(output_mode)
+                .option("checkpointLocation", f"{work_dir}/ckpt_{sink}")
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
+        except BaseException:
+            if q is not None:
+                q.stop()
+            spark.catalog.dropTempView(sink)
+            raise
+    return drain_memory_sink(spark, sink)
+
+
+def drain_memory_sink(spark: SparkSession, sink: str) -> DataFrame:
+    """Move a memory sink's rows out of the driver-held sink buffer and
+    release the sink: eagerly materialize to a localCheckpoint (executor
+    blocks, freed by the ContextCleaner when the returned frame is
+    GC'd), then drop the sink's temp view so the buffer itself becomes
+    collectable."""
+    out = spark.table(sink).localCheckpoint(eager=True)
+    spark.catalog.dropTempView(sink)
+    return out
+
+
 def snapshot_parquet_files(src: str) -> set[str]:
     """Names of the parquet part files currently in ``src`` — take before
     an append-write, pass to :func:`bump_new_files_mtime` after."""
@@ -105,30 +176,93 @@ def bump_new_files_mtime(src: str, before: set[str]) -> None:
             os.utime(os.path.join(src, f), (later, later))
 
 
-#: (sf_dir, flavor, events fingerprint) -> staged source dir. The
-#: harness staging write — copying the events table into a
-#: FileStreamSource-readable dir — is per-run SETUP, not the measured
-#: streaming computation (VERDICT r12 next-round item 5): the staged
-#: bytes are a pure function of the immutable testdata, so one copy per
-#: process serves every run (each run still creates a FRESH checkpoint
-#: and replays the full micro-batch pipeline from the staged files —
-#: nothing of the QUERY's work is cached). Keyed on the events input
-#: fingerprint so a regenerated corpus re-stages instead of serving
-#: stale files (the read_table-memo ADVICE applied here from the start).
+#: (sf_dir, layout name, input fingerprint) -> staged source dir.
 _STAGED: dict[tuple, str] = {}
-_STAGE_LOCK = threading.Lock()
+#: one lock per key (staging keys, dHash stream sources), so unrelated
+#: builds run concurrently while callers of the same key serialize.
+_KEY_LOCKS: dict[tuple, threading.Lock] = {}
+_KEY_LOCKS_GUARD = threading.Lock()
 _STAGE_ROOT: list[str] = []
 
 
+def key_lock(key: tuple) -> threading.Lock:
+    """The process-wide lock for ``key``, created on first use."""
+    with _KEY_LOCKS_GUARD:
+        return _KEY_LOCKS.setdefault(key, threading.Lock())
+
+
 def _stage_root() -> str:
-    if not _STAGE_ROOT:
-        _STAGE_ROOT.append(tempfile.mkdtemp(prefix="spark_graft_stream_src_"))
-    return _STAGE_ROOT[0]
+    with _KEY_LOCKS_GUARD:
+        if not _STAGE_ROOT:
+            _STAGE_ROOT.append(tempfile.mkdtemp(prefix="spark_graft_stream_src_"))
+        return _STAGE_ROOT[0]
+
+
+def staged_custom(
+    spark, sf_dir: str, name: str, build, input_table: str = "events"
+) -> str:
+    """Path of the staged harness source ``name``: ``build(path)`` writes
+    it into a fresh (not yet existing) directory once per process per
+    (sf_dir, name, ``input_table`` fingerprint); later calls reuse it. A
+    regenerated corpus moves the fingerprint and re-stages instead of
+    serving stale files. The build writes into a temp sibling that is
+    renamed into place only when it returns, and is removed if it raises,
+    so a retry after a torn build starts from nothing."""
+    from ..plans.artifacts import input_fingerprint, _stable_hash
+
+    key = (
+        sf_dir,
+        name,
+        input_fingerprint(f"{sf_dir}/{input_table}.parquet"),
+    )
+    with key_lock(key):
+        path = _STAGED.get(key)
+        if path is not None:
+            return path
+        path = os.path.join(_stage_root(), f"{name}_{_stable_hash(key)}")
+        tmp = f"{path}.tmp-{uuid.uuid4().hex[:8]}"
+        try:
+            build(tmp)
+            os.rename(tmp, path)
+        except BaseException:
+            shutil.rmtree(tmp, ignore_errors=True)
+            raise
+        _STAGED[key] = path
+    return path
+
+
+def _build_plain(spark, sf_dir: str, path: str) -> None:
+    from ..sources import read_table
+
+    read_table(spark, sf_dir, "events").write.parquet(path)
+
+
+def _build_flushed(spark, sf_dir: str, path: str) -> None:
+    from ..sources import read_table
+    from .weekly import EVENTS_SCHEMA
+
+    events = read_table(spark, sf_dir, "events")
+    events.repartition(1).write.parquet(path)
+    max_ts = events.agg(F.max("ts")).collect()[0][0]
+    before = snapshot_parquet_files(path)
+    flush = spark.createDataFrame(
+        [
+            (-1, max_ts, -1, "click", 0.0, "{}"),
+            (-2, max_ts, -1, "purchase", 0.0, "{}"),
+        ],
+        schema=EVENTS_SCHEMA,
+    ).withColumn("ts", F.col("ts") + F.expr("INTERVAL 10 DAYS"))
+    flush.coalesce(1).write.mode("append").parquet(path)
+    bump_new_files_mtime(path, before)
+
+
+_EVENT_FLAVORS = {"plain": _build_plain, "flushed": _build_flushed}
 
 
 def staged_events(spark: SparkSession, sf_dir: str, flavor: str = "plain") -> str:
     """Path of a staged copy of the ``events`` table for the streaming
-    harnesses, built at most once per process per (sf_dir, flavor).
+    harnesses, built at most once per process per (sf_dir, flavor) via
+    :func:`staged_custom`.
 
     Flavors (each a deterministic function of the testdata):
 
@@ -141,73 +275,9 @@ def staged_events(spark: SparkSession, sf_dir: str, flavor: str = "plain") -> st
       yields the bulk batch, the watermark-advancing flush batch, and
       the trailing no-data batch.
     """
-    from ..plans.artifacts import input_fingerprint, _stable_hash
-    from ..sources import read_table
-
-    key = (sf_dir, flavor, input_fingerprint(f"{sf_dir}/events.parquet"))
-    with _STAGE_LOCK:
-        path = _STAGED.get(key)
-        if path is not None:
-            return path
-        path = os.path.join(
-            _stage_root(), f"events_{flavor}_{_stable_hash(key)}"
-        )
-        events = read_table(spark, sf_dir, "events")
-        if flavor == "plain":
-            events.write.mode("overwrite").parquet(path)
-        elif flavor == "flushed":
-            events.repartition(1).write.mode("overwrite").parquet(path)
-            max_ts = events.agg(F.max("ts")).collect()[0][0]
-            before = snapshot_parquet_files(path)
-            from .weekly import EVENTS_SCHEMA
-
-            flush = spark.createDataFrame(
-                [
-                    (-1, max_ts, -1, "click", 0.0, "{}"),
-                    (-2, max_ts, -1, "purchase", 0.0, "{}"),
-                ],
-                schema=EVENTS_SCHEMA,
-            ).withColumn("ts", F.col("ts") + F.expr("INTERVAL 10 DAYS"))
-            flush.coalesce(1).write.mode("append").parquet(path)
-            bump_new_files_mtime(path, before)
-        else:
-            raise ValueError(f"unknown staging flavor: {flavor}")
-        _STAGED[key] = path
-    return path
-
-
-def staged_custom(
-    spark, sf_dir: str, name: str, build, input_table: str = "events"
-) -> str:
-    """Memoized harness staging for source layouts :func:`staged_events`
-    does not cover (e.g. the two-file time splits of the stateful-fold
-    harnesses): ``build(path)`` writes the staged files once per process
-    per (sf_dir, name, ``input_table`` fingerprint); later runs reuse
-    them. The same setup-not-query rationale and staleness key as
-    :func:`staged_events`."""
-    from ..plans.artifacts import input_fingerprint, _stable_hash
-
-    key = (
-        sf_dir,
-        name,
-        input_fingerprint(f"{sf_dir}/{input_table}.parquet"),
+    if flavor not in _EVENT_FLAVORS:
+        raise ValueError(f"unknown staging flavor: {flavor}")
+    build = _EVENT_FLAVORS[flavor]
+    return staged_custom(
+        spark, sf_dir, f"events_{flavor}", lambda path: build(spark, sf_dir, path)
     )
-    with _STAGE_LOCK:
-        path = _STAGED.get(key)
-        if path is not None:
-            return path
-        path = os.path.join(_stage_root(), f"{name}_{_stable_hash(key)}")
-        build(path)
-        _STAGED[key] = path
-    return path
-
-
-def drain_memory_sink(spark: SparkSession, sink: str) -> DataFrame:
-    """Move a memory sink's rows out of the driver-held sink buffer and
-    release the sink: eagerly materialize to a localCheckpoint (executor
-    blocks, freed by the ContextCleaner when the returned frame is
-    GC'd), then drop the sink's temp view so the buffer itself becomes
-    collectable."""
-    out = spark.table(sink).localCheckpoint(eager=True)
-    spark.catalog.dropTempView(sink)
-    return out

@@ -9,8 +9,6 @@ something the batch reference silently cannot.
 
 from __future__ import annotations
 
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -23,7 +21,7 @@ from pyspark.sql.types import (
 )
 
 from ..plans import prep_session
-from .util import drain_memory_sink, staged_events, state_partitions
+from .util import run_to_memory, staged_events, state_partitions
 
 #: events schema with ts already as a proper timestamp (the ns->micros
 #: conversion happens on the batch prep path; streaming reads the converted
@@ -114,27 +112,13 @@ def run_sliding_rollup_once(
     therefore oracle-checkable)."""
     prep_session(spark)
     src = staged_events(spark, sf_dir, "plain")
-    sink = f"mem_sliding_{uuid.uuid4().hex[:8]}"
-    # r12 opt: state-store partition conf window (shared
-    # util.state_partitions — volume-derived, r13; r12 A/B in OPTIMIZATION_r12.md) —
-    # opens AFTER the last read_table, checkpoint created inside it
-    conf_key = "spark.sql.shuffle.partitions"
-    prior = spark.conf.get(conf_key)
-    spark.conf.set(conf_key, state_partitions(spark, src))
-    try:
-        q = (
-            sliding_rollup_stream(spark, src)
-            .writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .option("checkpointLocation", f"{work_dir}/ckpt_{sink}")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set(conf_key, prior)
-    return drain_memory_sink(spark, sink)
+    return run_to_memory(
+        spark,
+        sliding_rollup_stream(spark, src),
+        work_dir,
+        output_mode="complete",
+        partitions=state_partitions(spark, src),
+    )
 
 
 def run_weekly_rollup_once(
@@ -147,27 +131,13 @@ def run_weekly_rollup_once(
     checkpoint."""
     prep_session(spark)
     src = staged_events(spark, sf_dir, "plain")
-    sink = f"mem_weekly_{uuid.uuid4().hex[:8]}"
-    # r12 opt: state-store partition conf window (shared
-    # util.state_partitions — volume-derived, r13; r12 A/B in OPTIMIZATION_r12.md) —
-    # opens AFTER the last read_table, checkpoint created inside it
-    conf_key = "spark.sql.shuffle.partitions"
-    prior = spark.conf.get(conf_key)
-    spark.conf.set(conf_key, state_partitions(spark, src))
-    try:
-        q = (
-            weekly_rollup_stream(spark, src)
-            .writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .option("checkpointLocation", f"{work_dir}/ckpt_{sink}")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set(conf_key, prior)
-    return drain_memory_sink(spark, sink)
+    return run_to_memory(
+        spark,
+        weekly_rollup_stream(spark, src),
+        work_dir,
+        output_mode="complete",
+        partitions=state_partitions(spark, src),
+    )
 
 
 def bitmap_distinct_stream(
@@ -211,27 +181,13 @@ def run_bitmap_distinct_once(
     the oracle mirrors the epoch arithmetic."""
     prep_session(spark)
     src = staged_events(spark, sf_dir, "plain")
-    sink = f"mem_bitmap_{uuid.uuid4().hex[:8]}"
-    # r12 opt: state-store partition conf window (shared
-    # util.state_partitions — volume-derived, r13; r12 A/B in OPTIMIZATION_r12.md) —
-    # opens AFTER the last read_table, checkpoint created inside it
-    conf_key = "spark.sql.shuffle.partitions"
-    prior = spark.conf.get(conf_key)
-    spark.conf.set(conf_key, state_partitions(spark, src))
-    try:
-        q = (
-            bitmap_distinct_stream(spark, src)
-            .writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .option("checkpointLocation", f"{work_dir}/ckpt_{sink}")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set(conf_key, prior)
-    sketch = drain_memory_sink(spark, sink)
+    sketch = run_to_memory(
+        spark,
+        bitmap_distinct_stream(spark, src),
+        work_dir,
+        output_mode="complete",
+        partitions=state_partitions(spark, src),
+    )
     return (
         sketch.groupBy("week_start")
         .agg(F.sum(F.bit_count("word")).cast("long").alias("n_users"))
