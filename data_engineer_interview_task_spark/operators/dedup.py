@@ -49,25 +49,6 @@ def canonical_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _shingles(toks_col, text_col, n: int = 3):
-    """Distinct word n-gram shingles as array<string> — pure column
-    expressions (codegen'd), no UDF.
-
-    ``toks_col`` MUST be a materialized column (``withColumn("toks",
-    split(...))``), not an inline ``split(...)`` expression: Catalyst does
-    no common-subexpression elimination inside lambda bodies, so an inline
-    split would re-tokenize the document for every element_at call
-    (~300x per row — measured 12s -> <1s on 5k docs when materialized)."""
-    idx = F.sequence(F.lit(0), F.greatest(F.size(toks_col) - n, F.lit(0)))
-    grams = F.transform(
-        idx, lambda i: F.concat_ws(" ", *[F.element_at(toks_col, i + j + 1) for j in range(n)])
-    )
-    # guard degenerate texts shorter than n tokens
-    return F.array_distinct(
-        F.when(F.size(toks_col) >= n, grams).otherwise(F.array(text_col))
-    )
-
-
 def shingle_documents(docs: DataFrame, n: int = 3) -> DataFrame:
     """(doc_id, shingles) for a (doc_id, text) frame: distinct word-n-gram
     shingles via ``ml.feature.NGram`` (Scala-side sliding window; ~10x
@@ -1061,26 +1042,24 @@ def minhash_dedup_batch(
     )
 
 
-_MINHASH_INDEX_CACHE: dict[tuple[str, int, int], str] = {}
-
-
 def _cached_minhash_index(
     spark: SparkSession, sf_dir: str, n: int, modulus: int
 ) -> str:
-    """Build the corpus index at most once per (sf_dir, n, modulus) per
-    process — the index is immutable, so repeated driver/bench sweeps
-    reuse it instead of leaving one full copy per call under /tmp
-    (ADVICE r3). Reuse is also the production semantics: the deployed
-    index is built on ingest and queried by every batch."""
-    import tempfile
+    """The corpus index, built at most once per process per (sf_dir, n,
+    modulus, ``documents`` fingerprint) by the materialization store —
+    repeated query sweeps reuse it instead of leaving one full
+    copy per call under /tmp (ADVICE r3), and a rewritten table rebuilds
+    it. Reuse is also the production semantics: the deployed index is
+    built on ingest and queried by every batch."""
+    from ..plans.artifacts import materialized_dir, tmp_root
 
-    key = (sf_dir, n, modulus)
-    path = _MINHASH_INDEX_CACHE.get(key)
-    if path is None:
-        path = tempfile.mkdtemp(prefix="minhash_index_")
-        minhash_index_build(spark, sf_dir, path, n=n, modulus=modulus)
-        _MINHASH_INDEX_CACHE[key] = path
-    return path
+    return materialized_dir(
+        ("minhash_index", sf_dir, n, modulus),
+        "minhash_index_",
+        lambda path: minhash_index_build(spark, sf_dir, path, n=n, modulus=modulus),
+        inputs=(f"{sf_dir}/documents.parquet",),
+        base_dir=tmp_root(),
+    )
 
 
 def incremental_minhash_dedup(

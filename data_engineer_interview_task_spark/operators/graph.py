@@ -104,8 +104,9 @@ def _cached_edges(
     This is the 100 TB design, not a bench trick: four graph operators
     share one O(corpus) self-join — a production deployment persists the
     co-purchase graph as a table and runs every analytic against it
-    rather than rebuilding it per query (exactly the ivf_index_build /
-    minhash_index pattern elsewhere in this repo). In-memory persist()
+    rather than rebuilding it per query (the same store holds the
+    persisted IVF and MinHash indexes and the staged stream sources,
+    under the same key, lock and publish rules). In-memory persist()
     cannot provide this: caller unpersist hygiene (ADVICE r4) means each
     CALL pays the full build; a parquet artifact survives calls, sessions
     and executors, and its scan pushes column pruning down like any other

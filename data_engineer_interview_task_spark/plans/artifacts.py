@@ -1,35 +1,36 @@
-"""Process-level store for materialized derived tables ("artifacts").
+"""The package's one materialization store: every process-level memo of a
+derived directory lives here.
 
-Several operator families share one expensive corpus-derived table — the
-co-purchase edge list (graph analytics), word-n-gram shingle sets and
-MinHash band keys (the dedup family), SimHash signatures, bottom-k
-chargram sketches, the IVF/MinHash persisted indexes. Recomputing such a
-table inside every consuming query is the wrong 100 TB design: a
-production deployment persists these as warehouse tables, refreshed with
-the corpus, and every analytic SCANS them (getting parquet column
-pruning / predicate pushdown for free, surviving sessions and executor
-restarts). This module is the single implementation of that pattern:
-``materialized()`` builds a parquet artifact at most once per key per
-process and returns a DataFrame scanning it.
+Operator families share expensive corpus-derived tables (co-purchase
+edges, shingle sets and MinHash band keys, SimHash signatures, chargram
+sketches), the IVF/MinHash persisted indexes and the staged copies the
+streaming harnesses read. A production deployment persists such tables
+with the corpus and every analytic SCANS them; in-memory ``persist()``
+cannot share them, since caller unpersist hygiene (ADVICE r4) makes every
+CALL pay the build. Two entry points share one mechanism:
+:func:`materialized_dir` (``build(tmp)`` writes one fresh directory; the
+published path is returned) and :func:`materialized`, its parquet case
+(``build()`` returns a DataFrame; a DataFrame scanning it is returned).
 
-In-memory ``persist()`` cannot provide this sharing: caller unpersist
-hygiene (ADVICE r4) means every CALL pays the full build, and cached
-blocks add executor-storage pressure that a parquet artifact does not.
+- **Key.** The logical key holds every parameter that changes the
+  content; the recursive (file count, total bytes, max mtime)
+  fingerprint of each ``inputs`` path joins it, so a corpus mutated in
+  place is never served a stale entry (VERDICT r5 item 7). Inputs that
+  mutate *within* a build bypass the store (``minhash_index_append``).
+- **Lock.** One lock per logical key: one build however many concurrent
+  callers, while unrelated keys build concurrently. A build consuming
+  another entry (band keys from the shingle table) takes that entry's
+  own, different lock.
+- **Publish.** The build writes a ``…__build_…`` sibling, a completion
+  marker is added, and one rename publishes it. A build that raises
+  leaves no directory and no memo entry behind.
+- **Invalidation.** Superseded fingerprint dirs of the same logical key
+  are deleted once the replacement completes (past a grace window).
 
-The cache key must include every parameter that changes the artifact's
-CONTENT (source dir, n, hash family, ...) — and, since round 6, an
-INPUT FINGERPRINT: callers pass the source paths via ``inputs`` and the
-store folds each path's recursive (file count, total bytes, max mtime)
-into the key, so a corpus that is mutated in place can never be served a
-stale artifact (VERDICT r5 item 7). Callers materializing inputs that
-mutate *within* a build should still bypass this store (see
-``minhash_index_append`` for the mutable-index path).
-
-Artifacts land under ``base_dir`` (parameter, else
-``$SPARK_GRAFT_ARTIFACT_DIR``, else a fresh tempdir) — a warehouse
-deployment points this at its managed derived-table location so
-artifacts survive process restarts and participate in the warehouse's
-retention policy.
+Entries land under ``base_dir`` (parameter, else
+``$SPARK_GRAFT_ARTIFACT_DIR`` — a warehouse deployment's managed
+derived-table location — else :func:`tmp_root`). Process-scoped entries
+(staged stream sources, the persisted indexes) pass :func:`tmp_root`.
 """
 
 from __future__ import annotations
@@ -38,25 +39,25 @@ import hashlib
 import os
 import shutil
 import tempfile
+import threading
 import time
 from typing import Callable, Iterable
-import threading
 
 from pyspark.sql import DataFrame, SparkSession
 
-#: key -> parquet dir holding the materialized artifact (process-level).
+#: (logical key + input fingerprints) -> published dir (process-level).
 _CACHE: dict[tuple, str] = {}
-#: RLock: an artifact build may itself consume another artifact (band
-#: keys build from the shingle table), re-entering materialized() on the
-#: same thread — a plain Lock would self-deadlock there.
-_LOCK = threading.RLock()
+#: logical key -> its lock (see the module docstring).
+_KEY_LOCKS: dict[tuple, threading.Lock] = {}
+#: guards the creation of key locks and of the fallback root.
+_GUARD = threading.Lock()
 #: lazily-created fallback root when no base_dir/env root is configured
 #: (one per process, so even ephemeral artifacts get deterministic names)
 _TMP_ROOT: list[str] = []
 
 #: completion marker inside a finished artifact dir (written AFTER the
-#: parquet write, holding the full key) — a dir without it is a torn
-#: write from a killed process and is rebuilt in place.
+#: build, holding the full key) — a dir without it is a torn write from
+#: a killed process and is rebuilt in place.
 _MARKER = "_ARTIFACT_SUCCESS"
 
 #: superseded-fingerprint dirs younger than this are NOT pruned
@@ -95,6 +96,95 @@ def input_fingerprint(path: str) -> tuple:
     return (n_files, total, max_mtime)
 
 
+def key_lock(key: tuple) -> threading.Lock:
+    """The process-wide lock for ``key``, created on first use."""
+    with _GUARD:
+        return _KEY_LOCKS.setdefault(key, threading.Lock())
+
+
+def tmp_root() -> str:
+    """The process-private root, created on first use."""
+    with _GUARD:
+        if not _TMP_ROOT:
+            _TMP_ROOT.append(tempfile.mkdtemp(prefix="spark_graft_artifacts_"))
+        return _TMP_ROOT[0]
+
+
+def materialized_dir(
+    key: tuple,
+    prefix: str,
+    build: Callable[[str], None],
+    inputs: Iterable[str] = (),
+    base_dir: str | None = None,
+) -> str:
+    """Path of the published directory for ``key``, built by
+    ``build(tmp)`` into a fresh (not yet existing) directory at most once
+    per process per input state (see the module docstring for the key,
+    lock, publish and invalidation rules and the root).
+
+    On-disk lifecycle (ADVICE r6): the directory name is DERIVED from
+    the key — ``{prefix}{hash(key)}_{hash(fingerprints)}`` — and holds a
+    completion marker, so a restarted process (or a second process
+    sharing a persistent ``SPARK_GRAFT_ARTIFACT_DIR``) REUSES finished
+    entries, and a torn write (dir without marker) rebuilds in place."""
+    fps = tuple(input_fingerprint(p) for p in inputs)
+    full_key = key + fps
+    with key_lock(key):
+        path = _CACHE.get(full_key)
+        if path is None:
+            root = base_dir or os.environ.get("SPARK_GRAFT_ARTIFACT_DIR") or tmp_root()
+            os.makedirs(root, exist_ok=True)
+            lhash = _stable_hash(key)
+            path = os.path.join(root, f"{prefix}{lhash}_{_stable_hash(fps)}")
+            if not os.path.exists(os.path.join(path, _MARKER)):
+                _publish(path, full_key, build)
+                # retire superseded fingerprint dirs of this logical key
+                stem = f"{prefix}{lhash}_"
+                now = time.time()
+                for d in os.listdir(root):
+                    full = os.path.join(root, d)
+                    if (
+                        d.startswith(stem)
+                        and full != path
+                        and "__build_" not in d
+                        and now - os.path.getmtime(full) > _PRUNE_GRACE_SEC
+                    ):
+                        shutil.rmtree(full, ignore_errors=True)
+            _CACHE[full_key] = path
+    return path
+
+
+def _publish(path: str, full_key: tuple, build: Callable[[str], None]) -> None:
+    # Build into a process-private temp dir and publish with one atomic
+    # rename (ADVICE r7), so two processes sharing a persistent root never
+    # interleave writes INTO the same final dir — the loser's rename
+    # fails on the existing target and it adopts the winner's.
+    tmp = f"{path}.__build_{os.getpid()}_{threading.get_ident()}"
+    try:
+        build(tmp)
+        with open(os.path.join(tmp, _MARKER), "w") as fh:
+            fh.write(repr(full_key))
+    except BaseException:
+        shutil.rmtree(tmp, ignore_errors=True)
+        raise
+    # Rename FIRST; only clear the target when the rename fails AND the
+    # target still lacks its marker (a torn dir from a dead process), so
+    # a concurrent process's finished artifact is never deleted (ADVICE r8).
+    try:
+        os.rename(tmp, path)
+    except OSError:
+        if os.path.exists(os.path.join(path, _MARKER)):
+            # a concurrent process published first; adopt it
+            shutil.rmtree(tmp, ignore_errors=True)
+        else:
+            shutil.rmtree(path, ignore_errors=True)  # torn
+            try:
+                os.rename(tmp, path)
+            except OSError:
+                # lost a second race; adopt the winner's artifact
+                shutil.rmtree(tmp, ignore_errors=True)
+
+
 def materialized(
     spark: SparkSession,
     key: tuple,
@@ -104,86 +194,17 @@ def materialized(
     base_dir: str | None = None,
     partition_by: tuple[str, ...] = (),
 ) -> DataFrame:
-    """A DataFrame scanning the parquet artifact for ``key``, building it
-    with ``build()`` on first use (at most once per process per input
-    state; the lock also serializes concurrent first-builds of the same
-    key, matching the graph/IVF/MinHash index caches this generalizes).
+    """A DataFrame scanning the parquet artifact for ``key``, writing
+    ``build()`` through :func:`materialized_dir` on first use (same key,
+    ``inputs``, ``base_dir``, lock and publish rules).
+    ``partition_by``: hive-layout the artifact on these columns, so
+    consumers filtering/joining on them get partition pruning (static or
+    dynamic) on every scan."""
 
-    ``inputs``: source paths whose fingerprints join the cache key — a
-    mutated input therefore triggers a rebuild instead of serving the
-    stale artifact. ``base_dir``: where artifacts land (see module
-    docstring for the resolution order). ``partition_by``: hive-layout
-    the artifact on these columns, so consumers filtering/joining on
-    them get partition pruning (static or dynamic) on every scan.
+    def write(tmp: str) -> None:
+        writer = build().write.mode("overwrite")
+        if partition_by:
+            writer = writer.partitionBy(*partition_by)
+        writer.parquet(tmp)
 
-    On-disk lifecycle (ADVICE r6): the directory name is DERIVED from
-    the key — ``{prefix}{hash(key)}_{hash(fingerprints)}`` — with a
-    completion marker written after the parquet write, so a restarted
-    process (or a second process sharing a persistent
-    ``SPARK_GRAFT_ARTIFACT_DIR``) REUSES finished artifacts instead of
-    writing a fresh copy per process, and a torn write (dir without
-    marker) rebuilds in place. When an input fingerprint changes, the
-    superseded fingerprint dirs of the same logical key are deleted
-    after the replacement completes — a persistent root holds at most
-    one artifact per logical key."""
-    fps = tuple(input_fingerprint(p) for p in inputs)
-    full_key = key + fps
-    with _LOCK:
-        path = _CACHE.get(full_key)
-        if path is None:
-            root = base_dir or os.environ.get("SPARK_GRAFT_ARTIFACT_DIR")
-            if not root:
-                if not _TMP_ROOT:
-                    _TMP_ROOT.append(
-                        tempfile.mkdtemp(prefix="spark_graft_artifacts_")
-                    )
-                root = _TMP_ROOT[0]
-            os.makedirs(root, exist_ok=True)
-            lhash = _stable_hash(key)
-            path = os.path.join(root, f"{prefix}{lhash}_{_stable_hash(fps)}")
-            if not os.path.exists(os.path.join(path, _MARKER)):
-                # Build into a process-private temp dir and publish with
-                # one atomic rename (ADVICE r7): two processes sharing a
-                # persistent root can no longer interleave writes INTO
-                # the same final dir — the loser's rename fails on the
-                # existing target and it adopts the winner's artifact.
-                tmp = f"{path}.__build_{os.getpid()}_{threading.get_ident()}"
-                writer = build().write.mode("overwrite")
-                if partition_by:
-                    writer = writer.partitionBy(*partition_by)
-                writer.parquet(tmp)
-                with open(os.path.join(tmp, _MARKER), "w") as fh:
-                    fh.write(repr(full_key))
-                # Rename FIRST; only clear the target when the rename
-                # fails AND the target still lacks its marker (a torn
-                # dir from a dead process). The old check-rmtree-rename
-                # order could delete a concurrent process's artifact
-                # that completed between the check and the rmtree
-                # (ADVICE r8 — a narrow availability race).
-                try:
-                    os.rename(tmp, path)
-                except OSError:
-                    if os.path.exists(os.path.join(path, _MARKER)):
-                        # a concurrent process published first; adopt it
-                        shutil.rmtree(tmp, ignore_errors=True)
-                    else:
-                        shutil.rmtree(path, ignore_errors=True)  # torn
-                        try:
-                            os.rename(tmp, path)
-                        except OSError:
-                            # lost a second race; the winner's artifact
-                            # is complete — adopt it
-                            shutil.rmtree(tmp, ignore_errors=True)
-                stem = f"{prefix}{lhash}_"
-                now = time.time()
-                for d in os.listdir(root):
-                    full = os.path.join(root, d)
-                    if (
-                        d.startswith(stem)
-                        and d != os.path.basename(path)
-                        and "__build_" not in d
-                        and now - os.path.getmtime(full) > _PRUNE_GRACE_SEC
-                    ):
-                        shutil.rmtree(full, ignore_errors=True)
-            _CACHE[full_key] = path
-    return spark.read.parquet(path)
+    return spark.read.parquet(materialized_dir(key, prefix, write, inputs, base_dir))

@@ -26,10 +26,10 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from ..plans import prep_session
+from ..plans.artifacts import key_lock
 from ..sources import read_table
 from .util import (
     bump_new_files_mtime,
-    key_lock,
     snapshot_parquet_files,
     staged_custom,
 )

@@ -1,5 +1,5 @@
 """The one availableNow runner behind every streaming harness, plus the
-staging memo that feeds it.
+staged sources that feed it.
 
 A ``run_*_once`` harness builds its streaming frame and hands it to
 :func:`run_to_memory`, which owns the whole query lifecycle: sink name,
@@ -14,26 +14,22 @@ inflates UNRELATED queries' wall time (measured: streaming_session_window
 micro-batch must leave nothing behind either: the runner stops the query
 and drops the sink view before re-raising.
 
-Harness inputs are staged copies of the corpus (a FileStreamSource-
-readable layout: bulk file, flush sentinels, time splits). The staged
-bytes are a pure function of the input table, so :func:`staged_custom`
-builds each layout once per process per input fingerprint — into a temp
-sibling dir that is renamed into place, under a lock per key — and every
-run replays the full micro-batch pipeline from it against a fresh
-checkpoint.
+Harness inputs are staged copies of the corpus (:func:`staged_custom`),
+built once per process per input fingerprint by the one materialization
+store (``plans/artifacts.py``); every run replays the full micro-batch
+pipeline from them against a fresh checkpoint.
 """
 
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
-import threading
 import uuid
 from contextlib import contextmanager, nullcontext
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..plans.artifacts import materialized_dir, tmp_root
 
 #: Env dial for the state-store partition count (production override).
 STATE_PARTITIONS_ENV = "SPARK_GRAFT_STREAM_STATE_PARTITIONS"
@@ -176,28 +172,6 @@ def bump_new_files_mtime(src: str, before: set[str]) -> None:
             os.utime(os.path.join(src, f), (later, later))
 
 
-#: (sf_dir, layout name, input fingerprint) -> staged source dir.
-_STAGED: dict[tuple, str] = {}
-#: one lock per key (staging keys, dHash stream sources), so unrelated
-#: builds run concurrently while callers of the same key serialize.
-_KEY_LOCKS: dict[tuple, threading.Lock] = {}
-_KEY_LOCKS_GUARD = threading.Lock()
-_STAGE_ROOT: list[str] = []
-
-
-def key_lock(key: tuple) -> threading.Lock:
-    """The process-wide lock for ``key``, created on first use."""
-    with _KEY_LOCKS_GUARD:
-        return _KEY_LOCKS.setdefault(key, threading.Lock())
-
-
-def _stage_root() -> str:
-    with _KEY_LOCKS_GUARD:
-        if not _STAGE_ROOT:
-            _STAGE_ROOT.append(tempfile.mkdtemp(prefix="spark_graft_stream_src_"))
-        return _STAGE_ROOT[0]
-
-
 def staged_custom(
     spark, sf_dir: str, name: str, build, input_table: str = "events"
 ) -> str:
@@ -205,30 +179,16 @@ def staged_custom(
     it into a fresh (not yet existing) directory once per process per
     (sf_dir, name, ``input_table`` fingerprint); later calls reuse it. A
     regenerated corpus moves the fingerprint and re-stages instead of
-    serving stale files. The build writes into a temp sibling that is
-    renamed into place only when it returns, and is removed if it raises,
-    so a retry after a torn build starts from nothing."""
-    from ..plans.artifacts import input_fingerprint, _stable_hash
-
-    key = (
-        sf_dir,
-        name,
-        input_fingerprint(f"{sf_dir}/{input_table}.parquet"),
+    serving stale files. Built by ``plans.artifacts.materialized_dir`` in
+    its process-private root (never ``$SPARK_GRAFT_ARTIFACT_DIR``), so a
+    build that raises leaves nothing for a retry to append to."""
+    return materialized_dir(
+        ("staged", sf_dir, name),
+        f"{name}_",
+        build,
+        inputs=(f"{sf_dir}/{input_table}.parquet",),
+        base_dir=tmp_root(),
     )
-    with key_lock(key):
-        path = _STAGED.get(key)
-        if path is not None:
-            return path
-        path = os.path.join(_stage_root(), f"{name}_{_stable_hash(key)}")
-        tmp = f"{path}.tmp-{uuid.uuid4().hex[:8]}"
-        try:
-            build(tmp)
-            os.rename(tmp, path)
-        except BaseException:
-            shutil.rmtree(tmp, ignore_errors=True)
-            raise
-        _STAGED[key] = path
-    return path
 
 
 def _build_plain(spark, sf_dir: str, path: str) -> None:

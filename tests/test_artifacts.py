@@ -1,12 +1,21 @@
 """Artifact-store lifecycle (VERDICT r5 item 7): input fingerprints in
-the cache key (a mutated corpus can never be served a stale artifact)
-and the ``base_dir`` deployment hook."""
+the cache key (a mutated corpus can never be served a stale artifact),
+the ``base_dir`` deployment hook, a failed build that leaves nothing
+behind, and the persisted indexes built through the same store."""
 from __future__ import annotations
 
 import os
 import shutil
 import tempfile
+import time
+from concurrent.futures import ThreadPoolExecutor
 
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
+from pyspark.sql import functions as F
+
+from data_engineer_interview_task_spark.operators import dedup, similarity
 from data_engineer_interview_task_spark.plans import artifacts
 
 
@@ -122,3 +131,101 @@ def test_base_dir_places_artifacts(spark):
     subdirs = [d for d in os.listdir(base) if d.startswith("test_art_")]
     assert subdirs, "artifact must land under base_dir"
     shutil.rmtree(base)
+
+
+def test_failed_build_leaves_nothing_behind(spark, tmp_path):
+    @F.udf("long")
+    def boom(x):
+        raise ValueError("injected build failure")
+
+    base = str(tmp_path / "art")
+    key = ("test_failed_build",)
+
+    def bad():
+        return spark.range(1, numPartitions=1).select(boom("id").alias("id"))
+
+    with pytest.raises(Exception, match="injected build failure"):
+        artifacts.materialized(spark, key, "leak_", bad, base_dir=base)
+    assert not [d for d in os.listdir(base) if "__build_" in d]
+    assert not [k for k in artifacts._CACHE if k[: len(key)] == key]
+    calls, good = _build_counter(spark, "retry")
+    rows = artifacts.materialized(spark, key, "leak_", good, base_dir=base)
+    assert [tuple(r) for r in rows.collect()] == [(1, "retry")]
+    assert calls["n"] == 1
+
+
+@pytest.fixture
+def corpus_copy(sf_dir, tmp_path):
+    """A private, writable copy of the corpus (fresh mtimes, fresh keys)."""
+    dst = str(tmp_path / "sf")
+    shutil.copytree(sf_dir, dst, copy_function=shutil.copyfile)
+    os.chmod(dst, 0o755)
+    return dst
+
+
+def _drop_rows(path, id_col):
+    """Rewrite the parquet file in place without the rows whose id is 1
+    mod 4."""
+    table = pq.read_table(path)
+    keep = table.column(id_col).to_numpy() % 4 != 1
+    pq.write_table(table.filter(pa.array(keep)), path)
+
+
+def _rows(df):
+    return sorted(map(tuple, df.collect()))
+
+
+def _count_calls(monkeypatch, module, name):
+    calls = []
+    real = getattr(module, name)
+
+    def counted(*args, **kwargs):
+        calls.append(args)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(module, name, counted)
+    return calls
+
+
+def test_rewritten_embeddings_rebuild_ivf_index(spark, corpus_copy, monkeypatch):
+    calls = _count_calls(monkeypatch, similarity, "ivf_index_build")
+    assert _rows(similarity.ivf_topk_prebuilt(spark, corpus_copy))
+    assert len(calls) == 1
+    _drop_rows(f"{corpus_copy}/embeddings.parquet", "vec_id")
+    got = _rows(similarity.ivf_topk_prebuilt(spark, corpus_copy))
+    assert len(calls) == 2, "a rewritten table must rebuild the index"
+    assert got == _rows(similarity.ivf_topk(spark, corpus_copy))
+
+
+def test_rewritten_documents_rebuild_minhash_index(
+    spark, corpus_copy, monkeypatch, tmp_path
+):
+    calls = _count_calls(monkeypatch, dedup, "minhash_index_build")
+    assert _rows(dedup.incremental_minhash_dedup(spark, corpus_copy))
+    assert len(calls) == 1
+    _drop_rows(f"{corpus_copy}/documents.parquet", "doc_id")
+    got = _rows(dedup.incremental_minhash_dedup(spark, corpus_copy))
+    assert len(calls) == 2, "a rewritten table must rebuild the index"
+    fresh = str(tmp_path / "fresh_index")
+    dedup.minhash_index_build(spark, corpus_copy, fresh)
+    assert got == _rows(
+        dedup.incremental_minhash_dedup(spark, corpus_copy, index_dir=fresh)
+    )
+
+
+def test_concurrent_ivf_callers_build_once(spark, corpus_copy, monkeypatch):
+    calls = []
+
+    def slow_build(spark, sf_dir, index_dir):
+        calls.append(index_dir)
+        time.sleep(1.0)
+        os.makedirs(index_dir)
+
+    monkeypatch.setattr(similarity, "ivf_index_build", slow_build)
+    with ThreadPoolExecutor(2) as ex:
+        futures = [
+            ex.submit(similarity._cached_ivf_index, spark, corpus_copy)
+            for _ in range(2)
+        ]
+        paths = {f.result(timeout=60) for f in futures}
+    assert len(calls) == 1 and len(paths) == 1

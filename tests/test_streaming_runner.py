@@ -1,8 +1,8 @@
-"""The availableNow runner and the staging memo behind every streaming
+"""The availableNow runner and the staged sources behind every streaming
 harness: a failed micro-batch leaves no live query, sink view or changed
 conf; the partition window reaches the checkpoint; a torn staged build is
-never published; concurrent callers neither collide nor serialize on
-unrelated keys."""
+never published; concurrent callers of the store's entry points neither
+collide nor serialize on unrelated keys."""
 
 from __future__ import annotations
 
@@ -16,6 +16,7 @@ from concurrent.futures import ThreadPoolExecutor
 import pytest
 from pyspark.sql import functions as F
 
+from data_engineer_interview_task_spark.plans import artifacts
 from data_engineer_interview_task_spark.streaming import util
 from data_engineer_interview_task_spark.streaming.util import (
     run_to_memory,
@@ -109,35 +110,61 @@ def test_staged_custom_retry_after_torn_build_matches_clean_build(
     assert got == rows(clean) and len(got) == len(set(got)) > 0
 
 
-def test_staged_custom_locks_per_key(spark, tmp_path):
+def _stage(spark, src, on_build):
+    def build(path):
+        on_build()
+        os.makedirs(path)
+
+    return staged_custom(spark, src, "lk", build)
+
+
+def _materialize(spark, src, on_build):
+    def build():
+        on_build()
+        return spark.range(1)
+
+    df = artifacts.materialized(
+        spark,
+        ("lk", src),
+        "lk_",
+        build,
+        inputs=(f"{src}/events.parquet",),
+        base_dir=f"{src}_art",
+    )
+    return tuple(df.inputFiles())
+
+
+@pytest.mark.parametrize(
+    "memo", [_stage, _materialize], ids=["staged_custom", "materialized"]
+)
+def test_staged_custom_locks_per_key(spark, tmp_path, memo):
     """Same key: one build however many concurrent callers. Different
     keys: builds overlap — key A's build, started first, waits for key
-    B's to start, which a single global lock would block."""
+    B's to start, which a single global lock would block. Holds for both
+    entry points of the one store."""
     for d in ("a", "b"):
         os.makedirs(tmp_path / d)
         (tmp_path / d / "events.parquet").write_bytes(d.encode())
     a_started, b_started = threading.Event(), threading.Event()
     builds: list[str] = []
 
-    def build_a(path):
+    def build_a():
         builds.append("a")
         a_started.set()
         assert b_started.wait(20), "key B's build never overlapped key A's"
-        os.makedirs(path)
 
-    def build_b(path):
+    def build_b():
         builds.append("b")
         b_started.set()
-        os.makedirs(path)
 
     switch = sys.getswitchinterval()
     sys.setswitchinterval(1e-5)
     try:
         with ThreadPoolExecutor(8) as ex:
-            fa = ex.submit(staged_custom, spark, str(tmp_path / "a"), "lk", build_a)
+            fa = ex.submit(memo, spark, str(tmp_path / "a"), build_a)
             assert a_started.wait(20)
             fbs = [
-                ex.submit(staged_custom, spark, str(tmp_path / "b"), "lk", build_b)
+                ex.submit(memo, spark, str(tmp_path / "b"), build_b)
                 for _ in range(7)
             ]
             pa = fa.result(timeout=60)
