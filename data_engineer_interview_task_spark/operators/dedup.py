@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..plans import iterate
 from ..sources import read_table
 
 # ---------------------------------------------------------------------------
@@ -554,11 +555,11 @@ def near_dup_clusters(
     per cluster).
 
     Iterative min-label propagation: label(v) := min(label(v),
-    min(label(u) for u~v)), repeated until fixpoint. Each iteration is one
-    equi-join + hash aggregate (label propagation, the Pregel pattern on
-    DataFrames); the driver only orchestrates the loop and checks
-    convergence — per-iteration data never leaves the cluster. Converges
-    in O(diameter) iterations; near-dup graphs are tiny-diameter.
+    min(label(u) for u~v)), repeated until fixpoint — ``iterate.min_step``
+    run by ``iterate.rounds(stable_on="label")``. The state is
+    corpus-sized, so the step keeps the shuffle join (no broadcast).
+    Converges in O(diameter) iterations; near-dup graphs are
+    tiny-diameter.
 
     ``pair_source`` picks the similarity-graph edge generator:
       * ``"ngram"``  — exact inverted-index Jaccard (the small-scale oracle
@@ -569,14 +570,10 @@ def near_dup_clusters(
     Both use the same ``threshold`` semantics (edges are exact-Jaccard-
     verified in either path).
 
-    ``reliable_checkpoint``: the loop truncates lineage every iteration.
-    ``localCheckpoint`` (default) stores blocks on executors WITHOUT
-    lineage — fastest, but an executor loss on a real cluster kills the
-    job mid-loop. With ``reliable_checkpoint=True`` the loop uses
-    ``DataFrame.checkpoint()`` to the fault-tolerant checkpoint dir
-    (``spark.sparkContext.setCheckpointDir`` — e.g. HDFS/S3 on a
-    cluster; this helper sets a local default if unset), trading one
-    write+read of the (tiny) label table per iteration for resilience.
+    ``reliable_checkpoint`` cuts the edge list and the label state with
+    ``DataFrame.checkpoint()`` to the fault-tolerant checkpoint dir (the
+    ``reliable`` mode of ``iterate.cut``): an executor loss no longer
+    kills the loop, at one write+read of the label table per iteration.
     """
     if pair_source == "minhash":
         pairs = minhash_lsh_pairs(
@@ -589,72 +586,23 @@ def near_dup_clusters(
     else:  # pragma: no cover - guard
         raise ValueError(f"unknown pair_source: {pair_source!r}")
 
-    if reliable_checkpoint and spark.sparkContext.getCheckpointDir() is None:
-        spark.sparkContext.setCheckpointDir(
-            f"{spark.conf.get('spark.sql.warehouse.dir', 'spark-warehouse')}"
-            "/_cc_checkpoints"
-        )
-
-    def _ckpt(df: DataFrame) -> DataFrame:
-        # r12 opt: LAZY checkpoints — the convergence count that follows
-        # each iteration materializes the new label frame in the SAME
-        # job (halving the per-iteration job count); lineage truncation
-        # and values are unchanged
-        return (
-            df.checkpoint(eager=False)
-            if reliable_checkpoint
-            else df.localCheckpoint(eager=False)
-        )
-
     docs = read_table(spark, sf_dir, "documents").select("doc_id")
-    # undirected edge list (both directions) — checkpoint keeps the
-    # shingle join from being recomputed every iteration
-    edges = _ckpt(
-        pairs.unionByName(
-            pairs.select(
-                F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b")
-            )
-        )
+    # both directions, cut once so the pair join does not rerun per round
+    undirected = pairs.union(pairs.select("doc_b", "doc_a")).toDF("src", "dst")
+    edges = iterate.cut(undirected, eager=False, reliable=reliable_checkpoint)
+    # propagate ONLY over edge endpoints: isolated docs (most of a deduped
+    # corpus) never change label; they rejoin with label = own id at the end
+    init = edges.select(F.col("src").alias("node")).distinct().select(
+        "node", F.col("node").alias("label")
     )
-    # propagate ONLY over edge endpoints: isolated docs (the overwhelming
-    # majority of a deduped corpus) can never change label, so keeping
-    # them out shrinks every per-iteration join/count from |corpus| rows
-    # to |V(edges)| rows; they rejoin with label = own id at the end
-    labels = _ckpt(
-        edges.select(F.col("doc_a").alias("doc_id"))
-        .distinct()
-        .select("doc_id", F.col("doc_id").alias("label"))
+    step = iterate.min_step(edges, "label", broadcast=False)
+    *_, labels = iterate.rounds(
+        init, step, max_iter, stable_on="label", reliable=reliable_checkpoint
     )
-    for _ in range(max_iter):
-        neighbor_min = (
-            edges.join(labels, edges.doc_b == labels.doc_id)
-            .groupBy(F.col("doc_a").alias("doc_id"))
-            .agg(F.min("label").alias("nbr_label"))
-        )
-        new_labels = _ckpt(
-            labels.join(neighbor_min, "doc_id", "left")
-            .select(
-                "doc_id",
-                F.least(
-                    F.col("label"), F.coalesce(F.col("nbr_label"), F.col("label"))
-                ).alias("label"),
-            )
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "doc_id")
-            .filter(F.col("n.label") != F.col("o.label"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    return (
-        docs.join(labels, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce(F.col("label"), F.col("doc_id")).alias("cluster_id"),
-        )
+    return docs.join(
+        labels.withColumnRenamed("node", "doc_id"), "doc_id", "left"
+    ).select(
+        "doc_id", F.coalesce(F.col("label"), F.col("doc_id")).alias("cluster_id")
     )
 
 

@@ -9,14 +9,14 @@ other half of the graph family).
 Scale shape (the standard Pregel-on-DataFrames decomposition):
 - the EDGE LIST is the big distributed dataset; it is built by a bounded
   self-join (lineitems of one order — order size is bounded by the data
-  model, so the join fan-out per key is O(1)), deduplicated, and persisted
-  once; every iteration reuses the same shuffle partitioning on ``src``;
+  model, so the join fan-out per key is O(1)), deduplicated, materialized
+  as an artifact and pinned for the loop (``plans/iterate.py``);
 - RANKS are one row per node — tiny next to the corpus — and each
   iteration is exactly one equi-join (edges ⋈ ranks on src) plus one
   partial-aggregated groupBy(dst): the map-side combine means the exchange
   carries one row per (partition, dst), bounded by nodes x partitions;
-- iterations are statically unrolled (fixed count), so the whole algorithm
-  is ONE lazy lineage — no driver-side collect anywhere.
+- iterations are statically unrolled; ``plans/iterate.py`` cuts each
+  round's node state, so no round re-executes an earlier one.
 
 Cross-engine determinism (what makes an ITERATIVE graph algorithm fully
 oracle-checkable): all arithmetic is BIGINT fixed-point. Ranks are scaled
@@ -35,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..plans import iterate
 from ..sources import read_table
 
 #: fixed-point scale for rank mass (1.0 == 1e12)
@@ -134,35 +135,23 @@ def supplier_pagerank(
     Every node of this graph has outdegree >= 1 by construction (edges are
     symmetric), so there is no dangling-mass redistribution step.
     """
-    edges = _cached_edges(spark, sf_dir).persist()
-    # node-sized state frames are materialized once (degree table) /
-    # per round (rank table) and BROADCAST into the edge join — the
-    # supplier_label_propagation lineage-and-join discipline applied to
-    # the power iteration (the rank chain is linear, not exponential,
-    # but each un-cut round still re-aggregated the degree table from
-    # the edge scan)
-    nodes = (
-        edges.groupBy("src")
-        .agg(F.count(F.lit(1)).cast("long").alias("deg"))
-        .withColumnRenamed("src", "node")
-        .localCheckpoint(eager=True)
-    )
-    ranks = nodes.withColumn("rank", F.lit(PR_SCALE).cast("long"))
     base = PR_DAMPING_PCT  # 85
     teleport = (100 - base) * PR_SCALE // 100
-    for _ in range(iterations):
-        contrib = ranks.select(
-            F.col("node").alias("src"), F.expr("rank DIV deg").alias("contrib")
-        )
-        incoming = (
-            edges.join(F.broadcast(contrib), "src")
-            .groupBy("dst")
-            .agg(F.sum("contrib").alias("inc"))
-            .withColumnRenamed("dst", "node")
-        )
-        ranks = (
-            nodes.join(incoming, "node", "left")
-            .select(
+    with iterate.persisted(_cached_edges(spark, sf_dir)) as edges:
+        # node-sized (node, deg, rank) state, BROADCAST into the edge
+        # join and cut per round (an un-cut round re-aggregated the
+        # degree table from the edge scan)
+        def _step(ranks: DataFrame) -> DataFrame:
+            contrib = ranks.select(
+                F.col("node").alias("src"), F.expr("rank DIV deg").alias("contrib")
+            )
+            incoming = (
+                edges.join(F.broadcast(contrib), "src")
+                .groupBy("dst")
+                .agg(F.sum("contrib").alias("inc"))
+                .withColumnRenamed("dst", "node")
+            )
+            return ranks.select("node", "deg").join(incoming, "node", "left").select(
                 "node",
                 "deg",
                 (
@@ -170,19 +159,18 @@ def supplier_pagerank(
                     + F.expr(f"({base} * coalesce(inc, 0L)) DIV 100")
                 ).alias("rank"),
             )
-            .localCheckpoint(eager=True)
+
+        init = (
+            edges.groupBy(F.col("src").alias("node"))
+            .agg(F.count(F.lit(1)).cast("long").alias("deg"))
+            .withColumn("rank", F.lit(PR_SCALE).cast("long"))
         )
-    out = ranks.select(
+        *_, ranks = iterate.rounds(init, _step, iterations)
+    return ranks.select(
         F.col("node").alias("s_suppkey"),
         F.col("deg").alias("degree"),
         F.col("rank").alias("pr_scaled"),
     )
-    # the cached edge frame must not outlive the call in a shared session
-    # (ADVICE r4): eagerly materialize the node-sized result (it no longer
-    # references `edges`), then release the edge blocks
-    out = out.localCheckpoint(eager=True)
-    edges.unpersist()
-    return out
 
 
 def pagerank_oracle_sql(iterations: int = PR_ITERATIONS) -> str:
@@ -273,27 +261,26 @@ def supplier_triangles(
     )
     oriented = keyed.filter(
         F.struct(F.col("du"), F.col("u")) < F.struct(F.col("dv"), F.col("v"))
-    ).select("u", "v").persist()
-    w1 = oriented.select(F.col("u").alias("p"), F.col("v").alias("x"))
-    w2 = oriented.select(F.col("u").alias("p"), F.col("v").alias("y"))
-    wedges = w1.join(w2, "p").filter(F.col("x") < F.col("y"))
-    # the closing edge between x and y may be oriented either way — join
-    # on the id-canonical form so this stays a single equi-join (a
-    # disjunctive condition would fall back to a nested-loop plan)
-    closing = oriented.select(
-        F.least("u", "v").alias("x"), F.greatest("u", "v").alias("y")
-    )
-    tri = wedges.join(closing, ["x", "y"]).select("p", "x", "y")
-    out = (
-        tri.select(F.explode(F.array("p", "x", "y")).alias("s_suppkey"))
-        .groupBy("s_suppkey")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_triangles"))
-    )
-    # release the cached oriented-edge frame (ADVICE r4): the node-sized
-    # count is materialized eagerly so the returned frame no longer needs it
-    out = out.localCheckpoint(eager=True)
-    oriented.unpersist()
-    return out
+    ).select("u", "v")
+    with iterate.persisted(oriented) as oriented:
+        w1 = oriented.select(F.col("u").alias("p"), F.col("v").alias("x"))
+        w2 = oriented.select(F.col("u").alias("p"), F.col("v").alias("y"))
+        wedges = w1.join(w2, "p").filter(F.col("x") < F.col("y"))
+        # the closing edge between x and y may be oriented either way —
+        # join on the id-canonical form so this stays a single equi-join
+        # (a disjunctive condition would fall back to a nested-loop plan)
+        closing = oriented.select(
+            F.least("u", "v").alias("x"), F.greatest("u", "v").alias("y")
+        )
+        tri = wedges.join(closing, ["x", "y"]).select("p", "x", "y")
+        # the node-sized count is materialized eagerly so the returned
+        # frame no longer needs the pinned oriented edges
+        return (
+            tri.select(F.explode(F.array("p", "x", "y")).alias("s_suppkey"))
+            .groupBy("s_suppkey")
+            .agg(F.count(F.lit(1)).cast("long").alias("n_triangles"))
+            .localCheckpoint(eager=True)
+        )
 
 
 def supplier_bfs_hops(
@@ -307,41 +294,23 @@ def supplier_bfs_hops(
     centrality, triangles' motifs and dedup's components).
 
     Pregel shape, statically unrolled: each round relaxes
-    ``dist(v) = min(dist(v), min over edges u→v of dist(u)+1)`` — one
-    equi-join (frontier ⋈ edges) + one min-aggregation, both partial-
-    aggregated, state is one row per reached node. Rounds beyond the
-    graph diameter are no-ops, so ``max_hops`` bounds work exactly like a
-    watermark bounds streaming state. Exact BIGINT hops — nothing to
-    round, so the unrolled-CTE oracle hash-matches the whole traversal.
-    Unreached nodes are absent (semi-join semantics, not NULL-padding).
+    ``dist(v) = min(dist(v), min over edges u→v of dist(u)+1)`` —
+    ``iterate.min_step(hop=1)``, the label-propagation step and cut.
+    Rounds beyond the graph diameter are no-ops, so ``max_hops`` bounds
+    work like a watermark bounds streaming state. Exact BIGINT hops, so
+    the unrolled-CTE oracle hash-matches the whole traversal. Unreached
+    nodes are absent (semi-join semantics, not NULL-padding).
     """
-    edges = _cached_edges(spark, sf_dir).persist()
-    supplier = read_table(spark, sf_dir, "supplier")
-    dist = (
-        supplier.filter(F.col("s_suppkey") % seed_mod == 0)
+    seeds = (
+        read_table(spark, sf_dir, "supplier")
+        .filter(F.col("s_suppkey") % seed_mod == 0)
         .select(F.col("s_suppkey").alias("node"))
         .withColumn("hop", F.lit(0).cast("long"))
-        .localCheckpoint(eager=True)
     )
-    # per-round materialization + broadcast of the node-sized frontier —
-    # same double-reference lineage cut as supplier_label_propagation
-    # (each round's dist feeds both the join probe and the union arm)
-    for _ in range(max_hops):
-        reached = edges.join(
-            F.broadcast(dist.withColumnRenamed("node", "src")), "src"
-        ).select(F.col("dst").alias("node"), (F.col("hop") + 1).alias("hop"))
-        dist = (
-            dist.unionAll(reached)
-            .groupBy("node")
-            .agg(F.min("hop").alias("hop"))
-            .localCheckpoint(eager=True)
-        )
-    out = dist.select(F.col("node").alias("s_suppkey"), F.col("hop"))
-    # release the cached edge frame (ADVICE r4) after the node-sized
-    # distance table is materialized
-    out = out.localCheckpoint(eager=True)
-    edges.unpersist()
-    return out
+    with iterate.persisted(_cached_edges(spark, sf_dir)) as edges:
+        step = iterate.min_step(edges, "hop", hop=1)
+        *_, dist = iterate.rounds(seeds, step, max_hops)
+    return dist.select(F.col("node").alias("s_suppkey"), F.col("hop"))
 
 
 def supplier_clustering_coeff(
@@ -491,41 +460,22 @@ def supplier_label_propagation(
     bit-deterministic and the whole traversal has an unrolled-CTE
     oracle (same gate as BFS).
 
-    Pregel shape, statically unrolled: per round ONE equi-join
-    (labels ⋈ edges) + ONE min-aggregation, both partial-aggregated;
-    state is one row per node. The label frame is MATERIALIZED
-    (eager localCheckpoint) every round — it is referenced twice per
-    round (join probe + union arm), so without the cut each round's
-    lineage contains TWO copies of the previous round's, re-executing
-    round k's join 2^(rounds-k) times (measured at sf1: bench median
-    12.99s -> 2.85s, VERDICT r7 item 6) — and BROADCAST into the edge
-    join: node state is bounded by the supplier dimension, the classic
-    broadcastable side (at a |V| beyond broadcast the artifact-backed
-    shuffle join on a bucketed edge table is the documented fallback).
-    Emits the label plus the member count per k-hop community (via a
-    second aggregate over the node-sized label table)."""
-    edges = _cached_edges(spark, sf_dir).persist()
-    supplier = read_table(spark, sf_dir, "supplier")
-    labels = supplier.select(
+    Pregel shape, statically unrolled: ``iterate.min_step(hop=0)`` over
+    the pinned edges, cut every round by ``iterate.rounds`` because the
+    state is referenced twice per round (measured at sf1: bench median
+    12.99s -> 2.85s, VERDICT r7 item 6), and BROADCAST into the edge
+    join because node state is supplier-bounded (beyond broadcast, a
+    shuffle join on a bucketed edge table is the fallback). Emits the
+    label plus the member count per k-hop community."""
+    init = read_table(spark, sf_dir, "supplier").select(
         F.col("s_suppkey").alias("node"), F.col("s_suppkey").alias("label")
-    ).localCheckpoint(eager=True)
-    for _ in range(rounds):
-        prop = edges.join(
-            F.broadcast(labels.withColumnRenamed("node", "src")), "src"
-        ).select(F.col("dst").alias("node"), "label")
-        labels = (
-            labels.unionAll(prop)
-            .groupBy("node")
-            .agg(F.min("label").alias("label"))
-            .localCheckpoint(eager=True)
-        )
+    )
+    with iterate.persisted(_cached_edges(spark, sf_dir)) as edges:
+        *_, labels = iterate.rounds(init, iterate.min_step(edges, "label"), rounds)
     sizes = labels.groupBy("label").agg(F.count(F.lit(1)).alias("community_size"))
-    out = labels.join(F.broadcast(sizes), "label").select(
+    return labels.join(F.broadcast(sizes), "label").select(
         F.col("node").alias("s_suppkey"), "label", "community_size"
     )
-    out = out.localCheckpoint(eager=True)
-    edges.unpersist()
-    return out
 
 
 def copurchase_edges_capped(
@@ -667,8 +617,8 @@ def supplier_ktruss_profile(
     Plan: rounds are statically unrolled (the ``kcore_peel`` rule — a
     non-converged profile is still exactly "the edge set after N
     peels", bit-reproducible); each round is the
-    ``copurchase_edge_support`` triple-join over the SURVIVOR set,
-    eagerly localCheckpointed (the Pregel lineage lesson). The median
+    ``copurchase_edge_support`` triple-join over the SURVIVOR set, cut
+    per round by ``iterate.rounds`` (the Pregel lineage lesson). The median
     threshold is an order statistic over the VALUE-grain support
     ladder (never an edge-grain global sort); its one-row collect is
     aggregate-sized. At 100 TB every join keys on node ids and the
@@ -699,10 +649,21 @@ def supplier_ktruss_profile(
             "u", "v", F.coalesce(F.col("s"), F.lit(0)).alias("sup")
         )
 
+    def _peel(cur: DataFrame) -> DataFrame:
+        # `thr` is set below from round 0, before `states` advances
+        keep = cur.filter(F.col("sup") >= thr).select("u", "v")
+        sym = keep.select(
+            F.col("u").alias("src"), F.col("v").alias("dst")
+        ).unionAll(
+            keep.select(F.col("v").alias("src"), F.col("u").alias("dst"))
+        )
+        return _support(keep, sym)
+
     uv = base.filter(F.col("src") < F.col("dst")).select(
         F.col("src").alias("u"), F.col("dst").alias("v")
     )
-    cur = _support(uv, base).localCheckpoint()
+    states = iterate.rounds(_support(uv, base), _peel, rounds)
+    cur = next(states)
 
     # lower-median threshold from the VALUE-grain support ladder
     ladder = cur.groupBy("sup").agg(F.count(F.lit(1)).alias("cnt"))
@@ -734,14 +695,7 @@ def supplier_ktruss_profile(
         )
 
     out = _stats(0, cur)
-    for r in range(1, rounds + 1):
-        keep = cur.filter(F.col("sup") >= thr).select("u", "v")
-        sym = keep.select(
-            F.col("u").alias("src"), F.col("v").alias("dst")
-        ).unionAll(
-            keep.select(F.col("v").alias("src"), F.col("u").alias("dst"))
-        )
-        cur = _support(keep, sym).localCheckpoint()
+    for r, cur in enumerate(states, 1):
         out = out.unionAll(_stats(r, cur))
     return out
 

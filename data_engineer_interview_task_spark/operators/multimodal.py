@@ -2345,43 +2345,6 @@ def multimodal_jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     return attach_jpeg_payload(spark, sf_dir).mapInPandas(_decode, schema=schema)
 
 
-def extract_features_arrow(df: DataFrame) -> DataFrame:
-    """``mapInArrow`` twin of ``extract_features``: the same binary→
-    features pass operating on raw ``pyarrow.RecordBatch``es — no pandas
-    conversion at all, which for large binary payloads removes the
-    bytes→object-array copy pandas forces on every batch (the dominant
-    serde cost when payloads are MBs, not rows). Same contract: batch in,
-    narrow typed batch out, partitioning preserved; asserted equal to
-    the pandas path in tests/test_multimodal_contract.py.
-
-    At 100 TB prefer this form for image/video payloads and keep
-    mapInPandas for logic that genuinely wants pandas semantics."""
-
-    def _extract(batches):
-        # self-contained closure (same worker-import rule as the pandas
-        # twin): only pyarrow + hashlib, resolved on the worker
-        import hashlib as _h
-
-        import pyarrow as _pa
-
-        for batch in batches:
-            payloads = batch.column("payload").to_pylist()
-            yield _pa.RecordBatch.from_arrays(
-                [
-                    batch.column("doc_id"),
-                    _pa.array([len(b) for b in payloads], _pa.int64()),
-                    _pa.array(
-                        [_h.sha1(b).hexdigest() for b in payloads],
-                        _pa.string(),
-                    ),
-                    batch.column("modality"),
-                ],
-                names=["doc_id", "n_bytes", "sha1", "modality"],
-            )
-
-    return df.mapInArrow(_extract, schema=FEATURE_SCHEMA)
-
-
 def multimodal_image_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HEADER-ONLY image metadata scan — the manifest pass a curation
     pipeline runs BEFORE spending decode CPU: every document is encoded

@@ -131,18 +131,6 @@ def test_frame_sampling_arity_and_determinism(spark, sf_dir):
     assert a == b
 
 
-def test_arrow_and_pandas_feature_paths_agree(spark, sf_dir):
-    """mapInArrow and mapInPandas must produce identical features — the
-    Arrow-native path is a pure serde optimization, not a semantics
-    change."""
-    from data_engineer_interview_task_spark.operators import multimodal
-
-    base = multimodal.attach_payload(spark, sf_dir)
-    a = sorted(map(tuple, multimodal.extract_features(base).collect()))
-    b = sorted(map(tuple, multimodal.extract_features_arrow(base).collect()))
-    assert a == b and len(a) > 0
-
-
 def test_codec_attaches_spread_single_split_scans(spark, sf_dir):
     """The one-task-trap guard: codec-heavy attaches must not inherit a
     single-split scan's parallelism (the whole encode chain would run on
