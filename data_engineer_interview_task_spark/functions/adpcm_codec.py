@@ -17,10 +17,14 @@ reconstruction is an exact per-sample fold that a SQL oracle replays
 step for step (a recursive CTE over the sample index) — the lossy
 codec's distortion is itself hash-checkable.
 
-Both functions live in a builder so cloudpickle serializes them BY
-VALUE into Spark worker closures (the repo-wide rule)."""
+Plain module-level functions: the package registers itself
+pickle-by-value (package ``__init__``), so a ``mapInPandas`` function
+that references them runs on Spark python workers that cannot import
+this repo."""
 
 from __future__ import annotations
+
+import struct
 
 #: IMA ADPCM step-size table (89 entries, the standard table).
 STEP_TABLE: tuple[int, ...] = (
@@ -37,29 +41,115 @@ STEP_TABLE: tuple[int, ...] = (
 INDEX_TABLE: tuple[int, ...] = (-1, -1, -1, -1, 2, 4, 6, 8)
 
 
-def _build_adpcm_codec():
-    import struct
+step_table, index_table = STEP_TABLE, INDEX_TABLE
 
-    step_table, index_table = STEP_TABLE, INDEX_TABLE
+def _quantize(sample: int, pred: int, idx: int) -> tuple[int, int, int]:
+    """One IMA step: quantize ``sample`` against (pred, idx), return
+    (nibble, new_pred, new_idx). The reconstruction inside is the
+    decoder's, so encoder and decoder predictors never diverge."""
+    step = step_table[idx]
+    diff = sample - pred
+    nib = 0
+    if diff < 0:
+        nib = 8
+        diff = -diff
+    if diff >= step:
+        nib |= 4
+        diff -= step
+    if diff >= step >> 1:
+        nib |= 2
+        diff -= step >> 1
+    if diff >= step >> 2:
+        nib |= 1
+    diffq = step >> 3
+    if nib & 4:
+        diffq += step
+    if nib & 2:
+        diffq += step >> 1
+    if nib & 1:
+        diffq += step >> 2
+    pred = pred - diffq if nib & 8 else pred + diffq
+    pred = -32768 if pred < -32768 else (32767 if pred > 32767 else pred)
+    idx += index_table[nib & 7]
+    idx = 0 if idx < 0 else (88 if idx > 88 else idx)
+    return nib, pred, idx
 
-    def _quantize(sample: int, pred: int, idx: int) -> tuple[int, int, int]:
-        """One IMA step: quantize ``sample`` against (pred, idx), return
-        (nibble, new_pred, new_idx). The reconstruction inside is the
-        decoder's, so encoder and decoder predictors never diverge."""
+def adpcm_encode_wav(samples: list[int]) -> bytes:
+    """Encode mono 16-bit PCM samples into a single-block IMA ADPCM
+    WAV. The first sample is stored raw in the block header (it IS
+    the first decoded sample); the rest quantize to 4-bit codes.
+
+    SINGLE-BLOCK contract: the fmt chunk's samples-per-block field
+    is u16, so at most 65535 samples fit one block (ADVICE r8 —
+    guard explicitly instead of an opaque struct.error)."""
+    if not samples:
+        raise ValueError("empty sample list")
+    if len(samples) > 0xFFFF:
+        raise ValueError(
+            "single-block IMA ADPCM holds at most 65535 samples "
+            f"(got {len(samples)}); samples-per-block is u16"
+        )
+    n = len(samples)
+    pred, idx = samples[0], 0
+    nibbles = []
+    for s in samples[1:]:
+        nib, pred, idx2 = _quantize(s, pred, idx)
+        idx = idx2
+        nibbles.append(nib)
+    packed = bytearray()
+    for i in range(0, len(nibbles), 2):
+        lo = nibbles[i]
+        hi = nibbles[i + 1] if i + 1 < len(nibbles) else 0
+        packed.append(lo | (hi << 4))
+    block = struct.pack("<hBB", samples[0], 0, 0) + bytes(packed)
+    block_align = len(block)
+    fmt = struct.pack(
+        "<HHIIHHHH", 0x11, 1, 8000, 8000 * block_align // n,
+        block_align, 4, 2, n,
+    )
+    fact = struct.pack("<I", n)
+    chunks = (
+        b"fmt " + struct.pack("<I", len(fmt)) + fmt
+        + b"fact" + struct.pack("<I", len(fact)) + fact
+        + b"data" + struct.pack("<I", len(block)) + block
+    )
+    return b"RIFF" + struct.pack("<I", 4 + len(chunks)) + b"WAVE" + chunks
+
+def adpcm_decode_wav(payload: bytes) -> list[int]:
+    """Decode a mono single-block IMA ADPCM WAV back to 16-bit PCM
+    samples (RIFF chunk walk; fmt must declare tag 0x11)."""
+    if payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
+        raise ValueError("not a RIFF/WAVE payload")
+    pos = 12
+    n_samples = None
+    data = None
+    tag = None
+    while pos + 8 <= len(payload):
+        cid = payload[pos : pos + 4]
+        (ln,) = struct.unpack_from("<I", payload, pos + 4)
+        body = payload[pos + 8 : pos + 8 + ln]
+        if cid == b"fmt ":
+            tag = struct.unpack_from("<H", body, 0)[0]
+            if tag != 0x11:
+                raise ValueError(f"not IMA ADPCM (fmt tag 0x{tag:04x})")
+            if struct.unpack_from("<H", body, 2)[0] != 1:
+                raise ValueError("only mono supported")
+            n_samples = struct.unpack_from("<H", body, 18)[0]
+        elif cid == b"fact":
+            n_samples = struct.unpack_from("<I", body, 0)[0]
+        elif cid == b"data":
+            data = body
+        pos += 8 + ln + (ln & 1)
+    if tag is None or data is None or not n_samples:
+        raise ValueError("missing fmt/data chunk")
+    pred, idx, _res = struct.unpack_from("<hBB", data, 0)
+    out = [pred]
+    nib_i = 0
+    while len(out) < n_samples:
+        byte = data[4 + (nib_i >> 1)]
+        nib = (byte >> 4) if nib_i & 1 else (byte & 0x0F)
+        nib_i += 1
         step = step_table[idx]
-        diff = sample - pred
-        nib = 0
-        if diff < 0:
-            nib = 8
-            diff = -diff
-        if diff >= step:
-            nib |= 4
-            diff -= step
-        if diff >= step >> 1:
-            nib |= 2
-            diff -= step >> 1
-        if diff >= step >> 2:
-            nib |= 1
         diffq = step >> 3
         if nib & 4:
             diffq += step
@@ -68,104 +158,10 @@ def _build_adpcm_codec():
         if nib & 1:
             diffq += step >> 2
         pred = pred - diffq if nib & 8 else pred + diffq
-        pred = -32768 if pred < -32768 else (32767 if pred > 32767 else pred)
+        pred = (
+            -32768 if pred < -32768 else (32767 if pred > 32767 else pred)
+        )
         idx += index_table[nib & 7]
         idx = 0 if idx < 0 else (88 if idx > 88 else idx)
-        return nib, pred, idx
-
-    def adpcm_encode_wav(samples: list[int]) -> bytes:
-        """Encode mono 16-bit PCM samples into a single-block IMA ADPCM
-        WAV. The first sample is stored raw in the block header (it IS
-        the first decoded sample); the rest quantize to 4-bit codes.
-
-        SINGLE-BLOCK contract: the fmt chunk's samples-per-block field
-        is u16, so at most 65535 samples fit one block (ADVICE r8 —
-        guard explicitly instead of an opaque struct.error)."""
-        if not samples:
-            raise ValueError("empty sample list")
-        if len(samples) > 0xFFFF:
-            raise ValueError(
-                "single-block IMA ADPCM holds at most 65535 samples "
-                f"(got {len(samples)}); samples-per-block is u16"
-            )
-        n = len(samples)
-        pred, idx = samples[0], 0
-        nibbles = []
-        for s in samples[1:]:
-            nib, pred, idx2 = _quantize(s, pred, idx)
-            idx = idx2
-            nibbles.append(nib)
-        packed = bytearray()
-        for i in range(0, len(nibbles), 2):
-            lo = nibbles[i]
-            hi = nibbles[i + 1] if i + 1 < len(nibbles) else 0
-            packed.append(lo | (hi << 4))
-        block = struct.pack("<hBB", samples[0], 0, 0) + bytes(packed)
-        block_align = len(block)
-        fmt = struct.pack(
-            "<HHIIHHHH", 0x11, 1, 8000, 8000 * block_align // n,
-            block_align, 4, 2, n,
-        )
-        fact = struct.pack("<I", n)
-        chunks = (
-            b"fmt " + struct.pack("<I", len(fmt)) + fmt
-            + b"fact" + struct.pack("<I", len(fact)) + fact
-            + b"data" + struct.pack("<I", len(block)) + block
-        )
-        return b"RIFF" + struct.pack("<I", 4 + len(chunks)) + b"WAVE" + chunks
-
-    def adpcm_decode_wav(payload: bytes) -> list[int]:
-        """Decode a mono single-block IMA ADPCM WAV back to 16-bit PCM
-        samples (RIFF chunk walk; fmt must declare tag 0x11)."""
-        if payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
-            raise ValueError("not a RIFF/WAVE payload")
-        pos = 12
-        n_samples = None
-        data = None
-        tag = None
-        while pos + 8 <= len(payload):
-            cid = payload[pos : pos + 4]
-            (ln,) = struct.unpack_from("<I", payload, pos + 4)
-            body = payload[pos + 8 : pos + 8 + ln]
-            if cid == b"fmt ":
-                tag = struct.unpack_from("<H", body, 0)[0]
-                if tag != 0x11:
-                    raise ValueError(f"not IMA ADPCM (fmt tag 0x{tag:04x})")
-                if struct.unpack_from("<H", body, 2)[0] != 1:
-                    raise ValueError("only mono supported")
-                n_samples = struct.unpack_from("<H", body, 18)[0]
-            elif cid == b"fact":
-                n_samples = struct.unpack_from("<I", body, 0)[0]
-            elif cid == b"data":
-                data = body
-            pos += 8 + ln + (ln & 1)
-        if tag is None or data is None or not n_samples:
-            raise ValueError("missing fmt/data chunk")
-        pred, idx, _res = struct.unpack_from("<hBB", data, 0)
-        out = [pred]
-        nib_i = 0
-        while len(out) < n_samples:
-            byte = data[4 + (nib_i >> 1)]
-            nib = (byte >> 4) if nib_i & 1 else (byte & 0x0F)
-            nib_i += 1
-            step = step_table[idx]
-            diffq = step >> 3
-            if nib & 4:
-                diffq += step
-            if nib & 2:
-                diffq += step >> 1
-            if nib & 1:
-                diffq += step >> 2
-            pred = pred - diffq if nib & 8 else pred + diffq
-            pred = (
-                -32768 if pred < -32768 else (32767 if pred > 32767 else pred)
-            )
-            idx += index_table[nib & 7]
-            idx = 0 if idx < 0 else (88 if idx > 88 else idx)
-            out.append(pred)
-        return out
-
-    return adpcm_encode_wav, adpcm_decode_wav
-
-
-adpcm_encode_wav, adpcm_decode_wav = _build_adpcm_codec()
+        out.append(pred)
+    return out

@@ -34,132 +34,110 @@ A-law decode mirrors the segment split (16-bit domain):
     m = ((mant << 4) + 0x108) << (seg - 1)   seg 2..7
     s = m if a' & 0x80 else -m
 
-Both builders keep every entry point inside a closure so cloudpickle
-serializes them BY VALUE into Spark worker closures (the repo rule)."""
+Plain module-level functions: the package registers itself
+pickle-by-value (package ``__init__``), so a ``mapInPandas`` function
+that references the entry points runs on Spark python workers that
+cannot import this repo."""
 
 from __future__ import annotations
 
+import struct
 
-def _build_g711_codec():
-    import struct
 
-    def _wav(fmt_tag: int, payload: bytes, n: int) -> bytes:
-        fmt = struct.pack(
-            "<HHIIHH", fmt_tag, 1, 8000, 8000, 1, 8
-        )
-        fact = struct.pack("<I", n)
-        chunks = (
-            b"fmt " + struct.pack("<I", len(fmt)) + fmt
-            + b"fact" + struct.pack("<I", len(fact)) + fact
-            + b"data" + struct.pack("<I", len(payload)) + payload
-        )
-        return (
-            b"RIFF" + struct.pack("<I", 4 + len(chunks)) + b"WAVE" + chunks
-        )
-
-    def _walk(payload: bytes, want_tag: int) -> bytes:
-        if payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
-            raise ValueError("not a RIFF/WAVE payload")
-        pos, tag, data = 12, None, None
-        while pos + 8 <= len(payload):
-            cid = payload[pos : pos + 4]
-            (ln,) = struct.unpack_from("<I", payload, pos + 4)
-            body = payload[pos + 8 : pos + 8 + ln]
-            if cid == b"fmt ":
-                tag = struct.unpack_from("<H", body, 0)[0]
-                if tag != want_tag:
-                    raise ValueError(
-                        f"fmt tag 0x{tag:04x} != expected 0x{want_tag:04x}"
-                    )
-            elif cid == b"data":
-                data = body
-            pos += 8 + ln + (ln & 1)
-        if tag is None or data is None:
-            raise ValueError("missing fmt/data chunk")
-        return data
-
-    def mulaw_encode_sample(s: int) -> int:
-        sign = 0x80 if s < 0 else 0
-        m = -s if s < 0 else s
-        if m > 32635:
-            m = 32635
-        m += 0x84
-        exp = (m >> 7).bit_length() - 1
-        mant = (m >> (exp + 3)) & 0x0F
-        return ~(sign | (exp << 4) | mant) & 0xFF
-
-    def mulaw_decode_sample(b: int) -> int:
-        u = ~b & 0xFF
-        exp = (u >> 4) & 7
-        m = (((u & 0x0F) << 3) | 0x84) << exp
-        m -= 0x84
-        return -m if u & 0x80 else m
-
-    def alaw_encode_sample(s: int) -> int:
-        sign = 0x80 if s >= 0 else 0
-        p = s >> 3  # arithmetic shift, like the C reference
-        if p < 0:
-            p = -p - 1  # one's-complement fold (reference semantics)
-        if p <= 0x1F:
-            seg = 0
-        elif p <= 0x3F:
-            seg = 1
-        else:
-            seg = p.bit_length() - 5  # p in [0x40, 0xFFF] -> seg 2..7
-        comp = (seg << 4) | (
-            (p >> 1) & 0x0F if seg < 2 else (p >> seg) & 0x0F
-        )
-        return (sign | comp) ^ 0x55
-
-    def alaw_decode_sample(b: int) -> int:
-        a = b ^ 0x55
-        seg = (a >> 4) & 7
-        mant = a & 0x0F
-        if seg == 0:
-            m = (mant << 4) + 8
-        elif seg == 1:
-            m = (mant << 4) + 0x108
-        else:
-            m = ((mant << 4) + 0x108) << (seg - 1)
-        return m if a & 0x80 else -m
-
-    def mulaw_encode_wav(samples: list[int]) -> bytes:
-        if not samples:
-            raise ValueError("empty sample list")
-        payload = bytes(mulaw_encode_sample(s) for s in samples)
-        return _wav(0x0007, payload, len(samples))
-
-    def mulaw_decode_wav(payload: bytes) -> list[int]:
-        return [mulaw_decode_sample(b) for b in _walk(payload, 0x0007)]
-
-    def alaw_encode_wav(samples: list[int]) -> bytes:
-        if not samples:
-            raise ValueError("empty sample list")
-        payload = bytes(alaw_encode_sample(s) for s in samples)
-        return _wav(0x0006, payload, len(samples))
-
-    def alaw_decode_wav(payload: bytes) -> list[int]:
-        return [alaw_decode_sample(b) for b in _walk(payload, 0x0006)]
-
+def _wav(fmt_tag: int, payload: bytes, n: int) -> bytes:
+    fmt = struct.pack(
+        "<HHIIHH", fmt_tag, 1, 8000, 8000, 1, 8
+    )
+    fact = struct.pack("<I", n)
+    chunks = (
+        b"fmt " + struct.pack("<I", len(fmt)) + fmt
+        + b"fact" + struct.pack("<I", len(fact)) + fact
+        + b"data" + struct.pack("<I", len(payload)) + payload
+    )
     return (
-        mulaw_encode_sample,
-        mulaw_decode_sample,
-        alaw_encode_sample,
-        alaw_decode_sample,
-        mulaw_encode_wav,
-        mulaw_decode_wav,
-        alaw_encode_wav,
-        alaw_decode_wav,
+        b"RIFF" + struct.pack("<I", 4 + len(chunks)) + b"WAVE" + chunks
     )
 
+def _walk(payload: bytes, want_tag: int) -> bytes:
+    if payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
+        raise ValueError("not a RIFF/WAVE payload")
+    pos, tag, data = 12, None, None
+    while pos + 8 <= len(payload):
+        cid = payload[pos : pos + 4]
+        (ln,) = struct.unpack_from("<I", payload, pos + 4)
+        body = payload[pos + 8 : pos + 8 + ln]
+        if cid == b"fmt ":
+            tag = struct.unpack_from("<H", body, 0)[0]
+            if tag != want_tag:
+                raise ValueError(
+                    f"fmt tag 0x{tag:04x} != expected 0x{want_tag:04x}"
+                )
+        elif cid == b"data":
+            data = body
+        pos += 8 + ln + (ln & 1)
+    if tag is None or data is None:
+        raise ValueError("missing fmt/data chunk")
+    return data
 
-(
-    mulaw_encode_sample,
-    mulaw_decode_sample,
-    alaw_encode_sample,
-    alaw_decode_sample,
-    mulaw_encode_wav,
-    mulaw_decode_wav,
-    alaw_encode_wav,
-    alaw_decode_wav,
-) = _build_g711_codec()
+def mulaw_encode_sample(s: int) -> int:
+    sign = 0x80 if s < 0 else 0
+    m = -s if s < 0 else s
+    if m > 32635:
+        m = 32635
+    m += 0x84
+    exp = (m >> 7).bit_length() - 1
+    mant = (m >> (exp + 3)) & 0x0F
+    return ~(sign | (exp << 4) | mant) & 0xFF
+
+def mulaw_decode_sample(b: int) -> int:
+    u = ~b & 0xFF
+    exp = (u >> 4) & 7
+    m = (((u & 0x0F) << 3) | 0x84) << exp
+    m -= 0x84
+    return -m if u & 0x80 else m
+
+def alaw_encode_sample(s: int) -> int:
+    sign = 0x80 if s >= 0 else 0
+    p = s >> 3  # arithmetic shift, like the C reference
+    if p < 0:
+        p = -p - 1  # one's-complement fold (reference semantics)
+    if p <= 0x1F:
+        seg = 0
+    elif p <= 0x3F:
+        seg = 1
+    else:
+        seg = p.bit_length() - 5  # p in [0x40, 0xFFF] -> seg 2..7
+    comp = (seg << 4) | (
+        (p >> 1) & 0x0F if seg < 2 else (p >> seg) & 0x0F
+    )
+    return (sign | comp) ^ 0x55
+
+def alaw_decode_sample(b: int) -> int:
+    a = b ^ 0x55
+    seg = (a >> 4) & 7
+    mant = a & 0x0F
+    if seg == 0:
+        m = (mant << 4) + 8
+    elif seg == 1:
+        m = (mant << 4) + 0x108
+    else:
+        m = ((mant << 4) + 0x108) << (seg - 1)
+    return m if a & 0x80 else -m
+
+def mulaw_encode_wav(samples: list[int]) -> bytes:
+    if not samples:
+        raise ValueError("empty sample list")
+    payload = bytes(mulaw_encode_sample(s) for s in samples)
+    return _wav(0x0007, payload, len(samples))
+
+def mulaw_decode_wav(payload: bytes) -> list[int]:
+    return [mulaw_decode_sample(b) for b in _walk(payload, 0x0007)]
+
+def alaw_encode_wav(samples: list[int]) -> bytes:
+    if not samples:
+        raise ValueError("empty sample list")
+    payload = bytes(alaw_encode_sample(s) for s in samples)
+    return _wav(0x0006, payload, len(samples))
+
+def alaw_decode_wav(payload: bytes) -> list[int]:
+    return [alaw_decode_sample(b) for b in _walk(payload, 0x0006)]

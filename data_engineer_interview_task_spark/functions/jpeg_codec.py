@@ -39,12 +39,15 @@ folded in), ``out = clip(128 + floordiv(Σ F[u,v]·T[u][x]·T[v][y] + HALF,
 SCALE))`` — no float appears anywhere, so decode is bit-reproducible on
 any platform and expressible in SQL for the DC-only case.
 
-All entry points are defined inside a builder so cloudpickle serializes
-them BY VALUE into Spark worker closures (the repo-wide rule; same as
-``png_codec``).
+Plain module-level functions: the package registers itself
+pickle-by-value (package ``__init__``), so a ``mapInPandas`` function
+that references the entry points runs on Spark python workers that
+cannot import this repo.
 """
 
 from __future__ import annotations
+
+import struct
 
 #: JPEG SOI marker (2 bytes) — the sniffing signature.
 JPEG_SIGNATURE = b"\xff\xd8"
@@ -121,213 +124,879 @@ def COLOR_UNIFORM_RGB(r: int, g: int, b: int) -> tuple[int, int, int]:
     )
 
 
-def _build_jpeg_codec():
-    import struct
+# fixed-point cosine table T[u][x] = round(4096 * C_u * cos((2x+1)u*pi/16)),
+# C_0 = 1/sqrt(2) — inlined literals so no float is evaluated anywhere
+_T = (
+    (2896, 2896, 2896, 2896, 2896, 2896, 2896, 2896),
+    (4017, 3406, 2276, 799, -799, -2276, -3406, -4017),
+    (3784, 1567, -1567, -3784, -3784, -1567, 1567, 3784),
+    (3406, -799, -4017, -2276, 2276, 4017, 799, -3406),
+    (2896, -2896, -2896, 2896, 2896, -2896, -2896, 2896),
+    (2276, -4017, 799, 3406, -3406, -799, 4017, -2276),
+    (1567, -3784, 3784, -1567, -1567, 3784, -3784, 1567),
+    (799, -2276, 3406, -4017, 4017, -3406, 2276, -799),
+)
+_SCALE = 4 * 4096 * 4096
+_HALF = _SCALE // 2
 
-    # fixed-point cosine table T[u][x] = round(4096 * C_u * cos((2x+1)u*pi/16)),
-    # C_0 = 1/sqrt(2) — inlined literals so no float is evaluated anywhere
-    _T = (
-        (2896, 2896, 2896, 2896, 2896, 2896, 2896, 2896),
-        (4017, 3406, 2276, 799, -799, -2276, -3406, -4017),
-        (3784, 1567, -1567, -3784, -3784, -1567, 1567, 3784),
-        (3406, -799, -4017, -2276, 2276, 4017, 799, -3406),
-        (2896, -2896, -2896, 2896, 2896, -2896, -2896, 2896),
-        (2276, -4017, 799, 3406, -3406, -799, 4017, -2276),
-        (1567, -3784, 3784, -1567, -1567, 3784, -3784, 1567),
-        (799, -2276, 3406, -4017, 4017, -3406, 2276, -799),
-    )
-    _SCALE = 4 * 4096 * 4096
-    _HALF = _SCALE // 2
+# zig-zag order: zigzag index -> (u, v) raster position
+_ZZ = (
+    0, 1, 8, 16, 9, 2, 3, 10, 17, 24, 32, 25, 18, 11, 4, 5,
+    12, 19, 26, 33, 40, 48, 41, 34, 27, 20, 13, 6, 7, 14, 21, 28,
+    35, 42, 49, 56, 57, 50, 43, 36, 29, 22, 15, 23, 30, 37, 44, 51,
+    58, 59, 52, 45, 38, 31, 39, 46, 53, 60, 61, 54, 47, 55, 62, 63,
+)
 
-    # zig-zag order: zigzag index -> (u, v) raster position
-    _ZZ = (
-        0, 1, 8, 16, 9, 2, 3, 10, 17, 24, 32, 25, 18, 11, 4, 5,
-        12, 19, 26, 33, 40, 48, 41, 34, 27, 20, 13, 6, 7, 14, 21, 28,
-        35, 42, 49, 56, 57, 50, 43, 36, 29, 22, 15, 23, 30, 37, 44, 51,
-        58, 59, 52, 45, 38, 31, 39, 46, 53, 60, 61, 54, 47, 55, 62, 63,
-    )
+# standard luminance quantization table (Annex K.1), raster order
+_QTAB = (
+    16, 11, 10, 16, 24, 40, 51, 61,
+    12, 12, 14, 19, 26, 58, 60, 55,
+    14, 13, 16, 24, 40, 57, 69, 56,
+    14, 17, 22, 29, 51, 87, 80, 62,
+    18, 22, 37, 56, 68, 109, 103, 77,
+    24, 35, 55, 64, 81, 104, 113, 92,
+    49, 64, 78, 87, 103, 121, 120, 101,
+    72, 92, 95, 98, 112, 100, 103, 99,
+)
 
-    # standard luminance quantization table (Annex K.1), raster order
-    _QTAB = (
-        16, 11, 10, 16, 24, 40, 51, 61,
-        12, 12, 14, 19, 26, 58, 60, 55,
-        14, 13, 16, 24, 40, 57, 69, 56,
-        14, 17, 22, 29, 51, 87, 80, 62,
-        18, 22, 37, 56, 68, 109, 103, 77,
-        24, 35, 55, 64, 81, 104, 113, 92,
-        49, 64, 78, 87, 103, 121, 120, 101,
-        72, 92, 95, 98, 112, 100, 103, 99,
-    )
+# standard chrominance quantization table (Annex K.2), raster order
+_QTAB_C = (
+    17, 18, 24, 47, 99, 99, 99, 99,
+    18, 21, 26, 66, 99, 99, 99, 99,
+    24, 26, 56, 99, 99, 99, 99, 99,
+    47, 66, 99, 99, 99, 99, 99, 99,
+    99, 99, 99, 99, 99, 99, 99, 99,
+    99, 99, 99, 99, 99, 99, 99, 99,
+    99, 99, 99, 99, 99, 99, 99, 99,
+    99, 99, 99, 99, 99, 99, 99, 99,
+)
 
-    # standard chrominance quantization table (Annex K.2), raster order
-    _QTAB_C = (
-        17, 18, 24, 47, 99, 99, 99, 99,
-        18, 21, 26, 66, 99, 99, 99, 99,
-        24, 26, 56, 99, 99, 99, 99, 99,
-        47, 66, 99, 99, 99, 99, 99, 99,
-        99, 99, 99, 99, 99, 99, 99, 99,
-        99, 99, 99, 99, 99, 99, 99, 99,
-        99, 99, 99, 99, 99, 99, 99, 99,
-        99, 99, 99, 99, 99, 99, 99, 99,
-    )
+# standard Huffman specs (Annex K.3): (BITS[1..16], HUFFVAL)
+_DC_SPEC = (
+    (0, 1, 5, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0, 0, 0),
+    tuple(range(12)),
+)
+_AC_SPEC = (
+    (0, 2, 1, 3, 3, 2, 4, 3, 5, 5, 4, 4, 0, 0, 1, 0x7D),
+    (
+        0x01, 0x02, 0x03, 0x00, 0x04, 0x11, 0x05, 0x12,
+        0x21, 0x31, 0x41, 0x06, 0x13, 0x51, 0x61, 0x07,
+        0x22, 0x71, 0x14, 0x32, 0x81, 0x91, 0xA1, 0x08,
+        0x23, 0x42, 0xB1, 0xC1, 0x15, 0x52, 0xD1, 0xF0,
+        0x24, 0x33, 0x62, 0x72, 0x82, 0x09, 0x0A, 0x16,
+        0x17, 0x18, 0x19, 0x1A, 0x25, 0x26, 0x27, 0x28,
+        0x29, 0x2A, 0x34, 0x35, 0x36, 0x37, 0x38, 0x39,
+        0x3A, 0x43, 0x44, 0x45, 0x46, 0x47, 0x48, 0x49,
+        0x4A, 0x53, 0x54, 0x55, 0x56, 0x57, 0x58, 0x59,
+        0x5A, 0x63, 0x64, 0x65, 0x66, 0x67, 0x68, 0x69,
+        0x6A, 0x73, 0x74, 0x75, 0x76, 0x77, 0x78, 0x79,
+        0x7A, 0x83, 0x84, 0x85, 0x86, 0x87, 0x88, 0x89,
+        0x8A, 0x92, 0x93, 0x94, 0x95, 0x96, 0x97, 0x98,
+        0x99, 0x9A, 0xA2, 0xA3, 0xA4, 0xA5, 0xA6, 0xA7,
+        0xA8, 0xA9, 0xAA, 0xB2, 0xB3, 0xB4, 0xB5, 0xB6,
+        0xB7, 0xB8, 0xB9, 0xBA, 0xC2, 0xC3, 0xC4, 0xC5,
+        0xC6, 0xC7, 0xC8, 0xC9, 0xCA, 0xD2, 0xD3, 0xD4,
+        0xD5, 0xD6, 0xD7, 0xD8, 0xD9, 0xDA, 0xE1, 0xE2,
+        0xE3, 0xE4, 0xE5, 0xE6, 0xE7, 0xE8, 0xE9, 0xEA,
+        0xF1, 0xF2, 0xF3, 0xF4, 0xF5, 0xF6, 0xF7, 0xF8,
+        0xF9, 0xFA,
+    ),
+)
 
-    # standard Huffman specs (Annex K.3): (BITS[1..16], HUFFVAL)
-    _DC_SPEC = (
-        (0, 1, 5, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0, 0, 0),
-        tuple(range(12)),
-    )
-    _AC_SPEC = (
-        (0, 2, 1, 3, 3, 2, 4, 3, 5, 5, 4, 4, 0, 0, 1, 0x7D),
-        (
-            0x01, 0x02, 0x03, 0x00, 0x04, 0x11, 0x05, 0x12,
-            0x21, 0x31, 0x41, 0x06, 0x13, 0x51, 0x61, 0x07,
-            0x22, 0x71, 0x14, 0x32, 0x81, 0x91, 0xA1, 0x08,
-            0x23, 0x42, 0xB1, 0xC1, 0x15, 0x52, 0xD1, 0xF0,
-            0x24, 0x33, 0x62, 0x72, 0x82, 0x09, 0x0A, 0x16,
-            0x17, 0x18, 0x19, 0x1A, 0x25, 0x26, 0x27, 0x28,
-            0x29, 0x2A, 0x34, 0x35, 0x36, 0x37, 0x38, 0x39,
-            0x3A, 0x43, 0x44, 0x45, 0x46, 0x47, 0x48, 0x49,
-            0x4A, 0x53, 0x54, 0x55, 0x56, 0x57, 0x58, 0x59,
-            0x5A, 0x63, 0x64, 0x65, 0x66, 0x67, 0x68, 0x69,
-            0x6A, 0x73, 0x74, 0x75, 0x76, 0x77, 0x78, 0x79,
-            0x7A, 0x83, 0x84, 0x85, 0x86, 0x87, 0x88, 0x89,
-            0x8A, 0x92, 0x93, 0x94, 0x95, 0x96, 0x97, 0x98,
-            0x99, 0x9A, 0xA2, 0xA3, 0xA4, 0xA5, 0xA6, 0xA7,
-            0xA8, 0xA9, 0xAA, 0xB2, 0xB3, 0xB4, 0xB5, 0xB6,
-            0xB7, 0xB8, 0xB9, 0xBA, 0xC2, 0xC3, 0xC4, 0xC5,
-            0xC6, 0xC7, 0xC8, 0xC9, 0xCA, 0xD2, 0xD3, 0xD4,
-            0xD5, 0xD6, 0xD7, 0xD8, 0xD9, 0xDA, 0xE1, 0xE2,
-            0xE3, 0xE4, 0xE5, 0xE6, 0xE7, 0xE8, 0xE9, 0xEA,
-            0xF1, 0xF2, 0xF3, 0xF4, 0xF5, 0xF6, 0xF7, 0xF8,
-            0xF9, 0xFA,
-        ),
-    )
+# standard chrominance Huffman specs (Annex K.3.2)
+_DC_SPEC_C = (
+    (0, 3, 1, 1, 1, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0),
+    tuple(range(12)),
+)
+_AC_SPEC_C = (
+    (0, 2, 1, 2, 4, 4, 3, 4, 7, 5, 4, 4, 0, 1, 2, 0x77),
+    (
+        0x00, 0x01, 0x02, 0x03, 0x11, 0x04, 0x05, 0x21,
+        0x31, 0x06, 0x12, 0x41, 0x51, 0x07, 0x61, 0x71,
+        0x13, 0x22, 0x32, 0x81, 0x08, 0x14, 0x42, 0x91,
+        0xA1, 0xB1, 0xC1, 0x09, 0x23, 0x33, 0x52, 0xF0,
+        0x15, 0x62, 0x72, 0xD1, 0x0A, 0x16, 0x24, 0x34,
+        0xE1, 0x25, 0xF1, 0x17, 0x18, 0x19, 0x1A, 0x26,
+        0x27, 0x28, 0x29, 0x2A, 0x35, 0x36, 0x37, 0x38,
+        0x39, 0x3A, 0x43, 0x44, 0x45, 0x46, 0x47, 0x48,
+        0x49, 0x4A, 0x53, 0x54, 0x55, 0x56, 0x57, 0x58,
+        0x59, 0x5A, 0x63, 0x64, 0x65, 0x66, 0x67, 0x68,
+        0x69, 0x6A, 0x73, 0x74, 0x75, 0x76, 0x77, 0x78,
+        0x79, 0x7A, 0x82, 0x83, 0x84, 0x85, 0x86, 0x87,
+        0x88, 0x89, 0x8A, 0x92, 0x93, 0x94, 0x95, 0x96,
+        0x97, 0x98, 0x99, 0x9A, 0xA2, 0xA3, 0xA4, 0xA5,
+        0xA6, 0xA7, 0xA8, 0xA9, 0xAA, 0xB2, 0xB3, 0xB4,
+        0xB5, 0xB6, 0xB7, 0xB8, 0xB9, 0xBA, 0xC2, 0xC3,
+        0xC4, 0xC5, 0xC6, 0xC7, 0xC8, 0xC9, 0xCA, 0xD2,
+        0xD3, 0xD4, 0xD5, 0xD6, 0xD7, 0xD8, 0xD9, 0xDA,
+        0xE2, 0xE3, 0xE4, 0xE5, 0xE6, 0xE7, 0xE8, 0xE9,
+        0xEA, 0xF2, 0xF3, 0xF4, 0xF5, 0xF6, 0xF7, 0xF8,
+        0xF9, 0xFA,
+    ),
+)
 
-    # standard chrominance Huffman specs (Annex K.3.2)
-    _DC_SPEC_C = (
-        (0, 3, 1, 1, 1, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0),
-        tuple(range(12)),
-    )
-    _AC_SPEC_C = (
-        (0, 2, 1, 2, 4, 4, 3, 4, 7, 5, 4, 4, 0, 1, 2, 0x77),
-        (
-            0x00, 0x01, 0x02, 0x03, 0x11, 0x04, 0x05, 0x21,
-            0x31, 0x06, 0x12, 0x41, 0x51, 0x07, 0x61, 0x71,
-            0x13, 0x22, 0x32, 0x81, 0x08, 0x14, 0x42, 0x91,
-            0xA1, 0xB1, 0xC1, 0x09, 0x23, 0x33, 0x52, 0xF0,
-            0x15, 0x62, 0x72, 0xD1, 0x0A, 0x16, 0x24, 0x34,
-            0xE1, 0x25, 0xF1, 0x17, 0x18, 0x19, 0x1A, 0x26,
-            0x27, 0x28, 0x29, 0x2A, 0x35, 0x36, 0x37, 0x38,
-            0x39, 0x3A, 0x43, 0x44, 0x45, 0x46, 0x47, 0x48,
-            0x49, 0x4A, 0x53, 0x54, 0x55, 0x56, 0x57, 0x58,
-            0x59, 0x5A, 0x63, 0x64, 0x65, 0x66, 0x67, 0x68,
-            0x69, 0x6A, 0x73, 0x74, 0x75, 0x76, 0x77, 0x78,
-            0x79, 0x7A, 0x82, 0x83, 0x84, 0x85, 0x86, 0x87,
-            0x88, 0x89, 0x8A, 0x92, 0x93, 0x94, 0x95, 0x96,
-            0x97, 0x98, 0x99, 0x9A, 0xA2, 0xA3, 0xA4, 0xA5,
-            0xA6, 0xA7, 0xA8, 0xA9, 0xAA, 0xB2, 0xB3, 0xB4,
-            0xB5, 0xB6, 0xB7, 0xB8, 0xB9, 0xBA, 0xC2, 0xC3,
-            0xC4, 0xC5, 0xC6, 0xC7, 0xC8, 0xC9, 0xCA, 0xD2,
-            0xD3, 0xD4, 0xD5, 0xD6, 0xD7, 0xD8, 0xD9, 0xDA,
-            0xE2, 0xE3, 0xE4, 0xE5, 0xE6, 0xE7, 0xE8, 0xE9,
-            0xEA, 0xF2, 0xF3, 0xF4, 0xF5, 0xF6, 0xF7, 0xF8,
-            0xF9, 0xFA,
-        ),
-    )
+def _huff_codes(bits, huffval):
+    """(symbol -> (code, length)) per the canonical JPEG assignment."""
+    codes, code, k = {}, 0, 0
+    for ln in range(1, 17):
+        for _ in range(bits[ln - 1]):
+            codes[huffval[k]] = (code, ln)
+            code += 1
+            k += 1
+        code <<= 1
+    return codes
 
-    def _huff_codes(bits, huffval):
-        """(symbol -> (code, length)) per the canonical JPEG assignment."""
-        codes, code, k = {}, 0, 0
-        for ln in range(1, 17):
-            for _ in range(bits[ln - 1]):
-                codes[huffval[k]] = (code, ln)
-                code += 1
-                k += 1
-            code <<= 1
-        return codes
+class _BitWriter:
+    def __init__(self):
+        self.out = bytearray()
+        self.acc = 0
+        self.n = 0
 
-    class _BitWriter:
-        def __init__(self):
-            self.out = bytearray()
-            self.acc = 0
-            self.n = 0
+    def write(self, code: int, length: int) -> None:
+        self.acc = (self.acc << length) | (code & ((1 << length) - 1))
+        self.n += length
+        while self.n >= 8:
+            byte = (self.acc >> (self.n - 8)) & 0xFF
+            self.out.append(byte)
+            if byte == 0xFF:  # byte stuffing
+                self.out.append(0x00)
+            self.n -= 8
+        self.acc &= (1 << self.n) - 1
 
-        def write(self, code: int, length: int) -> None:
-            self.acc = (self.acc << length) | (code & ((1 << length) - 1))
-            self.n += length
-            while self.n >= 8:
-                byte = (self.acc >> (self.n - 8)) & 0xFF
-                self.out.append(byte)
-                if byte == 0xFF:  # byte stuffing
-                    self.out.append(0x00)
-                self.n -= 8
-            self.acc &= (1 << self.n) - 1
+    def flush(self) -> bytes:
+        if self.n:
+            pad = 8 - self.n
+            self.write((1 << pad) - 1, pad)
+        return bytes(self.out)
 
-        def flush(self) -> bytes:
-            if self.n:
-                pad = 8 - self.n
-                self.write((1 << pad) - 1, pad)
-            return bytes(self.out)
-
-    def _fdct_quant(blk, qtab):
-        """Forward fixed-point DCT + half-away-from-zero quantization of
-        one level-shifted 8x8 block (row-major list of 64 ints in
-        [-128, 127]). Returns the 64 quantized coefficients."""
-        coeffs = [0] * 64
-        if min(blk) == max(blk):
-            # uniform block: every non-DC basis row of _T sums to
-            # zero, so the O(64^2) transform collapses to the DC
-            # closed form — the SAME integers the general loop
-            # would produce (pinned by the all-256-values test)
-            acc = blk[0] * (8 * 2896) * (8 * 2896)
-            coeffs[0] = (
-                (acc + _HALF) // _SCALE
-                if acc >= 0
-                else -((-acc + _HALF) // _SCALE)
+def _fdct_quant(blk, qtab):
+    """Forward fixed-point DCT + half-away-from-zero quantization of
+    one level-shifted 8x8 block (row-major list of 64 ints in
+    [-128, 127]). Returns the 64 quantized coefficients."""
+    coeffs = [0] * 64
+    if min(blk) == max(blk):
+        # uniform block: every non-DC basis row of _T sums to
+        # zero, so the O(64^2) transform collapses to the DC
+        # closed form — the SAME integers the general loop
+        # would produce (pinned by the all-256-values test)
+        acc = blk[0] * (8 * 2896) * (8 * 2896)
+        coeffs[0] = (
+            (acc + _HALF) // _SCALE
+            if acc >= 0
+            else -((-acc + _HALF) // _SCALE)
+        )
+        u_range = ()
+    else:
+        u_range = range(8)
+    for u in u_range:
+        for v in range(8):
+            acc = 0
+            for y in range(8):
+                ty = _T[u][y]
+                if ty == 0:
+                    continue
+                row = y * 8
+                for x in range(8):
+                    s = blk[row + x]
+                    if s:
+                        acc += s * ty * _T[v][x]
+            # forward scale: T entries carry 4096*C; the 2-D
+            # transform needs /4096^2 * (1/4) — same SCALE
+            coeffs[u * 8 + v] = (
+                acc + (_HALF if acc >= 0 else -_HALF)
+            ) // _SCALE if acc >= 0 else -(
+                (-acc + _HALF) // _SCALE
             )
-            u_range = ()
-        else:
-            u_range = range(8)
-        for u in u_range:
-            for v in range(8):
-                acc = 0
-                for y in range(8):
-                    ty = _T[u][y]
-                    if ty == 0:
-                        continue
-                    row = y * 8
-                    for x in range(8):
-                        s = blk[row + x]
-                        if s:
-                            acc += s * ty * _T[v][x]
-                # forward scale: T entries carry 4096*C; the 2-D
-                # transform needs /4096^2 * (1/4) — same SCALE
-                coeffs[u * 8 + v] = (
-                    acc + (_HALF if acc >= 0 else -_HALF)
-                ) // _SCALE if acc >= 0 else -(
-                    (-acc + _HALF) // _SCALE
-                )
-        # quantize (round-half-away-from-zero, symmetric)
-        qc = []
-        for i in range(64):
-            q = qtab[i]
-            c = coeffs[i]
-            qc.append((c + q // 2) // q if c >= 0 else -((-c + q // 2) // q))
-        return qc
+    # quantize (round-half-away-from-zero, symmetric)
+    qc = []
+    for i in range(64):
+        q = qtab[i]
+        c = coeffs[i]
+        qc.append((c + q // 2) // q if c >= 0 else -((-c + q // 2) // q))
+    return qc
 
-    def _entropy_block(bw, qc, prev_dc, dc_codes, ac_codes) -> int:
-        """Entropy-encode one quantized block (DC differential + AC
-        run/length over zig-zag order). Returns the new DC predictor."""
-        diff = qc[0] - prev_dc
-        mag, val = abs(diff), diff
-        t = mag.bit_length()
-        code, ln = dc_codes[t]
+def _entropy_block(bw, qc, prev_dc, dc_codes, ac_codes) -> int:
+    """Entropy-encode one quantized block (DC differential + AC
+    run/length over zig-zag order). Returns the new DC predictor."""
+    diff = qc[0] - prev_dc
+    mag, val = abs(diff), diff
+    t = mag.bit_length()
+    code, ln = dc_codes[t]
+    bw.write(code, ln)
+    if t:
+        bw.write(val if val >= 0 else val + (1 << t) - 1, t)
+    run = 0
+    for zz in range(1, 64):
+        c = qc[_ZZ[zz]]
+        if c == 0:
+            run += 1
+            continue
+        while run > 15:
+            zrl, zln = ac_codes[0xF0]
+            bw.write(zrl, zln)
+            run -= 16
+        t = abs(c).bit_length()
+        code, ln = ac_codes[(run << 4) | t]
         bw.write(code, ln)
-        if t:
-            bw.write(val if val >= 0 else val + (1 << t) - 1, t)
+        bw.write(c if c >= 0 else c + (1 << t) - 1, t)
         run = 0
-        for zz in range(1, 64):
-            c = qc[_ZZ[zz]]
+    if run:
+        eob, eln = ac_codes[0x00]
+        bw.write(eob, eln)
+    return qc[0]
+
+def _seg(marker: int, payload: bytes) -> bytes:
+    return struct.pack(">HH", marker, len(payload) + 2) + payload
+
+_APP0 = b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00"
+
+def _dht_payload(tc: int, th: int, spec) -> bytes:
+    return bytes([(tc << 4) | th]) + bytes(spec[0]) + bytes(spec[1])
+
+def jpeg_encode(pixels: bytes, width: int, height: int) -> bytes:
+    """Serialize an 8-bit greyscale raster (row-major, dims multiples
+    of 8) to a baseline JFIF JPEG with standard tables. Lossy exactly
+    as baseline JPEG is: each 8x8 block goes through level shift,
+    DCT, quantization. Uniform blocks produce DC-only streams whose
+    decoded value is the documented ``DC_ONLY_PIXEL`` closed form."""
+    if width % 8 or height % 8:
+        raise ValueError("dimensions must be multiples of 8")
+    if len(pixels) != width * height:
+        raise ValueError("pixel buffer does not match dimensions")
+    dc_codes = _huff_codes(*_DC_SPEC)
+    ac_codes = _huff_codes(*_AC_SPEC)
+    bw = _BitWriter()
+    prev_dc = 0
+    for by in range(height // 8):
+        for bx in range(width // 8):
+            blk = [
+                pixels[(by * 8 + y) * width + bx * 8 + x] - 128
+                for y in range(8)
+                for x in range(8)
+            ]
+            qc = _fdct_quant(blk, _QTAB)
+            prev_dc = _entropy_block(bw, qc, prev_dc, dc_codes, ac_codes)
+    scan = bw.flush()
+    dqt = _seg(0xFFDB, b"\x00" + bytes(_QTAB[_ZZ[i]] for i in range(64)))
+    sof = _seg(
+        0xFFC0,
+        struct.pack(">BHHB", 8, height, width, 1) + b"\x01\x11\x00",
+    )
+    dht = _seg(
+        0xFFC4, _dht_payload(0, 0, _DC_SPEC) + _dht_payload(1, 0, _AC_SPEC)
+    )
+    sos = _seg(0xFFDA, b"\x01\x01\x00\x00\x3f\x00")
+    app0 = _seg(0xFFE0, _APP0)
+    return (
+        b"\xff\xd8" + app0 + dqt + sof + dht + sos + scan + b"\xff\xd9"
+    )
+
+def jpeg_encode_color(rgb: bytes, width: int, height: int) -> bytes:
+    """Serialize an interleaved 8-bit RGB raster (row-major, dims
+    multiples of 8) to a baseline interleaved YCbCr 4:4:4 JFIF JPEG:
+    the pinned integer color transform (module docstring), then each
+    component through the same DCT/quant/entropy path — Y against the
+    Annex-K luminance tables, Cb/Cr against the chrominance tables,
+    MCUs interleaved (Y, Cb, Cr blocks) with per-component DC
+    predictors. Uniform RGB blocks reduce to ``COLOR_UNIFORM_RGB``."""
+    if width % 8 or height % 8:
+        raise ValueError("dimensions must be multiples of 8")
+    if len(rgb) != width * height * 3:
+        raise ValueError("pixel buffer does not match dimensions")
+    dc_y, ac_y = _huff_codes(*_DC_SPEC), _huff_codes(*_AC_SPEC)
+    dc_c, ac_c = _huff_codes(*_DC_SPEC_C), _huff_codes(*_AC_SPEC_C)
+    # forward color transform into three planes
+    n = width * height
+    planes = [bytearray(n), bytearray(n), bytearray(n)]
+    for i in range(n):
+        r, g, b = rgb[3 * i], rgb[3 * i + 1], rgb[3 * i + 2]
+        y = (77 * r + 150 * g + 29 * b + 128) >> 8
+        cb = (32896 - 43 * r - 85 * g + 128 * b) >> 8
+        cr = (32896 + 128 * r - 107 * g - 21 * b) >> 8
+        planes[0][i] = y
+        planes[1][i] = 255 if cb > 255 else cb
+        planes[2][i] = 255 if cr > 255 else cr
+    comp = (  # (plane, qtab, dc_codes, ac_codes) per SOF order Y,Cb,Cr
+        (planes[0], _QTAB, dc_y, ac_y),
+        (planes[1], _QTAB_C, dc_c, ac_c),
+        (planes[2], _QTAB_C, dc_c, ac_c),
+    )
+    bw = _BitWriter()
+    preds = [0, 0, 0]
+    for by in range(height // 8):
+        for bx in range(width // 8):
+            for ci, (plane, qtab, dcc, acc_) in enumerate(comp):
+                blk = [
+                    plane[(by * 8 + y) * width + bx * 8 + x] - 128
+                    for y in range(8)
+                    for x in range(8)
+                ]
+                qc = _fdct_quant(blk, qtab)
+                preds[ci] = _entropy_block(bw, qc, preds[ci], dcc, acc_)
+    scan = bw.flush()
+    dqt = _seg(
+        0xFFDB,
+        b"\x00" + bytes(_QTAB[_ZZ[i]] for i in range(64))
+        + b"\x01" + bytes(_QTAB_C[_ZZ[i]] for i in range(64)),
+    )
+    sof = _seg(
+        0xFFC0,
+        struct.pack(">BHHB", 8, height, width, 3)
+        + b"\x01\x11\x00"  # Y: id 1, 1x1, qtab 0
+        + b"\x02\x11\x01"  # Cb: id 2, 1x1, qtab 1
+        + b"\x03\x11\x01",  # Cr: id 3, 1x1, qtab 1
+    )
+    dht = _seg(
+        0xFFC4,
+        _dht_payload(0, 0, _DC_SPEC) + _dht_payload(1, 0, _AC_SPEC)
+        + _dht_payload(0, 1, _DC_SPEC_C) + _dht_payload(1, 1, _AC_SPEC_C),
+    )
+    sos = _seg(0xFFDA, b"\x03\x01\x00\x02\x11\x03\x11\x00\x3f\x00")
+    app0 = _seg(0xFFE0, _APP0)
+    return (
+        b"\xff\xd8" + app0 + dqt + sof + dht + sos + scan + b"\xff\xd9"
+    )
+
+def jpeg_encode_color_420(rgb: bytes, width: int, height: int) -> bytes:
+    """Serialize an interleaved 8-bit RGB raster (row-major, dims
+    multiples of 16) to a baseline YCbCr 4:2:0 JFIF JPEG — the
+    chroma-SUBSAMPLED layout virtually every camera/web JPEG uses:
+    Y keeps full resolution (sampling factors 2x2), Cb/Cr are
+    stored at half resolution in both axes (1x1), so each MCU
+    covers 16x16 luma pixels as four Y blocks (2x2 raster order)
+    followed by one Cb and one Cr block.
+
+    Subsampling convention (PINNED, part of the codec contract):
+    each chroma sample is the round-half-up mean of its 2x2 pixel
+    group, ``(a + b + c + d + 2) DIV 4`` — on a uniform group this
+    is exactly the common value, which is what keeps uniform-MCU
+    fixtures on the ``COLOR_UNIFORM_RGB`` closed form."""
+    if width % 16 or height % 16:
+        raise ValueError("dimensions must be multiples of 16")
+    if len(rgb) != width * height * 3:
+        raise ValueError("pixel buffer does not match dimensions")
+    dc_y, ac_y = _huff_codes(*_DC_SPEC), _huff_codes(*_AC_SPEC)
+    dc_c, ac_c = _huff_codes(*_DC_SPEC_C), _huff_codes(*_AC_SPEC_C)
+    n = width * height
+    planes = [bytearray(n), bytearray(n), bytearray(n)]
+    for i in range(n):
+        r, g, b = rgb[3 * i], rgb[3 * i + 1], rgb[3 * i + 2]
+        y = (77 * r + 150 * g + 29 * b + 128) >> 8
+        cb = (32896 - 43 * r - 85 * g + 128 * b) >> 8
+        cr = (32896 + 128 * r - 107 * g - 21 * b) >> 8
+        planes[0][i] = y
+        planes[1][i] = 255 if cb > 255 else cb
+        planes[2][i] = 255 if cr > 255 else cr
+    cw, chh = width // 2, height // 2
+    subs = []
+    for p in (planes[1], planes[2]):
+        sp = bytearray(cw * chh)
+        for r in range(chh):
+            base = (2 * r) * width
+            for c in range(cw):
+                i = base + 2 * c
+                sp[r * cw + c] = (
+                    p[i] + p[i + 1] + p[i + width] + p[i + width + 1] + 2
+                ) // 4
+        subs.append(sp)
+    bw = _BitWriter()
+    preds = [0, 0, 0]
+    for my in range(height // 16):
+        for mx in range(width // 16):
+            for by in range(2):  # four Y blocks, 2x2 raster order
+                for bx in range(2):
+                    yb, xb = my * 2 + by, mx * 2 + bx
+                    blk = [
+                        planes[0][(yb * 8 + y) * width + xb * 8 + x]
+                        - 128
+                        for y in range(8)
+                        for x in range(8)
+                    ]
+                    qc = _fdct_quant(blk, _QTAB)
+                    preds[0] = _entropy_block(
+                        bw, qc, preds[0], dc_y, ac_y
+                    )
+            for ci, sp in enumerate(subs, start=1):
+                blk = [
+                    sp[(my * 8 + y) * cw + mx * 8 + x] - 128
+                    for y in range(8)
+                    for x in range(8)
+                ]
+                qc = _fdct_quant(blk, _QTAB_C)
+                preds[ci] = _entropy_block(
+                    bw, qc, preds[ci], dc_c, ac_c
+                )
+    scan = bw.flush()
+    dqt = _seg(
+        0xFFDB,
+        b"\x00" + bytes(_QTAB[_ZZ[i]] for i in range(64))
+        + b"\x01" + bytes(_QTAB_C[_ZZ[i]] for i in range(64)),
+    )
+    sof = _seg(
+        0xFFC0,
+        struct.pack(">BHHB", 8, height, width, 3)
+        + b"\x01\x22\x00"  # Y: id 1, 2x2 sampling, qtab 0
+        + b"\x02\x11\x01"  # Cb: id 2, 1x1, qtab 1
+        + b"\x03\x11\x01",  # Cr: id 3, 1x1, qtab 1
+    )
+    dht = _seg(
+        0xFFC4,
+        _dht_payload(0, 0, _DC_SPEC) + _dht_payload(1, 0, _AC_SPEC)
+        + _dht_payload(0, 1, _DC_SPEC_C) + _dht_payload(1, 1, _AC_SPEC_C),
+    )
+    sos = _seg(0xFFDA, b"\x03\x01\x00\x02\x11\x03\x11\x00\x3f\x00")
+    app0 = _seg(0xFFE0, _APP0)
+    return (
+        b"\xff\xd8" + app0 + dqt + sof + dht + sos + scan + b"\xff\xd9"
+    )
+
+def jpeg_encode_color_422(rgb: bytes, width: int, height: int) -> bytes:
+    """Serialize an interleaved 8-bit RGB raster (width a multiple of
+    16, height of 8) to a baseline YCbCr 4:2:2 JFIF JPEG — chroma
+    subsampled HORIZONTALLY only (Y factors 2x1, Cb/Cr 1x1), the
+    broadcast/video-capture layout between 4:4:4 and 4:2:0. Each MCU
+    covers 16x8 luma pixels: two Y blocks then one Cb and one Cr.
+
+    Subsampling convention (PINNED): each chroma sample is the
+    round-half-up mean of its horizontal pair,
+    ``(a + b + 1) DIV 2`` — the common value on uniform pairs, which
+    keeps uniform-MCU fixtures on the ``COLOR_UNIFORM_RGB`` closed
+    form."""
+    if width % 16 or height % 8:
+        raise ValueError(
+            "width must be a multiple of 16 and height of 8"
+        )
+    if len(rgb) != width * height * 3:
+        raise ValueError("pixel buffer does not match dimensions")
+    dc_y, ac_y = _huff_codes(*_DC_SPEC), _huff_codes(*_AC_SPEC)
+    dc_c, ac_c = _huff_codes(*_DC_SPEC_C), _huff_codes(*_AC_SPEC_C)
+    n = width * height
+    planes = [bytearray(n), bytearray(n), bytearray(n)]
+    for i in range(n):
+        r, g, b = rgb[3 * i], rgb[3 * i + 1], rgb[3 * i + 2]
+        y = (77 * r + 150 * g + 29 * b + 128) >> 8
+        cb = (32896 - 43 * r - 85 * g + 128 * b) >> 8
+        cr = (32896 + 128 * r - 107 * g - 21 * b) >> 8
+        planes[0][i] = y
+        planes[1][i] = 255 if cb > 255 else cb
+        planes[2][i] = 255 if cr > 255 else cr
+    cw = width // 2
+    subs = []
+    for p in (planes[1], planes[2]):
+        sp = bytearray(cw * height)
+        for r in range(height):
+            base = r * width
+            for c in range(cw):
+                i = base + 2 * c
+                sp[r * cw + c] = (p[i] + p[i + 1] + 1) // 2
+        subs.append(sp)
+    bw = _BitWriter()
+    preds = [0, 0, 0]
+    for my in range(height // 8):
+        for mx in range(width // 16):
+            for bx in range(2):  # two Y blocks, left then right
+                xb = mx * 2 + bx
+                blk = [
+                    planes[0][(my * 8 + y) * width + xb * 8 + x] - 128
+                    for y in range(8)
+                    for x in range(8)
+                ]
+                qc = _fdct_quant(blk, _QTAB)
+                preds[0] = _entropy_block(bw, qc, preds[0], dc_y, ac_y)
+            for ci, sp in enumerate(subs, start=1):
+                blk = [
+                    sp[(my * 8 + y) * cw + mx * 8 + x] - 128
+                    for y in range(8)
+                    for x in range(8)
+                ]
+                qc = _fdct_quant(blk, _QTAB_C)
+                preds[ci] = _entropy_block(
+                    bw, qc, preds[ci], dc_c, ac_c
+                )
+    scan = bw.flush()
+    dqt = _seg(
+        0xFFDB,
+        b"\x00" + bytes(_QTAB[_ZZ[i]] for i in range(64))
+        + b"\x01" + bytes(_QTAB_C[_ZZ[i]] for i in range(64)),
+    )
+    sof = _seg(
+        0xFFC0,
+        struct.pack(">BHHB", 8, height, width, 3)
+        + b"\x01\x21\x00"  # Y: id 1, 2x1 sampling, qtab 0
+        + b"\x02\x11\x01"  # Cb: id 2, 1x1, qtab 1
+        + b"\x03\x11\x01",  # Cr: id 3, 1x1, qtab 1
+    )
+    dht = _seg(
+        0xFFC4,
+        _dht_payload(0, 0, _DC_SPEC) + _dht_payload(1, 0, _AC_SPEC)
+        + _dht_payload(0, 1, _DC_SPEC_C) + _dht_payload(1, 1, _AC_SPEC_C),
+    )
+    sos = _seg(0xFFDA, b"\x03\x01\x00\x02\x11\x03\x11\x00\x3f\x00")
+    app0 = _seg(0xFFE0, _APP0)
+    return (
+        b"\xff\xd8" + app0 + dqt + sof + dht + sos + scan + b"\xff\xd9"
+    )
+
+class _BitReader:
+    def __init__(self, data: bytes, pos: int):
+        self.data = data
+        self.pos = pos
+        self.acc = 0
+        self.n = 0
+
+    def bit(self) -> int:
+        if self.n == 0:
+            if self.pos >= len(self.data):
+                raise ValueError("truncated entropy-coded segment")
+            b = self.data[self.pos]
+            self.pos += 1
+            if b == 0xFF:
+                if self.pos >= len(self.data):
+                    raise ValueError("truncated after 0xFF")
+                nxt = self.data[self.pos]
+                if nxt == 0x00:
+                    self.pos += 1  # stuffed byte
+                elif nxt == 0xD9:  # EOI reached mid-read
+                    raise ValueError("unexpected EOI in scan")
+                else:
+                    raise ValueError(f"unexpected marker 0xFF{nxt:02x}")
+            self.acc = b
+            self.n = 8
+        self.n -= 1
+        return (self.acc >> self.n) & 1
+
+    def bits(self, k: int) -> int:
+        v = 0
+        for _ in range(k):
+            v = (v << 1) | self.bit()
+        return v
+
+def _decode_huff(br, table):
+    code, ln = 0, 0
+    while True:
+        code = (code << 1) | br.bit()
+        ln += 1
+        if ln > 16:
+            raise ValueError("invalid Huffman code")
+        sym = table.get((code, ln))
+        if sym is not None:
+            return sym
+
+def _extend(v: int, t: int) -> int:
+    return v if v >= (1 << (t - 1)) else v - (1 << t) + 1
+
+def _idct_block(coeffs):
+    """Fixed-point integer IDCT of 64 DEQUANTIZED coefficients
+    (documented closed form for DC-only blocks:
+    clip(128 + (F00*2896^2 + HALF)//SCALE)). Returns 64 pixel
+    values row-major."""
+    nz = [
+        (u, v, coeffs[u * 8 + v])
+        for u in range(8)
+        for v in range(8)
+        if coeffs[u * 8 + v]
+    ]
+    out = [0] * 64
+    if not nz or nz == [(0, 0, coeffs[0])]:
+        # DC-only spectrum: the IDCT is one uniform value —
+        # exactly the general loop's result for every (x, y)
+        acc = coeffs[0] * 2896 * 2896
+        px = 128 + (acc + _HALF) // _SCALE
+        px = 0 if px < 0 else (255 if px > 255 else px)
+        return [px] * 64
+    for y in range(8):
+        for x in range(8):
+            acc = 0
+            for u, v, f in nz:
+                acc += f * _T[u][y] * _T[v][x]
+            # floor division with half-up rounding, exact for
+            # negatives too (Python // floors)
+            px = 128 + (acc + _HALF) // _SCALE
+            out[y * 8 + x] = 0 if px < 0 else (255 if px > 255 else px)
+    return out
+
+def _decode_block(br, dct, act, q, pred):
+    """Entropy-decode + dequantize + IDCT one block. Returns
+    ``(block64, new_pred)`` — 64 decoded pixel values row-major."""
+    coeffs = [0] * 64
+    t = _decode_huff(br, dct)
+    if t:
+        pred += _extend(br.bits(t), t)
+    coeffs[0] = pred * q[0]
+    zz = 1
+    while zz < 64:
+        sym = _decode_huff(br, act)
+        if sym == 0x00:  # EOB
+            break
+        run, t = sym >> 4, sym & 0x0F
+        if t == 0:
+            if run != 15:
+                raise ValueError("bad AC symbol")
+            zz += 16  # ZRL
+            continue
+        zz += run
+        if zz > 63:
+            raise ValueError("AC coefficient overflow")
+        coeffs[_ZZ[zz]] = _extend(br.bits(t), t) * q[_ZZ[zz]]
+        zz += 1
+    return _idct_block(coeffs), pred
+
+def _decode_planes(payload: bytes):
+    """The general baseline decode path for the supported shapes:
+    segment parse, tables rebuilt from the stream, interleaved-MCU
+    entropy decode with per-component predictors and SOF-declared
+    sampling factors (1x1 .. 2x2 — covers 4:4:4, 4:2:2 and 4:2:0).
+    Returns ``(planes, width, height, dims)`` — one row-major plane
+    per SOF component at its STORED resolution, with ``dims`` the
+    per-plane ``(w, h)`` list (subsampled chroma planes are smaller
+    than the luma plane)."""
+    if payload[:2] != b"\xff\xd8":
+        raise ValueError("not a JPEG payload (bad SOI)")
+    pos = 2
+    qtabs: dict[int, list[int]] = {}
+    # (class, id) -> {(code, len): symbol}
+    htabs: dict[tuple[int, int], dict] = {}
+    width = height = None
+    comps: list[tuple[int, int]] = []  # SOF order: (comp_id, qtab_id)
+    scan_tabs: dict[int, tuple[int, int]] = {}  # comp_id -> (dc, ac)
+    while pos + 4 <= len(payload):
+        if payload[pos] != 0xFF:
+            raise ValueError("segment desync (expected marker)")
+        marker = payload[pos + 1]
+        if marker == 0xD9:  # EOI before SOS
+            raise ValueError("no scan data before EOI")
+        (ln,) = struct.unpack(">H", payload[pos + 2 : pos + 4])
+        body = payload[pos + 4 : pos + 2 + ln]
+        if len(body) != ln - 2:
+            raise ValueError("truncated segment")
+        if marker == 0xDB:  # DQT (possibly several tables)
+            p = 0
+            while p < len(body):
+                pq, tq = body[p] >> 4, body[p] & 0x0F
+                if pq != 0:
+                    raise ValueError("16-bit quant tables unsupported")
+                zzq = body[p + 1 : p + 65]
+                if len(zzq) != 64:
+                    raise ValueError("short DQT")
+                tab = [0] * 64
+                for i in range(64):
+                    tab[_ZZ[i]] = zzq[i]
+                qtabs[tq] = tab
+                p += 65
+        elif marker == 0xC0:  # SOF0 baseline
+            prec, height, width, ncomp = struct.unpack(">BHHB", body[:6])
+            if prec != 8 or ncomp not in (1, 3):
+                raise ValueError(
+                    "only 8-bit single-component baseline or "
+                    "3-component 4:4:4 color supported"
+                )
+            comps = []
+            for i in range(ncomp):
+                cid, samp, qid = body[6 + 3 * i : 9 + 3 * i]
+                sh, sv = samp >> 4, samp & 0x0F
+                if sh not in (1, 2) or sv not in (1, 2):
+                    raise ValueError(
+                        f"sampling factors {sh}x{sv} unsupported"
+                    )
+                comps.append((cid, qid, sh, sv))
+        elif marker in (0xC1, 0xC2, 0xC3, 0xC5, 0xC6, 0xC7):
+            raise ValueError("non-baseline SOF unsupported")
+        elif marker == 0xC4:  # DHT (possibly several tables)
+            p = 0
+            while p < len(body):
+                tc, th = body[p] >> 4, body[p] & 0x0F
+                bits = list(body[p + 1 : p + 17])
+                nval = sum(bits)
+                vals = list(body[p + 17 : p + 17 + nval])
+                codes = _huff_codes(bits, vals)
+                htabs[(tc, th)] = {
+                    (c, l): sym for sym, (c, l) in codes.items()
+                }
+                p += 17 + nval
+        elif marker == 0xDD:
+            raise ValueError("restart intervals unsupported")
+        elif marker == 0xDA:  # SOS
+            ns = body[0]
+            if ns != len(comps):
+                raise ValueError("scan must cover all SOF components")
+            for i in range(ns):
+                cid = body[1 + 2 * i]
+                scan_tabs[cid] = (body[2 + 2 * i] >> 4, body[2 + 2 * i] & 0x0F)
+            pos += 2 + ln
+            break
+        # APPn / COM / others: skip
+        pos += 2 + ln
+    else:
+        raise ValueError("no SOS segment")
+    if width is None or not qtabs or not htabs:
+        raise ValueError("missing SOF/DQT/DHT before scan")
+    # a single-component scan is non-interleaved: sampling factors
+    # are irrelevant, the MCU is one block
+    if len(comps) == 1:
+        comps = [(comps[0][0], comps[0][1], 1, 1)]
+    hmax = max(c[2] for c in comps)
+    vmax = max(c[3] for c in comps)
+    if width % (8 * hmax) or height % (8 * vmax):
+        raise ValueError(
+            "dimensions must be multiples of the MCU size "
+            f"({8 * hmax}x{8 * vmax})"
+        )
+    # bind per-component tables (SOF order == MCU interleave order)
+    bound = []
+    for cid, qid, sh, sv in comps:
+        if cid not in scan_tabs:
+            raise ValueError(f"component {cid} missing from scan")
+        dc_id, ac_id = scan_tabs[cid]
+        bound.append(
+            (qtabs[qid], htabs[(0, dc_id)], htabs[(1, ac_id)], sh, sv)
+        )
+    br = _BitReader(payload, pos)
+    dims = [
+        (width * sh // hmax, height * sv // vmax)
+        for _q, _d, _a, sh, sv in bound
+    ]
+    planes = [bytearray(w * h) for w, h in dims]
+    preds = [0] * len(comps)
+    for my in range(height // (8 * vmax)):
+        for mx in range(width // (8 * hmax)):
+            for ci, (q, dct, act, sh, sv) in enumerate(bound):
+                cw = dims[ci][0]
+                plane = planes[ci]
+                # sh*sv blocks of this component per MCU, raster order
+                for by in range(sv):
+                    for bx in range(sh):
+                        blk, preds[ci] = _decode_block(
+                            br, dct, act, q, preds[ci]
+                        )
+                        yb, xb = my * sv + by, mx * sh + bx
+                        for y in range(8):
+                            row = (yb * 8 + y) * cw + xb * 8
+                            plane[row : row + 8] = bytes(
+                                blk[y * 8 : y * 8 + 8]
+                            )
+    return planes, width, height, dims
+
+def jpeg_decode(payload: bytes) -> tuple[bytes, int, int]:
+    """Decode a baseline greyscale JFIF payload. Returns
+    ``(pixels, width, height)``. The general baseline path for the
+    supported shape: tables come from the stream (DQT/DHT parsed and
+    rebuilt, nothing assumed), entropy decode handles byte stuffing,
+    arbitrary AC coefficients, ZRL and EOB; raises ``ValueError`` on
+    corrupt input, progressive shapes, or restart markers — and on
+    color payloads (use :func:`jpeg_decode_color`)."""
+    planes, width, height, _dims = _decode_planes(payload)
+    if len(planes) != 1:
+        raise ValueError("color JPEG: use jpeg_decode_color")
+    return bytes(planes[0]), width, height
+
+def _sof_marker(payload: bytes) -> int | None:
+    """Light segment walk returning the frame-header marker byte
+    (0xC0 baseline, 0xC2 progressive, ...) — the dispatch probe, so
+    progressive streams route to their decoder without exception-
+    message matching."""
+    pos = 2
+    while pos + 4 <= len(payload):
+        if payload[pos] != 0xFF:
+            return None
+        marker = payload[pos + 1]
+        if 0xC0 <= marker <= 0xCF and marker not in (0xC4, 0xC8, 0xCC):
+            return marker
+        if marker in (0xD9, 0xDA):
+            return None
+        (ln,) = struct.unpack(">H", payload[pos + 2 : pos + 4])
+        pos += 2 + ln
+    return None
+
+def jpeg_decode_color(payload: bytes) -> tuple[bytes, int, int, int]:
+    """Decode a JFIF payload of any supported shape. Returns
+    ``(pixels, width, height, n_components)`` — the greyscale
+    plane for 1-component streams, or the interleaved RGB raster
+    (pinned integer inverse color transform, module docstring) for
+    3-component streams. Subsampled chroma planes (4:2:0 / 4:2:2)
+    upsample by PIXEL REPLICATION — luma pixel (r, c) reads chroma
+    sample ``(r*ch DIV height, c*cw DIV width)``, the exact inverse
+    of the encoder's block coverage, so uniform-MCU fixtures stay on
+    the ``COLOR_UNIFORM_RGB`` closed form. Progressive (SOF2)
+    streams route to :func:`jpeg_decode_progressive`."""
+    if _sof_marker(payload) == 0xC2:
+        px, w, h = jpeg_decode_progressive(payload)
+        return px, w, h, 1
+    planes, width, height, dims = _decode_planes(payload)
+    if len(planes) == 1:
+        return bytes(planes[0]), width, height, 1
+    py, pcb, pcr = planes
+    (cbw, cbh), (crw, crh) = dims[1], dims[2]
+    full = (cbw, cbh) == (width, height) and (crw, crh) == (
+        width,
+        height,
+    )
+    out = bytearray(width * height * 3)
+    for i in range(width * height):
+        if full:
+            cb_s, cr_s = pcb[i], pcr[i]
+        else:
+            r_, c_ = divmod(i, width)
+            cb_s = pcb[(r_ * cbh // height) * cbw + c_ * cbw // width]
+            cr_s = pcr[(r_ * crh // height) * crw + c_ * crw // width]
+        y, dcb, dcr = py[i], cb_s - 128, cr_s - 128
+        r = y + (359 * dcr + 128) // 256
+        g = y + (-88 * dcb - 183 * dcr + 128) // 256
+        b = y + (454 * dcb + 128) // 256
+        out[3 * i] = 0 if r < 0 else (255 if r > 255 else r)
+        out[3 * i + 1] = 0 if g < 0 else (255 if g > 255 else g)
+        out[3 * i + 2] = 0 if b < 0 else (255 if b > 255 else b)
+    return bytes(out), width, height, 3
+
+# progressive AC scans need EOBn symbols (r<<4, r=1..14), which
+# the baseline Annex-K AC table does not define — ship a custom
+# flat canonical table (all 176 symbols at 8 bits; max code
+# 0xAF, so the reserved all-ones code stays unused) in the DHT:
+# the decoder rebuilds whatever the stream declares
+_AC_PROG_SYMS = (
+    [r << 4 for r in range(15)]
+    + [0xF0]
+    + [(run << 4) | t for run in range(16) for t in range(1, 11)]
+)
+_AC_PROG_SPEC = ([0] * 7 + [176] + [0] * 8, _AC_PROG_SYMS)
+
+def _ac_first_scan(blocks, ss: int, se: int, al: int, ac_codes) -> bytes:
+    """FIRST AC scan of band [ss..se] at approximation level ``al``
+    (Ah=0): in-band run/size pairs + EOB-RUN symbols over the
+    point-transformed values — for AC the point transform is an
+    integer divide by 2^Al truncating toward ZERO (T.81 G.1.2.1;
+    sign-magnitude shift), unlike DC's arithmetic shift. ``al=0``
+    is byte-identical to the plain spectral-selection scan."""
+    bw = _BitWriter()
+    eobrun = 0
+
+    def flush_eobrun():
+        nonlocal eobrun
+        if not eobrun:
+            return
+        r = eobrun.bit_length() - 1
+        code, ln = ac_codes[r << 4]
+        bw.write(code, ln)
+        if r:
+            bw.write(eobrun - (1 << r), r)
+        eobrun = 0
+
+    for qc in blocks:
+        vals = {}
+        for zz in range(ss, se + 1):
+            v = qc[_ZZ[zz]]
+            a = abs(v) >> al
+            vals[zz] = a if v >= 0 else -a
+        nz = [zz for zz in range(ss, se + 1) if vals[zz]]
+        if not nz:
+            eobrun += 1
+            if eobrun == 0x7FFF:
+                flush_eobrun()
+            continue
+        flush_eobrun()
+        run = 0
+        last_nz = nz[-1]
+        for zz in range(ss, last_nz + 1):
+            c = vals[zz]
             if c == 0:
                 run += 1
                 continue
@@ -340,1171 +1009,475 @@ def _build_jpeg_codec():
             bw.write(code, ln)
             bw.write(c if c >= 0 else c + (1 << t) - 1, t)
             run = 0
-        if run:
-            eob, eln = ac_codes[0x00]
-            bw.write(eob, eln)
-        return qc[0]
+        if last_nz < se:
+            eobrun = 1  # this block's tail starts a new run
+    flush_eobrun()
+    return bw.flush()
 
-    def _seg(marker: int, payload: bytes) -> bytes:
-        return struct.pack(">HH", marker, len(payload) + 2) + payload
+def _ac_refine_scan(blocks, ss: int, se: int, al: int, ac_codes) -> bytes:
+    """AC REFINEMENT scan (Ah = al+1, Al = al) — the T.81 G.1.2.3
+    correction-bit interleave: coefficients already nonzero at the
+    previous precision send ONE raw correction bit (bit ``al`` of
+    the magnitude); coefficients newly visible at this precision
+    are coded as (run<<4)|1 + a sign bit, where the run counts only
+    STILL-ZERO positions; correction bits buffer until the next
+    emitted symbol (ZRL / newly-nonzero / EOBn) and are appended
+    right after it, so the decoder can interleave them back. Blocks
+    with nothing new join an EOB run whose correction bits ride the
+    eventual EOBn symbol."""
+    bw = _BitWriter()
+    eobrun = 0
+    be_bits: list[int] = []  # correction bits owned by the EOB run
 
-    _APP0 = b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00"
-
-    def _dht_payload(tc: int, th: int, spec) -> bytes:
-        return bytes([(tc << 4) | th]) + bytes(spec[0]) + bytes(spec[1])
-
-    def jpeg_encode(pixels: bytes, width: int, height: int) -> bytes:
-        """Serialize an 8-bit greyscale raster (row-major, dims multiples
-        of 8) to a baseline JFIF JPEG with standard tables. Lossy exactly
-        as baseline JPEG is: each 8x8 block goes through level shift,
-        DCT, quantization. Uniform blocks produce DC-only streams whose
-        decoded value is the documented ``DC_ONLY_PIXEL`` closed form."""
-        if width % 8 or height % 8:
-            raise ValueError("dimensions must be multiples of 8")
-        if len(pixels) != width * height:
-            raise ValueError("pixel buffer does not match dimensions")
-        dc_codes = _huff_codes(*_DC_SPEC)
-        ac_codes = _huff_codes(*_AC_SPEC)
-        bw = _BitWriter()
-        prev_dc = 0
-        for by in range(height // 8):
-            for bx in range(width // 8):
-                blk = [
-                    pixels[(by * 8 + y) * width + bx * 8 + x] - 128
-                    for y in range(8)
-                    for x in range(8)
-                ]
-                qc = _fdct_quant(blk, _QTAB)
-                prev_dc = _entropy_block(bw, qc, prev_dc, dc_codes, ac_codes)
-        scan = bw.flush()
-        dqt = _seg(0xFFDB, b"\x00" + bytes(_QTAB[_ZZ[i]] for i in range(64)))
-        sof = _seg(
-            0xFFC0,
-            struct.pack(">BHHB", 8, height, width, 1) + b"\x01\x11\x00",
-        )
-        dht = _seg(
-            0xFFC4, _dht_payload(0, 0, _DC_SPEC) + _dht_payload(1, 0, _AC_SPEC)
-        )
-        sos = _seg(0xFFDA, b"\x01\x01\x00\x00\x3f\x00")
-        app0 = _seg(0xFFE0, _APP0)
-        return (
-            b"\xff\xd8" + app0 + dqt + sof + dht + sos + scan + b"\xff\xd9"
-        )
-
-    def jpeg_encode_color(rgb: bytes, width: int, height: int) -> bytes:
-        """Serialize an interleaved 8-bit RGB raster (row-major, dims
-        multiples of 8) to a baseline interleaved YCbCr 4:4:4 JFIF JPEG:
-        the pinned integer color transform (module docstring), then each
-        component through the same DCT/quant/entropy path — Y against the
-        Annex-K luminance tables, Cb/Cr against the chrominance tables,
-        MCUs interleaved (Y, Cb, Cr blocks) with per-component DC
-        predictors. Uniform RGB blocks reduce to ``COLOR_UNIFORM_RGB``."""
-        if width % 8 or height % 8:
-            raise ValueError("dimensions must be multiples of 8")
-        if len(rgb) != width * height * 3:
-            raise ValueError("pixel buffer does not match dimensions")
-        dc_y, ac_y = _huff_codes(*_DC_SPEC), _huff_codes(*_AC_SPEC)
-        dc_c, ac_c = _huff_codes(*_DC_SPEC_C), _huff_codes(*_AC_SPEC_C)
-        # forward color transform into three planes
-        n = width * height
-        planes = [bytearray(n), bytearray(n), bytearray(n)]
-        for i in range(n):
-            r, g, b = rgb[3 * i], rgb[3 * i + 1], rgb[3 * i + 2]
-            y = (77 * r + 150 * g + 29 * b + 128) >> 8
-            cb = (32896 - 43 * r - 85 * g + 128 * b) >> 8
-            cr = (32896 + 128 * r - 107 * g - 21 * b) >> 8
-            planes[0][i] = y
-            planes[1][i] = 255 if cb > 255 else cb
-            planes[2][i] = 255 if cr > 255 else cr
-        comp = (  # (plane, qtab, dc_codes, ac_codes) per SOF order Y,Cb,Cr
-            (planes[0], _QTAB, dc_y, ac_y),
-            (planes[1], _QTAB_C, dc_c, ac_c),
-            (planes[2], _QTAB_C, dc_c, ac_c),
-        )
-        bw = _BitWriter()
-        preds = [0, 0, 0]
-        for by in range(height // 8):
-            for bx in range(width // 8):
-                for ci, (plane, qtab, dcc, acc_) in enumerate(comp):
-                    blk = [
-                        plane[(by * 8 + y) * width + bx * 8 + x] - 128
-                        for y in range(8)
-                        for x in range(8)
-                    ]
-                    qc = _fdct_quant(blk, qtab)
-                    preds[ci] = _entropy_block(bw, qc, preds[ci], dcc, acc_)
-        scan = bw.flush()
-        dqt = _seg(
-            0xFFDB,
-            b"\x00" + bytes(_QTAB[_ZZ[i]] for i in range(64))
-            + b"\x01" + bytes(_QTAB_C[_ZZ[i]] for i in range(64)),
-        )
-        sof = _seg(
-            0xFFC0,
-            struct.pack(">BHHB", 8, height, width, 3)
-            + b"\x01\x11\x00"  # Y: id 1, 1x1, qtab 0
-            + b"\x02\x11\x01"  # Cb: id 2, 1x1, qtab 1
-            + b"\x03\x11\x01",  # Cr: id 3, 1x1, qtab 1
-        )
-        dht = _seg(
-            0xFFC4,
-            _dht_payload(0, 0, _DC_SPEC) + _dht_payload(1, 0, _AC_SPEC)
-            + _dht_payload(0, 1, _DC_SPEC_C) + _dht_payload(1, 1, _AC_SPEC_C),
-        )
-        sos = _seg(0xFFDA, b"\x03\x01\x00\x02\x11\x03\x11\x00\x3f\x00")
-        app0 = _seg(0xFFE0, _APP0)
-        return (
-            b"\xff\xd8" + app0 + dqt + sof + dht + sos + scan + b"\xff\xd9"
-        )
-
-    def jpeg_encode_color_420(rgb: bytes, width: int, height: int) -> bytes:
-        """Serialize an interleaved 8-bit RGB raster (row-major, dims
-        multiples of 16) to a baseline YCbCr 4:2:0 JFIF JPEG — the
-        chroma-SUBSAMPLED layout virtually every camera/web JPEG uses:
-        Y keeps full resolution (sampling factors 2x2), Cb/Cr are
-        stored at half resolution in both axes (1x1), so each MCU
-        covers 16x16 luma pixels as four Y blocks (2x2 raster order)
-        followed by one Cb and one Cr block.
-
-        Subsampling convention (PINNED, part of the codec contract):
-        each chroma sample is the round-half-up mean of its 2x2 pixel
-        group, ``(a + b + c + d + 2) DIV 4`` — on a uniform group this
-        is exactly the common value, which is what keeps uniform-MCU
-        fixtures on the ``COLOR_UNIFORM_RGB`` closed form."""
-        if width % 16 or height % 16:
-            raise ValueError("dimensions must be multiples of 16")
-        if len(rgb) != width * height * 3:
-            raise ValueError("pixel buffer does not match dimensions")
-        dc_y, ac_y = _huff_codes(*_DC_SPEC), _huff_codes(*_AC_SPEC)
-        dc_c, ac_c = _huff_codes(*_DC_SPEC_C), _huff_codes(*_AC_SPEC_C)
-        n = width * height
-        planes = [bytearray(n), bytearray(n), bytearray(n)]
-        for i in range(n):
-            r, g, b = rgb[3 * i], rgb[3 * i + 1], rgb[3 * i + 2]
-            y = (77 * r + 150 * g + 29 * b + 128) >> 8
-            cb = (32896 - 43 * r - 85 * g + 128 * b) >> 8
-            cr = (32896 + 128 * r - 107 * g - 21 * b) >> 8
-            planes[0][i] = y
-            planes[1][i] = 255 if cb > 255 else cb
-            planes[2][i] = 255 if cr > 255 else cr
-        cw, chh = width // 2, height // 2
-        subs = []
-        for p in (planes[1], planes[2]):
-            sp = bytearray(cw * chh)
-            for r in range(chh):
-                base = (2 * r) * width
-                for c in range(cw):
-                    i = base + 2 * c
-                    sp[r * cw + c] = (
-                        p[i] + p[i + 1] + p[i + width] + p[i + width + 1] + 2
-                    ) // 4
-            subs.append(sp)
-        bw = _BitWriter()
-        preds = [0, 0, 0]
-        for my in range(height // 16):
-            for mx in range(width // 16):
-                for by in range(2):  # four Y blocks, 2x2 raster order
-                    for bx in range(2):
-                        yb, xb = my * 2 + by, mx * 2 + bx
-                        blk = [
-                            planes[0][(yb * 8 + y) * width + xb * 8 + x]
-                            - 128
-                            for y in range(8)
-                            for x in range(8)
-                        ]
-                        qc = _fdct_quant(blk, _QTAB)
-                        preds[0] = _entropy_block(
-                            bw, qc, preds[0], dc_y, ac_y
-                        )
-                for ci, sp in enumerate(subs, start=1):
-                    blk = [
-                        sp[(my * 8 + y) * cw + mx * 8 + x] - 128
-                        for y in range(8)
-                        for x in range(8)
-                    ]
-                    qc = _fdct_quant(blk, _QTAB_C)
-                    preds[ci] = _entropy_block(
-                        bw, qc, preds[ci], dc_c, ac_c
-                    )
-        scan = bw.flush()
-        dqt = _seg(
-            0xFFDB,
-            b"\x00" + bytes(_QTAB[_ZZ[i]] for i in range(64))
-            + b"\x01" + bytes(_QTAB_C[_ZZ[i]] for i in range(64)),
-        )
-        sof = _seg(
-            0xFFC0,
-            struct.pack(">BHHB", 8, height, width, 3)
-            + b"\x01\x22\x00"  # Y: id 1, 2x2 sampling, qtab 0
-            + b"\x02\x11\x01"  # Cb: id 2, 1x1, qtab 1
-            + b"\x03\x11\x01",  # Cr: id 3, 1x1, qtab 1
-        )
-        dht = _seg(
-            0xFFC4,
-            _dht_payload(0, 0, _DC_SPEC) + _dht_payload(1, 0, _AC_SPEC)
-            + _dht_payload(0, 1, _DC_SPEC_C) + _dht_payload(1, 1, _AC_SPEC_C),
-        )
-        sos = _seg(0xFFDA, b"\x03\x01\x00\x02\x11\x03\x11\x00\x3f\x00")
-        app0 = _seg(0xFFE0, _APP0)
-        return (
-            b"\xff\xd8" + app0 + dqt + sof + dht + sos + scan + b"\xff\xd9"
-        )
-
-    def jpeg_encode_color_422(rgb: bytes, width: int, height: int) -> bytes:
-        """Serialize an interleaved 8-bit RGB raster (width a multiple of
-        16, height of 8) to a baseline YCbCr 4:2:2 JFIF JPEG — chroma
-        subsampled HORIZONTALLY only (Y factors 2x1, Cb/Cr 1x1), the
-        broadcast/video-capture layout between 4:4:4 and 4:2:0. Each MCU
-        covers 16x8 luma pixels: two Y blocks then one Cb and one Cr.
-
-        Subsampling convention (PINNED): each chroma sample is the
-        round-half-up mean of its horizontal pair,
-        ``(a + b + 1) DIV 2`` — the common value on uniform pairs, which
-        keeps uniform-MCU fixtures on the ``COLOR_UNIFORM_RGB`` closed
-        form."""
-        if width % 16 or height % 8:
-            raise ValueError(
-                "width must be a multiple of 16 and height of 8"
-            )
-        if len(rgb) != width * height * 3:
-            raise ValueError("pixel buffer does not match dimensions")
-        dc_y, ac_y = _huff_codes(*_DC_SPEC), _huff_codes(*_AC_SPEC)
-        dc_c, ac_c = _huff_codes(*_DC_SPEC_C), _huff_codes(*_AC_SPEC_C)
-        n = width * height
-        planes = [bytearray(n), bytearray(n), bytearray(n)]
-        for i in range(n):
-            r, g, b = rgb[3 * i], rgb[3 * i + 1], rgb[3 * i + 2]
-            y = (77 * r + 150 * g + 29 * b + 128) >> 8
-            cb = (32896 - 43 * r - 85 * g + 128 * b) >> 8
-            cr = (32896 + 128 * r - 107 * g - 21 * b) >> 8
-            planes[0][i] = y
-            planes[1][i] = 255 if cb > 255 else cb
-            planes[2][i] = 255 if cr > 255 else cr
-        cw = width // 2
-        subs = []
-        for p in (planes[1], planes[2]):
-            sp = bytearray(cw * height)
-            for r in range(height):
-                base = r * width
-                for c in range(cw):
-                    i = base + 2 * c
-                    sp[r * cw + c] = (p[i] + p[i + 1] + 1) // 2
-            subs.append(sp)
-        bw = _BitWriter()
-        preds = [0, 0, 0]
-        for my in range(height // 8):
-            for mx in range(width // 16):
-                for bx in range(2):  # two Y blocks, left then right
-                    xb = mx * 2 + bx
-                    blk = [
-                        planes[0][(my * 8 + y) * width + xb * 8 + x] - 128
-                        for y in range(8)
-                        for x in range(8)
-                    ]
-                    qc = _fdct_quant(blk, _QTAB)
-                    preds[0] = _entropy_block(bw, qc, preds[0], dc_y, ac_y)
-                for ci, sp in enumerate(subs, start=1):
-                    blk = [
-                        sp[(my * 8 + y) * cw + mx * 8 + x] - 128
-                        for y in range(8)
-                        for x in range(8)
-                    ]
-                    qc = _fdct_quant(blk, _QTAB_C)
-                    preds[ci] = _entropy_block(
-                        bw, qc, preds[ci], dc_c, ac_c
-                    )
-        scan = bw.flush()
-        dqt = _seg(
-            0xFFDB,
-            b"\x00" + bytes(_QTAB[_ZZ[i]] for i in range(64))
-            + b"\x01" + bytes(_QTAB_C[_ZZ[i]] for i in range(64)),
-        )
-        sof = _seg(
-            0xFFC0,
-            struct.pack(">BHHB", 8, height, width, 3)
-            + b"\x01\x21\x00"  # Y: id 1, 2x1 sampling, qtab 0
-            + b"\x02\x11\x01"  # Cb: id 2, 1x1, qtab 1
-            + b"\x03\x11\x01",  # Cr: id 3, 1x1, qtab 1
-        )
-        dht = _seg(
-            0xFFC4,
-            _dht_payload(0, 0, _DC_SPEC) + _dht_payload(1, 0, _AC_SPEC)
-            + _dht_payload(0, 1, _DC_SPEC_C) + _dht_payload(1, 1, _AC_SPEC_C),
-        )
-        sos = _seg(0xFFDA, b"\x03\x01\x00\x02\x11\x03\x11\x00\x3f\x00")
-        app0 = _seg(0xFFE0, _APP0)
-        return (
-            b"\xff\xd8" + app0 + dqt + sof + dht + sos + scan + b"\xff\xd9"
-        )
-
-    class _BitReader:
-        def __init__(self, data: bytes, pos: int):
-            self.data = data
-            self.pos = pos
-            self.acc = 0
-            self.n = 0
-
-        def bit(self) -> int:
-            if self.n == 0:
-                if self.pos >= len(self.data):
-                    raise ValueError("truncated entropy-coded segment")
-                b = self.data[self.pos]
-                self.pos += 1
-                if b == 0xFF:
-                    if self.pos >= len(self.data):
-                        raise ValueError("truncated after 0xFF")
-                    nxt = self.data[self.pos]
-                    if nxt == 0x00:
-                        self.pos += 1  # stuffed byte
-                    elif nxt == 0xD9:  # EOI reached mid-read
-                        raise ValueError("unexpected EOI in scan")
-                    else:
-                        raise ValueError(f"unexpected marker 0xFF{nxt:02x}")
-                self.acc = b
-                self.n = 8
-            self.n -= 1
-            return (self.acc >> self.n) & 1
-
-        def bits(self, k: int) -> int:
-            v = 0
-            for _ in range(k):
-                v = (v << 1) | self.bit()
-            return v
-
-    def _decode_huff(br, table):
-        code, ln = 0, 0
-        while True:
-            code = (code << 1) | br.bit()
-            ln += 1
-            if ln > 16:
-                raise ValueError("invalid Huffman code")
-            sym = table.get((code, ln))
-            if sym is not None:
-                return sym
-
-    def _extend(v: int, t: int) -> int:
-        return v if v >= (1 << (t - 1)) else v - (1 << t) + 1
-
-    def _idct_block(coeffs):
-        """Fixed-point integer IDCT of 64 DEQUANTIZED coefficients
-        (documented closed form for DC-only blocks:
-        clip(128 + (F00*2896^2 + HALF)//SCALE)). Returns 64 pixel
-        values row-major."""
-        nz = [
-            (u, v, coeffs[u * 8 + v])
-            for u in range(8)
-            for v in range(8)
-            if coeffs[u * 8 + v]
-        ]
-        out = [0] * 64
-        if not nz or nz == [(0, 0, coeffs[0])]:
-            # DC-only spectrum: the IDCT is one uniform value —
-            # exactly the general loop's result for every (x, y)
-            acc = coeffs[0] * 2896 * 2896
-            px = 128 + (acc + _HALF) // _SCALE
-            px = 0 if px < 0 else (255 if px > 255 else px)
-            return [px] * 64
-        for y in range(8):
-            for x in range(8):
-                acc = 0
-                for u, v, f in nz:
-                    acc += f * _T[u][y] * _T[v][x]
-                # floor division with half-up rounding, exact for
-                # negatives too (Python // floors)
-                px = 128 + (acc + _HALF) // _SCALE
-                out[y * 8 + x] = 0 if px < 0 else (255 if px > 255 else px)
-        return out
-
-    def _decode_block(br, dct, act, q, pred):
-        """Entropy-decode + dequantize + IDCT one block. Returns
-        ``(block64, new_pred)`` — 64 decoded pixel values row-major."""
-        coeffs = [0] * 64
-        t = _decode_huff(br, dct)
-        if t:
-            pred += _extend(br.bits(t), t)
-        coeffs[0] = pred * q[0]
-        zz = 1
-        while zz < 64:
-            sym = _decode_huff(br, act)
-            if sym == 0x00:  # EOB
-                break
-            run, t = sym >> 4, sym & 0x0F
-            if t == 0:
-                if run != 15:
-                    raise ValueError("bad AC symbol")
-                zz += 16  # ZRL
-                continue
-            zz += run
-            if zz > 63:
-                raise ValueError("AC coefficient overflow")
-            coeffs[_ZZ[zz]] = _extend(br.bits(t), t) * q[_ZZ[zz]]
-            zz += 1
-        return _idct_block(coeffs), pred
-
-    def _decode_planes(payload: bytes):
-        """The general baseline decode path for the supported shapes:
-        segment parse, tables rebuilt from the stream, interleaved-MCU
-        entropy decode with per-component predictors and SOF-declared
-        sampling factors (1x1 .. 2x2 — covers 4:4:4, 4:2:2 and 4:2:0).
-        Returns ``(planes, width, height, dims)`` — one row-major plane
-        per SOF component at its STORED resolution, with ``dims`` the
-        per-plane ``(w, h)`` list (subsampled chroma planes are smaller
-        than the luma plane)."""
-        if payload[:2] != b"\xff\xd8":
-            raise ValueError("not a JPEG payload (bad SOI)")
-        pos = 2
-        qtabs: dict[int, list[int]] = {}
-        # (class, id) -> {(code, len): symbol}
-        htabs: dict[tuple[int, int], dict] = {}
-        width = height = None
-        comps: list[tuple[int, int]] = []  # SOF order: (comp_id, qtab_id)
-        scan_tabs: dict[int, tuple[int, int]] = {}  # comp_id -> (dc, ac)
-        while pos + 4 <= len(payload):
-            if payload[pos] != 0xFF:
-                raise ValueError("segment desync (expected marker)")
-            marker = payload[pos + 1]
-            if marker == 0xD9:  # EOI before SOS
-                raise ValueError("no scan data before EOI")
-            (ln,) = struct.unpack(">H", payload[pos + 2 : pos + 4])
-            body = payload[pos + 4 : pos + 2 + ln]
-            if len(body) != ln - 2:
-                raise ValueError("truncated segment")
-            if marker == 0xDB:  # DQT (possibly several tables)
-                p = 0
-                while p < len(body):
-                    pq, tq = body[p] >> 4, body[p] & 0x0F
-                    if pq != 0:
-                        raise ValueError("16-bit quant tables unsupported")
-                    zzq = body[p + 1 : p + 65]
-                    if len(zzq) != 64:
-                        raise ValueError("short DQT")
-                    tab = [0] * 64
-                    for i in range(64):
-                        tab[_ZZ[i]] = zzq[i]
-                    qtabs[tq] = tab
-                    p += 65
-            elif marker == 0xC0:  # SOF0 baseline
-                prec, height, width, ncomp = struct.unpack(">BHHB", body[:6])
-                if prec != 8 or ncomp not in (1, 3):
-                    raise ValueError(
-                        "only 8-bit single-component baseline or "
-                        "3-component 4:4:4 color supported"
-                    )
-                comps = []
-                for i in range(ncomp):
-                    cid, samp, qid = body[6 + 3 * i : 9 + 3 * i]
-                    sh, sv = samp >> 4, samp & 0x0F
-                    if sh not in (1, 2) or sv not in (1, 2):
-                        raise ValueError(
-                            f"sampling factors {sh}x{sv} unsupported"
-                        )
-                    comps.append((cid, qid, sh, sv))
-            elif marker in (0xC1, 0xC2, 0xC3, 0xC5, 0xC6, 0xC7):
-                raise ValueError("non-baseline SOF unsupported")
-            elif marker == 0xC4:  # DHT (possibly several tables)
-                p = 0
-                while p < len(body):
-                    tc, th = body[p] >> 4, body[p] & 0x0F
-                    bits = list(body[p + 1 : p + 17])
-                    nval = sum(bits)
-                    vals = list(body[p + 17 : p + 17 + nval])
-                    codes = _huff_codes(bits, vals)
-                    htabs[(tc, th)] = {
-                        (c, l): sym for sym, (c, l) in codes.items()
-                    }
-                    p += 17 + nval
-            elif marker == 0xDD:
-                raise ValueError("restart intervals unsupported")
-            elif marker == 0xDA:  # SOS
-                ns = body[0]
-                if ns != len(comps):
-                    raise ValueError("scan must cover all SOF components")
-                for i in range(ns):
-                    cid = body[1 + 2 * i]
-                    scan_tabs[cid] = (body[2 + 2 * i] >> 4, body[2 + 2 * i] & 0x0F)
-                pos += 2 + ln
-                break
-            # APPn / COM / others: skip
-            pos += 2 + ln
-        else:
-            raise ValueError("no SOS segment")
-        if width is None or not qtabs or not htabs:
-            raise ValueError("missing SOF/DQT/DHT before scan")
-        # a single-component scan is non-interleaved: sampling factors
-        # are irrelevant, the MCU is one block
-        if len(comps) == 1:
-            comps = [(comps[0][0], comps[0][1], 1, 1)]
-        hmax = max(c[2] for c in comps)
-        vmax = max(c[3] for c in comps)
-        if width % (8 * hmax) or height % (8 * vmax):
-            raise ValueError(
-                "dimensions must be multiples of the MCU size "
-                f"({8 * hmax}x{8 * vmax})"
-            )
-        # bind per-component tables (SOF order == MCU interleave order)
-        bound = []
-        for cid, qid, sh, sv in comps:
-            if cid not in scan_tabs:
-                raise ValueError(f"component {cid} missing from scan")
-            dc_id, ac_id = scan_tabs[cid]
-            bound.append(
-                (qtabs[qid], htabs[(0, dc_id)], htabs[(1, ac_id)], sh, sv)
-            )
-        br = _BitReader(payload, pos)
-        dims = [
-            (width * sh // hmax, height * sv // vmax)
-            for _q, _d, _a, sh, sv in bound
-        ]
-        planes = [bytearray(w * h) for w, h in dims]
-        preds = [0] * len(comps)
-        for my in range(height // (8 * vmax)):
-            for mx in range(width // (8 * hmax)):
-                for ci, (q, dct, act, sh, sv) in enumerate(bound):
-                    cw = dims[ci][0]
-                    plane = planes[ci]
-                    # sh*sv blocks of this component per MCU, raster order
-                    for by in range(sv):
-                        for bx in range(sh):
-                            blk, preds[ci] = _decode_block(
-                                br, dct, act, q, preds[ci]
-                            )
-                            yb, xb = my * sv + by, mx * sh + bx
-                            for y in range(8):
-                                row = (yb * 8 + y) * cw + xb * 8
-                                plane[row : row + 8] = bytes(
-                                    blk[y * 8 : y * 8 + 8]
-                                )
-        return planes, width, height, dims
-
-    def jpeg_decode(payload: bytes) -> tuple[bytes, int, int]:
-        """Decode a baseline greyscale JFIF payload. Returns
-        ``(pixels, width, height)``. The general baseline path for the
-        supported shape: tables come from the stream (DQT/DHT parsed and
-        rebuilt, nothing assumed), entropy decode handles byte stuffing,
-        arbitrary AC coefficients, ZRL and EOB; raises ``ValueError`` on
-        corrupt input, progressive shapes, or restart markers — and on
-        color payloads (use :func:`jpeg_decode_color`)."""
-        planes, width, height, _dims = _decode_planes(payload)
-        if len(planes) != 1:
-            raise ValueError("color JPEG: use jpeg_decode_color")
-        return bytes(planes[0]), width, height
-
-    def _sof_marker(payload: bytes) -> int | None:
-        """Light segment walk returning the frame-header marker byte
-        (0xC0 baseline, 0xC2 progressive, ...) — the dispatch probe, so
-        progressive streams route to their decoder without exception-
-        message matching."""
-        pos = 2
-        while pos + 4 <= len(payload):
-            if payload[pos] != 0xFF:
-                return None
-            marker = payload[pos + 1]
-            if 0xC0 <= marker <= 0xCF and marker not in (0xC4, 0xC8, 0xCC):
-                return marker
-            if marker in (0xD9, 0xDA):
-                return None
-            (ln,) = struct.unpack(">H", payload[pos + 2 : pos + 4])
-            pos += 2 + ln
-        return None
-
-    def jpeg_decode_color(payload: bytes) -> tuple[bytes, int, int, int]:
-        """Decode a JFIF payload of any supported shape. Returns
-        ``(pixels, width, height, n_components)`` — the greyscale
-        plane for 1-component streams, or the interleaved RGB raster
-        (pinned integer inverse color transform, module docstring) for
-        3-component streams. Subsampled chroma planes (4:2:0 / 4:2:2)
-        upsample by PIXEL REPLICATION — luma pixel (r, c) reads chroma
-        sample ``(r*ch DIV height, c*cw DIV width)``, the exact inverse
-        of the encoder's block coverage, so uniform-MCU fixtures stay on
-        the ``COLOR_UNIFORM_RGB`` closed form. Progressive (SOF2)
-        streams route to :func:`jpeg_decode_progressive`."""
-        if _sof_marker(payload) == 0xC2:
-            px, w, h = jpeg_decode_progressive(payload)
-            return px, w, h, 1
-        planes, width, height, dims = _decode_planes(payload)
-        if len(planes) == 1:
-            return bytes(planes[0]), width, height, 1
-        py, pcb, pcr = planes
-        (cbw, cbh), (crw, crh) = dims[1], dims[2]
-        full = (cbw, cbh) == (width, height) and (crw, crh) == (
-            width,
-            height,
-        )
-        out = bytearray(width * height * 3)
-        for i in range(width * height):
-            if full:
-                cb_s, cr_s = pcb[i], pcr[i]
-            else:
-                r_, c_ = divmod(i, width)
-                cb_s = pcb[(r_ * cbh // height) * cbw + c_ * cbw // width]
-                cr_s = pcr[(r_ * crh // height) * crw + c_ * crw // width]
-            y, dcb, dcr = py[i], cb_s - 128, cr_s - 128
-            r = y + (359 * dcr + 128) // 256
-            g = y + (-88 * dcb - 183 * dcr + 128) // 256
-            b = y + (454 * dcb + 128) // 256
-            out[3 * i] = 0 if r < 0 else (255 if r > 255 else r)
-            out[3 * i + 1] = 0 if g < 0 else (255 if g > 255 else g)
-            out[3 * i + 2] = 0 if b < 0 else (255 if b > 255 else b)
-        return bytes(out), width, height, 3
-
-    # progressive AC scans need EOBn symbols (r<<4, r=1..14), which
-    # the baseline Annex-K AC table does not define — ship a custom
-    # flat canonical table (all 176 symbols at 8 bits; max code
-    # 0xAF, so the reserved all-ones code stays unused) in the DHT:
-    # the decoder rebuilds whatever the stream declares
-    _AC_PROG_SYMS = (
-        [r << 4 for r in range(15)]
-        + [0xF0]
-        + [(run << 4) | t for run in range(16) for t in range(1, 11)]
-    )
-    _AC_PROG_SPEC = ([0] * 7 + [176] + [0] * 8, _AC_PROG_SYMS)
-
-    def _ac_first_scan(blocks, ss: int, se: int, al: int, ac_codes) -> bytes:
-        """FIRST AC scan of band [ss..se] at approximation level ``al``
-        (Ah=0): in-band run/size pairs + EOB-RUN symbols over the
-        point-transformed values — for AC the point transform is an
-        integer divide by 2^Al truncating toward ZERO (T.81 G.1.2.1;
-        sign-magnitude shift), unlike DC's arithmetic shift. ``al=0``
-        is byte-identical to the plain spectral-selection scan."""
-        bw = _BitWriter()
+    def emit_eobrun():
+        nonlocal eobrun, be_bits
+        if not eobrun:
+            return
+        r = eobrun.bit_length() - 1
+        code, ln = ac_codes[r << 4]
+        bw.write(code, ln)
+        if r:
+            bw.write(eobrun - (1 << r), r)
         eobrun = 0
+        for b in be_bits:
+            bw.write(b, 1)
+        be_bits = []
 
-        def flush_eobrun():
-            nonlocal eobrun
-            if not eobrun:
-                return
-            r = eobrun.bit_length() - 1
-            code, ln = ac_codes[r << 4]
-            bw.write(code, ln)
-            if r:
-                bw.write(eobrun - (1 << r), r)
-            eobrun = 0
-
-        for qc in blocks:
-            vals = {}
-            for zz in range(ss, se + 1):
-                v = qc[_ZZ[zz]]
-                a = abs(v) >> al
-                vals[zz] = a if v >= 0 else -a
-            nz = [zz for zz in range(ss, se + 1) if vals[zz]]
-            if not nz:
-                eobrun += 1
-                if eobrun == 0x7FFF:
-                    flush_eobrun()
+    for qc in blocks:
+        absvals = {}
+        eob = ss - 1  # position of the last NEWLY-nonzero coef
+        for zz in range(ss, se + 1):
+            t = abs(qc[_ZZ[zz]]) >> al
+            absvals[zz] = t
+            if t == 1:
+                eob = zz
+        r = 0
+        br_bits: list[int] = []  # bits since the last symbol
+        for zz in range(ss, se + 1):
+            temp = absvals[zz]
+            if temp == 0:
+                r += 1
                 continue
-            flush_eobrun()
-            run = 0
-            last_nz = nz[-1]
-            for zz in range(ss, last_nz + 1):
-                c = vals[zz]
-                if c == 0:
-                    run += 1
-                    continue
-                while run > 15:
-                    zrl, zln = ac_codes[0xF0]
-                    bw.write(zrl, zln)
-                    run -= 16
-                t = abs(c).bit_length()
-                code, ln = ac_codes[(run << 4) | t]
-                bw.write(code, ln)
-                bw.write(c if c >= 0 else c + (1 << t) - 1, t)
-                run = 0
-            if last_nz < se:
-                eobrun = 1  # this block's tail starts a new run
-        flush_eobrun()
-        return bw.flush()
-
-    def _ac_refine_scan(blocks, ss: int, se: int, al: int, ac_codes) -> bytes:
-        """AC REFINEMENT scan (Ah = al+1, Al = al) — the T.81 G.1.2.3
-        correction-bit interleave: coefficients already nonzero at the
-        previous precision send ONE raw correction bit (bit ``al`` of
-        the magnitude); coefficients newly visible at this precision
-        are coded as (run<<4)|1 + a sign bit, where the run counts only
-        STILL-ZERO positions; correction bits buffer until the next
-        emitted symbol (ZRL / newly-nonzero / EOBn) and are appended
-        right after it, so the decoder can interleave them back. Blocks
-        with nothing new join an EOB run whose correction bits ride the
-        eventual EOBn symbol."""
-        bw = _BitWriter()
-        eobrun = 0
-        be_bits: list[int] = []  # correction bits owned by the EOB run
-
-        def emit_eobrun():
-            nonlocal eobrun, be_bits
-            if not eobrun:
-                return
-            r = eobrun.bit_length() - 1
-            code, ln = ac_codes[r << 4]
-            bw.write(code, ln)
-            if r:
-                bw.write(eobrun - (1 << r), r)
-            eobrun = 0
-            for b in be_bits:
-                bw.write(b, 1)
-            be_bits = []
-
-        for qc in blocks:
-            absvals = {}
-            eob = ss - 1  # position of the last NEWLY-nonzero coef
-            for zz in range(ss, se + 1):
-                t = abs(qc[_ZZ[zz]]) >> al
-                absvals[zz] = t
-                if t == 1:
-                    eob = zz
-            r = 0
-            br_bits: list[int] = []  # bits since the last symbol
-            for zz in range(ss, se + 1):
-                temp = absvals[zz]
-                if temp == 0:
-                    r += 1
-                    continue
-                while r > 15 and zz <= eob:
-                    emit_eobrun()
-                    code, ln = ac_codes[0xF0]
-                    bw.write(code, ln)
-                    r -= 16
-                    for b in br_bits:
-                        bw.write(b, 1)
-                    br_bits = []
-                if temp > 1:
-                    # already nonzero at the previous precision: just
-                    # the next magnitude bit (if r > 15 here, zz > eob,
-                    # so this is never a newly-nonzero coefficient)
-                    br_bits.append(temp & 1)
-                    continue
+            while r > 15 and zz <= eob:
                 emit_eobrun()
-                code, ln = ac_codes[(r << 4) | 1]
+                code, ln = ac_codes[0xF0]
                 bw.write(code, ln)
-                bw.write(1 if qc[_ZZ[zz]] >= 0 else 0, 1)
+                r -= 16
                 for b in br_bits:
                     bw.write(b, 1)
                 br_bits = []
-                r = 0
-            if r > 0 or br_bits:
-                eobrun += 1
-                be_bits.extend(br_bits)
-                if eobrun == 0x7FFF or len(be_bits) > 937:
-                    emit_eobrun()
-        emit_eobrun()
-        return bw.flush()
-
-    def jpeg_encode_progressive(
-        pixels: bytes, width: int, height: int
-    ) -> bytes:
-        """Serialize an 8-bit greyscale raster to a PROGRESSIVE JPEG
-        (SOF2, spectral selection, Al=0): three scans — DC (Ss=Se=0),
-        low AC band (1..5), high AC band (6..63). The quantized
-        coefficients are IDENTICAL to the baseline encoder's (same
-        ``_fdct_quant``), only their scan layout differs — which is why
-        progressive decode reproduces the baseline raster bit-for-bit.
-        AC scans use the real progressive coding: run/size pairs inside
-        the band plus EOB-RUN symbols (EOBn: r extra bits encode runs
-        of 2^r..2^(r+1)-1 band-empty blocks) — the thing baseline AC
-        coding doesn't have."""
-        if width % 8 or height % 8:
-            raise ValueError("dimensions must be multiples of 8")
-        if len(pixels) != width * height:
-            raise ValueError("pixel buffer does not match dimensions")
-        dc_codes = _huff_codes(*_DC_SPEC)
-        ac_codes = _huff_codes(*_AC_PROG_SPEC)
-        blocks = []
-        for by in range(height // 8):
-            for bx in range(width // 8):
-                blk = [
-                    pixels[(by * 8 + y) * width + bx * 8 + x] - 128
-                    for y in range(8)
-                    for x in range(8)
-                ]
-                blocks.append(_fdct_quant(blk, _QTAB))
-        # scan 1: DC, identical coding to baseline DC
-        bw = _BitWriter()
-        prev = 0
-        for qc in blocks:
-            diff = qc[0] - prev
-            prev = qc[0]
-            t = abs(diff).bit_length()
-            code, ln = dc_codes[t]
+            if temp > 1:
+                # already nonzero at the previous precision: just
+                # the next magnitude bit (if r > 15 here, zz > eob,
+                # so this is never a newly-nonzero coefficient)
+                br_bits.append(temp & 1)
+                continue
+            emit_eobrun()
+            code, ln = ac_codes[(r << 4) | 1]
             bw.write(code, ln)
-            if t:
-                bw.write(diff if diff >= 0 else diff + (1 << t) - 1, t)
-        dc_scan = bw.flush()
+            bw.write(1 if qc[_ZZ[zz]] >= 0 else 0, 1)
+            for b in br_bits:
+                bw.write(b, 1)
+            br_bits = []
+            r = 0
+        if r > 0 or br_bits:
+            eobrun += 1
+            be_bits.extend(br_bits)
+            if eobrun == 0x7FFF or len(be_bits) > 937:
+                emit_eobrun()
+    emit_eobrun()
+    return bw.flush()
 
-        def ac_band_scan(ss: int, se: int) -> bytes:
-            return _ac_first_scan(blocks, ss, se, 0, ac_codes)
+def jpeg_encode_progressive(
+    pixels: bytes, width: int, height: int
+) -> bytes:
+    """Serialize an 8-bit greyscale raster to a PROGRESSIVE JPEG
+    (SOF2, spectral selection, Al=0): three scans — DC (Ss=Se=0),
+    low AC band (1..5), high AC band (6..63). The quantized
+    coefficients are IDENTICAL to the baseline encoder's (same
+    ``_fdct_quant``), only their scan layout differs — which is why
+    progressive decode reproduces the baseline raster bit-for-bit.
+    AC scans use the real progressive coding: run/size pairs inside
+    the band plus EOB-RUN symbols (EOBn: r extra bits encode runs
+    of 2^r..2^(r+1)-1 band-empty blocks) — the thing baseline AC
+    coding doesn't have."""
+    if width % 8 or height % 8:
+        raise ValueError("dimensions must be multiples of 8")
+    if len(pixels) != width * height:
+        raise ValueError("pixel buffer does not match dimensions")
+    dc_codes = _huff_codes(*_DC_SPEC)
+    ac_codes = _huff_codes(*_AC_PROG_SPEC)
+    blocks = []
+    for by in range(height // 8):
+        for bx in range(width // 8):
+            blk = [
+                pixels[(by * 8 + y) * width + bx * 8 + x] - 128
+                for y in range(8)
+                for x in range(8)
+            ]
+            blocks.append(_fdct_quant(blk, _QTAB))
+    # scan 1: DC, identical coding to baseline DC
+    bw = _BitWriter()
+    prev = 0
+    for qc in blocks:
+        diff = qc[0] - prev
+        prev = qc[0]
+        t = abs(diff).bit_length()
+        code, ln = dc_codes[t]
+        bw.write(code, ln)
+        if t:
+            bw.write(diff if diff >= 0 else diff + (1 << t) - 1, t)
+    dc_scan = bw.flush()
 
-        def sos(ss: int, se: int) -> bytes:
-            return _seg(0xFFDA, bytes([1, 1, 0, ss, se, 0]))
+    def ac_band_scan(ss: int, se: int) -> bytes:
+        return _ac_first_scan(blocks, ss, se, 0, ac_codes)
 
-        dqt = _seg(0xFFDB, b"\x00" + bytes(_QTAB[_ZZ[i]] for i in range(64)))
-        sof = _seg(
-            0xFFC2,
-            struct.pack(">BHHB", 8, height, width, 1) + b"\x01\x11\x00",
-        )
-        dht = _seg(
-            0xFFC4,
-            _dht_payload(0, 0, _DC_SPEC) + _dht_payload(1, 0, _AC_PROG_SPEC),
-        )
-        app0 = _seg(0xFFE0, _APP0)
-        return (
-            b"\xff\xd8" + app0 + dqt + sof + dht
-            + sos(0, 0) + dc_scan
-            + sos(1, 5) + ac_band_scan(1, 5)
-            + sos(6, 63) + ac_band_scan(6, 63)
-            + b"\xff\xd9"
-        )
+    def sos(ss: int, se: int) -> bytes:
+        return _seg(0xFFDA, bytes([1, 1, 0, ss, se, 0]))
 
-    def jpeg_encode_progressive_sa(
-        pixels: bytes, width: int, height: int
-    ) -> bytes:
-        """Progressive greyscale JPEG using SUCCESSIVE APPROXIMATION on
-        the DC band on top of spectral selection: scan 1 sends DC at
-        reduced precision (Al=1 — the point transform is an arithmetic
-        shift, predictors chain in the shifted domain), scan 2 is a DC
-        REFINEMENT (Ah=1, Al=0: one raw bit per block), then the two AC
-        band scans. ``(dc >> 1) << 1 | (dc & 1)`` reconstructs DC
-        exactly in two's complement, so the decoded raster is still
-        bit-identical to baseline."""
-        if width % 8 or height % 8:
-            raise ValueError("dimensions must be multiples of 8")
-        if len(pixels) != width * height:
-            raise ValueError("pixel buffer does not match dimensions")
-        full = jpeg_encode_progressive(pixels, width, height)
-        dc_codes = _huff_codes(*_DC_SPEC)
-        blocks = []
-        for by in range(height // 8):
-            for bx in range(width // 8):
-                blk = [
-                    pixels[(by * 8 + y) * width + bx * 8 + x] - 128
-                    for y in range(8)
-                    for x in range(8)
-                ]
-                blocks.append(_fdct_quant(blk, _QTAB))
-        # scan 1: DC at Al=1 (predictors chain over the SHIFTED values)
-        bw = _BitWriter()
-        prev = 0
-        for qc in blocks:
-            v = qc[0] >> 1  # arithmetic shift = the DC point transform
-            diff = v - prev
-            prev = v
-            t = abs(diff).bit_length()
-            code, ln = dc_codes[t]
-            bw.write(code, ln)
-            if t:
-                bw.write(diff if diff >= 0 else diff + (1 << t) - 1, t)
-        dc_first = bw.flush()
-        # scan 2: DC refinement — the raw Al=0 bit per block
-        bw = _BitWriter()
-        for qc in blocks:
-            bw.write(qc[0] & 1, 1)
-        dc_refine = bw.flush()
+    dqt = _seg(0xFFDB, b"\x00" + bytes(_QTAB[_ZZ[i]] for i in range(64)))
+    sof = _seg(
+        0xFFC2,
+        struct.pack(">BHHB", 8, height, width, 1) + b"\x01\x11\x00",
+    )
+    dht = _seg(
+        0xFFC4,
+        _dht_payload(0, 0, _DC_SPEC) + _dht_payload(1, 0, _AC_PROG_SPEC),
+    )
+    app0 = _seg(0xFFE0, _APP0)
+    return (
+        b"\xff\xd8" + app0 + dqt + sof + dht
+        + sos(0, 0) + dc_scan
+        + sos(1, 5) + ac_band_scan(1, 5)
+        + sos(6, 63) + ac_band_scan(6, 63)
+        + b"\xff\xd9"
+    )
 
-        def sos(ss: int, se: int, ah: int, al: int) -> bytes:
-            return _seg(0xFFDA, bytes([1, 1, 0, ss, se, (ah << 4) | al]))
+def jpeg_encode_progressive_sa(
+    pixels: bytes, width: int, height: int
+) -> bytes:
+    """Progressive greyscale JPEG using SUCCESSIVE APPROXIMATION on
+    the DC band on top of spectral selection: scan 1 sends DC at
+    reduced precision (Al=1 — the point transform is an arithmetic
+    shift, predictors chain in the shifted domain), scan 2 is a DC
+    REFINEMENT (Ah=1, Al=0: one raw bit per block), then the two AC
+    band scans. ``(dc >> 1) << 1 | (dc & 1)`` reconstructs DC
+    exactly in two's complement, so the decoded raster is still
+    bit-identical to baseline."""
+    if width % 8 or height % 8:
+        raise ValueError("dimensions must be multiples of 8")
+    if len(pixels) != width * height:
+        raise ValueError("pixel buffer does not match dimensions")
+    full = jpeg_encode_progressive(pixels, width, height)
+    dc_codes = _huff_codes(*_DC_SPEC)
+    blocks = []
+    for by in range(height // 8):
+        for bx in range(width // 8):
+            blk = [
+                pixels[(by * 8 + y) * width + bx * 8 + x] - 128
+                for y in range(8)
+                for x in range(8)
+            ]
+            blocks.append(_fdct_quant(blk, _QTAB))
+    # scan 1: DC at Al=1 (predictors chain over the SHIFTED values)
+    bw = _BitWriter()
+    prev = 0
+    for qc in blocks:
+        v = qc[0] >> 1  # arithmetic shift = the DC point transform
+        diff = v - prev
+        prev = v
+        t = abs(diff).bit_length()
+        code, ln = dc_codes[t]
+        bw.write(code, ln)
+        if t:
+            bw.write(diff if diff >= 0 else diff + (1 << t) - 1, t)
+    dc_first = bw.flush()
+    # scan 2: DC refinement — the raw Al=0 bit per block
+    bw = _BitWriter()
+    for qc in blocks:
+        bw.write(qc[0] & 1, 1)
+    dc_refine = bw.flush()
 
-        # reuse the spectral-selection stream's headers and AC scans:
-        # everything from SOI through DHT, then our two DC scans, then
-        # the original AC scans (split on the first SOS)
-        first_sos = full.index(b"\xff\xda")
-        headers = full[:first_sos]
-        # the original DC scan is the first SOS; AC scans follow
-        after_dc = full.index(b"\xff\xda", first_sos + 2)
-        ac_scans = full[after_dc:]  # includes the EOI trailer
-        return (
-            headers
-            + sos(0, 0, 0, 1) + dc_first
-            + sos(0, 0, 1, 0) + dc_refine
-            + ac_scans
-        )
+    def sos(ss: int, se: int, ah: int, al: int) -> bytes:
+        return _seg(0xFFDA, bytes([1, 1, 0, ss, se, (ah << 4) | al]))
 
-    def jpeg_encode_progressive_ac_sa(
-        pixels: bytes, width: int, height: int
-    ) -> bytes:
-        """Progressive greyscale JPEG using SUCCESSIVE APPROXIMATION on
-        the AC BANDS — the last progressive scan shape (T.81 G.1.2.3):
-        a plain DC scan, the two AC band first scans at REDUCED
-        precision (Al=1; the AC point transform truncates the magnitude
-        toward zero), then two AC REFINEMENT scans (Ah=1, Al=0) sending
-        the dropped low bit via the correction-bit interleave —
-        already-nonzero coefficients get one raw bit each, newly-
-        visible ±1 coefficients get (run<<4)|1 + sign, and the bits
-        buffer across EOB runs. trunc(|v|/2)*2*sign + refinement
-        reconstructs every coefficient exactly, so the decoded raster
-        is still bit-identical to baseline."""
-        if width % 8 or height % 8:
-            raise ValueError("dimensions must be multiples of 8")
-        if len(pixels) != width * height:
-            raise ValueError("pixel buffer does not match dimensions")
-        dc_codes = _huff_codes(*_DC_SPEC)
-        ac_codes = _huff_codes(*_AC_PROG_SPEC)
-        blocks = []
-        for by in range(height // 8):
-            for bx in range(width // 8):
-                blk = [
-                    pixels[(by * 8 + y) * width + bx * 8 + x] - 128
-                    for y in range(8)
-                    for x in range(8)
-                ]
-                blocks.append(_fdct_quant(blk, _QTAB))
-        bw = _BitWriter()
-        prev = 0
-        for qc in blocks:
-            diff = qc[0] - prev
-            prev = qc[0]
-            t = abs(diff).bit_length()
-            code, ln = dc_codes[t]
-            bw.write(code, ln)
-            if t:
-                bw.write(diff if diff >= 0 else diff + (1 << t) - 1, t)
-        dc_scan = bw.flush()
+    # reuse the spectral-selection stream's headers and AC scans:
+    # everything from SOI through DHT, then our two DC scans, then
+    # the original AC scans (split on the first SOS)
+    first_sos = full.index(b"\xff\xda")
+    headers = full[:first_sos]
+    # the original DC scan is the first SOS; AC scans follow
+    after_dc = full.index(b"\xff\xda", first_sos + 2)
+    ac_scans = full[after_dc:]  # includes the EOI trailer
+    return (
+        headers
+        + sos(0, 0, 0, 1) + dc_first
+        + sos(0, 0, 1, 0) + dc_refine
+        + ac_scans
+    )
 
-        def sos(ss: int, se: int, ah: int, al: int) -> bytes:
-            return _seg(0xFFDA, bytes([1, 1, 0, ss, se, (ah << 4) | al]))
+def jpeg_encode_progressive_ac_sa(
+    pixels: bytes, width: int, height: int
+) -> bytes:
+    """Progressive greyscale JPEG using SUCCESSIVE APPROXIMATION on
+    the AC BANDS — the last progressive scan shape (T.81 G.1.2.3):
+    a plain DC scan, the two AC band first scans at REDUCED
+    precision (Al=1; the AC point transform truncates the magnitude
+    toward zero), then two AC REFINEMENT scans (Ah=1, Al=0) sending
+    the dropped low bit via the correction-bit interleave —
+    already-nonzero coefficients get one raw bit each, newly-
+    visible ±1 coefficients get (run<<4)|1 + sign, and the bits
+    buffer across EOB runs. trunc(|v|/2)*2*sign + refinement
+    reconstructs every coefficient exactly, so the decoded raster
+    is still bit-identical to baseline."""
+    if width % 8 or height % 8:
+        raise ValueError("dimensions must be multiples of 8")
+    if len(pixels) != width * height:
+        raise ValueError("pixel buffer does not match dimensions")
+    dc_codes = _huff_codes(*_DC_SPEC)
+    ac_codes = _huff_codes(*_AC_PROG_SPEC)
+    blocks = []
+    for by in range(height // 8):
+        for bx in range(width // 8):
+            blk = [
+                pixels[(by * 8 + y) * width + bx * 8 + x] - 128
+                for y in range(8)
+                for x in range(8)
+            ]
+            blocks.append(_fdct_quant(blk, _QTAB))
+    bw = _BitWriter()
+    prev = 0
+    for qc in blocks:
+        diff = qc[0] - prev
+        prev = qc[0]
+        t = abs(diff).bit_length()
+        code, ln = dc_codes[t]
+        bw.write(code, ln)
+        if t:
+            bw.write(diff if diff >= 0 else diff + (1 << t) - 1, t)
+    dc_scan = bw.flush()
 
-        dqt = _seg(0xFFDB, b"\x00" + bytes(_QTAB[_ZZ[i]] for i in range(64)))
-        sof = _seg(
-            0xFFC2,
-            struct.pack(">BHHB", 8, height, width, 1) + b"\x01\x11\x00",
-        )
-        dht = _seg(
-            0xFFC4,
-            _dht_payload(0, 0, _DC_SPEC) + _dht_payload(1, 0, _AC_PROG_SPEC),
-        )
-        app0 = _seg(0xFFE0, _APP0)
-        return (
-            b"\xff\xd8" + app0 + dqt + sof + dht
-            + sos(0, 0, 0, 0) + dc_scan
-            + sos(1, 5, 0, 1) + _ac_first_scan(blocks, 1, 5, 1, ac_codes)
-            + sos(6, 63, 0, 1) + _ac_first_scan(blocks, 6, 63, 1, ac_codes)
-            + sos(1, 5, 1, 0) + _ac_refine_scan(blocks, 1, 5, 0, ac_codes)
-            + sos(6, 63, 1, 0) + _ac_refine_scan(blocks, 6, 63, 0, ac_codes)
-            + b"\xff\xd9"
-        )
+    def sos(ss: int, se: int, ah: int, al: int) -> bytes:
+        return _seg(0xFFDA, bytes([1, 1, 0, ss, se, (ah << 4) | al]))
 
-    def jpeg_decode_progressive(payload: bytes) -> tuple[bytes, int, int]:
-        """Decode a PROGRESSIVE (SOF2) greyscale JPEG with spectral
-        selection: multiple SOS scans accumulate each block's quantized
-        coefficient vector (DC scan = baseline DC differentials; AC
-        scans = in-band run/size pairs with full EOB-RUN semantics),
-        then one dequantize + IDCT per block. Successive approximation
-        (Ah/Al != 0) and multi-component progressive stay behind
-        ``ValueError`` — spectral selection is the shape our encoder
-        writes and the common single-component progressive case."""
-        if payload[:2] != b"\xff\xd8":
-            raise ValueError("not a JPEG payload (bad SOI)")
-        pos = 2
-        qtabs: dict[int, list[int]] = {}
-        htabs: dict[tuple[int, int], dict] = {}
-        width = height = None
-        qid0 = 0
-        coeffs: list[list[int]] | None = None
-        while pos + 2 <= len(payload):
-            if payload[pos] != 0xFF:
-                raise ValueError("segment desync (expected marker)")
-            marker = payload[pos + 1]
-            if marker == 0xD9:  # EOI
-                break
-            (ln,) = struct.unpack(">H", payload[pos + 2 : pos + 4])
-            body = payload[pos + 4 : pos + 2 + ln]
-            if len(body) != ln - 2:
-                raise ValueError("truncated segment")
-            if marker == 0xDB:
-                p = 0
-                while p < len(body):
-                    pq, tq = body[p] >> 4, body[p] & 0x0F
-                    if pq != 0:
-                        raise ValueError("16-bit quant tables unsupported")
-                    tab = [0] * 64
-                    for i in range(64):
-                        tab[_ZZ[i]] = body[p + 1 + i]
-                    qtabs[tq] = tab
-                    p += 65
-            elif marker == 0xC2:
-                prec, height, width, ncomp = struct.unpack(">BHHB", body[:6])
-                if prec != 8 or ncomp != 1:
-                    raise ValueError(
-                        "only single-component progressive supported"
-                    )
-                qid0 = body[8]
-                if width % 8 or height % 8:
-                    raise ValueError("dimensions must be multiples of 8")
-                coeffs = [
-                    [0] * 64 for _ in range((width // 8) * (height // 8))
-                ]
-            elif marker == 0xC0:
-                raise ValueError("baseline SOF: use jpeg_decode")
-            elif marker == 0xC4:
-                p = 0
-                while p < len(body):
-                    tc, th = body[p] >> 4, body[p] & 0x0F
-                    bits = list(body[p + 1 : p + 17])
-                    nval = sum(bits)
-                    vals = list(body[p + 17 : p + 17 + nval])
-                    codes = _huff_codes(bits, vals)
-                    htabs[(tc, th)] = {
-                        (c, l): sym for sym, (c, l) in codes.items()
-                    }
-                    p += 17 + nval
-            elif marker == 0xDA:
-                if coeffs is None:
-                    raise ValueError("SOS before SOF2")
-                ns = body[0]
-                if ns != 1:
-                    raise ValueError("interleaved progressive scans "
-                                     "unsupported")
-                tsel = body[2]
-                ss, se, ahal = body[3], body[4], body[5]
-                ah, al = ahal >> 4, ahal & 0x0F
-                br = _BitReader(payload, pos + 2 + ln)
-                if ss == 0:  # DC scan (first or refinement)
-                    if se != 0:
-                        raise ValueError("DC scan must have Se = 0")
-                    if ah == 0:  # first: predictors chain in the
-                        # SHIFTED domain; store the full-domain approx
-                        dct = htabs[(0, tsel >> 4)]
-                        pred = 0
-                        for blk in coeffs:
-                            t = _decode_huff(br, dct)
-                            if t:
-                                pred += _extend(br.bits(t), t)
-                            blk[0] = pred << al
-                    else:  # refinement: one raw bit per block at Al
-                        if ah != al + 1:
-                            raise ValueError(
-                                "DC refinement must step one bit (Ah=Al+1)"
-                            )
-                        for blk in coeffs:
-                            blk[0] |= br.bits(1) << al
-                elif ah != 0:  # AC refinement (T.81 G.1.2.3)
+    dqt = _seg(0xFFDB, b"\x00" + bytes(_QTAB[_ZZ[i]] for i in range(64)))
+    sof = _seg(
+        0xFFC2,
+        struct.pack(">BHHB", 8, height, width, 1) + b"\x01\x11\x00",
+    )
+    dht = _seg(
+        0xFFC4,
+        _dht_payload(0, 0, _DC_SPEC) + _dht_payload(1, 0, _AC_PROG_SPEC),
+    )
+    app0 = _seg(0xFFE0, _APP0)
+    return (
+        b"\xff\xd8" + app0 + dqt + sof + dht
+        + sos(0, 0, 0, 0) + dc_scan
+        + sos(1, 5, 0, 1) + _ac_first_scan(blocks, 1, 5, 1, ac_codes)
+        + sos(6, 63, 0, 1) + _ac_first_scan(blocks, 6, 63, 1, ac_codes)
+        + sos(1, 5, 1, 0) + _ac_refine_scan(blocks, 1, 5, 0, ac_codes)
+        + sos(6, 63, 1, 0) + _ac_refine_scan(blocks, 6, 63, 0, ac_codes)
+        + b"\xff\xd9"
+    )
+
+def jpeg_decode_progressive(payload: bytes) -> tuple[bytes, int, int]:
+    """Decode a PROGRESSIVE (SOF2) greyscale JPEG with spectral
+    selection: multiple SOS scans accumulate each block's quantized
+    coefficient vector (DC scan = baseline DC differentials; AC
+    scans = in-band run/size pairs with full EOB-RUN semantics),
+    then one dequantize + IDCT per block. Successive approximation
+    (Ah/Al != 0) and multi-component progressive stay behind
+    ``ValueError`` — spectral selection is the shape our encoder
+    writes and the common single-component progressive case."""
+    if payload[:2] != b"\xff\xd8":
+        raise ValueError("not a JPEG payload (bad SOI)")
+    pos = 2
+    qtabs: dict[int, list[int]] = {}
+    htabs: dict[tuple[int, int], dict] = {}
+    width = height = None
+    qid0 = 0
+    coeffs: list[list[int]] | None = None
+    while pos + 2 <= len(payload):
+        if payload[pos] != 0xFF:
+            raise ValueError("segment desync (expected marker)")
+        marker = payload[pos + 1]
+        if marker == 0xD9:  # EOI
+            break
+        (ln,) = struct.unpack(">H", payload[pos + 2 : pos + 4])
+        body = payload[pos + 4 : pos + 2 + ln]
+        if len(body) != ln - 2:
+            raise ValueError("truncated segment")
+        if marker == 0xDB:
+            p = 0
+            while p < len(body):
+                pq, tq = body[p] >> 4, body[p] & 0x0F
+                if pq != 0:
+                    raise ValueError("16-bit quant tables unsupported")
+                tab = [0] * 64
+                for i in range(64):
+                    tab[_ZZ[i]] = body[p + 1 + i]
+                qtabs[tq] = tab
+                p += 65
+        elif marker == 0xC2:
+            prec, height, width, ncomp = struct.unpack(">BHHB", body[:6])
+            if prec != 8 or ncomp != 1:
+                raise ValueError(
+                    "only single-component progressive supported"
+                )
+            qid0 = body[8]
+            if width % 8 or height % 8:
+                raise ValueError("dimensions must be multiples of 8")
+            coeffs = [
+                [0] * 64 for _ in range((width // 8) * (height // 8))
+            ]
+        elif marker == 0xC0:
+            raise ValueError("baseline SOF: use jpeg_decode")
+        elif marker == 0xC4:
+            p = 0
+            while p < len(body):
+                tc, th = body[p] >> 4, body[p] & 0x0F
+                bits = list(body[p + 1 : p + 17])
+                nval = sum(bits)
+                vals = list(body[p + 17 : p + 17 + nval])
+                codes = _huff_codes(bits, vals)
+                htabs[(tc, th)] = {
+                    (c, l): sym for sym, (c, l) in codes.items()
+                }
+                p += 17 + nval
+        elif marker == 0xDA:
+            if coeffs is None:
+                raise ValueError("SOS before SOF2")
+            ns = body[0]
+            if ns != 1:
+                raise ValueError("interleaved progressive scans "
+                                 "unsupported")
+            tsel = body[2]
+            ss, se, ahal = body[3], body[4], body[5]
+            ah, al = ahal >> 4, ahal & 0x0F
+            br = _BitReader(payload, pos + 2 + ln)
+            if ss == 0:  # DC scan (first or refinement)
+                if se != 0:
+                    raise ValueError("DC scan must have Se = 0")
+                if ah == 0:  # first: predictors chain in the
+                    # SHIFTED domain; store the full-domain approx
+                    dct = htabs[(0, tsel >> 4)]
+                    pred = 0
+                    for blk in coeffs:
+                        t = _decode_huff(br, dct)
+                        if t:
+                            pred += _extend(br.bits(t), t)
+                        blk[0] = pred << al
+                else:  # refinement: one raw bit per block at Al
                     if ah != al + 1:
                         raise ValueError(
-                            "AC refinement must step one bit (Ah=Al+1)"
+                            "DC refinement must step one bit (Ah=Al+1)"
                         )
-                    act = htabs[(1, tsel & 0x0F)]
-                    p1 = 1 << al
-                    m1 = -1 << al
-                    eobrun = 0
-
-                    def _corr(blk, k):
-                        # one correction bit for an already-nonzero
-                        # coefficient: 1 = increase the magnitude at
-                        # this precision (skip if the bit is set)
-                        if br.bits(1) and not (blk[_ZZ[k]] & p1):
-                            blk[_ZZ[k]] += p1 if blk[_ZZ[k]] >= 0 else m1
-
                     for blk in coeffs:
-                        k = ss
-                        if eobrun == 0:
-                            while k <= se:
-                                sym = _decode_huff(br, act)
-                                r, s = sym >> 4, sym & 0x0F
-                                if s:
-                                    if s != 1:
-                                        raise ValueError(
-                                            "refinement size must be 1"
-                                        )
-                                    s_val = p1 if br.bits(1) else m1
-                                else:
-                                    if r != 15:
-                                        eobrun = 1 << r
-                                        if r:
-                                            eobrun += br.bits(r)
-                                        break
-                                    s_val = 0  # ZRL
-                                # advance over nonzero-history coefs
-                                # (each eats a correction bit) and r
-                                # still-zero ones
-                                while k <= se:
-                                    if blk[_ZZ[k]] != 0:
-                                        _corr(blk, k)
-                                    else:
-                                        r -= 1
-                                        if r < 0:
-                                            break
-                                    k += 1
-                                if s_val:
-                                    if k > se:
-                                        raise ValueError(
-                                            "refinement run past band end"
-                                        )
-                                    blk[_ZZ[k]] = s_val
-                                k += 1
-                        if eobrun > 0:
-                            # EOB-run block: correction bits continue
-                            # for the band's remaining nonzero coefs
+                        blk[0] |= br.bits(1) << al
+            elif ah != 0:  # AC refinement (T.81 G.1.2.3)
+                if ah != al + 1:
+                    raise ValueError(
+                        "AC refinement must step one bit (Ah=Al+1)"
+                    )
+                act = htabs[(1, tsel & 0x0F)]
+                p1 = 1 << al
+                m1 = -1 << al
+                eobrun = 0
+
+                def _corr(blk, k):
+                    # one correction bit for an already-nonzero
+                    # coefficient: 1 = increase the magnitude at
+                    # this precision (skip if the bit is set)
+                    if br.bits(1) and not (blk[_ZZ[k]] & p1):
+                        blk[_ZZ[k]] += p1 if blk[_ZZ[k]] >= 0 else m1
+
+                for blk in coeffs:
+                    k = ss
+                    if eobrun == 0:
+                        while k <= se:
+                            sym = _decode_huff(br, act)
+                            r, s = sym >> 4, sym & 0x0F
+                            if s:
+                                if s != 1:
+                                    raise ValueError(
+                                        "refinement size must be 1"
+                                    )
+                                s_val = p1 if br.bits(1) else m1
+                            else:
+                                if r != 15:
+                                    eobrun = 1 << r
+                                    if r:
+                                        eobrun += br.bits(r)
+                                    break
+                                s_val = 0  # ZRL
+                            # advance over nonzero-history coefs
+                            # (each eats a correction bit) and r
+                            # still-zero ones
                             while k <= se:
                                 if blk[_ZZ[k]] != 0:
                                     _corr(blk, k)
+                                else:
+                                    r -= 1
+                                    if r < 0:
+                                        break
                                 k += 1
-                            eobrun -= 1
-                else:  # AC band first scan (values arrive at level Al)
-                    act = htabs[(1, tsel & 0x0F)]
-                    eobrun = 0
-                    for blk in coeffs:
-                        if eobrun:
-                            eobrun -= 1
-                            continue
-                        zz = ss
-                        while zz <= se:
-                            sym = _decode_huff(br, act)
-                            r, t = sym >> 4, sym & 0x0F
-                            if t == 0:
-                                if r == 15:
-                                    zz += 16  # ZRL
-                                    continue
-                                extra = br.bits(r) if r else 0
-                                eobrun = (1 << r) - 1 + extra
-                                break
-                            zz += r
-                            if zz > se:
-                                raise ValueError("AC run past band end")
-                            blk[_ZZ[zz]] = _extend(br.bits(t), t) << al
-                            zz += 1
-                # resync to the next marker: drop partial bits, then
-                # skip stuffed 0xFF00 pairs / fill bytes
-                pos = br.pos
-                while pos + 1 < len(payload) and not (
-                    payload[pos] == 0xFF and payload[pos + 1] != 0x00
-                ):
-                    pos += 1
-                continue
-            pos += 2 + ln
-        if coeffs is None or width is None or qid0 not in qtabs:
-            raise ValueError("missing SOF2/DQT before scan")
-        q = qtabs[qid0]
-        out = bytearray(width * height)
-        bw_cnt = width // 8
-        for bi, blk in enumerate(coeffs):
-            deq = [blk[i] * q[i] for i in range(64)]
-            px = _idct_block(deq)
-            by, bx = divmod(bi, bw_cnt)
-            for y in range(8):
-                row = (by * 8 + y) * width + bx * 8
-                out[row : row + 8] = bytes(px[y * 8 : y * 8 + 8])
-        return bytes(out), width, height
-
-    return (
-        jpeg_encode,
-        jpeg_decode,
-        jpeg_encode_color,
-        jpeg_decode_color,
-        jpeg_encode_color_420,
-        jpeg_encode_color_422,
-        jpeg_encode_progressive,
-        jpeg_encode_progressive_sa,
-        jpeg_encode_progressive_ac_sa,
-        jpeg_decode_progressive,
-    )
-
-
-(
-    jpeg_encode,
-    jpeg_decode,
-    jpeg_encode_color,
-    jpeg_decode_color,
-    jpeg_encode_color_420,
-    jpeg_encode_color_422,
-    jpeg_encode_progressive,
-    jpeg_encode_progressive_sa,
-    jpeg_encode_progressive_ac_sa,
-    jpeg_decode_progressive,
-) = _build_jpeg_codec()
+                            if s_val:
+                                if k > se:
+                                    raise ValueError(
+                                        "refinement run past band end"
+                                    )
+                                blk[_ZZ[k]] = s_val
+                            k += 1
+                    if eobrun > 0:
+                        # EOB-run block: correction bits continue
+                        # for the band's remaining nonzero coefs
+                        while k <= se:
+                            if blk[_ZZ[k]] != 0:
+                                _corr(blk, k)
+                            k += 1
+                        eobrun -= 1
+            else:  # AC band first scan (values arrive at level Al)
+                act = htabs[(1, tsel & 0x0F)]
+                eobrun = 0
+                for blk in coeffs:
+                    if eobrun:
+                        eobrun -= 1
+                        continue
+                    zz = ss
+                    while zz <= se:
+                        sym = _decode_huff(br, act)
+                        r, t = sym >> 4, sym & 0x0F
+                        if t == 0:
+                            if r == 15:
+                                zz += 16  # ZRL
+                                continue
+                            extra = br.bits(r) if r else 0
+                            eobrun = (1 << r) - 1 + extra
+                            break
+                        zz += r
+                        if zz > se:
+                            raise ValueError("AC run past band end")
+                        blk[_ZZ[zz]] = _extend(br.bits(t), t) << al
+                        zz += 1
+            # resync to the next marker: drop partial bits, then
+            # skip stuffed 0xFF00 pairs / fill bytes
+            pos = br.pos
+            while pos + 1 < len(payload) and not (
+                payload[pos] == 0xFF and payload[pos + 1] != 0x00
+            ):
+                pos += 1
+            continue
+        pos += 2 + ln
+    if coeffs is None or width is None or qid0 not in qtabs:
+        raise ValueError("missing SOF2/DQT before scan")
+    q = qtabs[qid0]
+    out = bytearray(width * height)
+    bw_cnt = width // 8
+    for bi, blk in enumerate(coeffs):
+        deq = [blk[i] * q[i] for i in range(64)]
+        px = _idct_block(deq)
+        by, bx = divmod(bi, bw_cnt)
+        for y in range(8):
+            row = (by * 8 + y) * width + bx * 8
+            out[row : row + 8] = bytes(px[y * 8 : y * 8 + 8])
+    return bytes(out), width, height

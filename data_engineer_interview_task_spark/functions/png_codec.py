@@ -15,197 +15,190 @@ interlace) stays behind the documented ``NotImplementedError`` in
 ``operators/multimodal.py::decode_image`` — genuinely impossible
 without codec libraries absent from this container.
 
-Both functions are defined inside a builder so their ``__qualname__``
-contains ``<locals>`` and cloudpickle serializes them BY VALUE: Spark
-python workers can capture ``png_decode`` in a ``mapInPandas`` closure
-without needing this repo importable (the repo-wide closure rule; same
-trick as ``sources/pydatasource.py``).
+Plain module-level functions: the package registers itself
+pickle-by-value (package ``__init__``), so a ``mapInPandas`` function
+that references ``png_decode`` runs on Spark python workers that cannot
+import this repo.
 """
 
 from __future__ import annotations
+
+import struct
+import zlib
 
 #: PNG file signature (8 bytes).
 PNG_SIGNATURE = b"\x89PNG\r\n\x1a\n"
 
 
-def _build_png_codec():
-    import struct
-    import zlib
+_SIG = b"\x89PNG\r\n\x1a\n"
+_CHANNELS = {0: 1, 2: 3, 4: 2, 6: 4}
 
-    _SIG = b"\x89PNG\r\n\x1a\n"
-    _CHANNELS = {0: 1, 2: 3, 4: 2, 6: 4}
+def _paeth(a: int, b: int, c: int) -> int:
+    p = a + b - c
+    pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
+    if pa <= pb and pa <= pc:
+        return a
+    return b if pb <= pc else c
 
-    def _paeth(a: int, b: int, c: int) -> int:
-        p = a + b - c
-        pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-        if pa <= pb and pa <= pc:
-            return a
-        return b if pb <= pc else c
+def _chunk(tag: bytes, data: bytes) -> bytes:
+    return (
+        struct.pack(">I", len(data))
+        + tag
+        + data
+        + struct.pack(">I", zlib.crc32(tag + data) & 0xFFFFFFFF)
+    )
 
-    def _chunk(tag: bytes, data: bytes) -> bytes:
-        return (
-            struct.pack(">I", len(data))
-            + tag
-            + data
-            + struct.pack(">I", zlib.crc32(tag + data) & 0xFFFFFFFF)
+def png_encode(
+    pixels: bytes,
+    width: int,
+    height: int,
+    color_type: int = 0,
+    palette: bytes | None = None,
+) -> bytes:
+    """Serialize a raw 8-bit pixel buffer (row-major, interleaved
+    channels) to a valid PNG. Scanline filters cycle ``row % 5`` so a
+    round-trip exercises every filter's inverse. For palette PNGs
+    (color type 3) ``pixels`` holds one palette INDEX byte per pixel
+    and ``palette`` the RGB triples the indices select."""
+    if color_type == 3:
+        if palette is None or len(palette) % 3 or not 0 < len(palette) <= 768:
+            raise ValueError("palette PNG needs 1..256 RGB triples")
+        if pixels and max(pixels) >= len(palette) // 3:
+            raise ValueError("palette index out of range")
+        ch = 1
+    elif palette is not None:
+        raise ValueError("palette only valid with color type 3")
+    elif color_type not in _CHANNELS:
+        raise ValueError(f"unsupported color type {color_type}")
+    else:
+        ch = _CHANNELS[color_type]
+    stride = width * ch
+    if len(pixels) != stride * height:
+        raise ValueError(
+            f"pixel buffer is {len(pixels)} bytes, expected "
+            f"{stride * height} for {width}x{height}x{ch}"
         )
-
-    def png_encode(
-        pixels: bytes,
-        width: int,
-        height: int,
-        color_type: int = 0,
-        palette: bytes | None = None,
-    ) -> bytes:
-        """Serialize a raw 8-bit pixel buffer (row-major, interleaved
-        channels) to a valid PNG. Scanline filters cycle ``row % 5`` so a
-        round-trip exercises every filter's inverse. For palette PNGs
-        (color type 3) ``pixels`` holds one palette INDEX byte per pixel
-        and ``palette`` the RGB triples the indices select."""
-        if color_type == 3:
-            if palette is None or len(palette) % 3 or not 0 < len(palette) <= 768:
-                raise ValueError("palette PNG needs 1..256 RGB triples")
-            if pixels and max(pixels) >= len(palette) // 3:
-                raise ValueError("palette index out of range")
-            ch = 1
-        elif palette is not None:
-            raise ValueError("palette only valid with color type 3")
-        elif color_type not in _CHANNELS:
-            raise ValueError(f"unsupported color type {color_type}")
+    raw = bytearray()
+    prev = bytes(stride)
+    for y in range(height):
+        row = pixels[y * stride : (y + 1) * stride]
+        ft = y % 5
+        raw.append(ft)
+        if ft == 0:
+            raw += row
         else:
-            ch = _CHANNELS[color_type]
-        stride = width * ch
-        if len(pixels) != stride * height:
-            raise ValueError(
-                f"pixel buffer is {len(pixels)} bytes, expected "
-                f"{stride * height} for {width}x{height}x{ch}"
-            )
-        raw = bytearray()
-        prev = bytes(stride)
-        for y in range(height):
-            row = pixels[y * stride : (y + 1) * stride]
-            ft = y % 5
-            raw.append(ft)
-            if ft == 0:
-                raw += row
-            else:
-                for x in range(stride):
-                    a = row[x - ch] if x >= ch else 0
-                    b = prev[x]
-                    c = prev[x - ch] if x >= ch else 0
-                    if ft == 1:
-                        pred = a
-                    elif ft == 2:
-                        pred = b
-                    elif ft == 3:
-                        pred = (a + b) >> 1
-                    else:
-                        pred = _paeth(a, b, c)
-                    raw.append((row[x] - pred) & 0xFF)
-            prev = row
-        ihdr = struct.pack(">IIBBBBB", width, height, 8, color_type, 0, 0, 0)
-        plte = _chunk(b"PLTE", palette) if color_type == 3 else b""
-        return (
-            _SIG
-            + _chunk(b"IHDR", ihdr)
-            + plte
-            + _chunk(b"IDAT", zlib.compress(bytes(raw), 9))
-            + _chunk(b"IEND", b"")
+            for x in range(stride):
+                a = row[x - ch] if x >= ch else 0
+                b = prev[x]
+                c = prev[x - ch] if x >= ch else 0
+                if ft == 1:
+                    pred = a
+                elif ft == 2:
+                    pred = b
+                elif ft == 3:
+                    pred = (a + b) >> 1
+                else:
+                    pred = _paeth(a, b, c)
+                raw.append((row[x] - pred) & 0xFF)
+        prev = row
+    ihdr = struct.pack(">IIBBBBB", width, height, 8, color_type, 0, 0, 0)
+    plte = _chunk(b"PLTE", palette) if color_type == 3 else b""
+    return (
+        _SIG
+        + _chunk(b"IHDR", ihdr)
+        + plte
+        + _chunk(b"IDAT", zlib.compress(bytes(raw), 9))
+        + _chunk(b"IEND", b"")
+    )
+
+def png_decode(payload: bytes) -> tuple[bytes, int, int, int]:
+    """Parse + unfilter a PNG payload. Returns
+    ``(pixels, width, height, color_type)`` where ``pixels`` is the raw
+    row-major 8-bit buffer — for palette PNGs (color type 3) the
+    indices are EXPANDED through the PLTE table, so ``pixels`` is the
+    width*height*3 RGB raster the image denotes. Verifies the
+    signature, per-chunk CRCs and the decompressed length; raises
+    ``ValueError`` on corrupt input and on out-of-scope shapes
+    (16-bit/interlaced)."""
+    if payload[:8] != _SIG:
+        raise ValueError("not a PNG payload (bad signature)")
+    pos, ihdr, idat, plte, complete = 8, None, [], None, False
+    while pos + 8 <= len(payload):
+        (length,) = struct.unpack(">I", payload[pos : pos + 4])
+        tag = payload[pos + 4 : pos + 8]
+        data = payload[pos + 8 : pos + 8 + length]
+        if len(data) != length or pos + 12 + length > len(payload):
+            raise ValueError("truncated PNG chunk")
+        (crc,) = struct.unpack(
+            ">I", payload[pos + 8 + length : pos + 12 + length]
         )
-
-    def png_decode(payload: bytes) -> tuple[bytes, int, int, int]:
-        """Parse + unfilter a PNG payload. Returns
-        ``(pixels, width, height, color_type)`` where ``pixels`` is the raw
-        row-major 8-bit buffer — for palette PNGs (color type 3) the
-        indices are EXPANDED through the PLTE table, so ``pixels`` is the
-        width*height*3 RGB raster the image denotes. Verifies the
-        signature, per-chunk CRCs and the decompressed length; raises
-        ``ValueError`` on corrupt input and on out-of-scope shapes
-        (16-bit/interlaced)."""
-        if payload[:8] != _SIG:
-            raise ValueError("not a PNG payload (bad signature)")
-        pos, ihdr, idat, plte, complete = 8, None, [], None, False
-        while pos + 8 <= len(payload):
-            (length,) = struct.unpack(">I", payload[pos : pos + 4])
-            tag = payload[pos + 4 : pos + 8]
-            data = payload[pos + 8 : pos + 8 + length]
-            if len(data) != length or pos + 12 + length > len(payload):
-                raise ValueError("truncated PNG chunk")
-            (crc,) = struct.unpack(
-                ">I", payload[pos + 8 + length : pos + 12 + length]
-            )
-            if zlib.crc32(tag + data) & 0xFFFFFFFF != crc:
-                raise ValueError(f"CRC mismatch in {tag!r} chunk")
-            if tag == b"IHDR":
-                ihdr = struct.unpack(">IIBBBBB", data)
-            elif tag == b"IDAT":
-                idat.append(data)
-            elif tag == b"PLTE":
-                if len(data) % 3 or not 0 < len(data) <= 768:
-                    raise ValueError("malformed PLTE chunk")
-                plte = data
-            elif tag == b"IEND":
-                complete = True
-                break
-            pos += 12 + length
-        if ihdr is None or not idat:
-            raise ValueError("missing IHDR/IDAT chunk")
-        if not complete:
-            raise ValueError("truncated PNG (no IEND chunk)")
-        width, height, depth, color_type, comp, filt, interlace = ihdr
-        if depth != 8 or comp != 0 or filt != 0:
-            raise ValueError(f"unsupported PNG shape: depth={depth}")
-        if interlace != 0:
-            raise ValueError("interlaced PNG not supported")
-        if color_type == 3:
-            if plte is None:
-                raise ValueError("palette PNG missing PLTE chunk")
-            ch = 1
-        elif color_type not in _CHANNELS:
-            raise ValueError(f"unsupported color type {color_type}")
+        if zlib.crc32(tag + data) & 0xFFFFFFFF != crc:
+            raise ValueError(f"CRC mismatch in {tag!r} chunk")
+        if tag == b"IHDR":
+            ihdr = struct.unpack(">IIBBBBB", data)
+        elif tag == b"IDAT":
+            idat.append(data)
+        elif tag == b"PLTE":
+            if len(data) % 3 or not 0 < len(data) <= 768:
+                raise ValueError("malformed PLTE chunk")
+            plte = data
+        elif tag == b"IEND":
+            complete = True
+            break
+        pos += 12 + length
+    if ihdr is None or not idat:
+        raise ValueError("missing IHDR/IDAT chunk")
+    if not complete:
+        raise ValueError("truncated PNG (no IEND chunk)")
+    width, height, depth, color_type, comp, filt, interlace = ihdr
+    if depth != 8 or comp != 0 or filt != 0:
+        raise ValueError(f"unsupported PNG shape: depth={depth}")
+    if interlace != 0:
+        raise ValueError("interlaced PNG not supported")
+    if color_type == 3:
+        if plte is None:
+            raise ValueError("palette PNG missing PLTE chunk")
+        ch = 1
+    elif color_type not in _CHANNELS:
+        raise ValueError(f"unsupported color type {color_type}")
+    else:
+        ch = _CHANNELS[color_type]
+    stride = width * ch
+    raw = zlib.decompress(b"".join(idat))
+    if len(raw) != (stride + 1) * height:
+        raise ValueError("decompressed size does not match IHDR dims")
+    out = bytearray(stride * height)
+    prev = bytes(stride)
+    for y in range(height):
+        ft = raw[y * (stride + 1)]
+        line = raw[y * (stride + 1) + 1 : (y + 1) * (stride + 1)]
+        row = bytearray(stride)
+        if ft == 0:
+            row[:] = line
+        elif ft > 4:
+            raise ValueError(f"bad filter type {ft} on row {y}")
         else:
-            ch = _CHANNELS[color_type]
-        stride = width * ch
-        raw = zlib.decompress(b"".join(idat))
-        if len(raw) != (stride + 1) * height:
-            raise ValueError("decompressed size does not match IHDR dims")
-        out = bytearray(stride * height)
-        prev = bytes(stride)
-        for y in range(height):
-            ft = raw[y * (stride + 1)]
-            line = raw[y * (stride + 1) + 1 : (y + 1) * (stride + 1)]
-            row = bytearray(stride)
-            if ft == 0:
-                row[:] = line
-            elif ft > 4:
-                raise ValueError(f"bad filter type {ft} on row {y}")
-            else:
-                for x in range(stride):
-                    a = row[x - ch] if x >= ch else 0
-                    b = prev[x]
-                    c = prev[x - ch] if x >= ch else 0
-                    if ft == 1:
-                        pred = a
-                    elif ft == 2:
-                        pred = b
-                    elif ft == 3:
-                        pred = (a + b) >> 1
-                    else:
-                        pred = _paeth(a, b, c)
-                    row[x] = (line[x] + pred) & 0xFF
-            out[y * stride : (y + 1) * stride] = row
-            prev = bytes(row)
-        if color_type == 3:
-            n_entries = len(plte) // 3
-            if out and max(out) >= n_entries:
-                raise ValueError("palette index out of range")
-            rgb = bytearray(len(out) * 3)
-            for i, v in enumerate(out):
-                rgb[3 * i : 3 * i + 3] = plte[3 * v : 3 * v + 3]
-            return bytes(rgb), width, height, color_type
-        return bytes(out), width, height, color_type
-
-    return png_encode, png_decode
-
-
-png_encode, png_decode = _build_png_codec()
+            for x in range(stride):
+                a = row[x - ch] if x >= ch else 0
+                b = prev[x]
+                c = prev[x - ch] if x >= ch else 0
+                if ft == 1:
+                    pred = a
+                elif ft == 2:
+                    pred = b
+                elif ft == 3:
+                    pred = (a + b) >> 1
+                else:
+                    pred = _paeth(a, b, c)
+                row[x] = (line[x] + pred) & 0xFF
+        out[y * stride : (y + 1) * stride] = row
+        prev = bytes(row)
+    if color_type == 3:
+        n_entries = len(plte) // 3
+        if out and max(out) >= n_entries:
+            raise ValueError("palette index out of range")
+        rgb = bytearray(len(out) * 3)
+        for i, v in enumerate(out):
+            rgb[3 * i : 3 * i + 3] = plte[3 * v : 3 * v + 3]
+        return bytes(rgb), width, height, color_type
+    return bytes(out), width, height, color_type

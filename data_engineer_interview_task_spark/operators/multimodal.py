@@ -15,24 +15,65 @@ for plumbing tests. The testdata has no binary
 table, so ``attach_payload``/``attach_png_payload``/``attach_jpeg_payload``
 manufacture payload columns from ``documents.text`` to exercise the
 pipeline end-to-end on real container bytes.
+
+Every per-row Python stage runs through the one row kernel
+:func:`per_row`: a query supplies only its row function and output
+schema. Row functions call the codec functions directly — the package
+ships itself to the python workers by value (see the package
+``__init__``).
 """
 
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
+import struct
+from collections.abc import Callable, Iterable, Iterator, Sequence
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType,
+    DoubleType,
     LongType,
     StringType,
     StructField,
     StructType,
 )
 
+from ..functions.adpcm_codec import adpcm_decode_wav, adpcm_encode_wav
+from ..functions.audio_meta import parse_audio_header
+from ..functions.bmp_codec import bmp_decode_rle8, bmp_encode_rle8
+from ..functions.g711_codec import (
+    alaw_decode_wav,
+    alaw_encode_wav,
+    mulaw_decode_wav,
+    mulaw_encode_wav,
+)
+from ..functions.gif_codec import (
+    GIF_SIGNATURE,
+    gif_decode,
+    gif_decode_frames,
+    gif_encode,
+    gif_encode_animated,
+)
+from ..functions.image_meta import parse_image_header
+from ..functions.jpeg_codec import (
+    JPEG_SIGNATURE,
+    jpeg_decode,
+    jpeg_decode_color,
+    jpeg_decode_progressive,
+    jpeg_encode,
+    jpeg_encode_color,
+    jpeg_encode_color_420,
+    jpeg_encode_color_422,
+    jpeg_encode_progressive,
+    jpeg_encode_progressive_ac_sa,
+    jpeg_encode_progressive_sa,
+)
+from ..functions.png_codec import PNG_SIGNATURE, png_decode, png_encode
+from ..functions.wav_codec import WAV_SIGNATURE, wav_decode, wav_encode
 from ..sources import read_table
 
 #: Output schema of the feature extractor — explicit, like any production
@@ -54,6 +95,27 @@ PAYLOAD_SCHEMA = StructType(
         StructField("n_bytes", LongType()),
     ]
 )
+
+_TYPES = {"long": LongType(), "string": StringType(), "binary": BinaryType()}
+
+
+def _schema(spec: str) -> StructType:
+    """Compact output schema: space-separated ``name[:type]`` fields, the
+    type one of ``long`` (the default — codec facts are exact integers),
+    ``string`` or ``binary``."""
+    fields = (f.partition(":") for f in spec.split())
+    return StructType([StructField(n, _TYPES[t or "long"]) for n, _, t in fields])
+
+
+#: the shared stage shapes: manufactured payloads, decoded-raster facts
+#: (the sha runs over the decoded bytes), and the row-function inputs
+_ENCODED = _schema("doc_id payload:binary modality:string")
+_RASTER = _schema("doc_id width height n_px_bytes pixel_sha:string")
+_COLOR_RASTER = _schema(
+    "doc_id width height color_type n_px_bytes pixel_sha:string"
+)
+_TEXT = ("doc_id", "text")
+_PAYLOAD = ("doc_id", "payload")
 
 
 def attach_payload(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -83,6 +145,54 @@ def _spread_docs(spark: SparkSession, docs: DataFrame) -> DataFrame:
     return docs
 
 
+def per_row(
+    df: DataFrame,
+    fn: Callable[..., Iterable[tuple]],
+    schema: StructType,
+    cols: Sequence[str],
+) -> DataFrame:
+    """The row kernel of every Python codec stage: call ``fn(*row)`` on
+    each row's ``cols`` values and emit every tuple it returns as an
+    output row, its fields named by ``schema``. A 1:1 stage returns one
+    tuple; a fan-out stage returns several (or none) — one code path
+    either way. Runs per Arrow batch via ``mapInPandas``: partitioning
+    is preserved, no shuffle. ``fn`` and the package functions it
+    references ship to the workers by value (see the package
+    ``__init__``), so ``fn`` must not reference a package module."""
+    names = schema.fieldNames()
+
+    def _batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = [
+                out for row in zip(*(pdf[c] for c in cols)) for out in fn(*row)
+            ]
+            yield pd.DataFrame(rows, columns=names)
+
+    return df.mapInPandas(_batches, schema=schema)
+
+
+def _hex_sha(buf: bytes) -> str:
+    """sha256 over the LOWERCASE-HEX transport of ``buf``: DuckDB's sha256
+    takes VARCHAR only, and decoded rasters/samples are not valid UTF-8 —
+    the hex string is the engine-neutral encoding every oracle shares."""
+    return hashlib.sha256(buf.hex().encode()).hexdigest()
+
+
+def _block_raster(
+    vals: bytes, width: int, height: int, bw: int, bh: int, nch: int = 1
+) -> bytes:
+    """Row-major ``width``x``height`` raster of uniform ``bw``x``bh``
+    blocks: block ``i`` (row-major block order) takes its ``nch`` channel
+    bytes from ``vals[nch*i : nch*(i+1)]`` — the md5-derived fixtures
+    whose lossy codec chains stay closed-form per block."""
+    out = bytearray()
+    for y in range(height):
+        for x in range(width):
+            i = nch * ((y // bh) * (width // bw) + x // bw)
+            out += vals[i : i + nch]
+    return bytes(out)
+
+
 def decode_image(payload: bytes) -> tuple[bytes, int, int, int]:
     """Decode an image payload to raw pixels ``(pixels, width, height,
     color_type)``. PNG decodes FOR REAL via the pure-stdlib codec
@@ -103,10 +213,6 @@ def decode_image(payload: bytes) -> tuple[bytes, int, int, int]:
     real too (``functions/gif_codec.py`` — full LZW with the KwKwK case
     and 4096-entry resets; indices expand through the color table to an
     RGB raster, reported as color_type 2)."""
-    from ..functions.gif_codec import GIF_SIGNATURE, gif_decode
-    from ..functions.jpeg_codec import JPEG_SIGNATURE, jpeg_decode_color
-    from ..functions.png_codec import PNG_SIGNATURE, png_decode
-
     if payload[:8] == PNG_SIGNATURE:
         return png_decode(payload)
     if payload[:2] == JPEG_SIGNATURE:
@@ -129,35 +235,18 @@ def fake_decode(payload: bytes) -> bytes:
     return payload
 
 
-def extract_features(df: DataFrame, batch_size_hint: int = 1024) -> DataFrame:
+def extract_features(df: DataFrame) -> DataFrame:
     """Arrow-batched feature extraction over binary payloads via
     ``mapInPandas`` — the canonical multimodal pattern: binary in, narrow
     typed features out, executed per Arrow batch so Python touches columns,
     never rows. Partitioning is preserved (no shuffle); at 100 TB you
     ``repartition`` upstream only to right-size batches for codec memory."""
 
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # self-contained closure: no references to this package's module
-        # globals. cloudpickle serializes those by module name and Spark's
-        # Python WORKERS would then have to import the package — which
-        # fails whenever the driver process wasn't started in the repo
-        # directory. bytes(b) is the fake_decode identity stand-in.
-        import hashlib as _h
+    def _extract(doc_id, payload, modality):
+        decoded = fake_decode(bytes(payload))
+        yield doc_id, len(decoded), hashlib.sha1(decoded).hexdigest(), modality
 
-        import pandas as _pd
-
-        for pdf in batches:
-            decoded = pdf["payload"].map(bytes)
-            yield _pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "n_bytes": decoded.map(len).astype("int64"),
-                    "sha1": decoded.map(lambda b: _h.sha1(b).hexdigest()),
-                    "modality": pdf["modality"],
-                }
-            )
-
-    return df.mapInPandas(_extract, schema=FEATURE_SCHEMA)
+    return per_row(df, _extract, FEATURE_SCHEMA, ("doc_id", "payload", "modality"))
 
 
 def user_value_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -165,32 +254,26 @@ def user_value_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     trend of event values over time — the 'fit a small model per group'
     pattern (the third pandas-UDF API next to mapInPandas and
     applyInPandasWithState). Each group arrives as one pandas frame;
-    closed-form slope/intercept via numpy. Closure is self-contained
-    (workers never import this package)."""
-    from pyspark.sql.types import DoubleType as _D
-
+    closed-form slope/intercept via numpy."""
     schema = StructType(
         [
             StructField("user_id", LongType()),
             StructField("n_events", LongType()),
-            StructField("slope_per_day", _D()),
-            StructField("mean_value", _D()),
+            StructField("slope_per_day", DoubleType()),
+            StructField("mean_value", DoubleType()),
         ]
     )
 
     def _fit(pdf: pd.DataFrame) -> pd.DataFrame:
-        import numpy as _np
-        import pandas as _pd
-
         pdf = pdf.sort_values("ts")
         t_days = (pdf["ts"].astype("int64") / 1e9 / 86400.0).to_numpy()
         v = pdf["value"].to_numpy(dtype=float)
-        if len(v) >= 2 and _np.ptp(t_days) > 0:
+        if len(v) >= 2 and np.ptp(t_days) > 0:
             t0 = t_days - t_days.mean()
             slope = float((t0 * (v - v.mean())).sum() / (t0 * t0).sum())
         else:
             slope = 0.0
-        return _pd.DataFrame(
+        return pd.DataFrame(
             {
                 "user_id": [int(pdf["user_id"].iloc[0])],
                 "n_events": [len(v)],
@@ -218,93 +301,55 @@ def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic across engines, so this is the rare Python-UDF path with
     an exact DuckDB oracle — it proves the full Python<->JVM Arrow plumbing
     end-to-end, not just the JVM expression surface."""
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("n_bytes", LongType()),
-            StructField("sha256", StringType()),
-        ]
+
+    def _extract(doc_id, payload):
+        decoded = bytes(payload)
+        yield doc_id, len(decoded), hashlib.sha256(decoded).hexdigest()
+
+    return per_row(
+        attach_payload(spark, sf_dir),
+        _extract,
+        _schema("doc_id n_bytes sha256:string"),
+        _PAYLOAD,
     )
 
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # self-contained (see extract_features): workers must not need to
-        # import this package
-        import hashlib as _h
 
-        import pandas as _pd
+def resize_image(payload: bytes, width: int, height: int) -> bytes:
+    """REAL image resize (closes VERDICT r6 item 2 — with real
+    PNG/JPEG codecs in-repo the stub had no library excuse left):
+    decode for real, integer NEAREST-NEIGHBOR resample, return the
+    raw raster bytes (1 byte/px grayscale, 3 bytes/px color — the
+    channel layout the decoders emit; palette PNGs decode to an
+    RGB-expanded raster, so channel arity comes from the buffer
+    length, not the color type).
 
-        for pdf in batches:
-            decoded = pdf["payload"].map(bytes)
-            yield _pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "n_bytes": decoded.map(len).astype("int64"),
-                    "sha256": decoded.map(lambda b: _h.sha256(b).hexdigest()),
-                }
-            )
-
-    return attach_payload(spark, sf_dir).mapInPandas(_extract, schema=schema)
-
-
-def _build_resize():
-    """Builder for the real resize seam. BUILDER-SCOPED on purpose: the
-    returned function's qualname contains ``<locals>``, so cloudpickle
-    serializes it (and the codec functions in its closure cells) BY
-    VALUE — workers never import this package (the same worker-pickle
-    rule the PNG/JPEG codec builders follow; a module-level function
-    here pickles by reference and breaks any driver not started in the
-    repo directory)."""
-    from ..functions.jpeg_codec import JPEG_SIGNATURE, jpeg_decode_color
-    from ..functions.png_codec import PNG_SIGNATURE, png_decode
-
-    png_sig, jpg_sig, p_dec, j_dec = (
-        PNG_SIGNATURE,
-        JPEG_SIGNATURE,
-        png_decode,
-        jpeg_decode_color,
-    )
-
-    def resize_image(payload: bytes, width: int, height: int) -> bytes:
-        """REAL image resize (closes VERDICT r6 item 2 — with real
-        PNG/JPEG codecs in-repo the stub had no library excuse left):
-        decode for real, integer NEAREST-NEIGHBOR resample, return the
-        raw raster bytes (1 byte/px grayscale, 3 bytes/px color — the
-        channel layout the decoders emit; palette PNGs decode to an
-        RGB-expanded raster, so channel arity comes from the buffer
-        length, not the color type).
-
-        Sampling convention (PINNED — the DuckDB oracle replicates it):
-        output pixel ``(r, c)`` reads source pixel
-        ``(r*src_h DIV out_h, c*src_w DIV out_w)`` — pure floor integer
-        arithmetic, no 0.5-center offsets and no floats, so the
-        resample is bit-deterministic on any engine. A Pillow
-        deployment swaps this body for ``Image.resize``; the seam's
-        signature is unchanged."""
-        if payload[:8] == png_sig:
-            px, src_w, src_h, _ct = p_dec(payload)
-        elif payload[:2] == jpg_sig:
-            px, src_w, src_h, _nc = j_dec(payload)
-        else:
-            raise NotImplementedError(
-                "resize decodes via the in-repo PNG/JPEG codecs only; "
-                "see fake_decode()/fake_resize() for the deterministic "
-                "test doubles"
-            )
-        nch = len(px) // (src_w * src_h)
-        out = bytearray(width * height * nch)
-        o = 0
-        for r in range(height):
-            row = (r * src_h // height) * src_w
-            for c in range(width):
-                s = (row + c * src_w // width) * nch
-                out[o : o + nch] = px[s : s + nch]
-                o += nch
-        return bytes(out)
-
-    return resize_image
-
-
-resize_image = _build_resize()
+    Sampling convention (PINNED — the DuckDB oracle replicates it):
+    output pixel ``(r, c)`` reads source pixel
+    ``(r*src_h DIV out_h, c*src_w DIV out_w)`` — pure floor integer
+    arithmetic, no 0.5-center offsets and no floats, so the
+    resample is bit-deterministic on any engine. A Pillow
+    deployment swaps this body for ``Image.resize``; the seam's
+    signature is unchanged."""
+    if payload[:8] == PNG_SIGNATURE:
+        px, src_w, src_h, _ct = png_decode(payload)
+    elif payload[:2] == JPEG_SIGNATURE:
+        px, src_w, src_h, _nc = jpeg_decode_color(payload)
+    else:
+        raise NotImplementedError(
+            "resize decodes via the in-repo PNG/JPEG codecs only; "
+            "see fake_decode()/fake_resize() for the deterministic "
+            "test doubles"
+        )
+    nch = len(px) // (src_w * src_h)
+    out = bytearray(width * height * nch)
+    o = 0
+    for r in range(height):
+        row = (r * src_h // height) * src_w
+        for c in range(width):
+            s = (row + c * src_w // width) * nch
+            out[o : o + nch] = px[s : s + nch]
+            o += nch
+    return bytes(out)
 
 
 def fake_resize(payload: bytes, width: int, height: int) -> bytes:
@@ -327,34 +372,15 @@ def sample_frames(spark: SparkSession, sf_dir: str, n_frames: int = 4) -> DataFr
     ``_spread_docs`` here: the per-doc work is one sha256 — the spread
     shuffle costs more than it saves (measured +0.25s; the helper is for
     codec-CPU chains)."""
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("frame_idx", LongType()),
-            StructField("frame_sha", StringType()),
-        ]
-    )
     docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
 
-    def _sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # self-contained closure (workers never import this package)
-        import hashlib as _h
+    def _sample(doc_id, text):
+        for i in range(n_frames):
+            yield doc_id, i, hashlib.sha256(f"{text}#{i}".encode()).hexdigest()
 
-        import pandas as _pd
-
-        k = n_frames  # captured by value via cloudpickle
-        for pdf in batches:
-            out = {"doc_id": [], "frame_idx": [], "frame_sha": []}
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                for i in range(k):
-                    out["doc_id"].append(doc_id)
-                    out["frame_idx"].append(i)
-                    out["frame_sha"].append(
-                        _h.sha256(f"{text}#{i}".encode()).hexdigest()
-                    )
-            yield _pd.DataFrame(out)
-
-    return docs.mapInPandas(_sample, schema=schema)
+    return per_row(
+        docs, _sample, _schema("doc_id frame_idx frame_sha:string"), _TEXT
+    )
 
 
 def attach_png_payload(
@@ -366,46 +392,19 @@ def attach_png_payload(
     pixel raster an oracle can reconstruct (``repeat(md5(text), k)``)
     while the PNG container bytes stay opaque. The encoder cycles all
     five scanline filters, so decoding these payloads exercises the full
-    unfiltering logic. Runs as an Arrow-batched ``mapInPandas`` with a
-    self-contained closure (png_encode pickles by value)."""
-    from ..functions.png_codec import png_encode
-
+    unfiltering logic. Runs as an Arrow-batched :func:`per_row` stage."""
     if (side * side) % 32:
         raise ValueError("side*side must be a multiple of the 32-char md5 hex")
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("payload", BinaryType()),
-            StructField("modality", StringType()),
-        ]
-    )
     docs = _spread_docs(
         spark, read_table(spark, sf_dir, "documents").select("doc_id", "text")
     )
     reps = (side * side) // 32
 
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # self-contained closure: png_encode is captured BY VALUE
-        # (builder-scoped function), so workers never import this package
-        import hashlib as _h
+    def _encode(doc_id, text):
+        px = (hashlib.md5(text.encode()).hexdigest() * reps).encode()
+        yield doc_id, png_encode(px, side, side, 0), "image/png"
 
-        import pandas as _pd
-
-        enc, k, s = png_encode, reps, side
-        for pdf in batches:
-            payloads = [
-                enc((_h.md5(t.encode()).hexdigest() * k).encode(), s, s, 0)
-                for t in pdf["text"]
-            ]
-            yield _pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": payloads,
-                    "modality": "image/png",
-                }
-            )
-
-    return docs.mapInPandas(_encode, schema=schema)
+    return per_row(docs, _encode, _ENCODED, _TEXT)
 
 
 def multimodal_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -421,43 +420,12 @@ def multimodal_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     real-bytes closure of VERDICT r4's multimodal gap, not a fake twin.
     At 100 TB the shape is the production one: two narrow Arrow-batched
     stages, no shuffle, partitioning preserved."""
-    from ..functions.png_codec import png_decode
 
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("width", LongType()),
-            StructField("height", LongType()),
-            StructField("n_px_bytes", LongType()),
-            StructField("pixel_sha", StringType()),
-        ]
-    )
+    def _decode(doc_id, payload):
+        px, w, h, _ct = png_decode(bytes(payload))
+        yield doc_id, w, h, len(px), hashlib.sha256(px).hexdigest()
 
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # self-contained closure: png_decode captured by value
-        import hashlib as _h
-
-        import pandas as _pd
-
-        dec = png_decode
-        for pdf in batches:
-            out = {
-                "doc_id": [],
-                "width": [],
-                "height": [],
-                "n_px_bytes": [],
-                "pixel_sha": [],
-            }
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                px, w, h, _ct = dec(bytes(payload))
-                out["doc_id"].append(doc_id)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["n_px_bytes"].append(len(px))
-                out["pixel_sha"].append(_h.sha256(px).hexdigest())
-            yield _pd.DataFrame(out)
-
-    return attach_png_payload(spark, sf_dir).mapInPandas(_decode, schema=schema)
+    return per_row(attach_png_payload(spark, sf_dir), _decode, _RASTER, _PAYLOAD)
 
 
 def multimodal_resize(
@@ -478,42 +446,12 @@ def multimodal_resize(
     ``(r*16 DIV 7)*16 + (c*16 DIV 10)`` — one wrong byte anywhere in
     decode OR resample breaks the hash. Same production shape as the
     decode queries: two Arrow-batched stages, no shuffle."""
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("width", LongType()),
-            StructField("height", LongType()),
-            StructField("n_px_bytes", LongType()),
-            StructField("pixel_sha", StringType()),
-        ]
-    )
 
-    def _resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # self-contained closure: resize_image captured by value (same
-        # worker-import rule as the decode queries)
-        import hashlib as _h
+    def _resize(doc_id, payload):
+        px = resize_image(bytes(payload), out_w, out_h)
+        yield doc_id, out_w, out_h, len(px), hashlib.sha256(px).hexdigest()
 
-        import pandas as _pd
-
-        rz, w, h = resize_image, out_w, out_h
-        for pdf in batches:
-            out = {
-                "doc_id": [],
-                "width": [],
-                "height": [],
-                "n_px_bytes": [],
-                "pixel_sha": [],
-            }
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                px = rz(bytes(payload), w, h)
-                out["doc_id"].append(doc_id)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["n_px_bytes"].append(len(px))
-                out["pixel_sha"].append(_h.sha256(px).hexdigest())
-            yield _pd.DataFrame(out)
-
-    return attach_png_payload(spark, sf_dir).mapInPandas(_resize, schema=schema)
+    return per_row(attach_png_payload(spark, sf_dir), _resize, _RASTER, _PAYLOAD)
 
 
 #: deterministic 16-entry RGB palette for the palette-PNG fixtures: hex
@@ -533,47 +471,21 @@ def attach_palette_png_payload(
     fixed deterministic :data:`PALETTE16`. The denoted RGB raster is
     therefore a pure arithmetic function of the md5 hex an oracle can
     rebuild, while the container bytes (PLTE chunk, filtered index
-    scanlines) stay opaque. Same Arrow-batched self-contained-closure
-    shape as ``attach_png_payload``."""
-    from ..functions.png_codec import png_encode
-
+    scanlines) stay opaque. Same Arrow-batched :func:`per_row` shape as
+    ``attach_png_payload``."""
     if (side * side) % 32:
         raise ValueError("side*side must be a multiple of the 32-char md5 hex")
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("payload", BinaryType()),
-            StructField("modality", StringType()),
-        ]
-    )
     docs = _spread_docs(
         spark, read_table(spark, sf_dir, "documents").select("doc_id", "text")
     )
     reps = (side * side) // 32
-    pal = PALETTE16
 
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # self-contained closure: png_encode captured BY VALUE
-        import hashlib as _h
+    def _encode(doc_id, text):
+        hx = hashlib.md5(text.encode()).hexdigest() * reps
+        idx = bytes(int(c, 16) for c in hx)
+        yield doc_id, png_encode(idx, side, side, 3, palette=PALETTE16), "image/png"
 
-        import pandas as _pd
-
-        enc, k, s, p = png_encode, reps, side, pal
-        for pdf in batches:
-            payloads = []
-            for t in pdf["text"]:
-                hx = _h.md5(t.encode()).hexdigest() * k
-                idx = bytes(int(c, 16) for c in hx)
-                payloads.append(enc(idx, s, s, 3, palette=p))
-            yield _pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": payloads,
-                    "modality": "image/png",
-                }
-            )
-
-    return docs.mapInPandas(_encode, schema=schema)
+    return per_row(docs, _encode, _ENCODED, _TEXT)
 
 
 def multimodal_palette_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -591,48 +503,14 @@ def multimodal_palette_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame
     breaks the hash compare. RGB bytes are not valid UTF-8, so the hash
     runs over the LOWERCASE-HEX transport exactly like the JPEG twin.
     Two narrow Arrow-batched stages, no shuffle."""
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("width", LongType()),
-            StructField("height", LongType()),
-            StructField("n_px_bytes", LongType()),
-            StructField("pixel_sha", StringType()),
-        ]
-    )
 
-    from ..functions.png_codec import png_decode
+    def _decode(doc_id, payload):
+        px, w, h, ct = png_decode(bytes(payload))
+        assert ct == 3, "palette fixture must decode as color type 3"
+        yield doc_id, w, h, len(px), _hex_sha(px)
 
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # self-contained closure: png_decode captured by value (builder-
-        # scoped function — workers never import this package)
-        import hashlib as _h
-
-        import pandas as _pd
-
-        dec = png_decode
-        for pdf in batches:
-            out = {
-                "doc_id": [],
-                "width": [],
-                "height": [],
-                "n_px_bytes": [],
-                "pixel_sha": [],
-            }
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                px, w, h, ct = dec(bytes(payload))
-                assert ct == 3, "palette fixture must decode as color type 3"
-                out["doc_id"].append(doc_id)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["n_px_bytes"].append(len(px))
-                out["pixel_sha"].append(
-                    _h.sha256(px.hex().encode()).hexdigest()
-                )
-            yield _pd.DataFrame(out)
-
-    return attach_palette_png_payload(spark, sf_dir).mapInPandas(
-        _decode, schema=schema
+    return per_row(
+        attach_palette_png_payload(spark, sf_dir), _decode, _RASTER, _PAYLOAD
     )
 
 
@@ -644,8 +522,6 @@ def decode_audio(payload: bytes) -> tuple[bytes, int, int, int]:
     FLAC) genuinely need libraries absent from this container and remain
     behind ``NotImplementedError``. Single seam like ``decode_image`` —
     an ffmpeg deployment swaps the body, nothing else."""
-    from ..functions.wav_codec import WAV_SIGNATURE, wav_decode
-
     if payload[:4] == WAV_SIGNATURE:
         return wav_decode(payload)
     raise NotImplementedError(
@@ -667,42 +543,16 @@ def attach_wav_payload(
     while the RIFF container bytes stay opaque. With ``n_channels > 1``
     the same byte stream is declared interleaved (channel ``c`` sample
     ``i`` = byte ``i*n_channels + c``), exactly how a real stereo PCM
-    file lays out frames. Arrow-batched ``mapInPandas`` with a
-    self-contained closure (wav_encode pickles by value)."""
-    from ..functions.wav_codec import wav_encode
-
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("payload", BinaryType()),
-            StructField("modality", StringType()),
-        ]
-    )
+    file lays out frames. Arrow-batched :func:`per_row` stage."""
     docs = _spread_docs(
         spark, read_table(spark, sf_dir, "documents").select("doc_id", "text")
     )
 
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # self-contained closure: wav_encode captured BY VALUE
-        import hashlib as _h
+    def _encode(doc_id, text):
+        pcm = hashlib.md5(text.encode()).digest() * reps
+        yield doc_id, wav_encode(pcm, sample_rate, n_channels), "audio/wav"
 
-        import pandas as _pd
-
-        enc, k, sr, nc = wav_encode, reps, sample_rate, n_channels
-        for pdf in batches:
-            payloads = [
-                enc(_h.md5(t.encode()).digest() * k, sr, nc)
-                for t in pdf["text"]
-            ]
-            yield _pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": payloads,
-                    "modality": "audio/wav",
-                }
-            )
-
-    return docs.mapInPandas(_encode, schema=schema)
+    return per_row(docs, _encode, _ENCODED, _TEXT)
 
 
 def multimodal_wav_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -722,45 +572,29 @@ def multimodal_wav_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     the LOWERCASE-HEX transport (= the md5 hexdigest repeated, which is
     what makes the oracle a one-liner). Two narrow Arrow-batched
     stages, no shuffle."""
-    from ..functions.wav_codec import wav_decode
 
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("n_samples", LongType()),
-            StructField("sample_rate", LongType()),
-            StructField("duration_us", LongType()),
-            StructField("energy", LongType()),
-            StructField("sample_sha", StringType()),
-        ]
+    def _decode(doc_id, payload):
+        samples, sr, nch, _bits = wav_decode(bytes(payload))
+        n = len(samples) // nch
+        energy = sum((s - 128) ** 2 for s in samples)
+        yield doc_id, n, sr, n * 1_000_000 // sr, energy, _hex_sha(samples)
+
+    return per_row(
+        attach_wav_payload(spark, sf_dir),
+        _decode,
+        _schema("doc_id n_samples sample_rate duration_us energy sample_sha:string"),
+        _PAYLOAD,
     )
 
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # self-contained closure: wav_decode captured by value
-        import hashlib as _h
 
-        import pandas as _pd
-
-        dec = wav_decode
-        for pdf in batches:
-            out = {k: [] for k in (
-                "doc_id", "n_samples", "sample_rate", "duration_us",
-                "energy", "sample_sha",
-            )}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                samples, sr, nch, _bits = dec(bytes(payload))
-                n = len(samples) // nch
-                out["doc_id"].append(doc_id)
-                out["n_samples"].append(n)
-                out["sample_rate"].append(sr)
-                out["duration_us"].append(n * 1_000_000 // sr)
-                out["energy"].append(sum((s - 128) ** 2 for s in samples))
-                out["sample_sha"].append(
-                    _h.sha256(samples.hex().encode()).hexdigest()
-                )
-            yield _pd.DataFrame(out)
-
-    return attach_wav_payload(spark, sf_dir).mapInPandas(_decode, schema=schema)
+def _frame_facts(frame: bytes) -> tuple[int, int, int]:
+    """Short-time features of one 8-bit PCM analysis frame over its
+    deviations from the 128 midpoint: energy (sum of squares), zero
+    crossings (sign changes between adjacent samples WITHIN the frame)
+    and peak deviation."""
+    dev = [s - 128 for s in frame]
+    crossings = sum(1 for a, b in zip(dev, dev[1:]) if (a >= 0) != (b >= 0))
+    return sum(d * d for d in dev), crossings, max(abs(d) for d in dev)
 
 
 def multimodal_wav_frame_features(
@@ -784,48 +618,19 @@ def multimodal_wav_frame_features(
     Two narrow Arrow-batched stages, no shuffle; at 100 TB the frame
     fan-out stays inside the pandas batch (no explode through the
     exchange)."""
-    from ..functions.wav_codec import wav_decode
 
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("frame_idx", LongType()),
-            StructField("energy", LongType()),
-            StructField("zero_crossings", LongType()),
-            StructField("peak_dev", LongType()),
-        ]
-    )
+    def _features(doc_id, payload):
+        samples, _sr, nch, _bits = wav_decode(bytes(payload))
+        assert nch == 1
+        for f in range(len(samples) // frame_len):
+            frame = samples[f * frame_len : (f + 1) * frame_len]
+            yield (doc_id, f, *_frame_facts(frame))
 
-    def _features(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # self-contained closure: wav_decode captured by value
-        import pandas as _pd
-
-        dec, fl = wav_decode, frame_len
-        for pdf in batches:
-            out = {c: [] for c in (
-                "doc_id", "frame_idx", "energy", "zero_crossings", "peak_dev",
-            )}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                samples, _sr, nch, _bits = dec(bytes(payload))
-                assert nch == 1
-                for f in range(len(samples) // fl):
-                    frame = samples[f * fl : (f + 1) * fl]
-                    dev = [s - 128 for s in frame]
-                    out["doc_id"].append(doc_id)
-                    out["frame_idx"].append(f)
-                    out["energy"].append(sum(d * d for d in dev))
-                    out["zero_crossings"].append(
-                        sum(
-                            1
-                            for a, b in zip(dev, dev[1:])
-                            if (a >= 0) != (b >= 0)
-                        )
-                    )
-                    out["peak_dev"].append(max(abs(d) for d in dev))
-            yield _pd.DataFrame(out)
-
-    return attach_wav_payload(spark, sf_dir).mapInPandas(
-        _features, schema=schema
+    return per_row(
+        attach_wav_payload(spark, sf_dir),
+        _features,
+        _schema("doc_id frame_idx energy zero_crossings peak_dev"),
+        _PAYLOAD,
     )
 
 
@@ -851,52 +656,20 @@ def multimodal_wav_channel_features(
     arithmetically; a swapped channel, a block-align off-by-one, or a
     mis-framed boundary all break the hash. Two narrow Arrow-batched
     stages, no shuffle."""
-    from ..functions.wav_codec import wav_decode
 
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("channel", LongType()),
-            StructField("frame_idx", LongType()),
-            StructField("energy", LongType()),
-            StructField("zero_crossings", LongType()),
-            StructField("peak_dev", LongType()),
-        ]
-    )
+    def _features(doc_id, payload):
+        data, _sr, nch, _bits = wav_decode(bytes(payload))
+        for ch in range(nch):
+            samples = data[ch::nch]
+            for f in range(len(samples) // frame_len):
+                frame = samples[f * frame_len : (f + 1) * frame_len]
+                yield (doc_id, ch, f, *_frame_facts(frame))
 
-    def _features(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # self-contained closure: wav_decode captured by value
-        import pandas as _pd
-
-        dec, fl = wav_decode, frame_len
-        for pdf in batches:
-            out = {c: [] for c in (
-                "doc_id", "channel", "frame_idx", "energy",
-                "zero_crossings", "peak_dev",
-            )}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                data, _sr, nch, _bits = dec(bytes(payload))
-                for ch in range(nch):
-                    samples = data[ch::nch]
-                    for f in range(len(samples) // fl):
-                        frame = samples[f * fl : (f + 1) * fl]
-                        dev = [s - 128 for s in frame]
-                        out["doc_id"].append(doc_id)
-                        out["channel"].append(ch)
-                        out["frame_idx"].append(f)
-                        out["energy"].append(sum(d * d for d in dev))
-                        out["zero_crossings"].append(
-                            sum(
-                                1
-                                for a, b in zip(dev, dev[1:])
-                                if (a >= 0) != (b >= 0)
-                            )
-                        )
-                        out["peak_dev"].append(max(abs(d) for d in dev))
-            yield _pd.DataFrame(out)
-
-    return attach_wav_payload(spark, sf_dir, n_channels=2).mapInPandas(
-        _features, schema=schema
+    return per_row(
+        attach_wav_payload(spark, sf_dir, n_channels=2),
+        _features,
+        _schema("doc_id channel frame_idx energy zero_crossings peak_dev"),
+        _PAYLOAD,
     )
 
 
@@ -910,55 +683,21 @@ def attach_jpeg_payload(
     function per block (``jpeg_codec.DC_ONLY_PIXEL`` composed with the
     encoder's quantization), which is what lets a SQL oracle reconstruct
     the decoded raster of a REAL lossy codec. Arrow-batched
-    ``mapInPandas`` with a self-contained closure (jpeg_encode pickles
-    by value)."""
-    from ..functions.jpeg_codec import jpeg_encode
-
+    :func:`per_row` stage."""
     if side % 8:
         raise ValueError("side must be a multiple of 8")
     nblk = side // 8
     if nblk * nblk > 16:
         raise ValueError("md5 supplies at most 16 block bytes")
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("payload", BinaryType()),
-            StructField("modality", StringType()),
-        ]
-    )
     docs = _spread_docs(
         spark, read_table(spark, sf_dir, "documents").select("doc_id", "text")
     )
 
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # self-contained closure: jpeg_encode captured BY VALUE
-        import hashlib as _h
+    def _encode(doc_id, text):
+        px = _block_raster(hashlib.md5(text.encode()).digest(), side, side, 8, 8)
+        yield doc_id, jpeg_encode(px, side, side), "image/jpeg"
 
-        import pandas as _pd
-
-        enc, s, nb = jpeg_encode, side, nblk
-        for pdf in batches:
-            payloads = []
-            for t in pdf["text"]:
-                d = _h.md5(t.encode()).digest()
-                px = bytearray(s * s)
-                for by in range(nb):
-                    for bx in range(nb):
-                        v = d[by * nb + bx]
-                        for y in range(8):
-                            base = (by * 8 + y) * s + bx * 8
-                            for x in range(8):
-                                px[base + x] = v
-                payloads.append(enc(bytes(px), s, s))
-            yield _pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": payloads,
-                    "modality": "image/jpeg",
-                }
-            )
-
-    return docs.mapInPandas(_encode, schema=schema)
+    return per_row(docs, _encode, _ENCODED, _TEXT)
 
 
 def attach_color_jpeg_payload(
@@ -973,57 +712,30 @@ def attach_color_jpeg_payload(
     transform) the closed-form ``jpeg_codec.COLOR_UNIFORM_RGB`` per
     block, which is what lets a SQL oracle reconstruct the decoded RGB
     raster of a real three-component lossy codec. Arrow-batched
-    ``mapInPandas`` with a self-contained closure."""
-    from ..functions.jpeg_codec import jpeg_encode_color
-
+    :func:`per_row` stage."""
     if side % 8:
         raise ValueError("side must be a multiple of 8")
     nblk = side // 8
     if nblk * nblk * 3 > 16:
         raise ValueError("md5 supplies at most 16 bytes = 5 RGB blocks")
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("payload", BinaryType()),
-            StructField("modality", StringType()),
-        ]
-    )
     docs = _spread_docs(
         spark, read_table(spark, sf_dir, "documents").select("doc_id", "text")
     )
 
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # self-contained closure: jpeg_encode_color captured BY VALUE
-        import hashlib as _h
+    def _encode(doc_id, text):
+        d = hashlib.md5(text.encode()).digest()
+        px = _block_raster(d, side, side, 8, 8, 3)
+        yield doc_id, jpeg_encode_color(px, side, side), "image/jpeg"
 
-        import pandas as _pd
+    return per_row(docs, _encode, _ENCODED, _TEXT)
 
-        enc, s, nb = jpeg_encode_color, side, nblk
-        for pdf in batches:
-            payloads = []
-            for t in pdf["text"]:
-                d = _h.md5(t.encode()).digest()
-                px = bytearray(s * s * 3)
-                for by in range(nb):
-                    for bx in range(nb):
-                        k = 3 * (by * nb + bx)
-                        r, g, b = d[k], d[k + 1], d[k + 2]
-                        for y in range(8):
-                            base = ((by * 8 + y) * s + bx * 8) * 3
-                            for x in range(8):
-                                px[base + 3 * x] = r
-                                px[base + 3 * x + 1] = g
-                                px[base + 3 * x + 2] = b
-                payloads.append(enc(bytes(px), s, s))
-            yield _pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": payloads,
-                    "modality": "image/jpeg",
-                }
-            )
 
-    return docs.mapInPandas(_encode, schema=schema)
+def _color_raster_facts(doc_id, payload):
+    """Row function of the color-JPEG decode queries: decoded RGB raster
+    facts (the ``decode_image`` seam dispatches JPEG to exactly this
+    decoder), hashed over the lowercase-hex transport."""
+    px, w, h, ncomp = jpeg_decode_color(bytes(payload))
+    yield doc_id, w, h, 0 if ncomp == 1 else 2, len(px), _hex_sha(px)
 
 
 def multimodal_color_jpeg_decode(
@@ -1044,48 +756,11 @@ def multimodal_color_jpeg_decode(
     — a mis-bound chroma table, a swapped MCU component, a color
     transform off-by-one — breaks the hash compare. Two narrow
     Arrow-batched stages, no shuffle."""
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("width", LongType()),
-            StructField("height", LongType()),
-            StructField("color_type", LongType()),
-            StructField("n_px_bytes", LongType()),
-            StructField("pixel_sha", StringType()),
-        ]
-    )
-
-    from ..functions.jpeg_codec import jpeg_decode_color
-
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # self-contained closure: jpeg_decode_color captured by value
-        # (the decode_image seam dispatches to exactly this for JPEG)
-        import hashlib as _h
-
-        import pandas as _pd
-
-        dec = jpeg_decode_color
-        for pdf in batches:
-            out = {c: [] for c in (
-                "doc_id", "width", "height", "color_type",
-                "n_px_bytes", "pixel_sha",
-            )}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                px, w, h, ncomp = dec(bytes(payload))
-                ct = 0 if ncomp == 1 else 2
-                out["doc_id"].append(doc_id)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["color_type"].append(ct)
-                out["n_px_bytes"].append(len(px))
-                # lowercase-hex transport (DuckDB sha256 is VARCHAR-only)
-                out["pixel_sha"].append(
-                    _h.sha256(px.hex().encode()).hexdigest()
-                )
-            yield _pd.DataFrame(out)
-
-    return attach_color_jpeg_payload(spark, sf_dir).mapInPandas(
-        _decode, schema=schema
+    return per_row(
+        attach_color_jpeg_payload(spark, sf_dir),
+        _color_raster_facts,
+        _COLOR_RASTER,
+        _PAYLOAD,
     )
 
 
@@ -1100,58 +775,23 @@ def attach_color_jpeg_420_payload(
     keeps the whole subsampled chain closed-form: the 2x2 chroma mean
     of equal samples is the sample, all six MCU blocks are DC-only, so
     decode == ``COLOR_UNIFORM_RGB`` per MCU — a real 4:2:0 codec run a
-    SQL oracle can reconstruct exactly. Arrow-batched ``mapInPandas``
-    with a self-contained closure."""
-    from ..functions.jpeg_codec import jpeg_encode_color_420
-
+    SQL oracle can reconstruct exactly. Arrow-batched :func:`per_row`
+    stage."""
     if side % 16:
         raise ValueError("side must be a multiple of the 16px MCU")
     nmcu = side // 16
     if nmcu * nmcu * 3 > 16:
         raise ValueError("md5 supplies at most 16 bytes = 5 RGB MCUs")
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("payload", BinaryType()),
-            StructField("modality", StringType()),
-        ]
-    )
     docs = _spread_docs(
         spark, read_table(spark, sf_dir, "documents").select("doc_id", "text")
     )
 
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # self-contained closure: jpeg_encode_color_420 captured BY VALUE
-        import hashlib as _h
+    def _encode(doc_id, text):
+        d = hashlib.md5(text.encode()).digest()
+        px = _block_raster(d, side, side, 16, 16, 3)
+        yield doc_id, jpeg_encode_color_420(px, side, side), "image/jpeg"
 
-        import pandas as _pd
-
-        enc, s, nm = jpeg_encode_color_420, side, nmcu
-        for pdf in batches:
-            payloads = []
-            for t in pdf["text"]:
-                d = _h.md5(t.encode()).digest()
-                px = bytearray(s * s * 3)
-                for my in range(nm):
-                    for mx in range(nm):
-                        k = 3 * (my * nm + mx)
-                        r, g, b = d[k], d[k + 1], d[k + 2]
-                        for y in range(16):
-                            base = ((my * 16 + y) * s + mx * 16) * 3
-                            for x in range(16):
-                                px[base + 3 * x] = r
-                                px[base + 3 * x + 1] = g
-                                px[base + 3 * x + 2] = b
-                payloads.append(enc(bytes(px), s, s))
-            yield _pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": payloads,
-                    "modality": "image/jpeg",
-                }
-            )
-
-    return docs.mapInPandas(_encode, schema=schema)
+    return per_row(docs, _encode, _ENCODED, _TEXT)
 
 
 def multimodal_color_jpeg_subsampled_decode(
@@ -1172,46 +812,11 @@ def multimodal_color_jpeg_subsampled_decode(
     lowercase hex — a mis-ordered MCU, a wrong chroma plane width, or
     an upsample off-by-one breaks the hash. Two narrow Arrow-batched
     stages, no shuffle."""
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("width", LongType()),
-            StructField("height", LongType()),
-            StructField("color_type", LongType()),
-            StructField("n_px_bytes", LongType()),
-            StructField("pixel_sha", StringType()),
-        ]
-    )
-
-    from ..functions.jpeg_codec import jpeg_decode_color
-
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # self-contained closure: jpeg_decode_color captured by value
-        import hashlib as _h
-
-        import pandas as _pd
-
-        dec = jpeg_decode_color
-        for pdf in batches:
-            out = {c: [] for c in (
-                "doc_id", "width", "height", "color_type",
-                "n_px_bytes", "pixel_sha",
-            )}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                px, w, h, ncomp = dec(bytes(payload))
-                out["doc_id"].append(doc_id)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["color_type"].append(0 if ncomp == 1 else 2)
-                out["n_px_bytes"].append(len(px))
-                # lowercase-hex transport (DuckDB sha256 is VARCHAR-only)
-                out["pixel_sha"].append(
-                    _h.sha256(px.hex().encode()).hexdigest()
-                )
-            yield _pd.DataFrame(out)
-
-    return attach_color_jpeg_420_payload(spark, sf_dir).mapInPandas(
-        _decode, schema=schema
+    return per_row(
+        attach_color_jpeg_420_payload(spark, sf_dir),
+        _color_raster_facts,
+        _COLOR_RASTER,
+        _PAYLOAD,
     )
 
 
@@ -1232,40 +837,13 @@ def multimodal_color_resize(
     block row 0, rows 4-6 block row 1; columns 0-4 read block col 0,
     columns 5-9 block col 1. Lowercase-hex transport (an RGB raster is
     not valid UTF-8)."""
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("width", LongType()),
-            StructField("height", LongType()),
-            StructField("n_px_bytes", LongType()),
-            StructField("pixel_sha", StringType()),
-        ]
-    )
 
-    def _resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # self-contained closure: resize_image captured by value
-        import hashlib as _h
+    def _resize(doc_id, payload):
+        px = resize_image(bytes(payload), out_w, out_h)
+        yield doc_id, out_w, out_h, len(px), _hex_sha(px)
 
-        import pandas as _pd
-
-        rz, w, h = resize_image, out_w, out_h
-        for pdf in batches:
-            out = {c: [] for c in (
-                "doc_id", "width", "height", "n_px_bytes", "pixel_sha",
-            )}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                px = rz(bytes(payload), w, h)
-                out["doc_id"].append(doc_id)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["n_px_bytes"].append(len(px))
-                out["pixel_sha"].append(
-                    _h.sha256(px.hex().encode()).hexdigest()
-                )
-            yield _pd.DataFrame(out)
-
-    return attach_color_jpeg_payload(spark, sf_dir).mapInPandas(
-        _resize, schema=schema
+    return per_row(
+        attach_color_jpeg_payload(spark, sf_dir), _resize, _RASTER, _PAYLOAD
     )
 
 
@@ -1281,62 +859,15 @@ def multimodal_color_jpeg_422_decode(
     half-WIDTH chroma planes replication-upsampled), and hashed.
     Uniform MCUs keep the horizontal pair mean lossless, so the oracle
     is the shared ``COLOR_UNIFORM_RGB`` chain with a 32x16 assembly."""
-    from ..functions.jpeg_codec import (
-        jpeg_decode_color,
-        jpeg_encode_color_422,
-    )
-
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("width", LongType()),
-            StructField("height", LongType()),
-            StructField("color_type", LongType()),
-            StructField("n_px_bytes", LongType()),
-            StructField("pixel_sha", StringType()),
-        ]
-    )
     docs = _spread_docs(
         spark, read_table(spark, sf_dir, "documents").select("doc_id", "text")
     )
 
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # self-contained closure: both codec entry points by value
-        import hashlib as _h
+    def _run(doc_id, text):
+        px = _block_raster(hashlib.md5(text.encode()).digest(), 32, 16, 16, 8, 3)
+        yield from _color_raster_facts(doc_id, jpeg_encode_color_422(px, 32, 16))
 
-        import pandas as _pd
-
-        enc, dec = jpeg_encode_color_422, jpeg_decode_color
-        w, h = 32, 16
-        for pdf in batches:
-            out = {c: [] for c in (
-                "doc_id", "width", "height", "color_type",
-                "n_px_bytes", "pixel_sha",
-            )}
-            for doc_id, t in zip(pdf["doc_id"], pdf["text"]):
-                d = _h.md5(t.encode()).digest()
-                px = bytearray(w * h * 3)
-                for my in range(2):
-                    for mx in range(2):
-                        k = 3 * (my * 2 + mx)
-                        for y in range(8):
-                            base = ((my * 8 + y) * w + mx * 16) * 3
-                            for x in range(16):
-                                px[base + 3 * x : base + 3 * x + 3] = d[
-                                    k : k + 3
-                                ]
-                raster, ww, hh, ncomp = dec(enc(bytes(px), w, h))
-                out["doc_id"].append(doc_id)
-                out["width"].append(ww)
-                out["height"].append(hh)
-                out["color_type"].append(0 if ncomp == 1 else 2)
-                out["n_px_bytes"].append(len(raster))
-                out["pixel_sha"].append(
-                    _h.sha256(raster.hex().encode()).hexdigest()
-                )
-            yield _pd.DataFrame(out)
-
-    return docs.mapInPandas(_run, schema=schema)
+    return per_row(docs, _run, _COLOR_RASTER, _TEXT)
 
 
 def multimodal_resize_420(
@@ -1352,40 +883,13 @@ def multimodal_resize_420(
     cols 5-9 col 1 — the same 5/5 x 4/3 block structure as
     ``multimodal_color_resize``, so the oracle reuses the shared color
     chain with that assembly. Lowercase-hex transport."""
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("width", LongType()),
-            StructField("height", LongType()),
-            StructField("n_px_bytes", LongType()),
-            StructField("pixel_sha", StringType()),
-        ]
-    )
 
-    def _resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # self-contained closure: resize_image captured by value
-        import hashlib as _h
+    def _resize(doc_id, payload):
+        px = resize_image(bytes(payload), out_w, out_h)
+        yield doc_id, out_w, out_h, len(px), _hex_sha(px)
 
-        import pandas as _pd
-
-        rz, w, h = resize_image, out_w, out_h
-        for pdf in batches:
-            out = {c: [] for c in (
-                "doc_id", "width", "height", "n_px_bytes", "pixel_sha",
-            )}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                px = rz(bytes(payload), w, h)
-                out["doc_id"].append(doc_id)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["n_px_bytes"].append(len(px))
-                out["pixel_sha"].append(
-                    _h.sha256(px.hex().encode()).hexdigest()
-                )
-            yield _pd.DataFrame(out)
-
-    return attach_color_jpeg_420_payload(spark, sf_dir).mapInPandas(
-        _resize, schema=schema
+    return per_row(
+        attach_color_jpeg_420_payload(spark, sf_dir), _resize, _RASTER, _PAYLOAD
     )
 
 
@@ -1397,53 +901,20 @@ def attach_progressive_jpeg_payload(
     same uniform 8x8 md5-byte blocks, so the lossy chain keeps the
     identical closed form (the quantized coefficients are the baseline
     encoder's; only the scan layout differs)."""
-    from ..functions.jpeg_codec import jpeg_encode_progressive
-
     if side % 8:
         raise ValueError("side must be a multiple of 8")
     nblk = side // 8
     if nblk * nblk > 16:
         raise ValueError("md5 supplies at most 16 block bytes")
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("payload", BinaryType()),
-            StructField("modality", StringType()),
-        ]
-    )
     docs = _spread_docs(
         spark, read_table(spark, sf_dir, "documents").select("doc_id", "text")
     )
 
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # self-contained closure: the encoder pickles BY VALUE
-        import hashlib as _h
+    def _encode(doc_id, text):
+        px = _block_raster(hashlib.md5(text.encode()).digest(), side, side, 8, 8)
+        yield doc_id, jpeg_encode_progressive(px, side, side), "image/jpeg"
 
-        import pandas as _pd
-
-        enc, s, nb = jpeg_encode_progressive, side, nblk
-        for pdf in batches:
-            payloads = []
-            for t in pdf["text"]:
-                d = _h.md5(t.encode()).digest()
-                px = bytearray(s * s)
-                for by in range(nb):
-                    for bx in range(nb):
-                        v = d[by * nb + bx]
-                        for y in range(8):
-                            base = (by * 8 + y) * s + bx * 8
-                            for x in range(8):
-                                px[base + x] = v
-                payloads.append(enc(bytes(px), s, s))
-            yield _pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": payloads,
-                    "modality": "image/jpeg",
-                }
-            )
-
-    return docs.mapInPandas(_encode, schema=schema)
+    return per_row(docs, _encode, _ENCODED, _TEXT)
 
 
 def multimodal_progressive_jpeg_decode(
@@ -1459,45 +930,16 @@ def multimodal_progressive_jpeg_decode(
     reconstructs the exact baseline coefficient array, so the ORACLE is
     the baseline decode's closed-form lossy chain VERBATIM — one wrong
     EOB-run length or band boundary and the hash breaks."""
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("width", LongType()),
-            StructField("height", LongType()),
-            StructField("n_px_bytes", LongType()),
-            StructField("pixel_sha", StringType()),
-        ]
-    )
 
-    from ..functions.jpeg_codec import jpeg_decode_color
+    def _decode(doc_id, payload):
+        # the general decoder routes SOF2 to the progressive path — the
+        # dispatch itself is part of what this query exercises
+        px, w, h, ct = jpeg_decode_color(bytes(payload))
+        assert ct == 1, "progressive fixture must decode greyscale"
+        yield doc_id, w, h, len(px), _hex_sha(px)
 
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # self-contained closure: the builder-scoped general decoder
-        # captured by value (it routes SOF2 to the progressive path —
-        # the dispatch itself is part of what this query exercises)
-        import hashlib as _h
-
-        import pandas as _pd
-
-        dec = jpeg_decode_color
-        for pdf in batches:
-            out = {c: [] for c in (
-                "doc_id", "width", "height", "n_px_bytes", "pixel_sha",
-            )}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                px, w, h, ct = dec(bytes(payload))
-                assert ct == 1, "progressive fixture must decode greyscale"
-                out["doc_id"].append(doc_id)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["n_px_bytes"].append(len(px))
-                out["pixel_sha"].append(
-                    _h.sha256(px.hex().encode()).hexdigest()
-                )
-            yield _pd.DataFrame(out)
-
-    return attach_progressive_jpeg_payload(spark, sf_dir).mapInPandas(
-        _decode, schema=schema
+    return per_row(
+        attach_progressive_jpeg_payload(spark, sf_dir), _decode, _RASTER, _PAYLOAD
     )
 
 
@@ -1516,52 +958,29 @@ def multimodal_adpcm_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-exact: the DuckDB oracle replays quantize→reconstruct step for
     step in a 128-deep recursive CTE. ``n_wav_bytes`` pins the RIFF
     framing (12 + 28 fmt + 12 fact + 76 data = 128 bytes/doc)."""
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("n_samples", LongType()),
-            StructField("n_wav_bytes", LongType()),
-            StructField("sum_abs_recon", LongType()),
-            StructField("err_sq", LongType()),
-            StructField("final_pred", LongType()),
-        ]
-    )
     docs = _spread_docs(
         spark, read_table(spark, sf_dir, "documents").select("doc_id", "text")
     )
-    from ..functions.adpcm_codec import adpcm_decode_wav, adpcm_encode_wav
 
-    def _roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # self-contained closure: both codec halves captured by value
-        import hashlib as _h
+    def _roundtrip(doc_id, text):
+        d = hashlib.md5(text.encode()).digest() * 16
+        samples = [
+            (d[2 * i] - 128) * 255 + (d[2 * i + 1] - 128) for i in range(128)
+        ]
+        wav = adpcm_encode_wav(samples)
+        recon = adpcm_decode_wav(wav)
+        err_sq = sum((o - r) ** 2 for o, r in zip(samples, recon))
+        yield (
+            doc_id, len(recon), len(wav), sum(abs(r) for r in recon),
+            err_sq, recon[-1],
+        )
 
-        import pandas as _pd
-
-        enc, dec = adpcm_encode_wav, adpcm_decode_wav
-        for pdf in batches:
-            out = {c: [] for c in (
-                "doc_id", "n_samples", "n_wav_bytes", "sum_abs_recon",
-                "err_sq", "final_pred",
-            )}
-            for doc_id, t in zip(pdf["doc_id"], pdf["text"]):
-                d = _h.md5(t.encode()).digest() * 16
-                samples = [
-                    (d[2 * i] - 128) * 255 + (d[2 * i + 1] - 128)
-                    for i in range(128)
-                ]
-                wav = enc(samples)
-                recon = dec(wav)
-                out["doc_id"].append(doc_id)
-                out["n_samples"].append(len(recon))
-                out["n_wav_bytes"].append(len(wav))
-                out["sum_abs_recon"].append(sum(abs(r) for r in recon))
-                out["err_sq"].append(
-                    sum((o - r) ** 2 for o, r in zip(samples, recon))
-                )
-                out["final_pred"].append(recon[-1])
-            yield _pd.DataFrame(out)
-
-    return docs.mapInPandas(_roundtrip, schema=schema)
+    return per_row(
+        docs,
+        _roundtrip,
+        _schema("doc_id n_samples n_wav_bytes sum_abs_recon err_sq final_pred"),
+        _TEXT,
+    )
 
 
 def multimodal_progressive_sa_jpeg_decode(
@@ -1574,56 +993,18 @@ def multimodal_progressive_sa_jpeg_decode(
     ``(dc >> 1) << 1 | (dc & 1)`` reconstructs DC exactly, so the
     oracle stays the baseline closed-form chain verbatim; a wrong
     refinement-bit placement or shifted-domain predictor breaks it."""
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("width", LongType()),
-            StructField("height", LongType()),
-            StructField("n_px_bytes", LongType()),
-            StructField("pixel_sha", StringType()),
-        ]
-    )
-    from ..functions.jpeg_codec import (
-        jpeg_decode_progressive,
-        jpeg_encode_progressive_sa,
-    )
-
     docs = _spread_docs(
         spark, read_table(spark, sf_dir, "documents").select("doc_id", "text")
     )
 
-    def _roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # self-contained closure: both codec halves captured by value
-        import hashlib as _h
+    def _roundtrip(doc_id, text):
+        px = _block_raster(hashlib.md5(text.encode()).digest(), 16, 16, 8, 8)
+        raster, w, h = jpeg_decode_progressive(
+            jpeg_encode_progressive_sa(px, 16, 16)
+        )
+        yield doc_id, w, h, len(raster), _hex_sha(raster)
 
-        import pandas as _pd
-
-        enc, dec = jpeg_encode_progressive_sa, jpeg_decode_progressive
-        for pdf in batches:
-            out = {c: [] for c in (
-                "doc_id", "width", "height", "n_px_bytes", "pixel_sha",
-            )}
-            for doc_id, t in zip(pdf["doc_id"], pdf["text"]):
-                d = _h.md5(t.encode()).digest()
-                px = bytearray(16 * 16)
-                for by in range(2):
-                    for bx in range(2):
-                        v = d[by * 2 + bx]
-                        for y in range(8):
-                            base = (by * 8 + y) * 16 + bx * 8
-                            for x in range(8):
-                                px[base + x] = v
-                raster, w, h = dec(enc(bytes(px), 16, 16))
-                out["doc_id"].append(doc_id)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["n_px_bytes"].append(len(raster))
-                out["pixel_sha"].append(
-                    _h.sha256(raster.hex().encode()).hexdigest()
-                )
-            yield _pd.DataFrame(out)
-
-    return docs.mapInPandas(_roundtrip, schema=schema)
+    return per_row(docs, _roundtrip, _RASTER, _TEXT)
 
 
 def multimodal_progressive_ac_refine_decode(
@@ -1649,57 +1030,19 @@ def multimodal_progressive_ac_refine_decode(
     correction-bit values are all exercised per image, and the ORACLE
     replays the whole 5-coefficient chain in SQL (verified equal to the
     real decoder for 509 (a,b) pairs at build time)."""
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("width", LongType()),
-            StructField("height", LongType()),
-            StructField("n_px_bytes", LongType()),
-            StructField("pixel_sha", StringType()),
-        ]
-    )
-    from ..functions.jpeg_codec import (
-        jpeg_decode_progressive,
-        jpeg_encode_progressive_ac_sa,
-    )
-
     docs = _spread_docs(
         spark, read_table(spark, sf_dir, "documents").select("doc_id", "text")
     )
 
-    def _roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # self-contained closure: both codec halves captured by value
-        import hashlib as _h
+    def _roundtrip(doc_id, text):
+        # 8x8 block i = two uniform 4x8 halves, digest bytes 2i and 2i+1
+        px = _block_raster(hashlib.md5(text.encode()).digest(), 16, 16, 4, 8)
+        raster, w, h = jpeg_decode_progressive(
+            jpeg_encode_progressive_ac_sa(px, 16, 16)
+        )
+        yield doc_id, w, h, len(raster), _hex_sha(raster)
 
-        import pandas as _pd
-
-        enc, dec = jpeg_encode_progressive_ac_sa, jpeg_decode_progressive
-        for pdf in batches:
-            out = {c: [] for c in (
-                "doc_id", "width", "height", "n_px_bytes", "pixel_sha",
-            )}
-            for doc_id, t in zip(pdf["doc_id"], pdf["text"]):
-                d = _h.md5(t.encode()).digest()
-                px = bytearray(16 * 16)
-                for by in range(2):
-                    for bx in range(2):
-                        bi = by * 2 + bx
-                        a, b = d[2 * bi], d[2 * bi + 1]
-                        for y in range(8):
-                            base = (by * 8 + y) * 16 + bx * 8
-                            for x in range(8):
-                                px[base + x] = a if x < 4 else b
-                raster, w, h = dec(enc(bytes(px), 16, 16))
-                out["doc_id"].append(doc_id)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["n_px_bytes"].append(len(raster))
-                out["pixel_sha"].append(
-                    _h.sha256(raster.hex().encode()).hexdigest()
-                )
-            yield _pd.DataFrame(out)
-
-    return docs.mapInPandas(_roundtrip, schema=schema)
+    return per_row(docs, _roundtrip, _RASTER, _TEXT)
 
 
 def multimodal_g711_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1721,77 +1064,31 @@ def multimodal_g711_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct-block sums (the oracle exploits both). ``n_wav_bytes``
     pins the RIFF framing: 12 hdr + 24 fmt + 12 fact + 72 data = 120
     bytes for either law."""
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("n_samples", LongType()),
-            StructField("n_wav_bytes", LongType()),
-            StructField("ulaw_sha", StringType()),
-            StructField("alaw_sha", StringType()),
-            StructField("ulaw_sum_abs_recon", LongType()),
-            StructField("alaw_sum_abs_recon", LongType()),
-            StructField("ulaw_err_sq", LongType()),
-            StructField("alaw_err_sq", LongType()),
-        ]
-    )
     docs = _spread_docs(
         spark, read_table(spark, sf_dir, "documents").select("doc_id", "text")
     )
-    from ..functions.g711_codec import (
-        alaw_decode_wav,
-        alaw_encode_wav,
-        mulaw_decode_wav,
-        mulaw_encode_wav,
+
+    def _roundtrip(doc_id, text):
+        d = hashlib.md5(text.encode()).digest()
+        block = [(d[2 * i] - 128) * 255 + (d[2 * i + 1] - 128) for i in range(8)]
+        samples = block * 8
+        uw, aw = mulaw_encode_wav(samples), alaw_encode_wav(samples)
+        ur, ar = mulaw_decode_wav(uw), alaw_decode_wav(aw)
+        assert len(uw) == len(aw)
+        # data chunk = last 64 bytes of the 120-byte container
+        yield (
+            doc_id, len(samples), len(uw),
+            _hex_sha(uw[-64:]), _hex_sha(aw[-64:]),
+            sum(abs(x) for x in ur), sum(abs(x) for x in ar),
+            sum((s - r) ** 2 for s, r in zip(samples, ur)),
+            sum((s - r) ** 2 for s, r in zip(samples, ar)),
+        )
+
+    schema = _schema(
+        "doc_id n_samples n_wav_bytes ulaw_sha:string alaw_sha:string"
+        " ulaw_sum_abs_recon alaw_sum_abs_recon ulaw_err_sq alaw_err_sq"
     )
-
-    def _roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # self-contained closure: all four codec halves captured by value
-        import hashlib as _h
-
-        import pandas as _pd
-
-        ue, ud, ae, ad = (
-            mulaw_encode_wav, mulaw_decode_wav,
-            alaw_encode_wav, alaw_decode_wav,
-        )
-        cols = (
-            "doc_id", "n_samples", "n_wav_bytes", "ulaw_sha", "alaw_sha",
-            "ulaw_sum_abs_recon", "alaw_sum_abs_recon",
-            "ulaw_err_sq", "alaw_err_sq",
-        )
-        for pdf in batches:
-            out = {c: [] for c in cols}
-            for doc_id, t in zip(pdf["doc_id"], pdf["text"]):
-                d = _h.md5(t.encode()).digest()
-                block = [
-                    (d[2 * i] - 128) * 255 + (d[2 * i + 1] - 128)
-                    for i in range(8)
-                ]
-                samples = block * 8
-                uw, aw = ue(samples), ae(samples)
-                ur, ar = ud(uw), ad(aw)
-                # data chunk = last 64 bytes of the 120-byte container
-                out["doc_id"].append(doc_id)
-                out["n_samples"].append(len(samples))
-                assert len(uw) == len(aw)
-                out["n_wav_bytes"].append(len(uw))
-                out["ulaw_sha"].append(
-                    _h.sha256(uw[-64:].hex().encode()).hexdigest()
-                )
-                out["alaw_sha"].append(
-                    _h.sha256(aw[-64:].hex().encode()).hexdigest()
-                )
-                out["ulaw_sum_abs_recon"].append(sum(abs(x) for x in ur))
-                out["alaw_sum_abs_recon"].append(sum(abs(x) for x in ar))
-                out["ulaw_err_sq"].append(
-                    sum((s - r) ** 2 for s, r in zip(samples, ur))
-                )
-                out["alaw_err_sq"].append(
-                    sum((s - r) ** 2 for s, r in zip(samples, ar))
-                )
-            yield _pd.DataFrame(out)
-
-    return docs.mapInPandas(_roundtrip, schema=schema)
+    return per_row(docs, _roundtrip, schema, _TEXT)
 
 
 def multimodal_bmp_rle_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1805,61 +1102,30 @@ def multimodal_bmp_rle_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     for the flanks, one absolute segment for the 5 distinct literals)
     and the ORACLE rebuilds the decoded RGB raster arithmetically —
     index bytes straight from md5, palette (i, 7i, 13i) mod 256."""
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("width", LongType()),
-            StructField("height", LongType()),
-            StructField("n_px_bytes", LongType()),
-            StructField("pixel_sha", StringType()),
-        ]
-    )
-    from ..functions.bmp_codec import bmp_decode_rle8, bmp_encode_rle8
-
     docs = _spread_docs(
         spark, read_table(spark, sf_dir, "documents").select("doc_id", "text")
     )
 
-    def _roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # self-contained closure: both codec halves captured by value
-        import hashlib as _h
+    def _roundtrip(doc_id, text):
+        d = hashlib.md5(text.encode()).digest()
+        rows = [
+            bytes(
+                [d[y]] * 8
+                + [d[(y + x) % 16] for x in range(8, 13)]
+                + [d[15 - y]] * 3
+            )
+            for y in range(16)
+        ]
+        rgb, w, h = bmp_decode_rle8(bmp_encode_rle8(rows, 16, 16, GIFPALETTE256))
+        yield doc_id, w, h, len(rgb), _hex_sha(rgb)
 
-        import pandas as _pd
-
-        enc, dec = bmp_encode_rle8, bmp_decode_rle8
-        pal = bytes(
-            b for i in range(256) for b in (i, (7 * i) % 256, (13 * i) % 256)
-        )
-        for pdf in batches:
-            out = {c: [] for c in (
-                "doc_id", "width", "height", "n_px_bytes", "pixel_sha",
-            )}
-            for doc_id, t in zip(pdf["doc_id"], pdf["text"]):
-                d = _h.md5(t.encode()).digest()
-                rows = [
-                    bytes(
-                        [d[y]] * 8
-                        + [d[(y + x) % 16] for x in range(8, 13)]
-                        + [d[15 - y]] * 3
-                    )
-                    for y in range(16)
-                ]
-                rgb, w, h = dec(enc(rows, 16, 16, pal))
-                out["doc_id"].append(doc_id)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["n_px_bytes"].append(len(rgb))
-                out["pixel_sha"].append(
-                    _h.sha256(rgb.hex().encode()).hexdigest()
-                )
-            yield _pd.DataFrame(out)
-
-    return docs.mapInPandas(_roundtrip, schema=schema)
+    return per_row(docs, _roundtrip, _RASTER, _TEXT)
 
 
 #: 256-entry GIF global color table: index i -> (i, 7i mod 256,
 #: 13i mod 256) — a full-size table (min LZW code size 8), unlike the
-#: 16-entry PNG palette, so the GIF path exercises 9..12-bit codes.
+#: 16-entry PNG palette, so the GIF path exercises 9..12-bit codes. The
+#: BMP fixtures draw against the same table.
 GIFPALETTE256 = bytes(
     b for i in range(256) for b in (i, (7 * i) % 256, (13 * i) % 256)
 )
@@ -1874,46 +1140,20 @@ def attach_gif_payload(
     :data:`GIFPALETTE256`. The denoted RGB raster is pure arithmetic
     over the md5 hex (GIF is lossless), while the container bytes —
     logical screen descriptor, color table, LZW sub-blocks — stay
-    opaque. Same Arrow-batched self-contained-closure shape as the
+    opaque. Same Arrow-batched :func:`per_row` shape as the
     PNG/JPEG attach functions."""
-    from ..functions.gif_codec import gif_encode
-
     if (side * side) % 32:
         raise ValueError("side*side must be a multiple of the 32-char md5 hex")
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("payload", BinaryType()),
-            StructField("modality", StringType()),
-        ]
-    )
     docs = _spread_docs(
         spark, read_table(spark, sf_dir, "documents").select("doc_id", "text")
     )
     reps = (side * side) // 32
-    pal = GIFPALETTE256
 
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # self-contained closure: gif_encode captured BY VALUE
-        import hashlib as _h
+    def _encode(doc_id, text):
+        idx = (hashlib.md5(text.encode()).hexdigest() * reps).encode("ascii")
+        yield doc_id, gif_encode(idx, side, side, GIFPALETTE256), "image/gif"
 
-        import pandas as _pd
-
-        enc, k, s, p = gif_encode, reps, side, pal
-        for pdf in batches:
-            payloads = []
-            for t in pdf["text"]:
-                idx = (_h.md5(t.encode()).hexdigest() * k).encode("ascii")
-                payloads.append(enc(idx, s, s, p))
-            yield _pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": payloads,
-                    "modality": "image/gif",
-                }
-            )
-
-    return docs.mapInPandas(_encode, schema=schema)
+    return per_row(docs, _encode, _ENCODED, _TEXT)
 
 
 def multimodal_gif_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1929,43 +1169,12 @@ def multimodal_gif_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     sha256's the lowercase-hex transport — one wrong LZW code width,
     sub-block seam, or palette byte breaks the hash. Two narrow
     Arrow-batched stages, no shuffle."""
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("width", LongType()),
-            StructField("height", LongType()),
-            StructField("n_px_bytes", LongType()),
-            StructField("pixel_sha", StringType()),
-        ]
-    )
 
-    from ..functions.gif_codec import gif_decode
+    def _decode(doc_id, payload):
+        px, w, h = gif_decode(bytes(payload))
+        yield doc_id, w, h, len(px), _hex_sha(px)
 
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # self-contained closure: gif_decode captured by value
-        import hashlib as _h
-
-        import pandas as _pd
-
-        dec = gif_decode
-        for pdf in batches:
-            out = {c: [] for c in (
-                "doc_id", "width", "height", "n_px_bytes", "pixel_sha",
-            )}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                px, w, h = dec(bytes(payload))
-                out["doc_id"].append(doc_id)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["n_px_bytes"].append(len(px))
-                out["pixel_sha"].append(
-                    _h.sha256(px.hex().encode()).hexdigest()
-                )
-            yield _pd.DataFrame(out)
-
-    return attach_gif_payload(spark, sf_dir).mapInPandas(
-        _decode, schema=schema
-    )
+    return per_row(attach_gif_payload(spark, sf_dir), _decode, _RASTER, _PAYLOAD)
 
 
 def multimodal_gif_interlaced_decode(
@@ -1978,46 +1187,18 @@ def multimodal_gif_interlaced_decode(
     ROW REORDERING, so the decoded raster — and therefore the oracle —
     is IDENTICAL to the non-interlaced query's: one wrong pass stride
     or flag read and the hash breaks."""
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("width", LongType()),
-            StructField("height", LongType()),
-            StructField("n_px_bytes", LongType()),
-            StructField("pixel_sha", StringType()),
-        ]
-    )
-    from ..functions.gif_codec import gif_decode, gif_encode
-
     docs = _spread_docs(
         spark, read_table(spark, sf_dir, "documents").select("doc_id", "text")
     )
-    pal = GIFPALETTE256
 
-    def _roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # self-contained closure: both codec halves captured by value
-        import hashlib as _h
+    def _roundtrip(doc_id, text):
+        idx = (hashlib.md5(text.encode()).hexdigest() * 8).encode("ascii")
+        px, w, h = gif_decode(
+            gif_encode(idx, 16, 16, GIFPALETTE256, interlace=True)
+        )
+        yield doc_id, w, h, len(px), _hex_sha(px)
 
-        import pandas as _pd
-
-        enc, dec, p = gif_encode, gif_decode, pal
-        for pdf in batches:
-            out = {c: [] for c in (
-                "doc_id", "width", "height", "n_px_bytes", "pixel_sha",
-            )}
-            for doc_id, t in zip(pdf["doc_id"], pdf["text"]):
-                idx = (_h.md5(t.encode()).hexdigest() * 8).encode("ascii")
-                px, w, h = dec(enc(idx, 16, 16, p, interlace=True))
-                out["doc_id"].append(doc_id)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["n_px_bytes"].append(len(px))
-                out["pixel_sha"].append(
-                    _h.sha256(px.hex().encode()).hexdigest()
-                )
-            yield _pd.DataFrame(out)
-
-    return docs.mapInPandas(_roundtrip, schema=schema)
+    return per_row(docs, _roundtrip, _RASTER, _TEXT)
 
 
 def multimodal_gif_animation_frames(
@@ -2032,52 +1213,27 @@ def multimodal_gif_animation_frames(
     block back out (``gif_decode_frames``) and emits one row per
     frame — the 1-in-k fan-out at decode time. The oracle rebuilds each
     frame's raster arithmetically (GIF is lossless)."""
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("frame_idx", LongType()),
-            StructField("width", LongType()),
-            StructField("height", LongType()),
-            StructField("pixel_sha", StringType()),
-        ]
-    )
-    from ..functions.gif_codec import gif_decode_frames, gif_encode_animated
-
     docs = _spread_docs(
         spark, read_table(spark, sf_dir, "documents").select("doc_id", "text")
     )
-    pal = GIFPALETTE256
 
-    def _frames(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # self-contained closure: both codec halves captured by value
-        import hashlib as _h
+    def _frames(doc_id, text):
+        frames = [
+            (hashlib.md5(f"{text}#{f}".encode()).hexdigest() * 8).encode("ascii")
+            for f in range(n_frames)
+        ]
+        rasters, w, h = gif_decode_frames(
+            gif_encode_animated(frames, 16, 16, GIFPALETTE256)
+        )
+        for f, px in enumerate(rasters):
+            yield doc_id, f, w, h, _hex_sha(px)
 
-        import pandas as _pd
-
-        enc, dec, p, k = gif_encode_animated, gif_decode_frames, pal, n_frames
-        for pdf in batches:
-            out = {c: [] for c in (
-                "doc_id", "frame_idx", "width", "height", "pixel_sha",
-            )}
-            for doc_id, t in zip(pdf["doc_id"], pdf["text"]):
-                frames = [
-                    (_h.md5(f"{t}#{f}".encode()).hexdigest() * 8).encode(
-                        "ascii"
-                    )
-                    for f in range(k)
-                ]
-                rasters, w, h = dec(enc(frames, 16, 16, p))
-                for f, px in enumerate(rasters):
-                    out["doc_id"].append(doc_id)
-                    out["frame_idx"].append(f)
-                    out["width"].append(w)
-                    out["height"].append(h)
-                    out["pixel_sha"].append(
-                        _h.sha256(px.hex().encode()).hexdigest()
-                    )
-            yield _pd.DataFrame(out)
-
-    return docs.mapInPandas(_frames, schema=schema)
+    return per_row(
+        docs,
+        _frames,
+        _schema("doc_id frame_idx width height pixel_sha:string"),
+        _TEXT,
+    )
 
 
 def multimodal_thumbnail_grid(
@@ -2100,54 +1256,25 @@ def multimodal_thumbnail_grid(
     uniform-MCU color chain (a 4:2:0 decode of uniform 16x16 MCUs is
     four uniform quadrants, so every thumbnail is a closed-form block
     grid) — one UNION ALL arm per size. Lowercase-hex transport."""
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("grid_idx", LongType()),
-            StructField("width", LongType()),
-            StructField("height", LongType()),
-            StructField("n_px_bytes", LongType()),
-            StructField("pixel_sha", StringType()),
-        ]
-    )
 
-    from ..functions.jpeg_codec import jpeg_decode_color
+    def _grid(doc_id, payload):
+        px, src_w, src_h, ncomp = jpeg_decode_color(bytes(payload))
+        for gi, (w, h) in enumerate(sizes):
+            thumb = bytearray(w * h * ncomp)
+            o = 0
+            for r in range(h):
+                row = (r * src_h // h) * src_w
+                for c in range(w):
+                    s = (row + c * src_w // w) * ncomp
+                    thumb[o : o + ncomp] = px[s : s + ncomp]
+                    o += ncomp
+            yield doc_id, gi, w, h, len(thumb), _hex_sha(bytes(thumb))
 
-    def _grid(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # self-contained closure: decoder + sizes captured by value
-        import hashlib as _h
-
-        import pandas as _pd
-
-        dec, szs = jpeg_decode_color, sizes
-        for pdf in batches:
-            out = {c: [] for c in (
-                "doc_id", "grid_idx", "width", "height",
-                "n_px_bytes", "pixel_sha",
-            )}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                px, src_w, src_h, ncomp = dec(bytes(payload))
-                for gi, (w, h) in enumerate(szs):
-                    thumb = bytearray(w * h * ncomp)
-                    o = 0
-                    for r in range(h):
-                        row = (r * src_h // h) * src_w
-                        for c in range(w):
-                            s = (row + c * src_w // w) * ncomp
-                            thumb[o : o + ncomp] = px[s : s + ncomp]
-                            o += ncomp
-                    out["doc_id"].append(doc_id)
-                    out["grid_idx"].append(gi)
-                    out["width"].append(w)
-                    out["height"].append(h)
-                    out["n_px_bytes"].append(len(thumb))
-                    out["pixel_sha"].append(
-                        _h.sha256(bytes(thumb).hex().encode()).hexdigest()
-                    )
-            yield _pd.DataFrame(out)
-
-    return attach_color_jpeg_420_payload(spark, sf_dir).mapInPandas(
-        _grid, schema=schema
+    return per_row(
+        attach_color_jpeg_420_payload(spark, sf_dir),
+        _grid,
+        _schema("doc_id grid_idx width height n_px_bytes pixel_sha:string"),
+        _PAYLOAD,
     )
 
 
@@ -2161,60 +1288,27 @@ def attach_mjpeg_payload(
     uniform 8×8 blocks take their source values from md5 digest bytes
     ``4f..4f+3``, so four frames walk all 16 digest bytes and every
     frame's decoded raster has the same closed-form integer oracle as
-    ``multimodal_jpeg_decode``. Arrow-batched, self-contained closure."""
-    from ..functions.jpeg_codec import jpeg_encode
-
+    ``multimodal_jpeg_decode``. Arrow-batched :func:`per_row` stage."""
     if side % 8:
         raise ValueError("side must be a multiple of 8")
     nblk = side // 8
     if n_frames * nblk * nblk > 16:
         raise ValueError("md5 supplies at most 16 block bytes across frames")
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("payload", BinaryType()),
-            StructField("modality", StringType()),
-        ]
-    )
     docs = _spread_docs(
         spark, read_table(spark, sf_dir, "documents").select("doc_id", "text")
     )
 
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # self-contained closure: jpeg_encode captured BY VALUE
-        import hashlib as _h
-        import struct as _st
+    def _encode(doc_id, text):
+        d = hashlib.md5(text.encode()).digest()
+        frames = []
+        for f in range(n_frames):
+            px = _block_raster(d[f * nblk * nblk :], side, side, 8, 8)
+            frames.append(jpeg_encode(px, side, side))
+        head = b"MJPG" + struct.pack("<I", n_frames)
+        head += b"".join(struct.pack("<I", len(fr)) for fr in frames)
+        yield doc_id, head + b"".join(frames), "video/x-motion-jpeg"
 
-        import pandas as _pd
-
-        enc, s, nb, nf = jpeg_encode, side, nblk, n_frames
-        for pdf in batches:
-            payloads = []
-            for t in pdf["text"]:
-                d = _h.md5(t.encode()).digest()
-                frames = []
-                for f in range(nf):
-                    px = bytearray(s * s)
-                    for by in range(nb):
-                        for bx in range(nb):
-                            v = d[f * nb * nb + by * nb + bx]
-                            for y in range(8):
-                                base = (by * 8 + y) * s + bx * 8
-                                for x in range(8):
-                                    px[base + x] = v
-                    frames.append(enc(bytes(px), s, s))
-                head = b"MJPG" + _st.pack("<I", nf)
-                head += b"".join(_st.pack("<I", len(fr)) for fr in frames)
-                payloads.append(head + b"".join(frames))
-            yield _pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": payloads,
-                    "modality": "video/x-motion-jpeg",
-                }
-            )
-
-    return docs.mapInPandas(_encode, schema=schema)
+    return per_row(docs, _encode, _ENCODED, _TEXT)
 
 
 def multimodal_mjpeg_frame_sample(
@@ -2236,54 +1330,26 @@ def multimodal_mjpeg_frame_sample(
     closed-form lossy chain as ``multimodal_jpeg_decode``, so a wrong
     frame offset, a mis-sampled index, or one bad decoded byte all
     break the hash compare."""
-    from ..functions.jpeg_codec import jpeg_decode
 
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("frame_idx", LongType()),
-            StructField("width", LongType()),
-            StructField("height", LongType()),
-            StructField("n_px_bytes", LongType()),
-            StructField("pixel_sha", StringType()),
-        ]
+    def _sample(doc_id, payload):
+        buf = bytes(payload)
+        if buf[:4] != b"MJPG":
+            raise ValueError("not an MJPG container")
+        (nf,) = struct.unpack("<I", buf[4:8])
+        lens = struct.unpack(f"<{nf}I", buf[8 : 8 + 4 * nf])
+        off = 8 + 4 * nf
+        for f in range(nf):
+            if f % every == 0:  # decode sampled frames only
+                px, w, h = jpeg_decode(buf[off : off + lens[f]])
+                yield doc_id, f, w, h, len(px), _hex_sha(px)
+            off += lens[f]  # unsampled frames are seeked past
+
+    return per_row(
+        attach_mjpeg_payload(spark, sf_dir),
+        _sample,
+        _schema("doc_id frame_idx width height n_px_bytes pixel_sha:string"),
+        _PAYLOAD,
     )
-
-    def _sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # self-contained closure: jpeg_decode captured by value
-        import hashlib as _h
-        import struct as _st
-
-        import pandas as _pd
-
-        dec, k = jpeg_decode, every
-        for pdf in batches:
-            out = {c: [] for c in (
-                "doc_id", "frame_idx", "width", "height",
-                "n_px_bytes", "pixel_sha",
-            )}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                buf = bytes(payload)
-                if buf[:4] != b"MJPG":
-                    raise ValueError("not an MJPG container")
-                (nf,) = _st.unpack("<I", buf[4:8])
-                lens = _st.unpack(f"<{nf}I", buf[8 : 8 + 4 * nf])
-                off = 8 + 4 * nf
-                for f in range(nf):
-                    if f % k == 0:  # decode sampled frames only
-                        px, w, h = dec(buf[off : off + lens[f]])
-                        out["doc_id"].append(doc_id)
-                        out["frame_idx"].append(f)
-                        out["width"].append(w)
-                        out["height"].append(h)
-                        out["n_px_bytes"].append(len(px))
-                        out["pixel_sha"].append(
-                            _h.sha256(px.hex().encode()).hexdigest()
-                        )
-                    off += lens[f]  # unsampled frames are seeked past
-            yield _pd.DataFrame(out)
-
-    return attach_mjpeg_payload(spark, sf_dir).mapInPandas(_sample, schema=schema)
 
 
 def multimodal_jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2300,49 +1366,14 @@ def multimodal_jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     mis-parsed DHT, an off-by-one in the bit reader, wrong IDCT rounding
     — breaks the hash compare. Same two-narrow-stage shape as the PNG
     twin; no shuffle."""
-    from ..functions.jpeg_codec import jpeg_decode
 
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("width", LongType()),
-            StructField("height", LongType()),
-            StructField("n_px_bytes", LongType()),
-            StructField("pixel_sha", StringType()),
-        ]
-    )
+    def _decode(doc_id, payload):
+        px, w, h = jpeg_decode(bytes(payload))
+        # unlike the PNG twin's ASCII-hex rasters, JPEG rasters are not
+        # valid UTF-8: hashed over the lowercase-hex transport
+        yield doc_id, w, h, len(px), _hex_sha(px)
 
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # self-contained closure: jpeg_decode captured by value
-        import hashlib as _h
-
-        import pandas as _pd
-
-        dec = jpeg_decode
-        for pdf in batches:
-            out = {
-                "doc_id": [],
-                "width": [],
-                "height": [],
-                "n_px_bytes": [],
-                "pixel_sha": [],
-            }
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                px, w, h = dec(bytes(payload))
-                out["doc_id"].append(doc_id)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["n_px_bytes"].append(len(px))
-                # hashed over the LOWERCASE-HEX transport of the buffer:
-                # DuckDB's sha256 takes VARCHAR only, and raw JPEG rasters
-                # (unlike the PNG twin's ASCII-hex rasters) are not valid
-                # UTF-8 — the hex string is the engine-neutral encoding
-                out["pixel_sha"].append(
-                    _h.sha256(px.hex().encode()).hexdigest()
-                )
-            yield _pd.DataFrame(out)
-
-    return attach_jpeg_payload(spark, sf_dir).mapInPandas(_decode, schema=schema)
+    return per_row(attach_jpeg_payload(spark, sf_dir), _decode, _RASTER, _PAYLOAD)
 
 
 def multimodal_image_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2368,73 +1399,36 @@ def multimodal_image_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     then the header parse), no shuffle, partitioning preserved; at
     100 TB the scan reads a few dozen bytes per blob where the decode
     family reads megabytes."""
-    from ..functions.bmp_codec import bmp_encode_rle8
-    from ..functions.gif_codec import gif_encode
-    from ..functions.image_meta import parse_image_header
-    from ..functions.jpeg_codec import jpeg_encode_color
-    from ..functions.png_codec import png_encode
-
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("fmt", StringType()),
-            StructField("width", LongType()),
-            StructField("height", LongType()),
-            StructField("bit_depth", LongType()),
-            StructField("n_components", LongType()),
-        ]
-    )
     docs = _spread_docs(
         spark, read_table(spark, sf_dir, "documents").select("doc_id", "text")
     )
 
-    def _scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # self-contained closure: all four encoders + the header parser
-        # captured by value (the worker-import rule)
-        import hashlib as _h
+    def _scan(doc_id, text):
+        hx = hashlib.md5(text.encode()).hexdigest()
+        d = bytes.fromhex(hx)
+        nib = [int(c, 16) for c in hx]
+        payloads = []
+        w, h = 9 + nib[0], 9 + nib[1]
+        px = (hx.encode() * ((w * h) // 32 + 1))[: w * h]
+        payloads.append(png_encode(px, w, h, 0))
+        w, h = 8 * (1 + nib[2] % 2), 8 * (1 + nib[3] % 2)
+        rgb = (d * ((3 * w * h) // 16 + 1))[: 3 * w * h]
+        payloads.append(jpeg_encode_color(rgb, w, h))
+        w, h = 5 + nib[4], 5 + nib[5]
+        idx = (d * ((w * h) // 16 + 1))[: w * h]
+        payloads.append(gif_encode(idx, w, h, GIFPALETTE256))
+        w, h = 5 + nib[6], 3 + nib[7] % 8
+        rows = [bytes(d[(y + x) % 16] for x in range(w)) for y in range(h)]
+        payloads.append(bmp_encode_rle8(rows, w, h, GIFPALETTE256))
+        for pay in payloads:
+            yield (doc_id, *parse_image_header(pay))
 
-        import pandas as _pd
-
-        p_enc, j_enc = png_encode, jpeg_encode_color
-        g_enc, b_enc, meta = gif_encode, bmp_encode_rle8, parse_image_header
-        pal = bytes(
-            b for i in range(256) for b in (i, (7 * i) % 256, (13 * i) % 256)
-        )
-        cols = (
-            "doc_id", "fmt", "width", "height", "bit_depth", "n_components",
-        )
-        for pdf in batches:
-            out = {c: [] for c in cols}
-            for doc_id, t in zip(pdf["doc_id"], pdf["text"]):
-                hx = _h.md5(t.encode()).hexdigest()
-                d = bytes.fromhex(hx)
-                nib = [int(c, 16) for c in hx]
-                payloads = []
-                w, h = 9 + nib[0], 9 + nib[1]
-                px = (hx.encode() * ((w * h) // 32 + 1))[: w * h]
-                payloads.append(p_enc(px, w, h, 0))
-                w, h = 8 * (1 + nib[2] % 2), 8 * (1 + nib[3] % 2)
-                rgb = (d * ((3 * w * h) // 16 + 1))[: 3 * w * h]
-                payloads.append(j_enc(rgb, w, h))
-                w, h = 5 + nib[4], 5 + nib[5]
-                idx = (d * ((w * h) // 16 + 1))[: w * h]
-                payloads.append(g_enc(idx, w, h, pal))
-                w, h = 5 + nib[6], 3 + nib[7] % 8
-                rows = [
-                    bytes(d[(y + x) % 16] for x in range(w)) for y in range(h)
-                ]
-                payloads.append(b_enc(rows, w, h, pal))
-                for pay in payloads:
-                    fmt, pw, ph, depth, comps = meta(pay)
-                    out["doc_id"].append(doc_id)
-                    out["fmt"].append(fmt)
-                    out["width"].append(pw)
-                    out["height"].append(ph)
-                    out["bit_depth"].append(depth)
-                    out["n_components"].append(comps)
-            yield _pd.DataFrame(out)
-
-    return docs.mapInPandas(_scan, schema=schema)
+    return per_row(
+        docs,
+        _scan,
+        _schema("doc_id fmt:string width height bit_depth n_components"),
+        _TEXT,
+    )
 
 
 def multimodal_audio_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2459,69 +1453,31 @@ def multimodal_audio_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     then the header parse), no shuffle; at 100 TB the scan reads ~60
     bytes of headers per blob where the decode family reads all
     samples."""
-    from ..functions.adpcm_codec import adpcm_encode_wav
-    from ..functions.audio_meta import parse_audio_header
-    from ..functions.g711_codec import alaw_encode_wav, mulaw_encode_wav
-    from ..functions.wav_codec import wav_encode
-
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("codec", StringType()),
-            StructField("fmt_tag", LongType()),
-            StructField("n_channels", LongType()),
-            StructField("sample_rate", LongType()),
-            StructField("bits_per_sample", LongType()),
-            StructField("data_bytes", LongType()),
-            StructField("n_samples", LongType()),
-        ]
-    )
     docs = _spread_docs(
         spark, read_table(spark, sf_dir, "documents").select("doc_id", "text")
     )
 
-    def _scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # self-contained closure: encoders + parser captured by value
-        import hashlib as _h
+    def _scan(doc_id, text):
+        d = hashlib.md5(text.encode()).digest()
+        nv = [int(c, 16) for c in d.hex()]
+        s16 = [((d[i % 16] << 8) - 32768 + i) for i in range(46)]
+        ch = 1 + nv[8] % 2
+        rate = 8000 + 100 * nv[9]
+        n = 40 + nv[10]
+        arms = [
+            ("pcm", wav_encode((d * 20)[: n * ch], rate, ch)),
+            ("adpcm", adpcm_encode_wav(s16[: 30 + nv[11]])),
+            ("ulaw", mulaw_encode_wav(s16[: 20 + nv[12]])),
+            ("alaw", alaw_encode_wav(s16[: 20 + nv[13]])),
+        ]
+        for codec, pay in arms:
+            yield (doc_id, codec, *parse_audio_header(pay))
 
-        import pandas as _pd
-
-        p_enc, a_enc = wav_encode, adpcm_encode_wav
-        m_enc, l_enc, meta = mulaw_encode_wav, alaw_encode_wav, (
-            parse_audio_header
-        )
-        cols = (
-            "doc_id", "codec", "fmt_tag", "n_channels", "sample_rate",
-            "bits_per_sample", "data_bytes", "n_samples",
-        )
-        for pdf in batches:
-            out = {c: [] for c in cols}
-            for doc_id, t in zip(pdf["doc_id"], pdf["text"]):
-                d = _h.md5(t.encode()).digest()
-                nv = [int(c, 16) for c in d.hex()]
-                s16 = [((d[i % 16] << 8) - 32768 + i) for i in range(46)]
-                ch = 1 + nv[8] % 2
-                rate = 8000 + 100 * nv[9]
-                n = 40 + nv[10]
-                arms = [
-                    ("pcm", p_enc((d * 20)[: n * ch], rate, ch)),
-                    ("adpcm", a_enc(s16[: 30 + nv[11]])),
-                    ("ulaw", m_enc(s16[: 20 + nv[12]])),
-                    ("alaw", l_enc(s16[: 20 + nv[13]])),
-                ]
-                for codec, pay in arms:
-                    tag, nch, sr, bits, nbytes, ns = meta(pay)
-                    out["doc_id"].append(doc_id)
-                    out["codec"].append(codec)
-                    out["fmt_tag"].append(tag)
-                    out["n_channels"].append(nch)
-                    out["sample_rate"].append(sr)
-                    out["bits_per_sample"].append(bits)
-                    out["data_bytes"].append(nbytes)
-                    out["n_samples"].append(ns)
-            yield _pd.DataFrame(out)
-
-    return docs.mapInPandas(_scan, schema=schema)
+    schema = _schema(
+        "doc_id codec:string fmt_tag n_channels sample_rate bits_per_sample"
+        " data_bytes n_samples"
+    )
+    return per_row(docs, _scan, schema, _TEXT)
 
 
 # ---------------------------------------------------------------------------
@@ -2568,38 +1524,18 @@ def _phash_payload_frame(spark: SparkSession, base: DataFrame) -> DataFrame:
     DataFrame — shared by the corpus/batch readers above and the
     STREAMING index maintenance (each micro-batch hashes only its own
     rows, so codec CPU is batch-sized by construction)."""
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("payload", BinaryType()),
-        ]
-    )
     docs = _spread_docs(spark, base)
-    from ..functions.png_codec import png_encode
 
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # self-contained closure: png_encode captured BY VALUE
-        import hashlib as _h
+    def _encode(doc_id, text):
+        prefix = " ".join(text.split(" ")[:20])
+        raster = bytearray()
+        for i in range(8):
+            raster += hashlib.md5(f"{prefix}:{i}".encode()).hexdigest().encode()
+        p = int(hashlib.md5(text.encode()).hexdigest()[:2], 16)
+        raster[p] = 122  # ord('z')
+        yield doc_id, png_encode(bytes(raster), 16, 16)
 
-        import pandas as _pd
-
-        enc = png_encode
-        for pdf in batches:
-            out = {"doc_id": [], "payload": []}
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                prefix = " ".join(text.split(" ")[:20])
-                raster = bytearray()
-                for i in range(8):
-                    raster += _h.md5(
-                        f"{prefix}:{i}".encode()
-                    ).hexdigest().encode()
-                p = int(_h.md5(text.encode()).hexdigest()[:2], 16)
-                raster[p] = 122  # ord('z')
-                out["doc_id"].append(doc_id)
-                out["payload"].append(enc(bytes(raster), 16, 16))
-            yield _pd.DataFrame(out)
-
-    return docs.mapInPandas(_encode, schema=schema)
+    return per_row(docs, _encode, _schema("doc_id payload:binary"), _TEXT)
 
 
 def image_perceptual_hashes(
@@ -2624,54 +1560,39 @@ def image_perceptual_hashes(
     return _phash_sigs_frame(spark, base)
 
 
+def _signed64(sig: int) -> int:
+    """An unsigned 64-bit signature in the two's-complement BIGINT
+    transport (bit 63's weight is long MIN)."""
+    return sig - (1 << 64) if sig >= 1 << 63 else sig
+
+
+def _pack_bits(bits) -> int:
+    """Pack booleans LSB-first into a signed 64-bit signature."""
+    sig = 0
+    for i, b in enumerate(bits):
+        if b:
+            sig += 1 << i
+    return _signed64(sig)
+
+
 def _phash_sigs_frame(spark: SparkSession, base: DataFrame) -> DataFrame:
     """Frame-level core of :func:`image_perceptual_hashes`: dHash/aHash
     signatures for an arbitrary ``(doc_id, text)`` DataFrame — shared
     with the streaming dHash index maintenance (micro-batch grain)."""
-    from pyspark.sql.types import LongType as _Long
 
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("dhash", _Long()),
-            StructField("ahash", _Long()),
-        ]
+    def _hash(doc_id, payload):
+        g9 = resize_image(bytes(payload), 9, 8)  # 72 bytes, row-major
+        dbits = [g9[r * 9 + c + 1] > g9[r * 9 + c] for r in range(8) for c in range(8)]
+        g8 = resize_image(bytes(payload), 8, 8)  # 64 bytes
+        mean = sum(g8) // 64
+        yield doc_id, _pack_bits(dbits), _pack_bits(v > mean for v in g8)
+
+    return per_row(
+        _phash_payload_frame(spark, base),
+        _hash,
+        _schema("doc_id dhash ahash"),
+        _PAYLOAD,
     )
-    payloads = _phash_payload_frame(spark, base)
-
-    def _hash(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # self-contained closure: resize_image captured by value
-        import pandas as _pd
-
-        rz = resize_image
-
-        def pack(bits):
-            sig = 0
-            for i, b in enumerate(bits):
-                if b:
-                    sig += 1 << i
-            if sig >= 1 << 63:
-                sig -= 1 << 64
-            return sig
-
-        for pdf in batches:
-            out = {"doc_id": [], "dhash": [], "ahash": []}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                g9 = rz(bytes(payload), 9, 8)  # 72 bytes, row-major
-                dbits = [
-                    g9[r * 9 + c + 1] > g9[r * 9 + c]
-                    for r in range(8)
-                    for c in range(8)
-                ]
-                g8 = rz(bytes(payload), 8, 8)  # 64 bytes
-                mean = sum(g8) // 64
-                abits = [v > mean for v in g8]
-                out["doc_id"].append(doc_id)
-                out["dhash"].append(pack(dbits))
-                out["ahash"].append(pack(abits))
-            yield _pd.DataFrame(out)
-
-    return payloads.mapInPandas(_hash, schema=schema)
 
 
 def image_dhash_near_dup_pairs(
@@ -2771,64 +1692,34 @@ def image_histogram_equalization(spark: SparkSession, sf_dir: str) -> DataFrame:
     the histogram and the remap is closed-form. Scale shape: one narrow
     Arrow-batched stage after the payload stage, no shuffle — per-image
     work is O(n_px + 256)."""
-    from ..functions.png_codec import png_decode
 
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("n_levels_in", LongType()),
-            StructField("n_levels_out", LongType()),
-            StructField("eq_min", LongType()),
-            StructField("eq_max", LongType()),
-            StructField("eq_sha", StringType()),
+    def _equalize(doc_id, payload):
+        px, _w, _h, _ct = png_decode(bytes(payload))
+        n = len(px)
+        hist = [0] * 256
+        for v in px:
+            hist[v] += 1
+        cdf = [0] * 256
+        acc = 0
+        for v in range(256):
+            acc += hist[v]
+            cdf[v] = acc
+        cdf_min = min(cdf[v] for v in range(256) if hist[v])
+        denom = n - cdf_min  # 0 only for a constant raster
+        lut = [
+            (cdf[v] - cdf_min) * 255 // denom if hist[v] and denom else 0
+            for v in range(256)
         ]
+        eq = bytes(lut[v] for v in px)
+        n_levels_in = sum(1 for h in hist if h)
+        yield doc_id, n_levels_in, len(set(eq)), min(eq), max(eq), _hex_sha(eq)
+
+    return per_row(
+        attach_png_payload(spark, sf_dir),
+        _equalize,
+        _schema("doc_id n_levels_in n_levels_out eq_min eq_max eq_sha:string"),
+        _PAYLOAD,
     )
-
-    def _equalize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # self-contained closure: png_decode captured by value
-        import hashlib as _h
-
-        import pandas as _pd
-
-        dec = png_decode
-        for pdf in batches:
-            out = {
-                "doc_id": [],
-                "n_levels_in": [],
-                "n_levels_out": [],
-                "eq_min": [],
-                "eq_max": [],
-                "eq_sha": [],
-            }
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                px, _w, _h2, _ct = dec(bytes(payload))
-                n = len(px)
-                hist = [0] * 256
-                for v in px:
-                    hist[v] += 1
-                cdf = [0] * 256
-                acc = 0
-                for v in range(256):
-                    acc += hist[v]
-                    cdf[v] = acc
-                cdf_min = min(cdf[v] for v in range(256) if hist[v])
-                denom = n - cdf_min  # 0 only for a constant raster
-                lut = [
-                    (cdf[v] - cdf_min) * 255 // denom
-                    if hist[v] and denom
-                    else 0
-                    for v in range(256)
-                ]
-                eq = bytes(lut[v] for v in px)
-                out["doc_id"].append(doc_id)
-                out["n_levels_in"].append(sum(1 for h in hist if h))
-                out["n_levels_out"].append(len(set(eq)))
-                out["eq_min"].append(min(eq))
-                out["eq_max"].append(max(eq))
-                out["eq_sha"].append(_h.sha256(eq.hex().encode()).hexdigest())
-            yield _pd.DataFrame(out)
-
-    return attach_png_payload(spark, sf_dir).mapInPandas(_equalize, schema=schema)
 
 
 def multimodal_audio_quality_report(
@@ -2853,48 +1744,23 @@ def multimodal_audio_quality_report(
     form (counts ×16, peak = max over bytes, Σd ×16) — one wrong decoded
     byte anywhere breaks the compare. Same scale shape as the other
     codec queries: two narrow Arrow-batched stages, zero shuffle."""
-    from ..functions.wav_codec import wav_decode
 
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("n_samples", LongType()),
-            StructField("n_clipped", LongType()),
-            StructField("n_silent", LongType()),
-            StructField("peak_dev", LongType()),
-            StructField("dc_offset", LongType()),
-            StructField("clip_ppm", LongType()),
-            StructField("silence_ppm", LongType()),
-        ]
+    def _scan(doc_id, payload):
+        samples, _sr, _nch, _bits = wav_decode(bytes(payload))
+        devs = [s - 128 for s in samples]
+        n = len(devs)
+        n_clip = sum(1 for d in devs if abs(d) >= 96)
+        n_sil = sum(1 for d in devs if abs(d) <= 8)
+        yield (
+            doc_id, n, n_clip, n_sil, max(abs(d) for d in devs), sum(devs),
+            n_clip * 1_000_000 // n, n_sil * 1_000_000 // n,
+        )
+
+    schema = _schema(
+        "doc_id n_samples n_clipped n_silent peak_dev dc_offset clip_ppm"
+        " silence_ppm"
     )
-
-    def _scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # self-contained closure: wav_decode captured by value
-        import pandas as _pd
-
-        dec = wav_decode
-        for pdf in batches:
-            out = {k: [] for k in (
-                "doc_id", "n_samples", "n_clipped", "n_silent",
-                "peak_dev", "dc_offset", "clip_ppm", "silence_ppm",
-            )}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                samples, _sr, nch, _bits = dec(bytes(payload))
-                devs = [s - 128 for s in samples]
-                n = len(devs)
-                n_clip = sum(1 for d in devs if abs(d) >= 96)
-                n_sil = sum(1 for d in devs if abs(d) <= 8)
-                out["doc_id"].append(doc_id)
-                out["n_samples"].append(n)
-                out["n_clipped"].append(n_clip)
-                out["n_silent"].append(n_sil)
-                out["peak_dev"].append(max(abs(d) for d in devs))
-                out["dc_offset"].append(sum(devs))
-                out["clip_ppm"].append(n_clip * 1_000_000 // n)
-                out["silence_ppm"].append(n_sil * 1_000_000 // n)
-            yield _pd.DataFrame(out)
-
-    return attach_wav_payload(spark, sf_dir).mapInPandas(_scan, schema=schema)
+    return per_row(attach_wav_payload(spark, sf_dir), _scan, schema, _PAYLOAD)
 
 
 def image_text_dedup_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2966,6 +1832,25 @@ def image_text_dedup_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _resample_gray(px: bytes, sw: int, sh: int, ow: int, oh: int) -> bytes:
+    """The pinned :func:`resize_image` floor resample of a greyscale
+    raster already in hand: output ``(r, c)`` reads source
+    ``(r*sh DIV oh, c*sw DIV ow)``."""
+    return bytes(
+        px[(r * sh // oh) * sw + (c * sw // ow)] for r in range(oh) for c in range(ow)
+    )
+
+
+def _dhash_grid(g9: bytes) -> int:
+    """dHash of a 9x8 row-major grid, packed as a signed 64-bit BIGINT."""
+    sig = 0
+    for r in range(8):
+        for c in range(8):
+            if g9[r * 9 + c + 1] > g9[r * 9 + c]:
+                sig += 1 << (r * 8 + c)
+    return _signed64(sig)
+
+
 def image_dhash_resize_robustness(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -2991,60 +1876,20 @@ def image_dhash_resize_robustness(
     result: the audit exists to measure, not to flatter).
 
     Scale shape: two Arrow-batched stages, zero shuffle, doc-grain out."""
-    from ..functions.png_codec import png_decode
 
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("dhash_orig", LongType()),
-            StructField("dhash_resized", LongType()),
-            StructField("hamming", LongType()),
-        ]
+    def _audit(doc_id, payload):
+        px, w, h, _ct = png_decode(bytes(payload))
+        da = _dhash_grid(_resample_gray(px, w, h, 9, 8))
+        mid = _resample_gray(px, w, h, 12, 12)
+        db = _dhash_grid(_resample_gray(mid, 12, 12, 9, 8))
+        yield doc_id, da, db, bin((da ^ db) & ((1 << 64) - 1)).count("1")
+
+    return per_row(
+        attach_phash_payload(spark, sf_dir),
+        _audit,
+        _schema("doc_id dhash_orig dhash_resized hamming"),
+        _PAYLOAD,
     )
-    payloads = attach_phash_payload(spark, sf_dir)
-
-    def _audit(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # self-contained closure: png_decode captured by value; the
-        # resamples inline the pinned resize_image floor convention
-        import pandas as _pd
-
-        dec = png_decode
-
-        def resample(px, sw, sh, ow, oh):
-            return bytes(
-                px[(r * sh // oh) * sw + (c * sw // ow)]
-                for r in range(oh)
-                for c in range(ow)
-            )
-
-        def dhash(g9):  # 9x8 row-major grid -> packed signed 64-bit
-            sig = 0
-            for r in range(8):
-                for c in range(8):
-                    if g9[r * 9 + c + 1] > g9[r * 9 + c]:
-                        sig += 1 << (r * 8 + c)
-            return sig - (1 << 64) if sig >= 1 << 63 else sig
-
-        for pdf in batches:
-            out = {
-                "doc_id": [],
-                "dhash_orig": [],
-                "dhash_resized": [],
-                "hamming": [],
-            }
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                px, w, h, _ct = dec(bytes(payload))
-                g9a = resample(px, w, h, 9, 8)
-                mid = resample(px, w, h, 12, 12)
-                g9b = resample(mid, 12, 12, 9, 8)
-                da, db = dhash(g9a), dhash(g9b)
-                out["doc_id"].append(doc_id)
-                out["dhash_orig"].append(da)
-                out["dhash_resized"].append(db)
-                out["hamming"].append(bin((da ^ db) & ((1 << 64) - 1)).count("1"))
-            yield _pd.DataFrame(out)
-
-    return payloads.mapInPandas(_audit, schema=schema)
 
 
 def image_dhash_index_dedup_batch(
@@ -3108,74 +1953,60 @@ def image_dhash_index_dedup_batch(
     )
 
 
-def _build_dihedral_dhash():
-    """Builder for the dihedral-canonical dHash (VERDICT r11 item 3).
-    BUILDER-SCOPED like :func:`_build_resize` so the returned function
-    (and the PNG decoder in its closure cells) pickles BY VALUE into
-    python workers that never import this package."""
-    from ..functions.png_codec import png_decode
+def dihedral_dhash_unsigned(payload: bytes) -> tuple[int, int]:
+    """Canonical perceptual hash = MIN over the 8 dihedral-group
+    orientations (rotations + reflections of the SQUARE source
+    raster) of the unsigned 64-bit dHash — the orientation
+    invariance plain dHash lacks (the resize-robustness audit's
+    honest negative): hashing ``T_g(x)`` walks the same D4 orbit
+    ``{dhash(T_o(T_g(x)))} = {dhash(T_h(x))}``, so the min is
+    IDENTICAL for every rotated/flipped copy of an image, by group
+    closure — not approximately, exactly.
 
-    p_dec = png_decode
-
-    def dihedral_dhash_unsigned(payload: bytes) -> tuple[int, int]:
-        """Canonical perceptual hash = MIN over the 8 dihedral-group
-        orientations (rotations + reflections of the SQUARE source
-        raster) of the unsigned 64-bit dHash — the orientation
-        invariance plain dHash lacks (the resize-robustness audit's
-        honest negative): hashing ``T_g(x)`` walks the same D4 orbit
-        ``{dhash(T_o(T_g(x)))} = {dhash(T_h(x))}``, so the min is
-        IDENTICAL for every rotated/flipped copy of an image, by group
-        closure — not approximately, exactly.
-
-        Returns ``(canonical_unsigned_hash, argmin_orientation)`` with
-        ties broken by the smallest orientation index. Orientation maps
-        (transformed[R][C] = source[m_o(R, C)], n = size-1):
-        0 identity, 1 rot90cw (n-C, R), 2 rot180 (n-R, n-C),
-        3 rot270 (C, n-R), 4 flip-h (R, n-C), 5 flip-v (n-R, C),
-        6 transpose (C, R), 7 anti-transpose (n-C, n-R). The dHash per
-        orientation reads the pinned :func:`resize_image` floor resample
-        of the TRANSFORMED raster (src = (2r, 16c DIV 9) for the 9x8
-        grid) — pure index arithmetic, so the DuckDB oracle replays
-        every orientation closed-form."""
-        px, w, h, _ct = p_dec(payload)
-        if w != h:
-            raise ValueError(
-                "dihedral canonicalization needs a square raster; "
-                f"got {w}x{h}"
-            )
-        n = w - 1
-        maps = (
-            lambda R, C: (R, C),
-            lambda R, C: (n - C, R),
-            lambda R, C: (n - R, n - C),
-            lambda R, C: (C, n - R),
-            lambda R, C: (R, n - C),
-            lambda R, C: (n - R, C),
-            lambda R, C: (C, R),
-            lambda R, C: (n - C, n - R),
+    Returns ``(canonical_unsigned_hash, argmin_orientation)`` with
+    ties broken by the smallest orientation index. Orientation maps
+    (transformed[R][C] = source[m_o(R, C)], n = size-1):
+    0 identity, 1 rot90cw (n-C, R), 2 rot180 (n-R, n-C),
+    3 rot270 (C, n-R), 4 flip-h (R, n-C), 5 flip-v (n-R, C),
+    6 transpose (C, R), 7 anti-transpose (n-C, n-R). The dHash per
+    orientation reads the pinned :func:`resize_image` floor resample
+    of the TRANSFORMED raster (src = (2r, 16c DIV 9) for the 9x8
+    grid) — pure index arithmetic, so the DuckDB oracle replays
+    every orientation closed-form."""
+    px, w, h, _ct = png_decode(payload)
+    if w != h:
+        raise ValueError(
+            "dihedral canonicalization needs a square raster; "
+            f"got {w}x{h}"
         )
-        best = -1
-        best_o = 0
-        for o, m in enumerate(maps):
-            grid = []
-            for r in range(8):
-                sr = r * h // 8
-                for c in range(9):
-                    R, C = m(sr, c * w // 9)
-                    grid.append(px[R * w + C])
-            sig = 0
-            for r in range(8):
-                for c in range(8):
-                    if grid[r * 9 + c + 1] > grid[r * 9 + c]:
-                        sig |= 1 << (r * 8 + c)
-            if best < 0 or sig < best:
-                best, best_o = sig, o
-        return best, best_o
-
-    return dihedral_dhash_unsigned
-
-
-dihedral_dhash_unsigned = _build_dihedral_dhash()
+    n = w - 1
+    maps = (
+        lambda R, C: (R, C),
+        lambda R, C: (n - C, R),
+        lambda R, C: (n - R, n - C),
+        lambda R, C: (C, n - R),
+        lambda R, C: (R, n - C),
+        lambda R, C: (n - R, C),
+        lambda R, C: (C, R),
+        lambda R, C: (n - C, n - R),
+    )
+    best = -1
+    best_o = 0
+    for o, m in enumerate(maps):
+        grid = []
+        for r in range(8):
+            sr = r * h // 8
+            for c in range(9):
+                R, C = m(sr, c * w // 9)
+                grid.append(px[R * w + C])
+        sig = 0
+        for r in range(8):
+            for c in range(8):
+                if grid[r * 9 + c + 1] > grid[r * 9 + c]:
+                    sig |= 1 << (r * 8 + c)
+        if best < 0 or sig < best:
+            best, best_o = sig, o
+    return best, best_o
 
 
 def image_dhash_dihedral(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3195,35 +2026,17 @@ def image_dhash_dihedral(spark: SparkSession, sf_dir: str) -> DataFrame:
     same two narrow Arrow-batched stages as ``image_perceptual_hashes``
     — 8 fixed orientations multiply per-image CPU by a constant, never
     the row count; zero shuffle, doc-grain out."""
-    from pyspark.sql.types import LongType as _Long
 
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("dhash_canon", _Long()),
-            StructField("orientation", _Long()),
-        ]
+    def _hash(doc_id, payload):
+        u, o = dihedral_dhash_unsigned(bytes(payload))
+        yield doc_id, _signed64(u), o
+
+    return per_row(
+        attach_phash_payload(spark, sf_dir),
+        _hash,
+        _schema("doc_id dhash_canon orientation"),
+        _PAYLOAD,
     )
-    payloads = attach_phash_payload(spark, sf_dir)
-
-    def _hash(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # self-contained closure: dihedral_dhash_unsigned captured by
-        # value (builder-scoped, pickles with its codec cells)
-        import pandas as _pd
-
-        dd = dihedral_dhash_unsigned
-        for pdf in batches:
-            out = {"doc_id": [], "dhash_canon": [], "orientation": []}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                u, o = dd(bytes(payload))
-                out["doc_id"].append(doc_id)
-                out["dhash_canon"].append(
-                    u - (1 << 64) if u >= 1 << 63 else u
-                )
-                out["orientation"].append(o)
-            yield _pd.DataFrame(out)
-
-    return payloads.mapInPandas(_hash, schema=schema)
 
 
 def image_quadrant_dup_pairs(
@@ -3246,42 +2059,25 @@ def image_quadrant_dup_pairs(
     8-byte keys, one pair-grain aggregate. The signature frame is
     localCheckpoint'd (feeds both join sides — without it the codec
     chain runs twice, the dHash-pairs lesson)."""
-    from pyspark.sql.types import LongType as _Long
 
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("q", _Long()),
-            StructField("qsig", _Long()),
-        ]
-    )
-    payloads = attach_phash_payload(spark, sf_dir)
+    def _qhash(doc_id, payload):
+        px = resize_image(bytes(payload), 16, 16)  # identity resample = raster
+        for q in range(4):
+            qr, qc = q // 2, q % 2
+            sig = 0
+            for r in range(8):
+                base = (8 * qr + r) * 16 + 8 * qc
+                for c in range(7):
+                    if px[base + c + 1] > px[base + c]:
+                        sig |= 1 << (r * 7 + c)
+            yield doc_id, q, sig
 
-    def _qhash(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # self-contained closure: resize_image captured by value (its
-        # 16x16 identity resample IS the decoded raster)
-        import pandas as _pd
-
-        rz = resize_image
-
-        for pdf in batches:
-            out = {"doc_id": [], "q": [], "qsig": []}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                px = rz(bytes(payload), 16, 16)  # identity resample = raster
-                for q in range(4):
-                    qr, qc = q // 2, q % 2
-                    sig = 0
-                    for r in range(8):
-                        base = (8 * qr + r) * 16 + 8 * qc
-                        for c in range(7):
-                            if px[base + c + 1] > px[base + c]:
-                                sig |= 1 << (r * 7 + c)
-                    out["doc_id"].append(doc_id)
-                    out["q"].append(q)
-                    out["qsig"].append(sig)
-            yield _pd.DataFrame(out)
-
-    sigs = payloads.mapInPandas(_qhash, schema=schema).localCheckpoint()
+    sigs = per_row(
+        attach_phash_payload(spark, sf_dir),
+        _qhash,
+        _schema("doc_id q qsig"),
+        _PAYLOAD,
+    ).localCheckpoint()
     pairs = (
         sigs.alias("a")
         .join(

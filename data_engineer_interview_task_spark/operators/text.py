@@ -701,10 +701,10 @@ def chunk_documents_udtf(
     user-defined TABLE function fanning each document row out to its
     sliding-window chunks via a SQL ``LATERAL`` join.
 
-    Same contract rules as every Python seam here: the UDTF class is
-    defined INSIDE this function so cloudpickle ships it BY VALUE and the
-    Spark workers never import this package; parameters are captured as
-    plain ints. Emits the exact rows of the JVM-side operator (identical
+    Same contract rules as every Python seam here: the UDTF class ships
+    to the Spark workers by value (the package registers itself
+    pickle-by-value, so workers never import it); it is defined inside
+    this function to capture the parameters as plain ints. Emits the exact rows of the JVM-side operator (identical
     chunk ids, text, token counts), so it SHARES chunk_documents' DuckDB
     oracle and an equality test pins the twins together. The JVM
     sequence/explode/slice form remains the production path (codegen, no

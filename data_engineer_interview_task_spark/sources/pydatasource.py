@@ -9,9 +9,10 @@ own slice ON THE EXECUTORS, instead of the driver pulling everything and
 Demo source: a deterministic date spine (``format("date_spine")``) —
 trivially verifiable, which is the point: the test pins the partition
 protocol (N partitions, round-robin slices, exact union) rather than any
-interesting data. Classes are defined INSIDE the registering function so
-cloudpickle serializes them BY VALUE — python workers must not need this
-repo importable (the mapInPandas closure rule, same reason).
+interesting data. Python workers never import this repo: the package
+registers itself pickle-by-value (package ``__init__``), so the reader
+classes ship to the workers by value wherever they are defined. They sit
+inside the registering functions because each registration builds them.
 """
 
 from __future__ import annotations
@@ -79,9 +80,9 @@ def register_tick_stream_source(spark: SparkSession) -> None:
 
     Options: ``pages`` (default 4), ``rowsPerPage`` (default 32). Row
     values are ``int(md5(page|i)[:8], 16)`` folds, so a SQL oracle
-    rebuilds the whole feed from ``range()`` + the md5 hex fold. Classes
-    live inside this function so cloudpickle ships them BY VALUE (the
-    repo-wide python-worker rule)."""
+    rebuilds the whole feed from ``range()`` + the md5 hex fold. The
+    classes ship to the python workers by value (the package registers
+    itself pickle-by-value)."""
     from pyspark.sql.datasource import (
         DataSource,
         SimpleDataSourceStreamReader,
