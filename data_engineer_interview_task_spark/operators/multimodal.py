@@ -7,11 +7,13 @@ Image decode is REAL for PNG — greyscale and palette/PLTE shapes
 CRC-verified) — and for baseline JPEG in both its greyscale and
 interleaved YCbCr 4:4:4 color shapes (``functions/jpeg_codec.py`` —
 stream-parsed Huffman tables, byte-stuffed entropy decode, fixed-point
-integer IDCT, pinned integer color transforms). Audio decodes for real
-via ``functions/wav_codec.py``. Only shapes that genuinely need codec
-libraries absent from this container (video codecs, progressive JPEG)
-remain behind ``NotImplementedError``, with a deterministic fake decoder
-for plumbing tests. The testdata has no binary
+integer IDCT, pinned integer color transforms), for progressive (SOF2)
+greyscale JPEG in every scan shape (spectral selection, DC and AC
+successive approximation) and for GIF (``functions/gif_codec.py``).
+Audio decodes for real via ``functions/wav_codec.py``. Only shapes that
+genuinely need codec libraries absent from this container (video
+codecs) remain behind ``NotImplementedError``, with a deterministic
+fake decoder for plumbing tests. The testdata has no binary
 table, so ``attach_payload``/``attach_png_payload``/``attach_jpeg_payload``
 manufacture payload columns from ``documents.text`` to exercise the
 pipeline end-to-end on real container bytes.

@@ -16,6 +16,8 @@ pipeline's output schema byte-stable across fetches.
 
 from __future__ import annotations
 
+import tempfile
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
@@ -92,7 +94,7 @@ def run_trends_ingest(
     return trends_pipeline(wide, week_start, week_end, terms)
 
 
-def schema_evolution_read(spark: SparkSession, sf_dir: str, work_dir: str) -> DataFrame:
+def schema_evolution_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Schema-evolution round trip: two parquet batches written under ONE
     table root with different schemas (v2 adds a ``lang`` column), read
     back with ``mergeSchema`` — the append-only column-add evolution every
@@ -103,20 +105,22 @@ def schema_evolution_read(spark: SparkSession, sf_dir: str, work_dir: str) -> Da
     output carries md5 fingerprints so the result is narrow and has a
     closed-form oracle. SCALE: mergeSchema unions footers at planning
     time — the data itself is NOT rewritten, and column pruning still
-    reaches both file groups.
+    reaches both file groups. Oracle = the UNION ALL the merged scan must
+    be equivalent to. The table root is a temporary directory:
+    the merged read is materialized into a local checkpoint before the
+    directory is removed.
     """
     from pyspark.sql import functions as F
 
     from .parquet import read_table
 
     docs = read_table(spark, sf_dir, "documents")
-    docs.select("doc_id", "text").write.mode("overwrite").parquet(
-        f"{work_dir}/evo/batch=v1"
-    )
-    docs.select(
-        (F.col("doc_id") + F.lit(10000000)).alias("doc_id"), "text", "lang"
-    ).write.mode("overwrite").parquet(f"{work_dir}/evo/batch=v2")
-    merged = spark.read.option("mergeSchema", "true").parquet(f"{work_dir}/evo")
-    return merged.select(
-        "doc_id", "lang", F.md5(F.col("text").cast("binary")).alias("fp")
-    )
+    with tempfile.TemporaryDirectory(prefix="schema_evo_") as root:
+        docs.select("doc_id", "text").write.parquet(f"{root}/batch=v1")
+        docs.select(
+            (F.col("doc_id") + F.lit(10000000)).alias("doc_id"), "text", "lang"
+        ).write.parquet(f"{root}/batch=v2")
+        merged = spark.read.option("mergeSchema", "true").parquet(root)
+        return merged.select(
+            "doc_id", "lang", F.md5(F.col("text").cast("binary")).alias("fp")
+        ).localCheckpoint(eager=True)

@@ -13,11 +13,21 @@ interesting data. Python workers never import this repo: the package
 registers itself pickle-by-value (package ``__init__``), so the reader
 classes ship to the workers by value wherever they are defined. They sit
 inside the registering functions because each registration builds them.
+
+Streaming demo: a paged tick feed (``format("tick_stream")``) whose one
+``read`` returns every page not yet delivered, so both of its harnesses
+run on the availableNow trigger — the per-page rollup through the one
+runner (``streaming.util.run_to_memory``), and the checkpoint-restart
+harness through a parquet file sink in a scratch directory of its own.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession
+import hashlib
+import tempfile
+
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 
 def register_date_spine_source(spark: SparkSession) -> None:
@@ -70,10 +80,14 @@ def register_tick_stream_source(spark: SparkSession) -> None:
     Spark-4 ``SimpleDataSourceStreamReader`` seam (the streaming half of
     the DataSource API next to the batch ``date_spine`` above): a
     deterministic paged tick feed whose offset is the page number. Each
-    ``read(start)`` emits one page of md5-derived rows and advances the
-    offset; past the last page it returns an empty iterator with the
-    SAME offset, so the stream reports caught-up and
-    ``processAllAvailable`` terminates deterministically.
+    ``read(start)`` emits every page from ``start`` up to ``pages`` as
+    md5-derived rows and returns the end offset ``{page: pages}``; at the
+    last page it returns an empty iterator with the SAME offset, so the
+    stream reports caught-up. Returning everything available in one read
+    is what an availableNow trigger needs: pyspark's simple-reader
+    wrapper calls ``read`` once in ``latestOffset``, and availableNow
+    fixes its end offset from that one call, so a reader that returned
+    one page per call would end the run after the first page.
     ``readBetweenOffsets`` regenerates any committed page range
     bit-identically — the replay contract that makes checkpoint recovery
     exactly-once for a generated feed.
@@ -100,14 +114,12 @@ def register_tick_stream_source(spark: SparkSession) -> None:
             # a LIST, not a generator: the wrapper pickles prefetched
             # rows into the offset log for replay, and generators
             # don't pickle
-            import hashlib as _h
-
             return [
                 (
                     p,
                     i,
                     int(
-                        _h.md5(f"{p}|{i}".encode()).hexdigest()[:8], 16
+                        hashlib.md5(f"{p}|{i}".encode()).hexdigest()[:8], 16
                     )
                     % 1000,
                 )
@@ -118,7 +130,8 @@ def register_tick_stream_source(spark: SparkSession) -> None:
             p = int(start["page"])
             if p >= self.pages:
                 return iter([]), start
-            return iter(self._page_rows(p)), {"page": p + 1}
+            end = {"page": self.pages}
+            return self.readBetweenOffsets(start, end), end
 
         def readBetweenOffsets(self, start, end):
             out = []
@@ -140,50 +153,37 @@ def register_tick_stream_source(spark: SparkSession) -> None:
     spark.dataSource.register(TickStreamDataSource)
 
 
-def run_tick_stream_rollup_once(spark: SparkSession, work_dir: str):
-    """Harness: stream the ``tick_stream`` source through a per-page
-    rollup (complete-mode memory sink) and return the drained batch
-    frame. The feed is finite (4 pages), so ``processAllAvailable``
-    blocks until every page is read and aggregated — no polling loops,
-    no timing sensitivity; the custom source paces itself one page per
-    micro-batch through the offset protocol. Shuffle partitions are
-    narrowed for the run (per-batch state-commit cost — the streaming
-    harness profile), opened before the checkpoint is created so the
-    window binds this query only."""
-    import uuid
-
-    from pyspark.sql import functions as F
-
-    from ..streaming.util import (
-        drain_memory_sink,
-        shuffle_partitions,
-        state_partitions,
+def _page_rollup(frame: DataFrame) -> DataFrame:
+    """Per-page (n_rows, sum_v, min_v, max_v) of a tick frame."""
+    return frame.groupBy("page").agg(
+        F.count(F.lit(1)).cast("long").alias("n_rows"),
+        F.sum("v").cast("long").alias("sum_v"),
+        F.min("v").cast("long").alias("min_v"),
+        F.max("v").cast("long").alias("max_v"),
     )
 
+
+def run_tick_stream_rollup_once(spark: SparkSession) -> DataFrame:
+    """Harness: stream the ``tick_stream`` source through a per-page
+    rollup (complete-mode memory sink) on the one availableNow runner
+    (``streaming.util.run_to_memory``) and return the drained batch
+    frame. The feed is finite (4 pages) and one read delivers every
+    page, so the run is one data batch — no polling loops, no timing
+    sensitivity. The state-store partition count is the floor
+    (``state_partitions`` with no source: the feed's state is one row
+    per page)."""
+    from ..streaming.util import run_to_memory, state_partitions
+
     register_tick_stream_source(spark)
-    sink = f"mem_ticks_{uuid.uuid4().hex[:8]}"
-    with shuffle_partitions(spark, state_partitions(spark)):
-        stream = spark.readStream.format("tick_stream").load()
-        agg = stream.groupBy("page").agg(
-            F.count(F.lit(1)).cast("long").alias("n_rows"),
-            F.sum("v").cast("long").alias("sum_v"),
-            F.min("v").cast("long").alias("min_v"),
-            F.max("v").cast("long").alias("max_v"),
-        )
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .option("checkpointLocation", f"{work_dir}/ckpt_{sink}")
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-        q.awaitTermination()
-    return drain_memory_sink(spark, sink)
+    return run_to_memory(
+        spark,
+        _page_rollup(spark.readStream.format("tick_stream").load()),
+        output_mode="complete",
+        partitions=state_partitions(spark),
+    )
 
 
-def run_tick_stream_restart_once(spark: SparkSession, work_dir: str):
+def run_tick_stream_restart_once(spark: SparkSession) -> DataFrame:
     """CHECKPOINT-RESTART CONTINUITY for the streaming Python DataSource
     — the recovery half of the offset contract ``readBetweenOffsets``
     exists for. Run 1 streams a 3-page feed into a parquet FILE sink
@@ -194,39 +194,29 @@ def run_tick_stream_restart_once(spark: SparkSession, work_dir: str):
     ``readBetweenOffsets`` (bit-identical regeneration) and resumes at
     the committed offset — pages 0-2 are NOT re-emitted, pages 3-5
     append exactly once (the file sink's ``_spark_metadata`` commit log
-    fences duplicates). The returned frame is the per-page batch rollup
-    of the sink directory; the oracle rebuilds the full 6-page feed
-    arithmetically, so a duplicate or a hole from a broken recovery
-    hash-mismatches, not just row-counts."""
-    from pyspark.sql import functions as F
-
+    fences duplicates). Both runs use the availableNow trigger. The
+    returned frame is the per-page batch rollup of the sink directory,
+    materialized into a local checkpoint before the run's scratch dir
+    (checkpoint and sink) is removed; the oracle rebuilds the full
+    6-page feed arithmetically, so a duplicate or a hole from a broken
+    recovery hash-mismatches, not just row-counts."""
     from ..streaming.util import shuffle_partitions, state_partitions
 
     register_tick_stream_source(spark)
-    out = f"{work_dir}/out"
-    ckpt = f"{work_dir}/ckpt"
-    with shuffle_partitions(spark, state_partitions(spark)):
-        for pages in (3, 6):
-            q = (
-                spark.readStream.format("tick_stream")
-                .option("pages", str(pages))
-                .load()
-                .writeStream.format("parquet")
-                .option("path", out)
-                .option("checkpointLocation", ckpt)
-                .outputMode("append")
-                .start()
-            )
-            q.processAllAvailable()
-            q.stop()
-            q.awaitTermination()
-        return (
-            spark.read.parquet(out)
-            .groupBy("page")
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n_rows"),
-                F.sum("v").cast("long").alias("sum_v"),
-                F.min("v").cast("long").alias("min_v"),
-                F.max("v").cast("long").alias("max_v"),
-            )
-        )
+    with tempfile.TemporaryDirectory(prefix="tick_restart_") as scratch:
+        out, ckpt = f"{scratch}/out", f"{scratch}/ckpt"
+        with shuffle_partitions(spark, state_partitions(spark)):
+            for pages in (3, 6):
+                (
+                    spark.readStream.format("tick_stream")
+                    .option("pages", str(pages))
+                    .load()
+                    .writeStream.format("parquet")
+                    .option("path", out)
+                    .option("checkpointLocation", ckpt)
+                    .outputMode("append")
+                    .trigger(availableNow=True)
+                    .start()
+                    .awaitTermination()
+                )
+        return _page_rollup(spark.read.parquet(out)).localCheckpoint(eager=True)

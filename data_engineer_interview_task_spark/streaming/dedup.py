@@ -36,9 +36,7 @@ def first_events_stream(
     )
 
 
-def run_first_events_once(
-    spark: SparkSession, sf_dir: str, work_dir: str
-) -> DataFrame:
+def run_first_events_once(spark: SparkSession, sf_dir: str) -> DataFrame:
     """availableNow harness: stream the events table through the dedup and
     return the emitted keys as a batch DataFrame (same pattern as
     ``run_weekly_rollup_once``)."""
@@ -47,7 +45,6 @@ def run_first_events_once(
     return run_to_memory(
         spark,
         first_events_stream(spark, src),
-        work_dir,
         output_mode="append",
         partitions=state_partitions(spark, src),
     )
@@ -79,7 +76,6 @@ def first_events_stream_bounded(
 def run_first_events_bounded_once(
     spark: SparkSession,
     sf_dir: str,
-    work_dir: str,
     watermark: str = "30 days",
 ) -> DataFrame:
     """availableNow harness for the bounded-state dedup (same pattern as
@@ -89,7 +85,6 @@ def run_first_events_bounded_once(
     return run_to_memory(
         spark,
         first_events_stream_bounded(spark, src, watermark),
-        work_dir,
         output_mode="append",
         partitions=state_partitions(spark, src),
     )
@@ -138,16 +133,13 @@ def dedup_then_rollup_stream(
     )
 
 
-def run_dedup_then_rollup_once(
-    spark: SparkSession, sf_dir: str, work_dir: str
-) -> DataFrame:
+def run_dedup_then_rollup_once(spark: SparkSession, sf_dir: str) -> DataFrame:
     """availableNow harness (complete mode -> every window emitted)."""
     prep_session(spark)
     src = staged_events(spark, sf_dir, "plain")
     return run_to_memory(
         spark,
         dedup_then_rollup_stream(spark, src),
-        work_dir,
         output_mode="complete",
         partitions=state_partitions(spark, src),
     )

@@ -99,20 +99,22 @@ def click_purchase_stream_join(
 
 
 def run_click_purchase_join_once(
-    spark: SparkSession, sf_dir: str, work_dir: str
+    spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """availableNow harness for the stream-stream join. Runs under the
     volume-derived state-store partition count (r13 — the inner join
     keeps the same four state instances per partition as the outer
     forms, so it pays the identical per-partition commit cost the r12
     profile measured; A/B at sf0.1: 7.9s at the session's 32
-    partitions → 2.2s sized to state volume, identical rows)."""
+    partitions → 2.2s sized to state volume, identical rows). The
+    availableNow emitted pair set is deterministic, so the oracle is
+    the batch-twin SQL; tests/test_streaming_join.py additionally proves
+    pair-equality with the batch DataFrame twin."""
     prep_session(spark)
     src = staged_events(spark, sf_dir, "plain")
     return run_to_memory(
         spark,
         click_purchase_stream_join(spark, src),
-        work_dir,
         output_mode="append",
         partitions=state_partitions(spark, src),
     )
@@ -143,7 +145,7 @@ def click_purchase_left_join(
     )
 
 
-def _run_outer_join_once(spark, sf_dir, work_dir, builder) -> DataFrame:
+def _run_outer_join_once(spark, sf_dir, builder) -> DataFrame:
     """Shared availableNow harness for the OUTER stream-stream joins,
     making the emission COMPLETE and therefore equal to the batch join
     (the oracle):
@@ -171,7 +173,6 @@ def _run_outer_join_once(spark, sf_dir, work_dir, builder) -> DataFrame:
     return run_to_memory(
         spark,
         builder(spark, src, max_files_per_trigger=1),
-        work_dir,
         output_mode="append",
         partitions=state_partitions(spark, src),
     ).filter(F.col("user_id") >= 0)
@@ -218,7 +219,7 @@ def click_purchase_join_rollup(
 
 
 def run_click_purchase_join_rollup_once(
-    spark: SparkSession, sf_dir: str, work_dir: str
+    spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """availableNow harness for the chained join→rollup — the
     :func:`_run_outer_join_once` flush protocol (one sentinel per side
@@ -227,24 +228,24 @@ def run_click_purchase_join_rollup_once(
     day reaches the rollup and nothing needs post-filtering — a
     ``user_id >= 0`` filter would be pushed through the join to both
     scans and footer-stats-prune the sentinel file, stranding the
-    watermark: the documented lesson)."""
+    watermark: the documented lesson). The flush protocol makes the
+    emission complete, so the oracle is the batch join + day rollup."""
     prep_session(spark)
     src = staged_events(spark, sf_dir, "flushed")
     return run_to_memory(
         spark,
         click_purchase_join_rollup(spark, src, max_files_per_trigger=1),
-        work_dir,
         output_mode="append",
         partitions=state_partitions(spark, src),
     )
 
 
 def run_click_purchase_left_join_once(
-    spark: SparkSession, sf_dir: str, work_dir: str
+    spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """availableNow harness for the LEFT OUTER stream-stream join — see
     :func:`_run_outer_join_once` for the flush/completeness protocol."""
-    return _run_outer_join_once(spark, sf_dir, work_dir, click_purchase_left_join)
+    return _run_outer_join_once(spark, sf_dir, click_purchase_left_join)
 
 
 def click_purchase_full_join(
@@ -275,11 +276,11 @@ def click_purchase_full_join(
 
 
 def run_click_purchase_full_join_once(
-    spark: SparkSession, sf_dir: str, work_dir: str
+    spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """availableNow harness for the FULL OUTER stream-stream join — see
     :func:`_run_outer_join_once` for the flush/completeness protocol."""
-    return _run_outer_join_once(spark, sf_dir, work_dir, click_purchase_full_join)
+    return _run_outer_join_once(spark, sf_dir, click_purchase_full_join)
 
 
 def stream_static_enrich(
@@ -331,14 +332,14 @@ def stream_static_enrich(
 
 
 def run_stream_static_enrich_once(
-    spark: SparkSession, sf_dir: str, work_dir: str
+    spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """availableNow harness: emitted rows == the batch left join, exactly
     (stateless — every stream row passes through once)."""
     prep_session(spark)
     src = staged_events(spark, sf_dir, "plain")
     return run_to_memory(
-        spark, stream_static_enrich(spark, src, sf_dir), work_dir, output_mode="append"
+        spark, stream_static_enrich(spark, src, sf_dir), output_mode="append"
     )
 
 
@@ -374,7 +375,7 @@ def click_purchase_semi_join(
 
 
 def run_click_purchase_semi_join_once(
-    spark: SparkSession, sf_dir: str, work_dir: str
+    spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """availableNow harness for the stream-stream LEFT SEMI join. Runs
     under the same reduced state-store partition count as the outer-join
@@ -387,7 +388,6 @@ def run_click_purchase_semi_join_once(
     return run_to_memory(
         spark,
         click_purchase_semi_join(spark, src),
-        work_dir,
         output_mode="append",
         partitions=state_partitions(spark, src),
     )

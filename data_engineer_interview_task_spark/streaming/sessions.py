@@ -24,6 +24,7 @@ session must eventually emit: it adds an event-time timeout at
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming.state import GroupStateTimeout
 from pyspark.sql.types import (
@@ -61,16 +62,12 @@ STATE_SCHEMA = StructType(
 
 
 def _sessionize_fn(gap_minutes: int):
-    """Build the per-group stateful function. Self-contained closure over
-    plain ints only — Spark workers must not need this package on their
-    import path."""
+    """Build the per-group stateful function for a ``gap_minutes`` gap."""
     gap_us = gap_minutes * 60 * 1_000_000
 
     def fn(key, pdfs, state):
-        import pandas as _pd
-
         (user_id,) = key
-        events = _pd.concat(list(pdfs), ignore_index=True)
+        events = pd.concat(list(pdfs), ignore_index=True)
         events = events.sort_values(["ts", "event_id"])
         ts_us = (events["ts"].astype("int64") // 1000).tolist()
         vals = events["value"].tolist()
@@ -94,11 +91,11 @@ def _sessionize_fn(gap_minutes: int):
 
         state.update((start_us, last_us, n, vsum))
         if closed:
-            yield _pd.DataFrame(
+            yield pd.DataFrame(
                 {
                     "user_id": [user_id] * len(closed),
-                    "session_start": _pd.to_datetime([c[0] for c in closed], unit="us"),
-                    "session_end": _pd.to_datetime([c[1] for c in closed], unit="us"),
+                    "session_start": pd.to_datetime([c[0] for c in closed], unit="us"),
+                    "session_end": pd.to_datetime([c[1] for c in closed], unit="us"),
                     "n_events": [c[2] for c in closed],
                     "total_value": [c[3] for c in closed],
                 }
@@ -130,22 +127,20 @@ def _sessionize_flush_fn(gap_minutes: int):
     """Per-group stateful function for the WATERMARK-FLUSHING variant:
     same gap logic, plus an event-time timeout at (last event + gap) so
     the open session is emitted once the watermark proves no in-gap event
-    can still arrive. Self-contained closure (plain ints only)."""
+    can still arrive."""
     gap_us = gap_minutes * 60 * 1_000_000
 
     def fn(key, pdfs, state):
-        import pandas as _pd
-
         (user_id,) = key
 
         def frame(sessions):
-            return _pd.DataFrame(
+            return pd.DataFrame(
                 {
                     "user_id": [user_id] * len(sessions),
-                    "session_start": _pd.to_datetime(
+                    "session_start": pd.to_datetime(
                         [s[0] for s in sessions], unit="us"
                     ),
-                    "session_end": _pd.to_datetime(
+                    "session_end": pd.to_datetime(
                         [s[1] for s in sessions], unit="us"
                     ),
                     "n_events": [s[2] for s in sessions],
@@ -161,7 +156,7 @@ def _sessionize_flush_fn(gap_minutes: int):
             yield frame([(start_us, last_us, n, vsum)])
             return
 
-        events = _pd.concat(list(pdfs), ignore_index=True)
+        events = pd.concat(list(pdfs), ignore_index=True)
         events = events.sort_values(["ts", "event_id"])
         ts_us = (events["ts"].astype("int64") // 1000).tolist()
         vals = events["value"].tolist()
@@ -218,16 +213,19 @@ def sessionize_stream_flushing(
 
 
 def run_sessionize_once(
-    spark: SparkSession, sf_dir: str, work_dir: str, gap_minutes: int = 30
+    spark: SparkSession, sf_dir: str, gap_minutes: int = 30
 ) -> DataFrame:
     """availableNow harness: run the stateful sessionizer over the events
-    table once and return the emitted (closed) sessions as a batch frame."""
+    table once and return the emitted (closed) sessions as a batch frame.
+    Under availableNow the emitted (closed-session) set is
+    batch-deterministic, so the DuckDB twin hash-matches; the
+    batch-equivalence property is additionally pinned by
+    tests/test_streaming_sessions.py."""
     prep_session(spark)
     src = staged_events(spark, sf_dir, "plain")
     return run_to_memory(
         spark,
         sessionize_stream(spark, src, gap_minutes),
-        work_dir,
         output_mode="append",
     )
 
@@ -273,17 +271,18 @@ def session_window_stream(
 
 
 def run_session_window_once(
-    spark: SparkSession, sf_dir: str, work_dir: str, gap_minutes: int = 30
+    spark: SparkSession, sf_dir: str, gap_minutes: int = 30
 ) -> DataFrame:
     """availableNow harness for the built-in session-window aggregation
     (complete output mode -> every session appears, making the emitted
     set batch-deterministic and therefore oracle-checkable; the 31-day
-    watermark exceeds the fixture's 30-day span so no event is late)."""
+    watermark exceeds the fixture's 30-day span so no event is late). The
+    oracle is the same lag/cumsum island SQL as the batch
+    ``session_window_rollup``."""
     prep_session(spark)
     src = staged_events(spark, sf_dir, "plain")
     return run_to_memory(
         spark,
         session_window_stream(spark, src, gap_minutes),
-        work_dir,
         output_mode="complete",
     )

@@ -34,6 +34,7 @@ key across executors (RocksDB-backed in production).
 from __future__ import annotations
 
 from collections.abc import Iterator
+from decimal import ROUND_HALF_UP, Decimal
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -80,8 +81,6 @@ class RunningUserStats(StatefulProcessor):
     def handleInputRows(
         self, key, rows: Iterator[pd.DataFrame], timerValues
     ) -> Iterator[pd.DataFrame]:
-        from decimal import ROUND_HALF_UP, Decimal
-
         cnt, cents, seq = (
             tuple(self._state.get()) if self._state.exists() else (0, 0, 0)
         )
@@ -143,8 +142,7 @@ def transform_with_state_available() -> bool:
 
 def running_user_stats_stream_gs(spark: SparkSession, source_dir: str) -> DataFrame:
     """The same running fold on ``applyInPandasWithState`` (GroupState) —
-    the arbitrary-stateful API available everywhere today. Self-contained
-    closure: Spark's Python workers never import this package."""
+    the arbitrary-stateful API available everywhere today."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     stream = spark.readStream.schema("user_id BIGINT, value DOUBLE").option(
@@ -152,10 +150,6 @@ def running_user_stats_stream_gs(spark: SparkSession, source_dir: str) -> DataFr
     ).parquet(source_dir)
 
     def fold(key, pdfs, state):
-        from decimal import ROUND_HALF_UP, Decimal
-
-        import pandas as _pd
-
         cnt, cents, seq = state.get if state.exists else (0, 0, 0)
         q = Decimal("0.01")
         for pdf in pdfs:
@@ -166,7 +160,7 @@ def running_user_stats_stream_gs(spark: SparkSession, source_dir: str) -> DataFr
             )
         seq += 1
         state.update((cnt, cents, seq))
-        yield _pd.DataFrame(
+        yield pd.DataFrame(
             {
                 "user_id": [key[0]],
                 "n_events": [cnt],
@@ -237,7 +231,6 @@ FINAL_SCHEMA = StructType(
 def run_running_user_stats_once(
     spark: SparkSession,
     sf_dir: str,
-    work_dir: str,
     use_transform_with_state: bool = False,
 ) -> DataFrame:
     """availableNow harness over a TWO-file split of the events table
@@ -255,7 +248,7 @@ def run_running_user_stats_once(
         else running_user_stats_stream_gs
     )
     emitted = run_to_memory(
-        spark, stream_fn(spark, src), work_dir, output_mode="append"
+        spark, stream_fn(spark, src), output_mode="append"
     )
     return _last_emission(emitted).select(
         "user_id",
@@ -289,8 +282,7 @@ def user_ewma_stream_gs(spark: SparkSession, source_dir: str) -> DataFrame:
     sequence equals the batch ``F.aggregate`` fold's, so the LAST emission
     per user is bit-identical to ``relational.user_value_ewma`` — one
     oracle serves the batch operator, the streaming operator, and the
-    DuckDB twin. State is (acc, n, seq) per user, entity-bounded.
-    Self-contained closure: workers never import this package."""
+    DuckDB twin. State is (acc, n, seq) per user, entity-bounded."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     stream = (
@@ -302,16 +294,14 @@ def user_ewma_stream_gs(spark: SparkSession, source_dir: str) -> DataFrame:
     )
 
     def fold(key, pdfs, state):
-        import pandas as _pd
-
         acc, n, seq = state.get if state.exists else (0.0, 0, 0)
-        rows = _pd.concat(list(pdfs)).sort_values(["ts", "event_id"])
+        rows = pd.concat(list(pdfs)).sort_values(["ts", "event_id"])
         for v in rows["value"]:
             acc = float(v) if n == 0 else (acc + float(v)) / 2.0
             n += 1
         seq += 1
         state.update((acc, n, seq))
-        yield _pd.DataFrame(
+        yield pd.DataFrame(
             {
                 "user_id": [key[0]],
                 "n_events": [n],
@@ -329,9 +319,7 @@ def user_ewma_stream_gs(spark: SparkSession, source_dir: str) -> DataFrame:
     )
 
 
-def run_user_ewma_once(
-    spark: SparkSession, sf_dir: str, work_dir: str
-) -> DataFrame:
+def run_user_ewma_once(spark: SparkSession, sf_dir: str) -> DataFrame:
     """availableNow harness: the events table split at a time cutoff into
     two files (maxFilesPerTrigger=1 ⇒ two micro-batches in time order —
     the cross-batch recurrence is genuinely exercised); the final answer
@@ -341,6 +329,6 @@ def run_user_ewma_once(
         spark, sf_dir, "events_split_ewma", ("user_id", "event_id", "ts", "value")
     )
     emitted = run_to_memory(
-        spark, user_ewma_stream_gs(spark, src), work_dir, output_mode="append"
+        spark, user_ewma_stream_gs(spark, src), output_mode="append"
     )
     return _last_emission(emitted).select("user_id", "n_events", "ewma_value")

@@ -3,13 +3,14 @@ staged sources that feed it.
 
 A ``run_*_once`` harness builds its streaming frame and hands it to
 :func:`run_to_memory`, which owns the whole query lifecycle: sink name,
-checkpoint path, the availableNow trigger, the wait, the optional
-state-store partition window (:func:`shuffle_partitions`), cleanup on
-failure, and the drain. The drain matters in a shared session
-(correctness sweeps, bench.py, check_oracle): a memory sink keeps
-its rows in a driver-held buffer behind a temp view for the life of the
-session, and left alive those buffers accumulate into GC pressure that
-inflates UNRELATED queries' wall time (measured: streaming_session_window
+the checkpoint (in a temporary directory that lives only for the run),
+the availableNow trigger, the wait, the optional state-store partition
+window (:func:`shuffle_partitions`), cleanup on failure, and the drain.
+The drain matters in a shared session (correctness sweeps, bench.py,
+check_oracle): a memory sink keeps its rows in a driver-held buffer
+behind a temp view for the life of the session, and left alive those
+buffers accumulate into GC pressure that inflates UNRELATED queries'
+wall time (measured: streaming_session_window
 3.6s in a fresh session vs 31s late in a 12-run session). A failing
 micro-batch must leave nothing behind either: the runner stops the query
 and drops the sink view before re-raising.
@@ -23,6 +24,7 @@ pipeline from them against a fresh checkpoint.
 from __future__ import annotations
 
 import os
+import tempfile
 import uuid
 from contextlib import contextmanager, nullcontext
 
@@ -104,39 +106,41 @@ def shuffle_partitions(spark: SparkSession, n: str):
 def run_to_memory(
     spark: SparkSession,
     frame: DataFrame,
-    work_dir: str,
     *,
     output_mode: str,
     partitions: str | None = None,
 ) -> DataFrame:
     """Run the streaming ``frame`` to completion (availableNow) into a
-    fresh memory sink checkpointed under ``work_dir`` and return the
-    drained rows (see :func:`drain_memory_sink`). ``partitions``, when
-    given, is the state-store partition count the query runs under
-    (:func:`shuffle_partitions`). If the query fails, it is stopped and
+    fresh memory sink and return the drained rows (see
+    :func:`drain_memory_sink`). ``partitions``, when given, is the
+    state-store partition count the query runs under
+    (:func:`shuffle_partitions`). The checkpoint lives in a temporary
+    directory that is removed once the drain has moved the rows out, or
+    as soon as the query fails. If the query fails, it is stopped and
     its sink view dropped before the error propagates."""
     sink = f"mem_{uuid.uuid4().hex[:12]}"
     window = nullcontext() if partitions is None else shuffle_partitions(
         spark, partitions
     )
-    with window:
-        q = None
-        try:
-            q = (
-                frame.writeStream.format("memory")
-                .queryName(sink)
-                .outputMode(output_mode)
-                .option("checkpointLocation", f"{work_dir}/ckpt_{sink}")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        except BaseException:
-            if q is not None:
-                q.stop()
-            spark.catalog.dropTempView(sink)
-            raise
-    return drain_memory_sink(spark, sink)
+    with tempfile.TemporaryDirectory(prefix="stream_") as scratch:
+        with window:
+            q = None
+            try:
+                q = (
+                    frame.writeStream.format("memory")
+                    .queryName(sink)
+                    .outputMode(output_mode)
+                    .option("checkpointLocation", f"{scratch}/ckpt_{sink}")
+                    .trigger(availableNow=True)
+                    .start()
+                )
+                q.awaitTermination()
+            except BaseException:
+                if q is not None:
+                    q.stop()
+                spark.catalog.dropTempView(sink)
+                raise
+        return drain_memory_sink(spark, sink)
 
 
 def drain_memory_sink(spark: SparkSession, sink: str) -> DataFrame:

@@ -104,37 +104,34 @@ def sliding_rollup_stream(
     )
 
 
-def run_sliding_rollup_once(
-    spark: SparkSession, sf_dir: str, work_dir: str
-) -> DataFrame:
+def run_sliding_rollup_once(spark: SparkSession, sf_dir: str) -> DataFrame:
     """availableNow harness for the sliding rollup (complete output mode →
     every window appears, making the emitted set batch-deterministic and
-    therefore oracle-checkable)."""
+    therefore oracle-checkable). Each event contributes to 7 overlapping
+    epoch-aligned windows; the DuckDB oracle replicates the membership by
+    exploding 7 day-offsets per event with integer epoch arithmetic."""
     prep_session(spark)
     src = staged_events(spark, sf_dir, "plain")
     return run_to_memory(
         spark,
         sliding_rollup_stream(spark, src),
-        work_dir,
         output_mode="complete",
         partitions=state_partitions(spark, src),
     )
 
 
-def run_weekly_rollup_once(
-    spark: SparkSession, sf_dir: str, work_dir: str
-) -> DataFrame:
+def run_weekly_rollup_once(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Run the streaming rollup over the events table with an
     ``availableNow`` trigger (process-everything-then-stop) into a memory
     sink, returning the batch result — the deterministic test harness for
-    the streaming path. ``work_dir`` holds the micro-batch source files and
-    checkpoint."""
+    the streaming path. Fully oracle-checked: window("7 days") tumbling
+    buckets are EPOCH-aligned, which DuckDB replicates exactly with
+    epoch_us integer arithmetic."""
     prep_session(spark)
     src = staged_events(spark, sf_dir, "plain")
     return run_to_memory(
         spark,
         weekly_rollup_stream(spark, src),
-        work_dir,
         output_mode="complete",
         partitions=state_partitions(spark, src),
     )
@@ -167,9 +164,7 @@ def bitmap_distinct_stream(
     )
 
 
-def run_bitmap_distinct_once(
-    spark: SparkSession, sf_dir: str, work_dir: str
-) -> DataFrame:
+def run_bitmap_distinct_once(spark: SparkSession, sf_dir: str) -> DataFrame:
     """availableNow harness for the streaming bitmap sketch: run the
     stream to completion, then popcount-roll the drained sketch to the
     exact weekly distinct-user counts. Oracle = the plain batch
@@ -184,7 +179,6 @@ def run_bitmap_distinct_once(
     sketch = run_to_memory(
         spark,
         bitmap_distinct_stream(spark, src),
-        work_dir,
         output_mode="complete",
         partitions=state_partitions(spark, src),
     )

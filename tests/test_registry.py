@@ -15,6 +15,7 @@ CORRECTNESS_r*.json round) is fully green, or is the designed rows-only
 from __future__ import annotations
 
 import glob
+import inspect
 import json
 import os
 import re
@@ -94,6 +95,17 @@ def test_oracle_names_match_registry():
     registry = set(entry.queries())
     oracles = set(entry.oracle_sql())
     assert oracles <= registry, f"orphan oracles: {sorted(oracles - registry)}"
+
+
+def test_registry_calls_harnesses_directly():
+    """Every registry entry is called as ``fn(spark, sf_dir)``: the
+    registry hands a harness nothing else, so no entry may need a
+    scratch ``work_dir`` — a run owns its scratch."""
+    spark, sf_dir = object(), entry.SF0001
+    for name, fn in entry.queries().items():
+        sig = inspect.signature(fn)
+        sig.bind(spark, sf_dir)
+        assert "work_dir" not in sig.parameters, name
 
 
 def test_window_queries_emit_no_decimal_columns(spark):

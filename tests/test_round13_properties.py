@@ -171,18 +171,16 @@ def test_staged_custom_keys_on_input_fingerprint(spark, tmp_path):
     assert c != a and len(calls) == 2
 
 
-def test_dhash_index_harness_repeat_is_idempotent(spark, tmp_path):
+def test_dhash_index_harness_repeat_is_idempotent(spark):
     """Two harness calls in one process must return the SAME index rows
     (the old per-call append grew the feed and duplicated every doc)."""
     from data_engineer_interview_task_spark.streaming.images import (
         run_dhash_index_maintenance_once,
     )
 
-    wd = str(tmp_path / "wd_dhash")
-    os.makedirs(wd)
-    r1 = run_dhash_index_maintenance_once(spark, SF_DIR, wd)
+    r1 = run_dhash_index_maintenance_once(spark, SF_DIR)
     n1 = r1.count()
-    r2 = run_dhash_index_maintenance_once(spark, SF_DIR, wd)
+    r2 = run_dhash_index_maintenance_once(spark, SF_DIR)
     n2 = r2.count()
     assert n1 == n2 > 0
     assert r1.select("doc_id").distinct().count() == n1

@@ -24,14 +24,14 @@ def test_table_schema_contract(spark, table):
         assert got == EXPECTED_SCHEMAS[table], (sf_dir, table, got)
 
 
-def test_schema_evolution_read_null_fill(spark, tmp_path):
+def test_schema_evolution_read_null_fill(spark):
     from pyspark.sql import functions as F
 
     from data_engineer_interview_task_spark.sources.ingest import (
         schema_evolution_read,
     )
 
-    out = schema_evolution_read(spark, SF_DIRS[0], str(tmp_path)).collect()
+    out = schema_evolution_read(spark, SF_DIRS[0]).collect()
     v1 = [r for r in out if r.doc_id < 10000000]
     v2 = [r for r in out if r.doc_id >= 10000000]
     assert v1 and v2 and len(v1) == len(v2)

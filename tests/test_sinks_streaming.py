@@ -173,8 +173,8 @@ def test_bucketed_join_avoids_shuffle(spark, sf_dir):
         spark.sql("DROP TABLE b_lineitem")
 
 
-def test_streaming_weekly_rollup_matches_batch(spark, sf_dir, tmp_path):
-    got = run_weekly_rollup_once(spark, sf_dir, str(tmp_path / "stream"))
+def test_streaming_weekly_rollup_matches_batch(spark, sf_dir):
+    got = run_weekly_rollup_once(spark, sf_dir)
     batch = relational.weekly_event_rollup(spark, sf_dir)
     # streaming window() aligns to epoch (Thursday); batch date_trunc aligns
     # to Monday — compare totals per event_type instead of window bounds
@@ -196,13 +196,13 @@ def test_streaming_weekly_rollup_matches_batch(spark, sf_dir, tmp_path):
     assert got.count() > 0
 
 
-def test_streaming_sliding_rollup_membership(spark, sf_dir, tmp_path):
+def test_streaming_sliding_rollup_membership(spark, sf_dir):
     """Each event belongs to exactly 7 overlapping (7d, 1d-slide) windows,
     so summed n_events must equal 7x the event count, and every tumbling
     total must be recoverable from the sliding set."""
     from data_engineer_interview_task_spark.streaming import run_sliding_rollup_once
 
-    got = run_sliding_rollup_once(spark, sf_dir, str(tmp_path / "sliding"))
+    got = run_sliding_rollup_once(spark, sf_dir)
     n_events = read_table(spark, sf_dir, "events").count()
     assert got.agg(F.sum("n_events")).collect()[0][0] == 7 * n_events
     # every window spans exactly 7 days
@@ -222,11 +222,11 @@ def test_streaming_has_watermark(spark, sf_dir, tmp_path):
     assert "watermark" in stream_df._jdf.queryExecution().logical().toString().lower()
 
 
-def test_streaming_first_events_equals_batch_distinct(spark, sf_dir, tmp_path):
+def test_streaming_first_events_equals_batch_distinct(spark, sf_dir):
     from data_engineer_interview_task_spark.sources import read_table
     from data_engineer_interview_task_spark.streaming import run_first_events_once
 
-    got = run_first_events_once(spark, sf_dir, str(tmp_path / "dedup"))
+    got = run_first_events_once(spark, sf_dir)
     streamed = {(r.user_id, r.event_type) for r in got.collect()}
     want = {
         (r.user_id, r.event_type)
@@ -627,9 +627,11 @@ def test_tick_stream_checkpoint_restart_exactly_once(spark, tmp_path):
     """Python-DataSource recovery contract, pinned stage by stage: run 1
     (3-page feed) writes exactly pages 0-2 and parks; run 2 reopens the
     SAME checkpoint with pages=6 and appends ONLY pages 3-5; a third
-    no-new-data restart changes nothing. Every (page, i) cell must
-    appear exactly once at every stage — duplicates from a re-emitted
-    committed range or holes from a skipped offset both fail."""
+    no-new-data restart changes nothing. Every stage runs on the
+    availableNow trigger, so each must deliver its whole feed in one
+    run. Every (page, i) cell must appear exactly once at every stage —
+    duplicates from a re-emitted committed range or holes from a skipped
+    offset both fail."""
     from pyspark.sql import functions as F
 
     from data_engineer_interview_task_spark.sources.pydatasource import (
@@ -641,7 +643,7 @@ def test_tick_stream_checkpoint_restart_exactly_once(spark, tmp_path):
     ckpt = str(tmp_path / "ckpt")
 
     def run(pages: int) -> None:
-        q = (
+        (
             spark.readStream.format("tick_stream")
             .option("pages", str(pages))
             .load()
@@ -649,11 +651,10 @@ def test_tick_stream_checkpoint_restart_exactly_once(spark, tmp_path):
             .option("path", out)
             .option("checkpointLocation", ckpt)
             .outputMode("append")
+            .trigger(availableNow=True)
             .start()
+            .awaitTermination()
         )
-        q.processAllAvailable()
-        q.stop()
-        q.awaitTermination()
 
     def cells() -> dict:
         rows = spark.read.parquet(out).groupBy("page", "i").agg(

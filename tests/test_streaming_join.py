@@ -8,8 +8,8 @@ from data_engineer_interview_task_spark.sources import read_table
 from data_engineer_interview_task_spark.streaming import run_click_purchase_join_once
 
 
-def test_stream_stream_join_matches_batch(spark, sf_dir, tmp_path):
-    streamed = run_click_purchase_join_once(spark, sf_dir, str(tmp_path / "ssj"))
+def test_stream_stream_join_matches_batch(spark, sf_dir):
+    streamed = run_click_purchase_join_once(spark, sf_dir)
 
     events = read_table(spark, sf_dir, "events")
     clicks = events.filter(F.col("event_type") == "click").select(
@@ -34,13 +34,13 @@ def test_stream_stream_join_matches_batch(spark, sf_dir, tmp_path):
     assert len(got) > 0
 
 
-def test_left_outer_join_equals_batch_left_join(spark, sf_dir, tmp_path):
+def test_left_outer_join_equals_batch_left_join(spark, sf_dir):
     from data_engineer_interview_task_spark.streaming import (
         run_click_purchase_left_join_once,
     )
     from data_engineer_interview_task_spark.sources import read_table
 
-    streamed = run_click_purchase_left_join_once(spark, sf_dir, str(tmp_path))
+    streamed = run_click_purchase_left_join_once(spark, sf_dir)
     events = read_table(spark, sf_dir, "events")
     clicks = events.filter(F.col("event_type") == "click").select(
         F.col("user_id").alias("c_user"),
@@ -66,7 +66,7 @@ def test_left_outer_join_equals_batch_left_join(spark, sf_dir, tmp_path):
     assert any(p is None for _, p in got)
 
 
-def test_full_outer_join_covers_both_null_directions(spark, sf_dir, tmp_path):
+def test_full_outer_join_covers_both_null_directions(spark, sf_dir):
     """The full-outer form must emit BOTH null-extension directions on
     this fixture (unmatched clicks and unexplained purchases), and its
     matched subset must equal the inner join's row set — degenerate
@@ -76,10 +76,10 @@ def test_full_outer_join_covers_both_null_directions(spark, sf_dir, tmp_path):
         run_click_purchase_join_once,
     )
 
-    full = run_click_purchase_full_join_once(spark, sf_dir, str(tmp_path / "fo"))
+    full = run_click_purchase_full_join_once(spark, sf_dir)
     assert full.filter("purchase_id IS NULL").count() > 0
     assert full.filter("click_id IS NULL").count() > 0
-    inner = run_click_purchase_join_once(spark, sf_dir, str(tmp_path / "in"))
+    inner = run_click_purchase_join_once(spark, sf_dir)
     matched = full.filter("click_id IS NOT NULL AND purchase_id IS NOT NULL")
     cols = ["user_id", "click_id", "purchase_id"]
     assert sorted(map(tuple, matched.select(cols).collect())) == sorted(
@@ -87,14 +87,12 @@ def test_full_outer_join_covers_both_null_directions(spark, sf_dir, tmp_path):
     )
 
 
-def test_semi_join_equals_batch_exists(spark, sf_dir, tmp_path):
+def test_semi_join_equals_batch_exists(spark, sf_dir):
     from data_engineer_interview_task_spark.streaming import (
         run_click_purchase_semi_join_once,
     )
 
-    streamed = run_click_purchase_semi_join_once(
-        spark, sf_dir, str(tmp_path / "sssj")
-    )
+    streamed = run_click_purchase_semi_join_once(spark, sf_dir)
     events = read_table(spark, sf_dir, "events")
     clicks = events.filter(F.col("event_type") == "click").select(
         F.col("user_id").alias("c_user"),

@@ -259,7 +259,6 @@ def test_incremental_late_audit_restart_continuity(spark, sf_dir):
       flush — their state crossed the restart;
     - on-time days stream in full."""
     import datetime as dt
-    import tempfile
 
     from data_engineer_interview_task_spark.streaming import (
         run_incremental_late_audit,
@@ -271,9 +270,7 @@ def test_incremental_late_audit_restart_continuity(spark, sf_dir):
 
     out = {
         r["day"]: (r["n_total"], r["n_streamed"], r["n_dropped_late"])
-        for r in run_incremental_late_audit(
-            spark, sf_dir, tempfile.mkdtemp(prefix="inc_late_")
-        ).collect()
+        for r in run_incremental_late_audit(spark, sf_dir).collect()
     }
     inc_day = dt.date.fromisoformat(INC_SPLIT)
     split_day = dt.date.fromisoformat(SPLIT)
@@ -303,8 +300,6 @@ def test_late_data_audit_drops_exactly_the_aged_days(spark, sf_dir):
     survives iff its window end is newer than max(ts) - 14d in Spark's
     millisecond event-time clock; on-time days (>= the calendar split)
     stream in full; the totals always reconcile."""
-    import tempfile
-
     from data_engineer_interview_task_spark.sources import read_table
     from data_engineer_interview_task_spark.streaming import (
         run_late_data_audit_once,
@@ -313,9 +308,7 @@ def test_late_data_audit_drops_exactly_the_aged_days(spark, sf_dir):
 
     out = {
         r["day"]: (r["n_total"], r["n_streamed"], r["n_dropped_late"])
-        for r in run_late_data_audit_once(
-            spark, sf_dir, tempfile.mkdtemp(prefix="late_audit_")
-        ).collect()
+        for r in run_late_data_audit_once(spark, sf_dir).collect()
     }
     import datetime as dt
 

@@ -1,6 +1,8 @@
 """The availableNow runner and the staged sources behind every streaming
-harness: a failed micro-batch leaves no live query, sink view or changed
-conf; the partition window reaches the checkpoint; a torn staged build is
+harness: a failed micro-batch leaves no live query, sink view, changed
+conf or scratch directory; the partition window reaches the checkpoint;
+every harness removes its scratch directory before it returns; the tick
+feed delivers every page under availableNow; a torn staged build is
 never published; concurrent callers of the store's entry points neither
 collide nor serialize on unrelated keys."""
 
@@ -10,13 +12,19 @@ import glob
 import json
 import os
 import sys
+import tempfile
 import threading
 from concurrent.futures import ThreadPoolExecutor
 
 import pytest
 from pyspark.sql import functions as F
 
+import __spark_entry__ as entry
 from data_engineer_interview_task_spark.plans import artifacts
+from data_engineer_interview_task_spark.sources.pydatasource import (
+    register_tick_stream_source,
+    run_tick_stream_rollup_once,
+)
 from data_engineer_interview_task_spark.streaming import util
 from data_engineer_interview_task_spark.streaming.util import (
     run_to_memory,
@@ -35,43 +43,126 @@ def _ckpt_shuffle_partitions(ckpt: str) -> str:
     return meta["conf"][SHUFFLE]
 
 
+@pytest.fixture
+def scratch(tmp_path, monkeypatch):
+    """A test-private ``tempfile`` root, plus the checkpoints each
+    ``TemporaryDirectory`` closed during the test held just before it
+    was removed: a list of ``{checkpoint name: recorded shuffle
+    partitions}``, one dict per closed directory."""
+    artifacts.tmp_root()  # the store's process root is not per-test scratch
+    root = tmp_path / "scratch"
+    root.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(root))
+    closed: list[dict[str, str]] = []
+
+    class Recording(tempfile.TemporaryDirectory):
+        def cleanup(self):
+            closed.append(
+                {
+                    os.path.basename(c): _ckpt_shuffle_partitions(c)
+                    for c in glob.glob(f"{self.name}/ckpt*")
+                }
+            )
+            super().cleanup()
+
+    monkeypatch.setattr(tempfile, "TemporaryDirectory", Recording)
+    return root, closed
+
+
 def _id_stream(spark, tmp_path):
     src = str(tmp_path / "src")
     spark.range(6).write.parquet(src)
     return spark.readStream.schema("id long").parquet(src)
 
 
-def test_run_to_memory_runs_inside_partition_window(spark, tmp_path):
-    wd = str(tmp_path / "wd")
+def test_run_to_memory_runs_inside_partition_window(spark, tmp_path, scratch):
+    root, closed = scratch
     prior = spark.conf.get(SHUFFLE)
     tables = {t.name for t in spark.catalog.listTables()}
     counts = _id_stream(spark, tmp_path).groupBy((F.col("id") % 2).alias("k")).count()
-    out = run_to_memory(spark, counts, wd, output_mode="complete", partitions="3")
+    out = run_to_memory(spark, counts, output_mode="complete", partitions="3")
+    assert os.listdir(root) == []
     assert sorted((r.k, r["count"]) for r in out.collect()) == [(0, 3), (1, 3)]
-    (ckpt,) = glob.glob(f"{wd}/ckpt_*")
-    assert _ckpt_shuffle_partitions(ckpt) == "3"
+    (ckpts,) = closed
+    assert list(ckpts.values()) == ["3"]
     assert spark.conf.get(SHUFFLE) == prior
     assert spark.streams.active == []
     assert {t.name for t in spark.catalog.listTables()} == tables
 
 
-def test_run_to_memory_failure_leaves_nothing_behind(spark, tmp_path):
-    @F.udf("long")
-    def boom(x):
-        raise ValueError("injected batch failure")
-
-    wd = str(tmp_path / "wd")
-    prior = spark.conf.get(SHUFFLE)
-    tables = {t.name for t in spark.catalog.listTables()}
-    frame = _id_stream(spark, tmp_path).select(boom("id").alias("v"))
-    with pytest.raises(Exception, match="injected batch failure"):
-        run_to_memory(spark, frame, wd, output_mode="append", partitions="3")
-    (ckpt,) = glob.glob(f"{wd}/ckpt_*")
-    sink = os.path.basename(ckpt)[len("ckpt_"):]
+def _assert_failed_run_left_nothing(spark, root, closed, tables, prior):
+    (ckpts,) = closed
+    (ckpt,) = ckpts
+    sink = ckpt[len("ckpt_"):]
     assert spark.streams.active == []
     names = {t.name for t in spark.catalog.listTables()}
     assert sink not in names and names == tables
     assert spark.conf.get(SHUFFLE) == prior
+    assert os.listdir(root) == []
+
+
+def test_run_to_memory_failure_leaves_nothing_behind(spark, tmp_path, scratch):
+    @F.udf("long")
+    def boom(x):
+        raise ValueError("injected batch failure")
+
+    prior = spark.conf.get(SHUFFLE)
+    tables = {t.name for t in spark.catalog.listTables()}
+    frame = _id_stream(spark, tmp_path).select(boom("id").alias("v"))
+    with pytest.raises(Exception, match="injected batch failure"):
+        run_to_memory(spark, frame, output_mode="append", partitions="3")
+    _assert_failed_run_left_nothing(spark, *scratch, tables, prior)
+
+
+def test_tick_rollup_reads_every_page_under_available_now(spark):
+    """One availableNow run over a 3-page tick feed aggregates all three
+    pages: the reader hands over everything available in the single
+    ``read`` that fixes the run's end offset."""
+    register_tick_stream_source(spark)
+    feed = spark.readStream.format("tick_stream").option("pages", "3").load()
+    out = run_to_memory(
+        spark, feed.groupBy("page").count(), output_mode="complete"
+    )
+    assert sorted((r.page, r["count"]) for r in out.collect()) == [
+        (0, 32),
+        (1, 32),
+        (2, 32),
+    ]
+
+
+def test_tick_rollup_failure_leaves_nothing_behind(spark, scratch):
+    """The tick rollup runs on the one runner, so a failing batch is
+    cleaned up like any other: the failure is a state-store provider
+    class that does not exist, set for this test only."""
+    key = "spark.sql.streaming.stateStore.providerClass"
+    provider = spark.conf.get(key)
+    prior = spark.conf.get(SHUFFLE)
+    tables = {t.name for t in spark.catalog.listTables()}
+    spark.conf.set(key, "no.such.StateStoreProvider")
+    try:
+        with pytest.raises(Exception, match="no.such.StateStoreProvider"):
+            run_tick_stream_rollup_once(spark)
+    finally:
+        spark.conf.set(key, provider)
+    _assert_failed_run_left_nothing(spark, *scratch, tables, prior)
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "streaming_incremental_late_audit",
+        "schema_evolution_read",
+        "streaming_tick_restart_continuity",
+    ],
+)
+def test_harness_removes_its_scratch_dir(spark, scratch, name):
+    """Harnesses that read back files they wrote materialize the read
+    before their scratch directory goes, so the returned frame still
+    collects once nothing is left on disk."""
+    root, _closed = scratch
+    out = entry.queries()[name](spark, SF_DIR)
+    assert os.listdir(root) == []
+    assert out.count() > 0
 
 
 def test_staged_custom_retry_after_torn_build_matches_clean_build(
@@ -176,23 +267,23 @@ def test_staged_custom_locks_per_key(spark, tmp_path, memo):
 
 
 def test_incremental_late_audit_sizes_partitions_from_staged_tranches(
-    spark, tmp_path, monkeypatch
+    spark, monkeypatch, scratch
 ):
     from data_engineer_interview_task_spark.streaming.late import (
         run_incremental_late_audit,
     )
 
+    root, closed = scratch
     monkeypatch.delenv(util.STATE_PARTITIONS_ENV, raising=False)
     monkeypatch.setattr(util, "STATE_TARGET_BYTES", 1)
     cores = spark.sparkContext.defaultParallelism
     assert cores > util.STATE_PARTITIONS_FLOOR
-    wd = str(tmp_path / "wd")
-    assert run_incremental_late_audit(spark, SF_DIR, wd).count() > 0
-    (ckpt,) = glob.glob(f"{wd}/ckpt_inc_*")
-    assert _ckpt_shuffle_partitions(ckpt) == str(cores)
+    assert run_incremental_late_audit(spark, SF_DIR).count() > 0
+    (ckpts,) = closed
+    assert list(ckpts.values()) == [str(cores)]
 
 
-def test_dhash_stream_concurrent_callers_agree(spark, tmp_path):
+def test_dhash_stream_concurrent_callers_agree(spark):
     """Two threads maintaining the same feed share one checkpoint; the
     per-feed lock runs their stream passes one at a time."""
     from data_engineer_interview_task_spark.streaming.images import (
@@ -204,7 +295,7 @@ def test_dhash_stream_concurrent_callers_agree(spark, tmp_path):
             map(
                 tuple,
                 run_dhash_index_maintenance_once(
-                    spark, SF_DIR, str(tmp_path / f"wd{i}"), n_files=2
+                    spark, SF_DIR, n_files=2
                 ).collect(),
             )
         )

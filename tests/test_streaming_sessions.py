@@ -10,8 +10,8 @@ from data_engineer_interview_task_spark.operators import relational
 from data_engineer_interview_task_spark.streaming import run_sessionize_once
 
 
-def test_stateful_sessions_match_batch(spark, sf_dir, tmp_path):
-    streamed = run_sessionize_once(spark, sf_dir, str(tmp_path / "ss"))
+def test_stateful_sessions_match_batch(spark, sf_dir):
+    streamed = run_sessionize_once(spark, sf_dir)
     batch = relational.sessionize_events(spark, sf_dir, gap_minutes=30)
 
     # batch sessions minus each user's last (the stream keeps it open in state)
@@ -38,8 +38,8 @@ def test_stateful_sessions_match_batch(spark, sf_dir, tmp_path):
     assert len(got) > 0
 
 
-def test_stateful_sessions_value_sums(spark, sf_dir, tmp_path):
-    streamed = run_sessionize_once(spark, sf_dir, str(tmp_path / "sv"))
+def test_stateful_sessions_value_sums(spark, sf_dir):
+    streamed = run_sessionize_once(spark, sf_dir)
     # spot-check: per-user closed-session event counts sum to the batch's
     total_streamed = streamed.agg(F.sum("n_events")).first()[0]
     events = spark.read.parquet(f"{sf_dir}/events.parquet")
@@ -128,14 +128,14 @@ def test_flushing_sessionizer_emits_open_sessions_on_watermark(
     assert abs(a.total_value - 6.0) < 1e-9
 
 
-def test_builtin_session_window_stream_equals_batch(spark, sf_dir, tmp_path):
+def test_builtin_session_window_stream_equals_batch(spark, sf_dir):
     """The built-in session_window aggregation must emit, under the
     availableNow+complete harness, exactly the batch
     session_window_rollup result — merge rule and bounds included."""
     from data_engineer_interview_task_spark.operators import relational
     from data_engineer_interview_task_spark.streaming import run_session_window_once
 
-    streamed = run_session_window_once(spark, sf_dir, str(tmp_path))
+    streamed = run_session_window_once(spark, sf_dir)
     batch = relational.session_window_rollup(spark, sf_dir)
     cols = ["user_id", "session_start", "session_end", "n_events", "total_value"]
     assert sorted(map(tuple, streamed.select(cols).collect())) == sorted(

@@ -31,8 +31,8 @@ def _batch_reference(spark, sf_dir):
     }
 
 
-def test_running_stats_equals_batch_groupby(spark, sf_dir, tmp_path):
-    out = run_running_user_stats_once(spark, sf_dir, str(tmp_path))
+def test_running_stats_equals_batch_groupby(spark, sf_dir):
+    out = run_running_user_stats_once(spark, sf_dir)
     got = {r.user_id: (r.n_events, r.total_value) for r in out.collect()}
     assert got == _batch_reference(spark, sf_dir)
 
@@ -89,9 +89,9 @@ def test_running_stats_state_is_exercised_across_batches(spark, sf_dir, tmp_path
     reason="transformWithStateInPandas state client needs protobuf "
     "(pyspark.sql.streaming.proto), not present in this environment",
 )
-def test_transform_with_state_twin_equals_batch(spark, sf_dir, tmp_path):
+def test_transform_with_state_twin_equals_batch(spark, sf_dir):
     out = run_running_user_stats_once(
-        spark, sf_dir, str(tmp_path), use_transform_with_state=True
+        spark, sf_dir, use_transform_with_state=True
     )
     got = {r.user_id: (r.n_events, r.total_value) for r in out.collect()}
     assert got == _batch_reference(spark, sf_dir)
@@ -120,11 +120,11 @@ def test_transform_with_state_seam_shape():
     ]
 
 
-def test_streaming_ewma_equals_batch_fold_bitwise(spark, sf_dir, tmp_path):
+def test_streaming_ewma_equals_batch_fold_bitwise(spark, sf_dir):
     from data_engineer_interview_task_spark.operators import relational
     from data_engineer_interview_task_spark.streaming import run_user_ewma_once
 
-    streamed = run_user_ewma_once(spark, sf_dir, str(tmp_path / "ewma"))
+    streamed = run_user_ewma_once(spark, sf_dir)
     got = {
         r["user_id"]: (r["n_events"], r["ewma_value"])
         for r in streamed.collect()
