@@ -26,6 +26,8 @@ from __future__ import annotations
 
 import struct
 
+from .wav_codec import _riff_chunks
+
 #: IMA ADPCM step-size table (89 entries, the standard table).
 STEP_TABLE: tuple[int, ...] = (
     7, 8, 9, 10, 11, 12, 13, 14, 16, 17, 19, 21, 23, 25, 28, 31, 34, 37,
@@ -118,30 +120,20 @@ def adpcm_encode_wav(samples: list[int]) -> bytes:
 def adpcm_decode_wav(payload: bytes) -> list[int]:
     """Decode a mono single-block IMA ADPCM WAV back to 16-bit PCM
     samples (RIFF chunk walk; fmt must declare tag 0x11)."""
-    if payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
-        raise ValueError("not a RIFF/WAVE payload")
-    pos = 12
-    n_samples = None
-    data = None
-    tag = None
-    while pos + 8 <= len(payload):
-        cid = payload[pos : pos + 4]
-        (ln,) = struct.unpack_from("<I", payload, pos + 4)
-        body = payload[pos + 8 : pos + 8 + ln]
-        if cid == b"fmt ":
-            tag = struct.unpack_from("<H", body, 0)[0]
-            if tag != 0x11:
-                raise ValueError(f"not IMA ADPCM (fmt tag 0x{tag:04x})")
-            if struct.unpack_from("<H", body, 2)[0] != 1:
-                raise ValueError("only mono supported")
-            n_samples = struct.unpack_from("<H", body, 18)[0]
-        elif cid == b"fact":
-            n_samples = struct.unpack_from("<I", body, 0)[0]
-        elif cid == b"data":
-            data = body
-        pos += 8 + ln + (ln & 1)
-    if tag is None or data is None or not n_samples:
-        raise ValueError("missing fmt/data chunk")
+    (tag, channels, *_), n_samples, chunks = _riff_chunks(payload)
+    if tag != 0x11:
+        raise ValueError(f"not IMA ADPCM (fmt tag 0x{tag:04x})")
+    if channels != 1:
+        raise ValueError("only mono supported")
+    if n_samples is None:  # no fact chunk: the fmt samples-per-block
+        off, length = chunks[b"fmt "]
+        if length < 20:
+            raise ValueError("fmt chunk lacks samples-per-block")
+        (n_samples,) = struct.unpack_from("<H", payload, off + 18)
+    off, length = chunks[b"data"]
+    data = payload[off : off + length]
+    if not n_samples or length < 4 + n_samples // 2:
+        raise ValueError("data chunk does not hold the declared sample count")
     pred, idx, _res = struct.unpack_from("<hBB", data, 0)
     out = [pred]
     nib_i = 0

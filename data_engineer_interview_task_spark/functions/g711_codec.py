@@ -43,6 +43,8 @@ from __future__ import annotations
 
 import struct
 
+from .wav_codec import _riff_chunks
+
 
 def _wav(fmt_tag: int, payload: bytes, n: int) -> bytes:
     fmt = struct.pack(
@@ -59,25 +61,11 @@ def _wav(fmt_tag: int, payload: bytes, n: int) -> bytes:
     )
 
 def _walk(payload: bytes, want_tag: int) -> bytes:
-    if payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
-        raise ValueError("not a RIFF/WAVE payload")
-    pos, tag, data = 12, None, None
-    while pos + 8 <= len(payload):
-        cid = payload[pos : pos + 4]
-        (ln,) = struct.unpack_from("<I", payload, pos + 4)
-        body = payload[pos + 8 : pos + 8 + ln]
-        if cid == b"fmt ":
-            tag = struct.unpack_from("<H", body, 0)[0]
-            if tag != want_tag:
-                raise ValueError(
-                    f"fmt tag 0x{tag:04x} != expected 0x{want_tag:04x}"
-                )
-        elif cid == b"data":
-            data = body
-        pos += 8 + ln + (ln & 1)
-    if tag is None or data is None:
-        raise ValueError("missing fmt/data chunk")
-    return data
+    (tag, *_), _n_fact, chunks = _riff_chunks(payload)
+    if tag != want_tag:
+        raise ValueError(f"fmt tag 0x{tag:04x} != expected 0x{want_tag:04x}")
+    off, length = chunks[b"data"]
+    return payload[off : off + length]
 
 def mulaw_encode_sample(s: int) -> int:
     sign = 0x80 if s < 0 else 0

@@ -1,27 +1,44 @@
-"""Pure-stdlib baseline JPEG codec — extends the real-codec multimodal
-surface past PNG (VERDICT r4 listed JPEG as "genuinely impossible" here;
-a baseline sequential JPEG needs only integer arithmetic and bit
-twiddling, so it is not).
+"""Pure-stdlib JPEG codec: integer arithmetic and bit twiddling only,
+the lossy image shape of the real-codec multimodal surface past PNG.
 
-Scope: baseline sequential JFIF, 8-bit, greyscale (1 component) AND
-interleaved YCbCr color (3 components, 1x1 sampling / 4:4:4), dimensions
-multiples of 8 — plus, since round 8, PROGRESSIVE (SOF2) greyscale with
-spectral selection (multi-scan coefficient accumulation, real EOB-run
-coding) and DC-band successive approximation (shifted-domain first
-scan + raw-bit refinement), and since round 9 AC-BAND successive
-approximation too (truncated-magnitude first scans + the T.81 G.1.2.3
-correction-bit refinement interleave) — every progressive greyscale
-scan shape is now supported. The DECODER is the general baseline path for those
-shapes — segment parsing (APP/COM skip, DQT, SOF0, DHT, SOS, DRI/RST),
-per-component quantization/Huffman table binding FROM the stream (not
-assumed), a byte-stuffing-aware bit reader, interleaved-MCU entropy
-decode with per-component DC predictors, dequantization, and a
-fixed-point integer IDCT. The ENCODER writes standard Annex-K Huffman
-and quantization tables (luminance + chrominance pairs for color), and
-is used by the multimodal operators to manufacture payloads whose
-DC-only blocks give the DuckDB oracle a closed-form expected raster
-(uniform 8x8 blocks: the whole entropy/dequant/IDCT path reduces to one
-documented integer formula per block — see ``DC_ONLY_PIXEL``).
+Scope: 8-bit JFIF, dimensions multiples of the MCU size, one
+implementation per job:
+
+- **One baseline (SOF0) encoder**, ``_encode_baseline``, over Y
+  sampling factors ``(h, v)``: greyscale, or interleaved YCbCr from the
+  pinned ``rgb_to_ycbcr`` with Cb/Cr always 1x1 and each chroma sample
+  the round-half-up mean of its h x v group, ``(sum + h*v DIV 2) DIV
+  (h*v)``. ``jpeg_encode`` (grey), ``jpeg_encode_color`` (4:4:4, 1x1),
+  ``jpeg_encode_color_422`` (2x1) and ``jpeg_encode_color_420`` (2x2)
+  are one-line calls into it.
+- **One progressive (SOF2) encoder**, ``_encode_progressive``, over a
+  scan script of ``(Ss, Se, Ah, Al)`` tuples (ITU-T T.81 Annex G). A
+  scan is DC first (an arithmetic-shift point transform at Al), DC
+  refinement (one raw bit per block), AC first (run/size pairs plus
+  EOB-run symbols over magnitudes truncated toward zero) or AC
+  refinement (the G.1.2.3 correction-bit interleave). The public
+  scripts are spectral selection ``(0,0,0,0) (1,5,0,0) (6,63,0,0)``,
+  DC successive approximation ``(0,0,0,1) (0,0,1,0) (1,5,0,0)
+  (6,63,0,0)`` and AC successive approximation ``(0,0,0,0) (1,5,0,1)
+  (6,63,0,1) (1,5,1,0) (6,63,1,0)``. Every script carries the baseline
+  encoder's quantized coefficients, so progressive decode reproduces
+  the baseline raster bit for bit.
+- **One segment walker**, ``_segments``, for both decoders: the SOI
+  check, marker desync, segment truncation, DQT and DHT parsing into
+  tables bound by the ids the stream declares, APPn/COM skipping, and
+  the skip over each scan's entropy-coded data. ``_decode_planes`` runs
+  every scan — the baseline interleaved scan is the ``(0, 63, 0, 0)``
+  case — over the blocks in MCU order (SOF-declared sampling factors
+  1x1 .. 2x2), then dequantizes and inverse-transforms each block once.
+  ``jpeg_decode_color`` accepts the SOF marker it meets; ``jpeg_decode``
+  and ``jpeg_decode_progressive`` each accept one.
+
+The encoders write the Annex-K quantization and Huffman tables
+(luminance + chrominance pairs for color; progressive AC scans ship a
+flat table that also defines the EOBn symbols). Uniform 8x8 blocks give
+DC-only streams whose decoded value is one documented integer formula
+per block (``DC_ONLY_PIXEL``), the closed form the DuckDB oracle
+replays.
 
 Color conversion is integer fixed-point with PINNED constants (these ARE
 the codec's contract, mirrored verbatim in the SQL oracle):
@@ -315,34 +332,46 @@ def _fdct_quant(blk, qtab):
         qc.append((c + q // 2) // q if c >= 0 else -((-c + q // 2) // q))
     return qc
 
+def _write_dc(bw, diff: int, dc_codes) -> None:
+    """One DC difference: the Huffman code of its size category, then
+    the value's low bits (one's complement for negatives)."""
+    t = abs(diff).bit_length()
+    bw.write(*dc_codes[t])
+    if t:
+        bw.write(diff if diff >= 0 else diff + (1 << t) - 1, t)
+
+def _write_ac(bw, run: int, c: int, ac_codes) -> None:
+    """One nonzero AC coefficient after ``run`` zeros: a ZRL per 16
+    zeros, the (run, size) symbol, then the value's low bits."""
+    while run > 15:
+        bw.write(*ac_codes[0xF0])
+        run -= 16
+    t = abs(c).bit_length()
+    bw.write(*ac_codes[(run << 4) | t])
+    bw.write(c if c >= 0 else c + (1 << t) - 1, t)
+
+def _write_eobrun(bw, eobrun: int, ac_codes) -> None:
+    """An EOBn symbol for a run of ``eobrun`` band-empty blocks:
+    r = floor(log2(eobrun)), then r extra bits of the run length."""
+    r = eobrun.bit_length() - 1
+    bw.write(*ac_codes[r << 4])
+    if r:
+        bw.write(eobrun - (1 << r), r)
+
 def _entropy_block(bw, qc, prev_dc, dc_codes, ac_codes) -> int:
     """Entropy-encode one quantized block (DC differential + AC
     run/length over zig-zag order). Returns the new DC predictor."""
-    diff = qc[0] - prev_dc
-    mag, val = abs(diff), diff
-    t = mag.bit_length()
-    code, ln = dc_codes[t]
-    bw.write(code, ln)
-    if t:
-        bw.write(val if val >= 0 else val + (1 << t) - 1, t)
+    _write_dc(bw, qc[0] - prev_dc, dc_codes)
     run = 0
     for zz in range(1, 64):
         c = qc[_ZZ[zz]]
-        if c == 0:
+        if c:
+            _write_ac(bw, run, c, ac_codes)
+            run = 0
+        else:
             run += 1
-            continue
-        while run > 15:
-            zrl, zln = ac_codes[0xF0]
-            bw.write(zrl, zln)
-            run -= 16
-        t = abs(c).bit_length()
-        code, ln = ac_codes[(run << 4) | t]
-        bw.write(code, ln)
-        bw.write(c if c >= 0 else c + (1 << t) - 1, t)
-        run = 0
     if run:
-        eob, eln = ac_codes[0x00]
-        bw.write(eob, eln)
+        bw.write(*ac_codes[0x00])  # EOB
     return qc[0]
 
 def _seg(marker: int, payload: bytes) -> bytes:
@@ -353,43 +382,104 @@ _APP0 = b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00"
 def _dht_payload(tc: int, th: int, spec) -> bytes:
     return bytes([(tc << 4) | th]) + bytes(spec[0]) + bytes(spec[1])
 
+def _headers(sof: int, width: int, height: int, ncomp: int, y_samp: int,
+             ac_spec) -> bytes:
+    """SOI through DHT: JFIF APP0, the Annex-K quantization and Huffman
+    tables (luminance with AC table ``ac_spec``, plus chrominance for 3
+    components), and the frame header — Y (id 1) at sampling byte
+    ``y_samp``, Cb/Cr (ids 2, 3) at 1x1 on the chrominance tables."""
+    tabs = (
+        (0, _QTAB, _DC_SPEC, ac_spec),
+        (1, _QTAB_C, _DC_SPEC_C, _AC_SPEC_C),
+    )[: 1 if ncomp == 1 else 2]
+    dqt = b"".join(bytes([t]) + bytes(q[z] for z in _ZZ) for t, q, *_ in tabs)
+    dht = b"".join(
+        _dht_payload(0, t, dc) + _dht_payload(1, t, ac)
+        for t, _q, dc, ac in tabs
+    )
+    chroma = b"\x02\x11\x01\x03\x11\x01"[: 3 * ncomp - 3]
+    comps = bytes([1, y_samp, 0]) + chroma
+    return (
+        b"\xff\xd8" + _seg(0xFFE0, _APP0) + _seg(0xFFDB, dqt)
+        + _seg(sof, struct.pack(">BHHB", 8, height, width, ncomp) + comps)
+        + _seg(0xFFC4, dht)
+    )
+
+def _sos(ncomp: int, ss: int, se: int, ah: int, al: int) -> bytes:
+    """A scan header over all ``ncomp`` components (Y on tables 0,
+    Cb/Cr on tables 1) for band [ss..se] at (Ah, Al)."""
+    sel = b"\x01\x00\x02\x11\x03\x11"[: 2 * ncomp]
+    return _seg(0xFFDA, bytes([ncomp]) + sel + bytes([ss, se, (ah << 4) | al]))
+
+def _check_raster(buf, width: int, height: int, ncomp: int, mcu_w: int,
+                  mcu_h: int) -> None:
+    if width % mcu_w or height % mcu_h:
+        raise ValueError(
+            f"dimensions must be multiples of the MCU size ({mcu_w}x{mcu_h})"
+        )
+    if len(buf) != width * height * ncomp:
+        raise ValueError("pixel buffer does not match dimensions")
+
+def _block(plane, pw: int, bx: int, by: int) -> list[int]:
+    """Level-shifted 8x8 block (bx, by) of a row-major plane ``pw`` wide."""
+    top = by * 8 * pw + bx * 8
+    return [
+        s - 128 for r in range(top, top + 8 * pw, pw) for s in plane[r : r + 8]
+    ]
+
+def _subsample(plane, width: int, height: int, h: int, v: int):
+    """Each sample is the round-half-up mean of its h x v group,
+    ``(sum + h*v DIV 2) DIV (h*v)`` — the identity at 1x1."""
+    if h == v == 1:
+        return plane
+    n, step, out = h * v, v * width, bytearray()
+    for top in range(0, height * width, step):
+        rows = (plane[r : r + width] for r in range(top, top + step, width))
+        cols = [sum(c) for c in zip(*rows)]  # column sums of v rows
+        groups = zip(*(cols[k::h] for k in range(h)))
+        out += bytes((sum(g) + n // 2) // n for g in groups)
+    return out
+
+def _encode_baseline(buf, width: int, height: int, ncomp: int, h: int = 1,
+                     v: int = 1) -> bytes:
+    """The baseline sequential (SOF0) encoder: greyscale (``ncomp=1``)
+    or interleaved RGB (``ncomp=3``, converted by ``rgb_to_ycbcr``) with
+    Y sampled ``h`` x ``v`` and Cb/Cr at 1x1 from ``_subsample``. Each
+    MCU is the h x v Y blocks in raster order, then one Cb and one Cr
+    block, with one DC predictor per component."""
+    _check_raster(buf, width, height, ncomp, 8 * h, 8 * v)
+    luma = (_QTAB, _huff_codes(*_DC_SPEC), _huff_codes(*_AC_SPEC))
+    if ncomp == 1:
+        comps = [(buf, width, 1, 1, luma)]
+    else:
+        ycc = map(rgb_to_ycbcr, buf[0::3], buf[1::3], buf[2::3])
+        y, cb, cr = [bytes(p) for p in zip(*ycc)] or [b""] * 3
+        chroma = (_QTAB_C, _huff_codes(*_DC_SPEC_C), _huff_codes(*_AC_SPEC_C))
+        comps = [(y, width, h, v, luma)] + [
+            (_subsample(p, width, height, h, v), width // h, 1, 1, chroma)
+            for p in (cb, cr)
+        ]
+    bw = _BitWriter()
+    preds = [0] * ncomp
+    for my in range(height // (8 * v)):
+        for mx in range(width // (8 * h)):
+            for ci, (plane, pw, sh, sv, (qtab, dcc, acc)) in enumerate(comps):
+                for by in range(my * sv, my * sv + sv):
+                    for bx in range(mx * sh, mx * sh + sh):
+                        qc = _fdct_quant(_block(plane, pw, bx, by), qtab)
+                        preds[ci] = _entropy_block(bw, qc, preds[ci], dcc, acc)
+    return (
+        _headers(0xFFC0, width, height, ncomp, (h << 4) | v, _AC_SPEC)
+        + _sos(ncomp, 0, 63, 0, 0) + bw.flush() + b"\xff\xd9"
+    )
+
 def jpeg_encode(pixels: bytes, width: int, height: int) -> bytes:
     """Serialize an 8-bit greyscale raster (row-major, dims multiples
     of 8) to a baseline JFIF JPEG with standard tables. Lossy exactly
     as baseline JPEG is: each 8x8 block goes through level shift,
     DCT, quantization. Uniform blocks produce DC-only streams whose
     decoded value is the documented ``DC_ONLY_PIXEL`` closed form."""
-    if width % 8 or height % 8:
-        raise ValueError("dimensions must be multiples of 8")
-    if len(pixels) != width * height:
-        raise ValueError("pixel buffer does not match dimensions")
-    dc_codes = _huff_codes(*_DC_SPEC)
-    ac_codes = _huff_codes(*_AC_SPEC)
-    bw = _BitWriter()
-    prev_dc = 0
-    for by in range(height // 8):
-        for bx in range(width // 8):
-            blk = [
-                pixels[(by * 8 + y) * width + bx * 8 + x] - 128
-                for y in range(8)
-                for x in range(8)
-            ]
-            qc = _fdct_quant(blk, _QTAB)
-            prev_dc = _entropy_block(bw, qc, prev_dc, dc_codes, ac_codes)
-    scan = bw.flush()
-    dqt = _seg(0xFFDB, b"\x00" + bytes(_QTAB[_ZZ[i]] for i in range(64)))
-    sof = _seg(
-        0xFFC0,
-        struct.pack(">BHHB", 8, height, width, 1) + b"\x01\x11\x00",
-    )
-    dht = _seg(
-        0xFFC4, _dht_payload(0, 0, _DC_SPEC) + _dht_payload(1, 0, _AC_SPEC)
-    )
-    sos = _seg(0xFFDA, b"\x01\x01\x00\x00\x3f\x00")
-    app0 = _seg(0xFFE0, _APP0)
-    return (
-        b"\xff\xd8" + app0 + dqt + sof + dht + sos + scan + b"\xff\xd9"
-    )
+    return _encode_baseline(pixels, width, height, 1)
 
 def jpeg_encode_color(rgb: bytes, width: int, height: int) -> bytes:
     """Serialize an interleaved 8-bit RGB raster (row-major, dims
@@ -399,63 +489,7 @@ def jpeg_encode_color(rgb: bytes, width: int, height: int) -> bytes:
     Annex-K luminance tables, Cb/Cr against the chrominance tables,
     MCUs interleaved (Y, Cb, Cr blocks) with per-component DC
     predictors. Uniform RGB blocks reduce to ``COLOR_UNIFORM_RGB``."""
-    if width % 8 or height % 8:
-        raise ValueError("dimensions must be multiples of 8")
-    if len(rgb) != width * height * 3:
-        raise ValueError("pixel buffer does not match dimensions")
-    dc_y, ac_y = _huff_codes(*_DC_SPEC), _huff_codes(*_AC_SPEC)
-    dc_c, ac_c = _huff_codes(*_DC_SPEC_C), _huff_codes(*_AC_SPEC_C)
-    # forward color transform into three planes
-    n = width * height
-    planes = [bytearray(n), bytearray(n), bytearray(n)]
-    for i in range(n):
-        r, g, b = rgb[3 * i], rgb[3 * i + 1], rgb[3 * i + 2]
-        y = (77 * r + 150 * g + 29 * b + 128) >> 8
-        cb = (32896 - 43 * r - 85 * g + 128 * b) >> 8
-        cr = (32896 + 128 * r - 107 * g - 21 * b) >> 8
-        planes[0][i] = y
-        planes[1][i] = 255 if cb > 255 else cb
-        planes[2][i] = 255 if cr > 255 else cr
-    comp = (  # (plane, qtab, dc_codes, ac_codes) per SOF order Y,Cb,Cr
-        (planes[0], _QTAB, dc_y, ac_y),
-        (planes[1], _QTAB_C, dc_c, ac_c),
-        (planes[2], _QTAB_C, dc_c, ac_c),
-    )
-    bw = _BitWriter()
-    preds = [0, 0, 0]
-    for by in range(height // 8):
-        for bx in range(width // 8):
-            for ci, (plane, qtab, dcc, acc_) in enumerate(comp):
-                blk = [
-                    plane[(by * 8 + y) * width + bx * 8 + x] - 128
-                    for y in range(8)
-                    for x in range(8)
-                ]
-                qc = _fdct_quant(blk, qtab)
-                preds[ci] = _entropy_block(bw, qc, preds[ci], dcc, acc_)
-    scan = bw.flush()
-    dqt = _seg(
-        0xFFDB,
-        b"\x00" + bytes(_QTAB[_ZZ[i]] for i in range(64))
-        + b"\x01" + bytes(_QTAB_C[_ZZ[i]] for i in range(64)),
-    )
-    sof = _seg(
-        0xFFC0,
-        struct.pack(">BHHB", 8, height, width, 3)
-        + b"\x01\x11\x00"  # Y: id 1, 1x1, qtab 0
-        + b"\x02\x11\x01"  # Cb: id 2, 1x1, qtab 1
-        + b"\x03\x11\x01",  # Cr: id 3, 1x1, qtab 1
-    )
-    dht = _seg(
-        0xFFC4,
-        _dht_payload(0, 0, _DC_SPEC) + _dht_payload(1, 0, _AC_SPEC)
-        + _dht_payload(0, 1, _DC_SPEC_C) + _dht_payload(1, 1, _AC_SPEC_C),
-    )
-    sos = _seg(0xFFDA, b"\x03\x01\x00\x02\x11\x03\x11\x00\x3f\x00")
-    app0 = _seg(0xFFE0, _APP0)
-    return (
-        b"\xff\xd8" + app0 + dqt + sof + dht + sos + scan + b"\xff\xd9"
-    )
+    return _encode_baseline(rgb, width, height, 3)
 
 def jpeg_encode_color_420(rgb: bytes, width: int, height: int) -> bytes:
     """Serialize an interleaved 8-bit RGB raster (row-major, dims
@@ -471,84 +505,7 @@ def jpeg_encode_color_420(rgb: bytes, width: int, height: int) -> bytes:
     group, ``(a + b + c + d + 2) DIV 4`` — on a uniform group this
     is exactly the common value, which is what keeps uniform-MCU
     fixtures on the ``COLOR_UNIFORM_RGB`` closed form."""
-    if width % 16 or height % 16:
-        raise ValueError("dimensions must be multiples of 16")
-    if len(rgb) != width * height * 3:
-        raise ValueError("pixel buffer does not match dimensions")
-    dc_y, ac_y = _huff_codes(*_DC_SPEC), _huff_codes(*_AC_SPEC)
-    dc_c, ac_c = _huff_codes(*_DC_SPEC_C), _huff_codes(*_AC_SPEC_C)
-    n = width * height
-    planes = [bytearray(n), bytearray(n), bytearray(n)]
-    for i in range(n):
-        r, g, b = rgb[3 * i], rgb[3 * i + 1], rgb[3 * i + 2]
-        y = (77 * r + 150 * g + 29 * b + 128) >> 8
-        cb = (32896 - 43 * r - 85 * g + 128 * b) >> 8
-        cr = (32896 + 128 * r - 107 * g - 21 * b) >> 8
-        planes[0][i] = y
-        planes[1][i] = 255 if cb > 255 else cb
-        planes[2][i] = 255 if cr > 255 else cr
-    cw, chh = width // 2, height // 2
-    subs = []
-    for p in (planes[1], planes[2]):
-        sp = bytearray(cw * chh)
-        for r in range(chh):
-            base = (2 * r) * width
-            for c in range(cw):
-                i = base + 2 * c
-                sp[r * cw + c] = (
-                    p[i] + p[i + 1] + p[i + width] + p[i + width + 1] + 2
-                ) // 4
-        subs.append(sp)
-    bw = _BitWriter()
-    preds = [0, 0, 0]
-    for my in range(height // 16):
-        for mx in range(width // 16):
-            for by in range(2):  # four Y blocks, 2x2 raster order
-                for bx in range(2):
-                    yb, xb = my * 2 + by, mx * 2 + bx
-                    blk = [
-                        planes[0][(yb * 8 + y) * width + xb * 8 + x]
-                        - 128
-                        for y in range(8)
-                        for x in range(8)
-                    ]
-                    qc = _fdct_quant(blk, _QTAB)
-                    preds[0] = _entropy_block(
-                        bw, qc, preds[0], dc_y, ac_y
-                    )
-            for ci, sp in enumerate(subs, start=1):
-                blk = [
-                    sp[(my * 8 + y) * cw + mx * 8 + x] - 128
-                    for y in range(8)
-                    for x in range(8)
-                ]
-                qc = _fdct_quant(blk, _QTAB_C)
-                preds[ci] = _entropy_block(
-                    bw, qc, preds[ci], dc_c, ac_c
-                )
-    scan = bw.flush()
-    dqt = _seg(
-        0xFFDB,
-        b"\x00" + bytes(_QTAB[_ZZ[i]] for i in range(64))
-        + b"\x01" + bytes(_QTAB_C[_ZZ[i]] for i in range(64)),
-    )
-    sof = _seg(
-        0xFFC0,
-        struct.pack(">BHHB", 8, height, width, 3)
-        + b"\x01\x22\x00"  # Y: id 1, 2x2 sampling, qtab 0
-        + b"\x02\x11\x01"  # Cb: id 2, 1x1, qtab 1
-        + b"\x03\x11\x01",  # Cr: id 3, 1x1, qtab 1
-    )
-    dht = _seg(
-        0xFFC4,
-        _dht_payload(0, 0, _DC_SPEC) + _dht_payload(1, 0, _AC_SPEC)
-        + _dht_payload(0, 1, _DC_SPEC_C) + _dht_payload(1, 1, _AC_SPEC_C),
-    )
-    sos = _seg(0xFFDA, b"\x03\x01\x00\x02\x11\x03\x11\x00\x3f\x00")
-    app0 = _seg(0xFFE0, _APP0)
-    return (
-        b"\xff\xd8" + app0 + dqt + sof + dht + sos + scan + b"\xff\xd9"
-    )
+    return _encode_baseline(rgb, width, height, 3, 2, 2)
 
 def jpeg_encode_color_422(rgb: bytes, width: int, height: int) -> bytes:
     """Serialize an interleaved 8-bit RGB raster (width a multiple of
@@ -562,80 +519,223 @@ def jpeg_encode_color_422(rgb: bytes, width: int, height: int) -> bytes:
     ``(a + b + 1) DIV 2`` — the common value on uniform pairs, which
     keeps uniform-MCU fixtures on the ``COLOR_UNIFORM_RGB`` closed
     form."""
-    if width % 16 or height % 8:
-        raise ValueError(
-            "width must be a multiple of 16 and height of 8"
-        )
-    if len(rgb) != width * height * 3:
-        raise ValueError("pixel buffer does not match dimensions")
-    dc_y, ac_y = _huff_codes(*_DC_SPEC), _huff_codes(*_AC_SPEC)
-    dc_c, ac_c = _huff_codes(*_DC_SPEC_C), _huff_codes(*_AC_SPEC_C)
-    n = width * height
-    planes = [bytearray(n), bytearray(n), bytearray(n)]
-    for i in range(n):
-        r, g, b = rgb[3 * i], rgb[3 * i + 1], rgb[3 * i + 2]
-        y = (77 * r + 150 * g + 29 * b + 128) >> 8
-        cb = (32896 - 43 * r - 85 * g + 128 * b) >> 8
-        cr = (32896 + 128 * r - 107 * g - 21 * b) >> 8
-        planes[0][i] = y
-        planes[1][i] = 255 if cb > 255 else cb
-        planes[2][i] = 255 if cr > 255 else cr
-    cw = width // 2
-    subs = []
-    for p in (planes[1], planes[2]):
-        sp = bytearray(cw * height)
-        for r in range(height):
-            base = r * width
-            for c in range(cw):
-                i = base + 2 * c
-                sp[r * cw + c] = (p[i] + p[i + 1] + 1) // 2
-        subs.append(sp)
+    return _encode_baseline(rgb, width, height, 3, 2, 1)
+
+# progressive AC scans need EOBn symbols (r<<4, r=1..14), which
+# the baseline Annex-K AC table does not define — ship a custom
+# flat canonical table (all 176 symbols at 8 bits; max code
+# 0xAF, so the reserved all-ones code stays unused) in the DHT:
+# the decoder rebuilds whatever the stream declares
+_AC_PROG_SYMS = (
+    [r << 4 for r in range(15)]
+    + [0xF0]
+    + [(run << 4) | t for run in range(16) for t in range(1, 11)]
+)
+_AC_PROG_SPEC = ([0] * 7 + [176] + [0] * 8, _AC_PROG_SYMS)
+
+# scan scripts: one (Ss, Se, Ah, Al) tuple per scan, T.81 Annex G
+_SPECTRAL_SCRIPT = ((0, 0, 0, 0), (1, 5, 0, 0), (6, 63, 0, 0))
+_DC_SA_SCRIPT = ((0, 0, 0, 1), (0, 0, 1, 0), (1, 5, 0, 0), (6, 63, 0, 0))
+_AC_SA_SCRIPT = (
+    (0, 0, 0, 0), (1, 5, 0, 1), (6, 63, 0, 1), (1, 5, 1, 0), (6, 63, 1, 0),
+)
+
+def _dc_first_scan(blocks, al: int, dc_codes) -> bytes:
+    """DC FIRST scan at approximation level ``al``: the point transform
+    is an arithmetic shift and the predictors chain over the SHIFTED
+    values. ``al=0`` is the baseline DC coding."""
     bw = _BitWriter()
-    preds = [0, 0, 0]
-    for my in range(height // 8):
-        for mx in range(width // 16):
-            for bx in range(2):  # two Y blocks, left then right
-                xb = mx * 2 + bx
-                blk = [
-                    planes[0][(my * 8 + y) * width + xb * 8 + x] - 128
-                    for y in range(8)
-                    for x in range(8)
-                ]
-                qc = _fdct_quant(blk, _QTAB)
-                preds[0] = _entropy_block(bw, qc, preds[0], dc_y, ac_y)
-            for ci, sp in enumerate(subs, start=1):
-                blk = [
-                    sp[(my * 8 + y) * cw + mx * 8 + x] - 128
-                    for y in range(8)
-                    for x in range(8)
-                ]
-                qc = _fdct_quant(blk, _QTAB_C)
-                preds[ci] = _entropy_block(
-                    bw, qc, preds[ci], dc_c, ac_c
-                )
-    scan = bw.flush()
-    dqt = _seg(
-        0xFFDB,
-        b"\x00" + bytes(_QTAB[_ZZ[i]] for i in range(64))
-        + b"\x01" + bytes(_QTAB_C[_ZZ[i]] for i in range(64)),
-    )
-    sof = _seg(
-        0xFFC0,
-        struct.pack(">BHHB", 8, height, width, 3)
-        + b"\x01\x21\x00"  # Y: id 1, 2x1 sampling, qtab 0
-        + b"\x02\x11\x01"  # Cb: id 2, 1x1, qtab 1
-        + b"\x03\x11\x01",  # Cr: id 3, 1x1, qtab 1
-    )
-    dht = _seg(
-        0xFFC4,
-        _dht_payload(0, 0, _DC_SPEC) + _dht_payload(1, 0, _AC_SPEC)
-        + _dht_payload(0, 1, _DC_SPEC_C) + _dht_payload(1, 1, _AC_SPEC_C),
-    )
-    sos = _seg(0xFFDA, b"\x03\x01\x00\x02\x11\x03\x11\x00\x3f\x00")
-    app0 = _seg(0xFFE0, _APP0)
-    return (
-        b"\xff\xd8" + app0 + dqt + sof + dht + sos + scan + b"\xff\xd9"
-    )
+    prev = 0
+    for qc in blocks:
+        v = qc[0] >> al
+        _write_dc(bw, v - prev, dc_codes)
+        prev = v
+    return bw.flush()
+
+def _dc_refine_scan(blocks, al: int) -> bytes:
+    """DC REFINEMENT scan (Ah = al+1): one raw bit per block, bit ``al``
+    of the DC coefficient."""
+    bw = _BitWriter()
+    for qc in blocks:
+        bw.write((qc[0] >> al) & 1, 1)
+    return bw.flush()
+
+def _ac_first_scan(blocks, ss: int, se: int, al: int, ac_codes) -> bytes:
+    """FIRST AC scan of band [ss..se] at approximation level ``al``
+    (Ah=0): in-band run/size pairs + EOB-RUN symbols over the
+    point-transformed values — for AC the point transform is an
+    integer divide by 2^Al truncating toward ZERO (T.81 G.1.2.1;
+    sign-magnitude shift), unlike DC's arithmetic shift. ``al=0``
+    is byte-identical to the plain spectral-selection scan."""
+    bw = _BitWriter()
+    eobrun = 0
+    for qc in blocks:
+        vals = [
+            v >> al if v >= 0 else -(-v >> al)
+            for v in (qc[_ZZ[zz]] for zz in range(ss, se + 1))
+        ]
+        last = max((i for i, c in enumerate(vals) if c), default=-1)
+        if last < 0:
+            eobrun += 1
+            if eobrun == 0x7FFF:
+                _write_eobrun(bw, eobrun, ac_codes)
+                eobrun = 0
+            continue
+        if eobrun:
+            _write_eobrun(bw, eobrun, ac_codes)
+        run = 0
+        for c in vals[: last + 1]:
+            if c:
+                _write_ac(bw, run, c, ac_codes)
+                run = 0
+            else:
+                run += 1
+        # this block's tail (if any) starts a new run
+        eobrun = 1 if last < len(vals) - 1 else 0
+    if eobrun:
+        _write_eobrun(bw, eobrun, ac_codes)
+    return bw.flush()
+
+def _ac_refine_scan(blocks, ss: int, se: int, al: int, ac_codes) -> bytes:
+    """AC REFINEMENT scan (Ah = al+1, Al = al) — the T.81 G.1.2.3
+    correction-bit interleave: coefficients already nonzero at the
+    previous precision send ONE raw correction bit (bit ``al`` of
+    the magnitude); coefficients newly visible at this precision
+    are coded as (run<<4)|1 + a sign bit, where the run counts only
+    STILL-ZERO positions; correction bits buffer until the next
+    emitted symbol (ZRL / newly-nonzero / EOBn) and are appended
+    right after it, so the decoder can interleave them back. Blocks
+    with nothing new join an EOB run whose correction bits ride the
+    eventual EOBn symbol."""
+    bw = _BitWriter()
+    eobrun = 0
+    be_bits: list[int] = []  # correction bits owned by the EOB run
+
+    def emit_eobrun():
+        nonlocal eobrun, be_bits
+        if not eobrun:
+            return
+        _write_eobrun(bw, eobrun, ac_codes)
+        eobrun = 0
+        for b in be_bits:
+            bw.write(b, 1)
+        be_bits = []
+
+    for qc in blocks:
+        absvals = {}
+        eob = ss - 1  # position of the last NEWLY-nonzero coef
+        for zz in range(ss, se + 1):
+            t = abs(qc[_ZZ[zz]]) >> al
+            absvals[zz] = t
+            if t == 1:
+                eob = zz
+        r = 0
+        br_bits: list[int] = []  # bits since the last symbol
+        for zz in range(ss, se + 1):
+            temp = absvals[zz]
+            if temp == 0:
+                r += 1
+                continue
+            while r > 15 and zz <= eob:
+                emit_eobrun()
+                bw.write(*ac_codes[0xF0])
+                r -= 16
+                for b in br_bits:
+                    bw.write(b, 1)
+                br_bits = []
+            if temp > 1:
+                # already nonzero at the previous precision: just
+                # the next magnitude bit (if r > 15 here, zz > eob,
+                # so this is never a newly-nonzero coefficient)
+                br_bits.append(temp & 1)
+                continue
+            emit_eobrun()
+            bw.write(*ac_codes[(r << 4) | 1])
+            bw.write(1 if qc[_ZZ[zz]] >= 0 else 0, 1)
+            for b in br_bits:
+                bw.write(b, 1)
+            br_bits = []
+            r = 0
+        if r > 0 or br_bits:
+            eobrun += 1
+            be_bits.extend(br_bits)
+            if eobrun == 0x7FFF or len(be_bits) > 937:
+                emit_eobrun()
+    emit_eobrun()
+    return bw.flush()
+
+def _encode_progressive(pixels: bytes, width: int, height: int,
+                        script) -> bytes:
+    """The progressive (SOF2) greyscale encoder: the baseline quantized
+    coefficients (same ``_fdct_quant``), laid out as one scan per
+    ``(Ss, Se, Ah, Al)`` tuple of ``script``. A scan is one of four
+    kinds: DC first (Ss=0, Ah=0), DC refinement (Ss=0, Ah>0), AC first
+    (Ss>0, Ah=0) or AC refinement (Ss>0, Ah>0)."""
+    _check_raster(pixels, width, height, 1, 8, 8)
+    blocks = [
+        _fdct_quant(_block(pixels, width, bx, by), _QTAB)
+        for by in range(height // 8)
+        for bx in range(width // 8)
+    ]
+    dc_codes = _huff_codes(*_DC_SPEC)
+    ac_codes = _huff_codes(*_AC_PROG_SPEC)
+    out = [_headers(0xFFC2, width, height, 1, 0x11, _AC_PROG_SPEC)]
+    for ss, se, ah, al in script:
+        if ss == 0:
+            scan = (
+                _dc_refine_scan(blocks, al) if ah
+                else _dc_first_scan(blocks, al, dc_codes)
+            )
+        elif ah:
+            scan = _ac_refine_scan(blocks, ss, se, al, ac_codes)
+        else:
+            scan = _ac_first_scan(blocks, ss, se, al, ac_codes)
+        out += (_sos(1, ss, se, ah, al), scan)
+    return b"".join(out) + b"\xff\xd9"
+
+def jpeg_encode_progressive(
+    pixels: bytes, width: int, height: int
+) -> bytes:
+    """Serialize an 8-bit greyscale raster to a PROGRESSIVE JPEG
+    (SOF2, spectral selection, Al=0): three scans — DC (Ss=Se=0),
+    low AC band (1..5), high AC band (6..63). The quantized
+    coefficients are IDENTICAL to the baseline encoder's (same
+    ``_fdct_quant``), only their scan layout differs — which is why
+    progressive decode reproduces the baseline raster bit-for-bit.
+    AC scans use the real progressive coding: run/size pairs inside
+    the band plus EOB-RUN symbols (EOBn: r extra bits encode runs
+    of 2^r..2^(r+1)-1 band-empty blocks) — the thing baseline AC
+    coding doesn't have."""
+    return _encode_progressive(pixels, width, height, _SPECTRAL_SCRIPT)
+
+def jpeg_encode_progressive_sa(
+    pixels: bytes, width: int, height: int
+) -> bytes:
+    """Progressive greyscale JPEG using SUCCESSIVE APPROXIMATION on
+    the DC band on top of spectral selection: scan 1 sends DC at
+    reduced precision (Al=1 — the point transform is an arithmetic
+    shift, predictors chain in the shifted domain), scan 2 is a DC
+    REFINEMENT (Ah=1, Al=0: one raw bit per block), then the two AC
+    band scans. ``(dc >> 1) << 1 | (dc & 1)`` reconstructs DC
+    exactly in two's complement, so the decoded raster is still
+    bit-identical to baseline."""
+    return _encode_progressive(pixels, width, height, _DC_SA_SCRIPT)
+
+def jpeg_encode_progressive_ac_sa(
+    pixels: bytes, width: int, height: int
+) -> bytes:
+    """Progressive greyscale JPEG using SUCCESSIVE APPROXIMATION on
+    the AC BANDS — the last progressive scan shape (T.81 G.1.2.3):
+    a plain DC scan, the two AC band first scans at REDUCED
+    precision (Al=1; the AC point transform truncates the magnitude
+    toward zero), then two AC REFINEMENT scans (Ah=1, Al=0) sending
+    the dropped low bit via the correction-bit interleave —
+    already-nonzero coefficients get one raw bit each, newly-
+    visible ±1 coefficients get (run<<4)|1 + sign, and the bits
+    buffer across EOB runs. trunc(|v|/2)*2*sign + refinement
+    reconstructs every coefficient exactly, so the decoded raster
+    is still bit-identical to baseline."""
+    return _encode_progressive(pixels, width, height, _AC_SA_SCRIPT)
 
 class _BitReader:
     def __init__(self, data: bytes, pos: int):
@@ -715,65 +815,112 @@ def _idct_block(coeffs):
             out[y * 8 + x] = 0 if px < 0 else (255 if px > 255 else px)
     return out
 
-def _decode_block(br, dct, act, q, pred):
-    """Entropy-decode + dequantize + IDCT one block. Returns
-    ``(block64, new_pred)`` — 64 decoded pixel values row-major."""
-    coeffs = [0] * 64
-    t = _decode_huff(br, dct)
-    if t:
-        pred += _extend(br.bits(t), t)
-    coeffs[0] = pred * q[0]
-    zz = 1
-    while zz < 64:
+def _ac_first(br, blk, ss: int, se: int, al: int, act) -> int:
+    """Band [ss..se] of one block in a FIRST AC scan — run/size pairs
+    at level ``al`` until EOB; baseline AC is the (1, 63, 0) case.
+    Returns the EOB run left for the following blocks (0 unless an
+    EOBn symbol with r > 0 ended this block)."""
+    k = ss
+    while k <= se:
         sym = _decode_huff(br, act)
-        if sym == 0x00:  # EOB
-            break
-        run, t = sym >> 4, sym & 0x0F
+        r, t = sym >> 4, sym & 0x0F
         if t == 0:
-            if run != 15:
-                raise ValueError("bad AC symbol")
-            zz += 16  # ZRL
-            continue
-        zz += run
-        if zz > 63:
-            raise ValueError("AC coefficient overflow")
-        coeffs[_ZZ[zz]] = _extend(br.bits(t), t) * q[_ZZ[zz]]
-        zz += 1
-    return _idct_block(coeffs), pred
+            if r == 15:
+                k += 16  # ZRL
+                continue
+            return (1 << r) - 1 + (br.bits(r) if r else 0)
+        k += r
+        if k > se:
+            raise ValueError("AC run past band end")
+        blk[_ZZ[k]] = _extend(br.bits(t), t) << al
+        k += 1
+    return 0
 
-def _decode_planes(payload: bytes):
-    """The general baseline decode path for the supported shapes:
-    segment parse, tables rebuilt from the stream, interleaved-MCU
-    entropy decode with per-component predictors and SOF-declared
-    sampling factors (1x1 .. 2x2 — covers 4:4:4, 4:2:2 and 4:2:0).
-    Returns ``(planes, width, height, dims)`` — one row-major plane
-    per SOF component at its STORED resolution, with ``dims`` the
-    per-plane ``(w, h)`` list (subsampled chroma planes are smaller
-    than the luma plane)."""
+def _correct(br, blk, k: int, p1: int, m1: int) -> None:
+    # one correction bit for an already-nonzero coefficient: 1 =
+    # increase the magnitude at this precision (skip if already set)
+    if br.bits(1) and not (blk[_ZZ[k]] & p1):
+        blk[_ZZ[k]] += p1 if blk[_ZZ[k]] >= 0 else m1
+
+def _ac_refine(br, blk, ss: int, se: int, al: int, act, eobrun: int) -> int:
+    """Band [ss..se] of one block in an AC REFINEMENT scan (T.81
+    G.1.2.3): newly-nonzero coefficients arrive as (run<<4)|1 + sign,
+    where the run counts only still-zero positions; every already-
+    nonzero coefficient passed eats one correction bit. Returns the
+    EOB run left after this block."""
+    p1, m1 = 1 << al, -1 << al
+    k = ss
+    if eobrun == 0:
+        while k <= se:
+            sym = _decode_huff(br, act)
+            r, s = sym >> 4, sym & 0x0F
+            if s:
+                if s != 1:
+                    raise ValueError("refinement size must be 1")
+                s_val = p1 if br.bits(1) else m1
+            else:
+                if r != 15:
+                    eobrun = 1 << r
+                    if r:
+                        eobrun += br.bits(r)
+                    break
+                s_val = 0  # ZRL
+            # advance over nonzero-history coefs (each eats a
+            # correction bit) and r still-zero ones
+            while k <= se:
+                if blk[_ZZ[k]] != 0:
+                    _correct(br, blk, k, p1, m1)
+                else:
+                    r -= 1
+                    if r < 0:
+                        break
+                k += 1
+            if s_val:
+                if k > se:
+                    raise ValueError("refinement run past band end")
+                blk[_ZZ[k]] = s_val
+            k += 1
+    if eobrun > 0:
+        # EOB-run block: correction bits continue for the band's
+        # remaining nonzero coefs
+        while k <= se:
+            if blk[_ZZ[k]] != 0:
+                _correct(br, blk, k, p1, m1)
+            k += 1
+        eobrun -= 1
+    return eobrun
+
+#: frame-header markers SOF0..SOF15 (C4 = DHT, C8 = JPG, CC = DAC)
+_SOF_MARKERS = frozenset(range(0xC0, 0xD0)) - {0xC4, 0xC8, 0xCC}
+
+def _segments(payload: bytes, qtabs: dict, htabs: dict):
+    """The one marker-segment walker both decoders loop over. Checks
+    SOI; parses every DQT into ``qtabs`` (id -> raster-order table) and
+    every DHT into ``htabs`` ((class, id) -> {(code, len): symbol});
+    skips APPn and COM; rejects DRI; and yields ``(marker, body, end)``
+    for every other segment up to EOI, ``end`` being the offset right
+    after it (where an SOS's entropy-coded data starts). Resumed after
+    an SOS, it skips that data — stuffed 0xFF00 pairs and fill bytes —
+    to the next marker. Raises ``ValueError`` on desync or a segment
+    that runs past the payload."""
     if payload[:2] != b"\xff\xd8":
         raise ValueError("not a JPEG payload (bad SOI)")
     pos = 2
-    qtabs: dict[int, list[int]] = {}
-    # (class, id) -> {(code, len): symbol}
-    htabs: dict[tuple[int, int], dict] = {}
-    width = height = None
-    comps: list[tuple[int, int]] = []  # SOF order: (comp_id, qtab_id)
-    scan_tabs: dict[int, tuple[int, int]] = {}  # comp_id -> (dc, ac)
-    while pos + 4 <= len(payload):
+    while pos + 2 <= len(payload):
         if payload[pos] != 0xFF:
             raise ValueError("segment desync (expected marker)")
         marker = payload[pos + 1]
-        if marker == 0xD9:  # EOI before SOS
-            raise ValueError("no scan data before EOI")
-        (ln,) = struct.unpack(">H", payload[pos + 2 : pos + 4])
+        if marker == 0xD9:  # EOI
+            return
+        ln = int.from_bytes(payload[pos + 2 : pos + 4], "big")
         body = payload[pos + 4 : pos + 2 + ln]
-        if len(body) != ln - 2:
+        if ln < 2 or len(body) != ln - 2:
             raise ValueError("truncated segment")
+        pos += 2 + ln
         if marker == 0xDB:  # DQT (possibly several tables)
             p = 0
             while p < len(body):
-                pq, tq = body[p] >> 4, body[p] & 0x0F
-                if pq != 0:
+                if body[p] >> 4:
                     raise ValueError("16-bit quant tables unsupported")
                 zzq = body[p + 1 : p + 65]
                 if len(zzq) != 64:
@@ -781,58 +928,53 @@ def _decode_planes(payload: bytes):
                 tab = [0] * 64
                 for i in range(64):
                     tab[_ZZ[i]] = zzq[i]
-                qtabs[tq] = tab
+                qtabs[body[p] & 0x0F] = tab
                 p += 65
-        elif marker == 0xC0:  # SOF0 baseline
-            prec, height, width, ncomp = struct.unpack(">BHHB", body[:6])
-            if prec != 8 or ncomp not in (1, 3):
-                raise ValueError(
-                    "only 8-bit single-component baseline or "
-                    "3-component 4:4:4 color supported"
-                )
-            comps = []
-            for i in range(ncomp):
-                cid, samp, qid = body[6 + 3 * i : 9 + 3 * i]
-                sh, sv = samp >> 4, samp & 0x0F
-                if sh not in (1, 2) or sv not in (1, 2):
-                    raise ValueError(
-                        f"sampling factors {sh}x{sv} unsupported"
-                    )
-                comps.append((cid, qid, sh, sv))
-        elif marker in (0xC1, 0xC2, 0xC3, 0xC5, 0xC6, 0xC7):
-            raise ValueError("non-baseline SOF unsupported")
         elif marker == 0xC4:  # DHT (possibly several tables)
             p = 0
             while p < len(body):
-                tc, th = body[p] >> 4, body[p] & 0x0F
-                bits = list(body[p + 1 : p + 17])
-                nval = sum(bits)
-                vals = list(body[p + 17 : p + 17 + nval])
+                bits = body[p + 1 : p + 17]
+                vals = body[p + 17 : p + 17 + sum(bits)]
+                if len(bits) != 16 or len(vals) != sum(bits):
+                    raise ValueError("short DHT")
                 codes = _huff_codes(bits, vals)
-                htabs[(tc, th)] = {
+                htabs[(body[p] >> 4, body[p] & 0x0F)] = {
                     (c, l): sym for sym, (c, l) in codes.items()
                 }
-                p += 17 + nval
+                p += 17 + len(vals)
         elif marker == 0xDD:
             raise ValueError("restart intervals unsupported")
-        elif marker == 0xDA:  # SOS
-            ns = body[0]
-            if ns != len(comps):
-                raise ValueError("scan must cover all SOF components")
-            for i in range(ns):
-                cid = body[1 + 2 * i]
-                scan_tabs[cid] = (body[2 + 2 * i] >> 4, body[2 + 2 * i] & 0x0F)
-            pos += 2 + ln
-            break
-        # APPn / COM / others: skip
-        pos += 2 + ln
-    else:
-        raise ValueError("no SOS segment")
-    if width is None or not qtabs or not htabs:
-        raise ValueError("missing SOF/DQT/DHT before scan")
-    # a single-component scan is non-interleaved: sampling factors
-    # are irrelevant, the MCU is one block
-    if len(comps) == 1:
+        elif not (0xE0 <= marker <= 0xEF or marker == 0xFE):
+            yield marker, body, pos
+            if marker == 0xDA:
+                while pos + 1 < len(payload) and not (
+                    payload[pos] == 0xFF and payload[pos + 1] != 0x00
+                ):
+                    pos += 1
+
+def _frame(marker: int, body: bytes):
+    """Parse an SOF0/SOF2 frame header. Returns ``(width, height,
+    comps, dims)``: ``comps`` the ``(id, qtab id, h, v)`` tuples in SOF
+    order (== MCU interleave order), ``dims`` each component's stored
+    ``(w, h)``."""
+    if len(body) < 6 or len(body) < 6 + 3 * body[5]:
+        raise ValueError("short SOF")
+    prec, height, width, ncomp = struct.unpack(">BHHB", body[:6])
+    if prec != 8 or ncomp not in ((1,) if marker == 0xC2 else (1, 3)):
+        raise ValueError(
+            "only 8-bit greyscale, 3-component baseline color or "
+            "single-component progressive supported"
+        )
+    comps = []
+    for i in range(ncomp):
+        cid, samp, qid = body[6 + 3 * i : 9 + 3 * i]
+        sh, sv = samp >> 4, samp & 0x0F
+        if sh not in (1, 2) or sv not in (1, 2):
+            raise ValueError(f"sampling factors {sh}x{sv} unsupported")
+        comps.append((cid, qid, sh, sv))
+    # a single-component scan is non-interleaved: sampling factors are
+    # irrelevant, the MCU is one block
+    if ncomp == 1:
         comps = [(comps[0][0], comps[0][1], 1, 1)]
     hmax = max(c[2] for c in comps)
     vmax = max(c[3] for c in comps)
@@ -841,39 +983,125 @@ def _decode_planes(payload: bytes):
             "dimensions must be multiples of the MCU size "
             f"({8 * hmax}x{8 * vmax})"
         )
-    # bind per-component tables (SOF order == MCU interleave order)
-    bound = []
-    for cid, qid, sh, sv in comps:
-        if cid not in scan_tabs:
-            raise ValueError(f"component {cid} missing from scan")
-        dc_id, ac_id = scan_tabs[cid]
-        bound.append(
-            (qtabs[qid], htabs[(0, dc_id)], htabs[(1, ac_id)], sh, sv)
-        )
-    br = _BitReader(payload, pos)
-    dims = [
-        (width * sh // hmax, height * sv // vmax)
-        for _q, _d, _a, sh, sv in bound
-    ]
-    planes = [bytearray(w * h) for w, h in dims]
-    preds = [0] * len(comps)
-    for my in range(height // (8 * vmax)):
-        for mx in range(width // (8 * hmax)):
-            for ci, (q, dct, act, sh, sv) in enumerate(bound):
-                cw = dims[ci][0]
-                plane = planes[ci]
-                # sh*sv blocks of this component per MCU, raster order
-                for by in range(sv):
-                    for bx in range(sh):
-                        blk, preds[ci] = _decode_block(
-                            br, dct, act, q, preds[ci]
-                        )
-                        yb, xb = my * sv + by, mx * sh + bx
-                        for y in range(8):
-                            row = (yb * 8 + y) * cw + xb * 8
-                            plane[row : row + 8] = bytes(
-                                blk[y * 8 : y * 8 + 8]
-                            )
+    dims = [(width * sh // hmax, height * sv // vmax) for *_, sh, sv in comps]
+    return width, height, comps, dims
+
+def _scan(br, mcu, tabs, ss: int, se: int, ah: int, al: int,
+          baseline: bool) -> None:
+    """One scan over the ``(component, block)`` pairs of ``mcu``, each
+    block's quantized coefficients updated in place: DC first (the
+    predictor chains at level ``al``) or DC refinement (one raw bit per
+    block) when ``ss == 0``, then band [ss..se] as an AC first or AC
+    refinement pass with EOB runs across blocks. The baseline scan is
+    the (0, 63, 0, 0) case, where an EOB run longer than one block is
+    not a valid symbol."""
+    preds = [0] * len(tabs)
+    eobrun = 0
+    for ci, blk in mcu:
+        dct, act = tabs[ci]
+        if ss == 0:
+            if ah:
+                blk[0] |= br.bits(1) << al
+            else:
+                t = _decode_huff(br, dct)
+                if t:
+                    preds[ci] += _extend(br.bits(t), t)
+                blk[0] = preds[ci] << al
+        if se == 0:
+            continue
+        if ah:
+            eobrun = _ac_refine(br, blk, ss, se, al, act, eobrun)
+        elif eobrun:
+            eobrun -= 1
+        else:
+            eobrun = _ac_first(br, blk, max(ss, 1), se, al, act)
+            if eobrun and baseline:
+                raise ValueError("bad AC symbol")
+
+def _decode_planes(payload: bytes, sof: int | None = None):
+    """The general decode path for the supported shapes, baseline
+    (SOF0) and progressive (SOF2) alike: walk the segments, rebuild
+    the tables from the stream, run every scan over the blocks in MCU
+    order with per-component DC predictors and SOF-declared sampling
+    factors (1x1 .. 2x2 — covers 4:4:4, 4:2:2 and 4:2:0), then
+    dequantize + IDCT each block once. ``sof`` restricts the frame
+    type. Returns ``(planes, width, height, dims)`` — one row-major
+    plane per SOF component at its STORED resolution, with ``dims``
+    the per-plane ``(w, h)`` list (subsampled chroma planes are
+    smaller than the luma plane)."""
+    qtabs: dict[int, list[int]] = {}
+    htabs: dict[tuple[int, int], dict] = {}
+    frame = None
+    for marker, body, end in _segments(payload, qtabs, htabs):
+        if marker in _SOF_MARKERS:
+            if marker not in (0xC0, 0xC2):
+                raise ValueError("only baseline and progressive SOF supported")
+            if sof not in (None, marker):
+                raise ValueError(
+                    "baseline SOF: use jpeg_decode" if marker == 0xC0
+                    else "progressive SOF: use jpeg_decode_progressive"
+                )
+            frame = marker
+            width, height, comps, dims = _frame(marker, body)
+            coeffs = [[[0] * 64 for _ in range(w * h // 64)] for w, h in dims]
+            hmax = max(c[2] for c in comps)
+            vmax = max(c[3] for c in comps)
+            mcu = [  # (component, block) in MCU order
+                (ci, coeffs[ci][(my * sv + by) * (dims[ci][0] // 8)
+                                + mx * sh + bx])
+                for my in range(height // (8 * vmax))
+                for mx in range(width // (8 * hmax))
+                for ci, (_c, _q, sh, sv) in enumerate(comps)
+                for by in range(sv)
+                for bx in range(sh)
+            ]
+        elif marker == 0xDA:  # SOS
+            if frame is None:
+                raise ValueError("SOS before SOF")
+            ns = body[0] if body else 0
+            if ns != len(comps) or len(body) < 4 + 2 * ns:
+                raise ValueError("scan must cover all SOF components")
+            sel = dict(zip(body[1 : 1 + 2 * ns : 2], body[2 : 2 + 2 * ns : 2]))
+            ss, se, ahal = body[1 + 2 * ns : 4 + 2 * ns]
+            ah, al = ahal >> 4, ahal & 0x0F
+            if frame == 0xC0 and (ss, se, ahal) != (0, 63, 0):
+                raise ValueError("baseline scan must be Ss=0, Se=63, Ah=Al=0")
+            if frame == 0xC2 and ss == 0 and se != 0:
+                raise ValueError("DC scan must have Se = 0")
+            if ah and ah != al + 1:
+                raise ValueError("refinement must step one bit (Ah=Al+1)")
+            try:
+                tabs = [
+                    (htabs[(0, sel[cid] >> 4)] if ss == 0 and not ah else None,
+                     htabs[(1, sel[cid] & 0x0F)] if se else None)
+                    for cid, *_ in comps
+                ]
+            except KeyError:
+                raise ValueError(
+                    "scan references a component or Huffman table the "
+                    "stream does not define"
+                ) from None
+            _scan(_BitReader(payload, end), mcu, tabs, ss, se, ah, al,
+                  frame == 0xC0)
+            if frame == 0xC0:
+                break  # a baseline frame is one interleaved scan
+    else:
+        if frame != 0xC2:
+            raise ValueError("no SOS segment")
+    try:
+        qts = [qtabs[qid] for _cid, qid, _sh, _sv in comps]
+    except KeyError:
+        raise ValueError("component references an undefined DQT") from None
+    planes = []
+    for (w, h), blocks, q in zip(dims, coeffs, qts):
+        plane = bytearray(w * h)
+        for bi, blk in enumerate(blocks):
+            px = _idct_block([c * qq for c, qq in zip(blk, q)])
+            by, bx = divmod(bi, w // 8)
+            for y in range(8):
+                row = (by * 8 + y) * w + bx * 8
+                plane[row : row + 8] = px[y * 8 : y * 8 + 8]
+        planes.append(plane)
     return planes, width, height, dims
 
 def jpeg_decode(payload: bytes) -> tuple[bytes, int, int]:
@@ -884,28 +1112,20 @@ def jpeg_decode(payload: bytes) -> tuple[bytes, int, int]:
     arbitrary AC coefficients, ZRL and EOB; raises ``ValueError`` on
     corrupt input, progressive shapes, or restart markers — and on
     color payloads (use :func:`jpeg_decode_color`)."""
-    planes, width, height, _dims = _decode_planes(payload)
+    planes, width, height, _dims = _decode_planes(payload, 0xC0)
     if len(planes) != 1:
         raise ValueError("color JPEG: use jpeg_decode_color")
     return bytes(planes[0]), width, height
 
-def _sof_marker(payload: bytes) -> int | None:
-    """Light segment walk returning the frame-header marker byte
-    (0xC0 baseline, 0xC2 progressive, ...) — the dispatch probe, so
-    progressive streams route to their decoder without exception-
-    message matching."""
-    pos = 2
-    while pos + 4 <= len(payload):
-        if payload[pos] != 0xFF:
-            return None
-        marker = payload[pos + 1]
-        if 0xC0 <= marker <= 0xCF and marker not in (0xC4, 0xC8, 0xCC):
-            return marker
-        if marker in (0xD9, 0xDA):
-            return None
-        (ln,) = struct.unpack(">H", payload[pos + 2 : pos + 4])
-        pos += 2 + ln
-    return None
+def _upsample(plane, pw: int, ph: int, width: int, height: int):
+    """Pixel replication to ``width`` x ``height``: pixel (r, c) reads
+    stored sample ``(r*ph DIV height, c*pw DIV width)``."""
+    if (pw, ph) == (width, height):
+        return plane
+    cols = [c * pw // width for c in range(width)]
+    return [
+        plane[(r * ph // height) * pw + c] for r in range(height) for c in cols
+    ]
 
 def jpeg_decode_color(payload: bytes) -> tuple[bytes, int, int, int]:
     """Decode a JFIF payload of any supported shape. Returns
@@ -918,367 +1138,15 @@ def jpeg_decode_color(payload: bytes) -> tuple[bytes, int, int, int]:
     of the encoder's block coverage, so uniform-MCU fixtures stay on
     the ``COLOR_UNIFORM_RGB`` closed form. Progressive (SOF2)
     streams route to :func:`jpeg_decode_progressive`."""
-    if _sof_marker(payload) == 0xC2:
-        px, w, h = jpeg_decode_progressive(payload)
-        return px, w, h, 1
     planes, width, height, dims = _decode_planes(payload)
     if len(planes) == 1:
         return bytes(planes[0]), width, height, 1
-    py, pcb, pcr = planes
-    (cbw, cbh), (crw, crh) = dims[1], dims[2]
-    full = (cbw, cbh) == (width, height) and (crw, crh) == (
-        width,
-        height,
+    y, cb, cr = (
+        _upsample(p, pw, ph, width, height)
+        for p, (pw, ph) in zip(planes, dims)
     )
-    out = bytearray(width * height * 3)
-    for i in range(width * height):
-        if full:
-            cb_s, cr_s = pcb[i], pcr[i]
-        else:
-            r_, c_ = divmod(i, width)
-            cb_s = pcb[(r_ * cbh // height) * cbw + c_ * cbw // width]
-            cr_s = pcr[(r_ * crh // height) * crw + c_ * crw // width]
-        y, dcb, dcr = py[i], cb_s - 128, cr_s - 128
-        r = y + (359 * dcr + 128) // 256
-        g = y + (-88 * dcb - 183 * dcr + 128) // 256
-        b = y + (454 * dcb + 128) // 256
-        out[3 * i] = 0 if r < 0 else (255 if r > 255 else r)
-        out[3 * i + 1] = 0 if g < 0 else (255 if g > 255 else g)
-        out[3 * i + 2] = 0 if b < 0 else (255 if b > 255 else b)
-    return bytes(out), width, height, 3
-
-# progressive AC scans need EOBn symbols (r<<4, r=1..14), which
-# the baseline Annex-K AC table does not define — ship a custom
-# flat canonical table (all 176 symbols at 8 bits; max code
-# 0xAF, so the reserved all-ones code stays unused) in the DHT:
-# the decoder rebuilds whatever the stream declares
-_AC_PROG_SYMS = (
-    [r << 4 for r in range(15)]
-    + [0xF0]
-    + [(run << 4) | t for run in range(16) for t in range(1, 11)]
-)
-_AC_PROG_SPEC = ([0] * 7 + [176] + [0] * 8, _AC_PROG_SYMS)
-
-def _ac_first_scan(blocks, ss: int, se: int, al: int, ac_codes) -> bytes:
-    """FIRST AC scan of band [ss..se] at approximation level ``al``
-    (Ah=0): in-band run/size pairs + EOB-RUN symbols over the
-    point-transformed values — for AC the point transform is an
-    integer divide by 2^Al truncating toward ZERO (T.81 G.1.2.1;
-    sign-magnitude shift), unlike DC's arithmetic shift. ``al=0``
-    is byte-identical to the plain spectral-selection scan."""
-    bw = _BitWriter()
-    eobrun = 0
-
-    def flush_eobrun():
-        nonlocal eobrun
-        if not eobrun:
-            return
-        r = eobrun.bit_length() - 1
-        code, ln = ac_codes[r << 4]
-        bw.write(code, ln)
-        if r:
-            bw.write(eobrun - (1 << r), r)
-        eobrun = 0
-
-    for qc in blocks:
-        vals = {}
-        for zz in range(ss, se + 1):
-            v = qc[_ZZ[zz]]
-            a = abs(v) >> al
-            vals[zz] = a if v >= 0 else -a
-        nz = [zz for zz in range(ss, se + 1) if vals[zz]]
-        if not nz:
-            eobrun += 1
-            if eobrun == 0x7FFF:
-                flush_eobrun()
-            continue
-        flush_eobrun()
-        run = 0
-        last_nz = nz[-1]
-        for zz in range(ss, last_nz + 1):
-            c = vals[zz]
-            if c == 0:
-                run += 1
-                continue
-            while run > 15:
-                zrl, zln = ac_codes[0xF0]
-                bw.write(zrl, zln)
-                run -= 16
-            t = abs(c).bit_length()
-            code, ln = ac_codes[(run << 4) | t]
-            bw.write(code, ln)
-            bw.write(c if c >= 0 else c + (1 << t) - 1, t)
-            run = 0
-        if last_nz < se:
-            eobrun = 1  # this block's tail starts a new run
-    flush_eobrun()
-    return bw.flush()
-
-def _ac_refine_scan(blocks, ss: int, se: int, al: int, ac_codes) -> bytes:
-    """AC REFINEMENT scan (Ah = al+1, Al = al) — the T.81 G.1.2.3
-    correction-bit interleave: coefficients already nonzero at the
-    previous precision send ONE raw correction bit (bit ``al`` of
-    the magnitude); coefficients newly visible at this precision
-    are coded as (run<<4)|1 + a sign bit, where the run counts only
-    STILL-ZERO positions; correction bits buffer until the next
-    emitted symbol (ZRL / newly-nonzero / EOBn) and are appended
-    right after it, so the decoder can interleave them back. Blocks
-    with nothing new join an EOB run whose correction bits ride the
-    eventual EOBn symbol."""
-    bw = _BitWriter()
-    eobrun = 0
-    be_bits: list[int] = []  # correction bits owned by the EOB run
-
-    def emit_eobrun():
-        nonlocal eobrun, be_bits
-        if not eobrun:
-            return
-        r = eobrun.bit_length() - 1
-        code, ln = ac_codes[r << 4]
-        bw.write(code, ln)
-        if r:
-            bw.write(eobrun - (1 << r), r)
-        eobrun = 0
-        for b in be_bits:
-            bw.write(b, 1)
-        be_bits = []
-
-    for qc in blocks:
-        absvals = {}
-        eob = ss - 1  # position of the last NEWLY-nonzero coef
-        for zz in range(ss, se + 1):
-            t = abs(qc[_ZZ[zz]]) >> al
-            absvals[zz] = t
-            if t == 1:
-                eob = zz
-        r = 0
-        br_bits: list[int] = []  # bits since the last symbol
-        for zz in range(ss, se + 1):
-            temp = absvals[zz]
-            if temp == 0:
-                r += 1
-                continue
-            while r > 15 and zz <= eob:
-                emit_eobrun()
-                code, ln = ac_codes[0xF0]
-                bw.write(code, ln)
-                r -= 16
-                for b in br_bits:
-                    bw.write(b, 1)
-                br_bits = []
-            if temp > 1:
-                # already nonzero at the previous precision: just
-                # the next magnitude bit (if r > 15 here, zz > eob,
-                # so this is never a newly-nonzero coefficient)
-                br_bits.append(temp & 1)
-                continue
-            emit_eobrun()
-            code, ln = ac_codes[(r << 4) | 1]
-            bw.write(code, ln)
-            bw.write(1 if qc[_ZZ[zz]] >= 0 else 0, 1)
-            for b in br_bits:
-                bw.write(b, 1)
-            br_bits = []
-            r = 0
-        if r > 0 or br_bits:
-            eobrun += 1
-            be_bits.extend(br_bits)
-            if eobrun == 0x7FFF or len(be_bits) > 937:
-                emit_eobrun()
-    emit_eobrun()
-    return bw.flush()
-
-def jpeg_encode_progressive(
-    pixels: bytes, width: int, height: int
-) -> bytes:
-    """Serialize an 8-bit greyscale raster to a PROGRESSIVE JPEG
-    (SOF2, spectral selection, Al=0): three scans — DC (Ss=Se=0),
-    low AC band (1..5), high AC band (6..63). The quantized
-    coefficients are IDENTICAL to the baseline encoder's (same
-    ``_fdct_quant``), only their scan layout differs — which is why
-    progressive decode reproduces the baseline raster bit-for-bit.
-    AC scans use the real progressive coding: run/size pairs inside
-    the band plus EOB-RUN symbols (EOBn: r extra bits encode runs
-    of 2^r..2^(r+1)-1 band-empty blocks) — the thing baseline AC
-    coding doesn't have."""
-    if width % 8 or height % 8:
-        raise ValueError("dimensions must be multiples of 8")
-    if len(pixels) != width * height:
-        raise ValueError("pixel buffer does not match dimensions")
-    dc_codes = _huff_codes(*_DC_SPEC)
-    ac_codes = _huff_codes(*_AC_PROG_SPEC)
-    blocks = []
-    for by in range(height // 8):
-        for bx in range(width // 8):
-            blk = [
-                pixels[(by * 8 + y) * width + bx * 8 + x] - 128
-                for y in range(8)
-                for x in range(8)
-            ]
-            blocks.append(_fdct_quant(blk, _QTAB))
-    # scan 1: DC, identical coding to baseline DC
-    bw = _BitWriter()
-    prev = 0
-    for qc in blocks:
-        diff = qc[0] - prev
-        prev = qc[0]
-        t = abs(diff).bit_length()
-        code, ln = dc_codes[t]
-        bw.write(code, ln)
-        if t:
-            bw.write(diff if diff >= 0 else diff + (1 << t) - 1, t)
-    dc_scan = bw.flush()
-
-    def ac_band_scan(ss: int, se: int) -> bytes:
-        return _ac_first_scan(blocks, ss, se, 0, ac_codes)
-
-    def sos(ss: int, se: int) -> bytes:
-        return _seg(0xFFDA, bytes([1, 1, 0, ss, se, 0]))
-
-    dqt = _seg(0xFFDB, b"\x00" + bytes(_QTAB[_ZZ[i]] for i in range(64)))
-    sof = _seg(
-        0xFFC2,
-        struct.pack(">BHHB", 8, height, width, 1) + b"\x01\x11\x00",
-    )
-    dht = _seg(
-        0xFFC4,
-        _dht_payload(0, 0, _DC_SPEC) + _dht_payload(1, 0, _AC_PROG_SPEC),
-    )
-    app0 = _seg(0xFFE0, _APP0)
-    return (
-        b"\xff\xd8" + app0 + dqt + sof + dht
-        + sos(0, 0) + dc_scan
-        + sos(1, 5) + ac_band_scan(1, 5)
-        + sos(6, 63) + ac_band_scan(6, 63)
-        + b"\xff\xd9"
-    )
-
-def jpeg_encode_progressive_sa(
-    pixels: bytes, width: int, height: int
-) -> bytes:
-    """Progressive greyscale JPEG using SUCCESSIVE APPROXIMATION on
-    the DC band on top of spectral selection: scan 1 sends DC at
-    reduced precision (Al=1 — the point transform is an arithmetic
-    shift, predictors chain in the shifted domain), scan 2 is a DC
-    REFINEMENT (Ah=1, Al=0: one raw bit per block), then the two AC
-    band scans. ``(dc >> 1) << 1 | (dc & 1)`` reconstructs DC
-    exactly in two's complement, so the decoded raster is still
-    bit-identical to baseline."""
-    if width % 8 or height % 8:
-        raise ValueError("dimensions must be multiples of 8")
-    if len(pixels) != width * height:
-        raise ValueError("pixel buffer does not match dimensions")
-    full = jpeg_encode_progressive(pixels, width, height)
-    dc_codes = _huff_codes(*_DC_SPEC)
-    blocks = []
-    for by in range(height // 8):
-        for bx in range(width // 8):
-            blk = [
-                pixels[(by * 8 + y) * width + bx * 8 + x] - 128
-                for y in range(8)
-                for x in range(8)
-            ]
-            blocks.append(_fdct_quant(blk, _QTAB))
-    # scan 1: DC at Al=1 (predictors chain over the SHIFTED values)
-    bw = _BitWriter()
-    prev = 0
-    for qc in blocks:
-        v = qc[0] >> 1  # arithmetic shift = the DC point transform
-        diff = v - prev
-        prev = v
-        t = abs(diff).bit_length()
-        code, ln = dc_codes[t]
-        bw.write(code, ln)
-        if t:
-            bw.write(diff if diff >= 0 else diff + (1 << t) - 1, t)
-    dc_first = bw.flush()
-    # scan 2: DC refinement — the raw Al=0 bit per block
-    bw = _BitWriter()
-    for qc in blocks:
-        bw.write(qc[0] & 1, 1)
-    dc_refine = bw.flush()
-
-    def sos(ss: int, se: int, ah: int, al: int) -> bytes:
-        return _seg(0xFFDA, bytes([1, 1, 0, ss, se, (ah << 4) | al]))
-
-    # reuse the spectral-selection stream's headers and AC scans:
-    # everything from SOI through DHT, then our two DC scans, then
-    # the original AC scans (split on the first SOS)
-    first_sos = full.index(b"\xff\xda")
-    headers = full[:first_sos]
-    # the original DC scan is the first SOS; AC scans follow
-    after_dc = full.index(b"\xff\xda", first_sos + 2)
-    ac_scans = full[after_dc:]  # includes the EOI trailer
-    return (
-        headers
-        + sos(0, 0, 0, 1) + dc_first
-        + sos(0, 0, 1, 0) + dc_refine
-        + ac_scans
-    )
-
-def jpeg_encode_progressive_ac_sa(
-    pixels: bytes, width: int, height: int
-) -> bytes:
-    """Progressive greyscale JPEG using SUCCESSIVE APPROXIMATION on
-    the AC BANDS — the last progressive scan shape (T.81 G.1.2.3):
-    a plain DC scan, the two AC band first scans at REDUCED
-    precision (Al=1; the AC point transform truncates the magnitude
-    toward zero), then two AC REFINEMENT scans (Ah=1, Al=0) sending
-    the dropped low bit via the correction-bit interleave —
-    already-nonzero coefficients get one raw bit each, newly-
-    visible ±1 coefficients get (run<<4)|1 + sign, and the bits
-    buffer across EOB runs. trunc(|v|/2)*2*sign + refinement
-    reconstructs every coefficient exactly, so the decoded raster
-    is still bit-identical to baseline."""
-    if width % 8 or height % 8:
-        raise ValueError("dimensions must be multiples of 8")
-    if len(pixels) != width * height:
-        raise ValueError("pixel buffer does not match dimensions")
-    dc_codes = _huff_codes(*_DC_SPEC)
-    ac_codes = _huff_codes(*_AC_PROG_SPEC)
-    blocks = []
-    for by in range(height // 8):
-        for bx in range(width // 8):
-            blk = [
-                pixels[(by * 8 + y) * width + bx * 8 + x] - 128
-                for y in range(8)
-                for x in range(8)
-            ]
-            blocks.append(_fdct_quant(blk, _QTAB))
-    bw = _BitWriter()
-    prev = 0
-    for qc in blocks:
-        diff = qc[0] - prev
-        prev = qc[0]
-        t = abs(diff).bit_length()
-        code, ln = dc_codes[t]
-        bw.write(code, ln)
-        if t:
-            bw.write(diff if diff >= 0 else diff + (1 << t) - 1, t)
-    dc_scan = bw.flush()
-
-    def sos(ss: int, se: int, ah: int, al: int) -> bytes:
-        return _seg(0xFFDA, bytes([1, 1, 0, ss, se, (ah << 4) | al]))
-
-    dqt = _seg(0xFFDB, b"\x00" + bytes(_QTAB[_ZZ[i]] for i in range(64)))
-    sof = _seg(
-        0xFFC2,
-        struct.pack(">BHHB", 8, height, width, 1) + b"\x01\x11\x00",
-    )
-    dht = _seg(
-        0xFFC4,
-        _dht_payload(0, 0, _DC_SPEC) + _dht_payload(1, 0, _AC_PROG_SPEC),
-    )
-    app0 = _seg(0xFFE0, _APP0)
-    return (
-        b"\xff\xd8" + app0 + dqt + sof + dht
-        + sos(0, 0, 0, 0) + dc_scan
-        + sos(1, 5, 0, 1) + _ac_first_scan(blocks, 1, 5, 1, ac_codes)
-        + sos(6, 63, 0, 1) + _ac_first_scan(blocks, 6, 63, 1, ac_codes)
-        + sos(1, 5, 1, 0) + _ac_refine_scan(blocks, 1, 5, 0, ac_codes)
-        + sos(6, 63, 1, 0) + _ac_refine_scan(blocks, 6, 63, 0, ac_codes)
-        + b"\xff\xd9"
-    )
+    rgb = map(ycbcr_to_rgb, y, cb, cr)
+    return bytes(v for px in rgb for v in px), width, height, 3
 
 def jpeg_decode_progressive(payload: bytes) -> tuple[bytes, int, int]:
     """Decode a PROGRESSIVE (SOF2) greyscale JPEG with spectral
@@ -1289,195 +1157,5 @@ def jpeg_decode_progressive(payload: bytes) -> tuple[bytes, int, int]:
     (Ah/Al != 0) and multi-component progressive stay behind
     ``ValueError`` — spectral selection is the shape our encoder
     writes and the common single-component progressive case."""
-    if payload[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG payload (bad SOI)")
-    pos = 2
-    qtabs: dict[int, list[int]] = {}
-    htabs: dict[tuple[int, int], dict] = {}
-    width = height = None
-    qid0 = 0
-    coeffs: list[list[int]] | None = None
-    while pos + 2 <= len(payload):
-        if payload[pos] != 0xFF:
-            raise ValueError("segment desync (expected marker)")
-        marker = payload[pos + 1]
-        if marker == 0xD9:  # EOI
-            break
-        (ln,) = struct.unpack(">H", payload[pos + 2 : pos + 4])
-        body = payload[pos + 4 : pos + 2 + ln]
-        if len(body) != ln - 2:
-            raise ValueError("truncated segment")
-        if marker == 0xDB:
-            p = 0
-            while p < len(body):
-                pq, tq = body[p] >> 4, body[p] & 0x0F
-                if pq != 0:
-                    raise ValueError("16-bit quant tables unsupported")
-                tab = [0] * 64
-                for i in range(64):
-                    tab[_ZZ[i]] = body[p + 1 + i]
-                qtabs[tq] = tab
-                p += 65
-        elif marker == 0xC2:
-            prec, height, width, ncomp = struct.unpack(">BHHB", body[:6])
-            if prec != 8 or ncomp != 1:
-                raise ValueError(
-                    "only single-component progressive supported"
-                )
-            qid0 = body[8]
-            if width % 8 or height % 8:
-                raise ValueError("dimensions must be multiples of 8")
-            coeffs = [
-                [0] * 64 for _ in range((width // 8) * (height // 8))
-            ]
-        elif marker == 0xC0:
-            raise ValueError("baseline SOF: use jpeg_decode")
-        elif marker == 0xC4:
-            p = 0
-            while p < len(body):
-                tc, th = body[p] >> 4, body[p] & 0x0F
-                bits = list(body[p + 1 : p + 17])
-                nval = sum(bits)
-                vals = list(body[p + 17 : p + 17 + nval])
-                codes = _huff_codes(bits, vals)
-                htabs[(tc, th)] = {
-                    (c, l): sym for sym, (c, l) in codes.items()
-                }
-                p += 17 + nval
-        elif marker == 0xDA:
-            if coeffs is None:
-                raise ValueError("SOS before SOF2")
-            ns = body[0]
-            if ns != 1:
-                raise ValueError("interleaved progressive scans "
-                                 "unsupported")
-            tsel = body[2]
-            ss, se, ahal = body[3], body[4], body[5]
-            ah, al = ahal >> 4, ahal & 0x0F
-            br = _BitReader(payload, pos + 2 + ln)
-            if ss == 0:  # DC scan (first or refinement)
-                if se != 0:
-                    raise ValueError("DC scan must have Se = 0")
-                if ah == 0:  # first: predictors chain in the
-                    # SHIFTED domain; store the full-domain approx
-                    dct = htabs[(0, tsel >> 4)]
-                    pred = 0
-                    for blk in coeffs:
-                        t = _decode_huff(br, dct)
-                        if t:
-                            pred += _extend(br.bits(t), t)
-                        blk[0] = pred << al
-                else:  # refinement: one raw bit per block at Al
-                    if ah != al + 1:
-                        raise ValueError(
-                            "DC refinement must step one bit (Ah=Al+1)"
-                        )
-                    for blk in coeffs:
-                        blk[0] |= br.bits(1) << al
-            elif ah != 0:  # AC refinement (T.81 G.1.2.3)
-                if ah != al + 1:
-                    raise ValueError(
-                        "AC refinement must step one bit (Ah=Al+1)"
-                    )
-                act = htabs[(1, tsel & 0x0F)]
-                p1 = 1 << al
-                m1 = -1 << al
-                eobrun = 0
-
-                def _corr(blk, k):
-                    # one correction bit for an already-nonzero
-                    # coefficient: 1 = increase the magnitude at
-                    # this precision (skip if the bit is set)
-                    if br.bits(1) and not (blk[_ZZ[k]] & p1):
-                        blk[_ZZ[k]] += p1 if blk[_ZZ[k]] >= 0 else m1
-
-                for blk in coeffs:
-                    k = ss
-                    if eobrun == 0:
-                        while k <= se:
-                            sym = _decode_huff(br, act)
-                            r, s = sym >> 4, sym & 0x0F
-                            if s:
-                                if s != 1:
-                                    raise ValueError(
-                                        "refinement size must be 1"
-                                    )
-                                s_val = p1 if br.bits(1) else m1
-                            else:
-                                if r != 15:
-                                    eobrun = 1 << r
-                                    if r:
-                                        eobrun += br.bits(r)
-                                    break
-                                s_val = 0  # ZRL
-                            # advance over nonzero-history coefs
-                            # (each eats a correction bit) and r
-                            # still-zero ones
-                            while k <= se:
-                                if blk[_ZZ[k]] != 0:
-                                    _corr(blk, k)
-                                else:
-                                    r -= 1
-                                    if r < 0:
-                                        break
-                                k += 1
-                            if s_val:
-                                if k > se:
-                                    raise ValueError(
-                                        "refinement run past band end"
-                                    )
-                                blk[_ZZ[k]] = s_val
-                            k += 1
-                    if eobrun > 0:
-                        # EOB-run block: correction bits continue
-                        # for the band's remaining nonzero coefs
-                        while k <= se:
-                            if blk[_ZZ[k]] != 0:
-                                _corr(blk, k)
-                            k += 1
-                        eobrun -= 1
-            else:  # AC band first scan (values arrive at level Al)
-                act = htabs[(1, tsel & 0x0F)]
-                eobrun = 0
-                for blk in coeffs:
-                    if eobrun:
-                        eobrun -= 1
-                        continue
-                    zz = ss
-                    while zz <= se:
-                        sym = _decode_huff(br, act)
-                        r, t = sym >> 4, sym & 0x0F
-                        if t == 0:
-                            if r == 15:
-                                zz += 16  # ZRL
-                                continue
-                            extra = br.bits(r) if r else 0
-                            eobrun = (1 << r) - 1 + extra
-                            break
-                        zz += r
-                        if zz > se:
-                            raise ValueError("AC run past band end")
-                        blk[_ZZ[zz]] = _extend(br.bits(t), t) << al
-                        zz += 1
-            # resync to the next marker: drop partial bits, then
-            # skip stuffed 0xFF00 pairs / fill bytes
-            pos = br.pos
-            while pos + 1 < len(payload) and not (
-                payload[pos] == 0xFF and payload[pos + 1] != 0x00
-            ):
-                pos += 1
-            continue
-        pos += 2 + ln
-    if coeffs is None or width is None or qid0 not in qtabs:
-        raise ValueError("missing SOF2/DQT before scan")
-    q = qtabs[qid0]
-    out = bytearray(width * height)
-    bw_cnt = width // 8
-    for bi, blk in enumerate(coeffs):
-        deq = [blk[i] * q[i] for i in range(64)]
-        px = _idct_block(deq)
-        by, bx = divmod(bi, bw_cnt)
-        for y in range(8):
-            row = (by * 8 + y) * width + bx * 8
-            out[row : row + 8] = bytes(px[y * 8 : y * 8 + 8])
-    return bytes(out), width, height
+    planes, width, height, _dims = _decode_planes(payload, 0xC2)
+    return bytes(planes[0]), width, height

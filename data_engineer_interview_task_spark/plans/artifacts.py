@@ -29,12 +29,14 @@ published path is returned) and :func:`materialized`, its parquet case
 
 Entries land under ``base_dir`` (parameter, else
 ``$SPARK_GRAFT_ARTIFACT_DIR`` — a warehouse deployment's managed
-derived-table location — else :func:`tmp_root`). Process-scoped entries
-(staged stream sources, the persisted indexes) pass :func:`tmp_root`.
+derived-table location — else :func:`tmp_root`, which is removed at
+interpreter exit). Process-scoped entries (staged stream sources, the
+persisted indexes) pass :func:`tmp_root`.
 """
 
 from __future__ import annotations
 
+import atexit
 import hashlib
 import os
 import shutil
@@ -103,10 +105,12 @@ def key_lock(key: tuple) -> threading.Lock:
 
 
 def tmp_root() -> str:
-    """The process-private root, created on first use."""
+    """The process-private root, created on first use and removed when
+    the interpreter exits."""
     with _GUARD:
         if not _TMP_ROOT:
             _TMP_ROOT.append(tempfile.mkdtemp(prefix="spark_graft_artifacts_"))
+            atexit.register(shutil.rmtree, _TMP_ROOT[0], ignore_errors=True)
         return _TMP_ROOT[0]
 
 

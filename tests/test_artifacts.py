@@ -6,6 +6,8 @@ from __future__ import annotations
 
 import os
 import shutil
+import subprocess
+import sys
 import tempfile
 import time
 from concurrent.futures import ThreadPoolExecutor
@@ -229,3 +231,30 @@ def test_concurrent_ivf_callers_build_once(spark, corpus_copy, monkeypatch):
         ]
         paths = {f.result(timeout=60) for f in futures}
     assert len(calls) == 1 and len(paths) == 1
+
+
+def test_process_private_root_is_removed_at_exit(tmp_path):
+    """A process that builds one entry in the fallback root leaves no
+    ``spark_graft_artifacts_*`` dir behind once it exits."""
+    script = (
+        "import os, sys\n"
+        "from data_engineer_interview_task_spark.plans import artifacts\n"
+        "path = artifacts.materialized_dir(\n"
+        "    ('exit-test',), 'exit_', lambda tmp: os.makedirs(tmp))\n"
+        "assert os.path.isdir(path), path\n"
+        "print(artifacts.tmp_root())\n"
+    )
+    env = dict(os.environ, TMPDIR=str(tmp_path))
+    env.pop("SPARK_GRAFT_ARTIFACT_DIR", None)
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    proc = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=repo, env=env, capture_output=True, text=True, timeout=120,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    root = proc.stdout.strip().splitlines()[-1]
+    assert os.path.dirname(root) == str(tmp_path)
+    assert not os.path.exists(root)
+    left = [d for d in os.listdir(tmp_path) if d.startswith("spark_graft_artifacts_")]
+    assert not left, left
+

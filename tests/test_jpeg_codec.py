@@ -1,11 +1,14 @@
-"""Real LOSSY-codec tests: the pure-stdlib baseline JPEG codec that
-extends the multimodal decode surface past PNG (VERDICT r4 had listed
-JPEG as genuinely impossible here). Covers the codec in isolation
-(DC-only closed form over all 256 block values, general AC path on
-non-uniform images, stream-parsing robustness, byte stuffing,
-determinism) and the Spark seam: ``decode_image`` dispatches JPEG
-payloads to the real decoder and ``multimodal_jpeg_decode`` publishes
-facts of the genuinely decoded raster."""
+"""Real LOSSY-codec tests: the pure-stdlib JPEG codec that extends the
+multimodal decode surface past PNG (VERDICT r4 had listed JPEG as
+genuinely impossible here). Covers the codec in isolation (DC-only
+closed form over all 256 block values, general AC path on non-uniform
+images, stream-parsing robustness, byte stuffing, determinism), the
+color, 4:2:0 / 4:2:2 subsampled and progressive (spectral selection,
+DC and AC successive approximation) shapes, a sha256 pin of every
+public encoder's bytes, and the Spark seam: ``decode_image``
+dispatches JPEG payloads to the real decoder and
+``multimodal_jpeg_decode`` publishes facts of the genuinely decoded
+raster."""
 from __future__ import annotations
 
 import hashlib
@@ -391,3 +394,413 @@ def test_decoder_binds_tables_by_stream_ids():
             break
         pos += 2 + ln
     assert jpeg_decode(bytes(enc)) == jpeg_decode(jpeg_encode(grad, 16, 16))
+
+
+# ------------------------------------- subsampled chroma (4:2:0 / 4:2:2)
+
+
+def test_jpeg_420_uniform_mcu_matches_closed_form():
+    """4:2:0 encode∘decode of uniform 16x16 MCUs == COLOR_UNIFORM_RGB
+    per MCU (subsampling is lossless on uniform chroma groups), across
+    random colors — one wrong bit in the MCU interleave, chroma plane
+    layout, or replication upsample breaks full-raster equality."""
+    import hashlib
+
+    from data_engineer_interview_task_spark.functions.jpeg_codec import (
+        COLOR_UNIFORM_RGB,
+        jpeg_decode_color,
+        jpeg_encode_color_420,
+    )
+
+    w = h = 32
+    colors = [
+        tuple(hashlib.md5(f"c{i}".encode()).digest()[:3]) for i in range(16)
+    ]
+    for trial in range(4):
+        quad = colors[4 * trial : 4 * trial + 4]
+        px = bytearray(w * h * 3)
+        for my in range(2):
+            for mx in range(2):
+                r, g, b = quad[my * 2 + mx]
+                for y in range(16):
+                    base = ((my * 16 + y) * w + mx * 16) * 3
+                    for x in range(16):
+                        px[base + 3 * x : base + 3 * x + 3] = bytes((r, g, b))
+        out, ww, hh, nc = jpeg_decode_color(
+            jpeg_encode_color_420(bytes(px), w, h)
+        )
+        assert (ww, hh, nc) == (w, h, 3)
+        expect = bytearray(w * h * 3)
+        for my in range(2):
+            for mx in range(2):
+                er, eg, eb = COLOR_UNIFORM_RGB(*quad[my * 2 + mx])
+                for y in range(16):
+                    base = ((my * 16 + y) * w + mx * 16) * 3
+                    for x in range(16):
+                        expect[base + 3 * x : base + 3 * x + 3] = bytes(
+                            (er, eg, eb)
+                        )
+        assert bytes(out) == bytes(expect)
+
+
+def test_jpeg_420_stream_structure_and_guards():
+    """The 4:2:0 stream declares 2x2 luma sampling in its SOF, carries
+    half the chroma blocks of the 4:4:4 encoding (6 vs 12 blocks per
+    16x16), and the decoder rejects out-of-scope sampling factors."""
+    import random
+
+    from data_engineer_interview_task_spark.functions.jpeg_codec import (
+        jpeg_decode_color,
+        jpeg_encode_color,
+        jpeg_encode_color_420,
+    )
+
+    rng = random.Random(11)
+    px = bytes(rng.randrange(256) for _ in range(32 * 32 * 3))
+    p420 = jpeg_encode_color_420(px, 32, 32)
+    assert b"\x01\x22\x00" in p420  # SOF: Y id 1, 2x2 sampling
+    assert len(p420) < len(jpeg_encode_color(px, 32, 32))
+    # deterministic decode, full-resolution RGB out
+    assert jpeg_decode_color(p420) == jpeg_decode_color(p420)
+    assert len(jpeg_decode_color(p420)[0]) == 32 * 32 * 3
+    # dims must cover whole MCUs
+    with pytest.raises(ValueError):
+        jpeg_encode_color_420(bytes(24 * 24 * 3), 24, 24)
+    # decoder rejects sampling factor 3 (patch the SOF byte in place)
+    i = p420.index(b"\x01\x22\x00")
+    bad = p420[: i + 1] + b"\x33" + p420[i + 2 :]
+    with pytest.raises(ValueError):
+        jpeg_decode_color(bad)
+
+
+def test_jpeg_422_uniform_mcu_matches_closed_form():
+    """4:2:2 (horizontal-only subsampling): uniform 16x8 MCUs decode to
+    COLOR_UNIFORM_RGB; the SOF declares 2x1 luma sampling."""
+    import hashlib
+
+    from data_engineer_interview_task_spark.functions.jpeg_codec import (
+        COLOR_UNIFORM_RGB,
+        jpeg_decode_color,
+        jpeg_encode_color_422,
+    )
+
+    w, h = 32, 16
+    colors = [
+        tuple(hashlib.md5(f"q{i}".encode()).digest()[:3]) for i in range(4)
+    ]
+    px = bytearray(w * h * 3)
+    for my in range(2):
+        for mx in range(2):
+            for y in range(8):
+                base = ((my * 8 + y) * w + mx * 16) * 3
+                for x in range(16):
+                    px[base + 3 * x : base + 3 * x + 3] = bytes(
+                        colors[my * 2 + mx]
+                    )
+    payload = jpeg_encode_color_422(bytes(px), w, h)
+    assert b"\x01\x21\x00" in payload  # SOF: Y id 1, 2x1 sampling
+    out, ww, hh, nc = jpeg_decode_color(payload)
+    assert (ww, hh, nc) == (w, h, 3)
+    for my in range(2):
+        for mx in range(2):
+            exp = COLOR_UNIFORM_RGB(*colors[my * 2 + mx])
+            for y in range(8):
+                base = ((my * 8 + y) * w + mx * 16) * 3
+                for x in range(16):
+                    assert tuple(out[base + 3 * x : base + 3 * x + 3]) == exp
+    with pytest.raises(ValueError):
+        jpeg_encode_color_422(bytes(8 * 8 * 3), 8, 8)  # width % 16 != 0
+
+
+# ---------------------------------------------------------------- progressive
+
+
+def test_progressive_jpeg_equals_baseline_raster():
+    """Spectral selection must reconstruct the exact baseline
+    coefficient array: progressive encode∘decode == baseline
+    encode∘decode on random, uniform and mixed rasters (the mixed shape
+    forces mid-scan EOB-run flushes; uniform forces maximal runs)."""
+    import random
+
+    from data_engineer_interview_task_spark.functions.jpeg_codec import (
+        jpeg_decode,
+        jpeg_decode_progressive,
+        jpeg_encode,
+        jpeg_encode_progressive,
+    )
+
+    rng = random.Random(3)
+    for w, h in [(16, 16), (32, 24), (8, 8)]:
+        px = bytes(rng.randrange(256) for _ in range(w * h))
+        assert jpeg_decode_progressive(
+            jpeg_encode_progressive(px, w, h)
+        ) == jpeg_decode(jpeg_encode(px, w, h))
+    for v in (0, 128, 255):
+        px = bytes([v]) * (48 * 48)
+        assert jpeg_decode_progressive(
+            jpeg_encode_progressive(px, 48, 48)
+        ) == jpeg_decode(jpeg_encode(px, 48, 48))
+    mixed = bytearray(64 * 64)
+    for i in range(64 * 64):
+        mixed[i] = 50 if (i // 64) % 16 < 8 else rng.randrange(256)
+    assert jpeg_decode_progressive(
+        jpeg_encode_progressive(bytes(mixed), 64, 64)
+    ) == jpeg_decode(jpeg_encode(bytes(mixed), 64, 64))
+
+
+def test_progressive_sa_jpeg_equals_baseline_and_guards():
+    """DC-band successive approximation: four scans, exact DC
+    reconstruction ((dc >> 1) << 1 | (dc & 1)), so the raster equals
+    baseline; an AC refinement scan with a WRONG bit step (Ah != Al+1)
+    is rejected (round 9 made single-step AC refinement a supported
+    shape, so the old blanket rejection pin moved to the step guard)."""
+    import random
+
+    from data_engineer_interview_task_spark.functions.jpeg_codec import (
+        jpeg_decode,
+        jpeg_decode_progressive,
+        jpeg_encode,
+        jpeg_encode_progressive_sa,
+    )
+
+    rng = random.Random(11)
+    for w, h in [(16, 16), (32, 24)]:
+        px = bytes(rng.randrange(256) for _ in range(w * h))
+        sa = jpeg_encode_progressive_sa(px, w, h)
+        assert sa.count(b"\xff\xda") == 4
+        assert jpeg_decode_progressive(sa) == jpeg_decode(
+            jpeg_encode(px, w, h)
+        )
+    # patch an AC scan header into a two-bit refinement (Ah=2, Al=0)
+    # -> rejection (single-step Ah=Al+1 is the supported shape)
+    sa = jpeg_encode_progressive_sa(bytes(256), 16, 16)
+    # the third SOS is the first AC scan; its AhAl byte is the 6th of
+    # the SOS payload
+    i = sa.index(b"\xff\xda", sa.index(b"\xff\xda", sa.index(b"\xff\xda") + 2) + 2)
+    ahal_at = i + 2 + 2 + 5  # marker(2) + len(2) + ns,comp,tbl,Ss,Se
+    patched = sa[:ahal_at] + b"\x20" + sa[ahal_at + 1 :]
+    with pytest.raises(ValueError):
+        jpeg_decode_progressive(patched)
+
+
+def test_progressive_jpeg_dispatch_and_guards():
+    from data_engineer_interview_task_spark.functions.jpeg_codec import (
+        jpeg_decode,
+        jpeg_decode_color,
+        jpeg_decode_progressive,
+        jpeg_encode,
+        jpeg_encode_progressive,
+    )
+
+    px = bytes(range(256)) * 1  # 16x16 gradient
+    prog = jpeg_encode_progressive(px, 16, 16)
+    assert b"\xff\xc2" in prog and prog.count(b"\xff\xda") == 3
+    # the general decoder routes SOF2 to the progressive path
+    out, w, h, ct = jpeg_decode_color(prog)
+    assert (w, h, ct) == (16, 16, 1)
+    assert out == jpeg_decode_progressive(prog)[0]
+    # crossing the decoders raises cleanly
+    with pytest.raises(ValueError):
+        jpeg_decode(prog)
+    with pytest.raises(ValueError):
+        jpeg_decode_progressive(jpeg_encode(px, 16, 16))
+
+
+def test_ac_sa_progressive_equals_baseline_raster():
+    """The AC-refinement encode/decode pair must reconstruct the exact
+    baseline raster on arbitrary content: random rasters (mixed runs,
+    signs, correction bits 0 and 1), AC-rich gradients (long runs +
+    byte stuffing), and step blocks (the registered fixture shape)."""
+    import random
+
+    from data_engineer_interview_task_spark.functions.jpeg_codec import (
+        jpeg_decode,
+        jpeg_decode_progressive,
+        jpeg_encode,
+        jpeg_encode_progressive_ac_sa,
+    )
+
+    rng = random.Random(11)
+    cases = []
+    for _ in range(8):
+        w = h = 8 * rng.choice([1, 2, 3])
+        cases.append((bytes(rng.randrange(256) for _ in range(w * h)), w, h))
+    for a, b in [(13, 7), (255, 0), (1, 254)]:
+        cases.append((
+            bytes((a * x + b * y) % 256 for y in range(16) for x in range(16)),
+            16, 16,
+        ))
+    for a, b in [(0, 255), (200, 10), (128, 128), (37, 36)]:
+        cases.append((
+            bytes((a if x % 8 < 4 else b) for y in range(16) for x in range(16)),
+            16, 16,
+        ))
+    for px, w, h in cases:
+        base, bw_, bh_ = jpeg_decode(jpeg_encode(px, w, h))
+        sa, sw, sh = jpeg_decode_progressive(
+            jpeg_encode_progressive_ac_sa(px, w, h)
+        )
+        assert (sw, sh) == (bw_, bh_) == (w, h)
+        assert sa == base
+
+
+def test_ac_sa_refinement_zrl_path():
+    """A block whose ONLY nonzero coefficient is a lone +1 at (4,4)
+    (zigzag 35) is invisible to the Al=1 first scan (|1| >> 1 == 0), so
+    the refinement scan must introduce it as newly-nonzero after a
+    29-position still-zero run — exercising the refinement ZRL branch
+    (run > 15) that the step fixture never reaches. The sign-alternating
+    +/-amp pattern of the (4,4) cosine basis quantizes to exactly that
+    lone coefficient for amp in 5..12 (verified against the raw FDCT at
+    authoring time)."""
+    from data_engineer_interview_task_spark.functions.jpeg_codec import (
+        jpeg_decode,
+        jpeg_decode_progressive,
+        jpeg_encode,
+        jpeg_encode_progressive_ac_sa,
+    )
+
+    sgn = (1, -1, -1, 1, 1, -1, -1, 1)
+    for amp in (5, 12):
+        px = bytes(
+            128 + amp * sgn[x] * sgn[y] for y in range(8) for x in range(8)
+        )
+        base, *_ = jpeg_decode(jpeg_encode(px, 8, 8))
+        sa, *_ = jpeg_decode_progressive(
+            jpeg_encode_progressive_ac_sa(px, 8, 8)
+        )
+        assert sa == base
+
+
+def test_ac_sa_encoder_guards():
+    from data_engineer_interview_task_spark.functions.jpeg_codec import (
+        jpeg_encode_progressive_ac_sa,
+    )
+
+    with pytest.raises(ValueError):
+        jpeg_encode_progressive_ac_sa(bytes(100), 10, 10)
+    with pytest.raises(ValueError):
+        jpeg_encode_progressive_ac_sa(bytes(63), 8, 8)
+
+
+def test_plain_progressive_unchanged_by_scan_refactor():
+    """``jpeg_encode_progressive`` now routes through the generalized
+    ``_ac_first_scan`` (al=0); its output must still decode to the
+    baseline raster (the refactor is byte-identical by construction,
+    raster-identical by this pin)."""
+    import random
+
+    from data_engineer_interview_task_spark.functions.jpeg_codec import (
+        jpeg_decode,
+        jpeg_decode_progressive,
+        jpeg_encode,
+        jpeg_encode_progressive,
+    )
+
+    rng = random.Random(4)
+    for _ in range(4):
+        px = bytes(rng.randrange(256) for _ in range(16 * 16))
+        base, *_ = jpeg_decode(jpeg_encode(px, 16, 16))
+        prog, *_ = jpeg_decode_progressive(jpeg_encode_progressive(px, 16, 16))
+        assert prog == base
+
+
+# ------------------------------------------------------ encoder byte pins
+
+
+def _pin_raster(kind: str, w: int, h: int, ch: int) -> bytes:
+    """A fixed ``w`` x ``h`` raster of ``ch`` interleaved channels: seeded
+    noise, a diagonal gradient, uniform 8x8 blocks, or 4-pixel steps."""
+    if kind == "noise":
+        return hashlib.shake_256(f"{w}x{h}x{ch}".encode()).digest(w * h * ch)
+    out = bytearray(w * h * ch)
+    for y in range(h):
+        for x in range(w):
+            for c in range(ch):
+                if kind == "gradient":
+                    v = (x * 7 + y * 3 + c * 11) % 256
+                elif kind == "uniform-block":
+                    v = ((x // 8) * 37 + (y // 8) * 91 + c * 53) % 256
+                else:  # stepped
+                    v = 200 - 60 * c if x % 8 < 4 else 10 + 40 * c
+                out[(y * w + x) * ch + c] = v
+    return bytes(out)
+
+
+#: encoder -> (channels, MCU width, MCU height)
+_PIN_SHAPES = {
+    "jpeg_encode": (1, 8, 8),
+    "jpeg_encode_color": (3, 8, 8),
+    "jpeg_encode_color_420": (3, 16, 16),
+    "jpeg_encode_color_422": (3, 16, 8),
+    "jpeg_encode_progressive": (1, 8, 8),
+    "jpeg_encode_progressive_sa": (1, 8, 8),
+    "jpeg_encode_progressive_ac_sa": (1, 8, 8),
+}
+
+#: sha256 over each encoder's output on one raster kind at every size
+#: of 8x8 / 16x16 / 32x16 / 48x32 its MCU allows, in that order
+_PIN_SHA256 = {
+    "jpeg_encode": {
+        "noise": "f723eb9cd68f249684bb6e0572f31681ed51dc4c4d320027b26da59e00d22525",
+        "gradient": "9e1162451b60681525015a2efe0f96d3c34e0a14e9238745345513bcd5cf7419",
+        "uniform-block": "62869fab435c6a5639cc87e6774b04960b18b6cbcbe9250a66efbbd5a2b9311a",
+        "stepped": "2b5b72d4a15d8d6d9dd8d9b0464e0ec814abac4db54e5e0428c7bd9ddf11698c",
+    },
+    "jpeg_encode_color": {
+        "noise": "c64c0e939a8139f2769c4e8b214840600bd92d1d50b956cfde8471b3dd277967",
+        "gradient": "097568f9f6c627699b34ce27f0b2aee93f81d9932e3f210c0549b3ec6f0fac99",
+        "uniform-block": "46c5c0feb34c4642032d1db3c2598e5d87982de2f1e802debdc5beb957a3380a",
+        "stepped": "c0eee2c50bafc2fedb34293f94dc5190c3322a2a63417e71686a36a9c856733e",
+    },
+    "jpeg_encode_color_420": {
+        "noise": "9dac2dc1e43935741a968eeaa076d03e6c9c754d8d6e42354d9c0875cc6efb80",
+        "gradient": "30e6d825e43124ff9b097e1b582c6b9879a9e521ec8dd4d719955aff67d70b72",
+        "uniform-block": "57e3a089264484d9246be8e1386059353e269b28b6f8d00f3941b6eaebf20dbf",
+        "stepped": "b6fc869d668fe03f927ffce9115dbbf3cde225cff38a2f5b4d9a74b6da8afe17",
+    },
+    "jpeg_encode_color_422": {
+        "noise": "ccec5d2b3eb4b78c01afd63a4135e0cb46f60b5f53ac975abb6377cbca2d2e8c",
+        "gradient": "5f1a734795b8654457cd0a7649970f9115d97c3452e1ae7cc1f5ce1f01084e45",
+        "uniform-block": "0530e7dea4f1f9a1c88e7de9dc8a7d3c21a8cca5f38fe90d232417299088325a",
+        "stepped": "6cdc109cc12c9a1eff437fa286eb35c185e2f754687af2400e21fbcc3aec09cc",
+    },
+    "jpeg_encode_progressive": {
+        "noise": "4dee5f1e963f07f880535a8bd39e6aeb0c1119ea3911a32de088523cecc57b70",
+        "gradient": "266bb6f7e9034f0b95c8498366354a31ee876b9148df630e09e0a7e178b1dfd4",
+        "uniform-block": "3a9be15dc32a3d797aadc114223055fd637c67741d3003b4ce31e753a8f811f1",
+        "stepped": "63ac4d23024e9e9cb39b6f4fc780262b100716b5a6e4c93280e895017d80b964",
+    },
+    "jpeg_encode_progressive_sa": {
+        "noise": "52325c3ab1b08b74463bf6ea2b45a5d92f5cf8d609aa7c0f7f5d7987c3f32806",
+        "gradient": "a6055b3774c6fdbeeefef8af46795b0ad33bc37f0b49dfe13fdc57e551e747b8",
+        "uniform-block": "c68145bb3f9b215f6484cf2940bbd7e922f76b90b6b0f3233d5575a842327036",
+        "stepped": "57e7688f94e495cf5d171024da234ba8728ddc37bb181d27c6f212f02b2f80fc",
+    },
+    "jpeg_encode_progressive_ac_sa": {
+        "noise": "a1e0d627d487ce4f6c58b9f02d06bb83940a8890a19c3acd1f875a682c1be2f5",
+        "gradient": "12d3fe79a3a96f24dbfc77013ad3b98fd60b9c12a783700c97c56afa368db140",
+        "uniform-block": "9449d55dcca133c6a0f4452a21e2bd290724afb4010f787a3fa3eebba0aa2b39",
+        "stepped": "d8b98af447d02b133914115b44f1ed525e3d8a51ea3fbab848d6411d9fca8bde",
+    },
+}
+
+
+@pytest.mark.parametrize("name", sorted(_PIN_SHAPES))
+def test_encoder_output_is_byte_pinned(name):
+    """Every public encoder writes exactly the bytes pinned here — the
+    encoders share one baseline core and one progressive core, so a
+    change to either shows up as a digest change, not only as a
+    raster drift the round-trip tests may tolerate."""
+    from data_engineer_interview_task_spark.functions import jpeg_codec
+
+    encode = getattr(jpeg_codec, name)
+    ch, mcu_w, mcu_h = _PIN_SHAPES[name]
+    got = {}
+    for kind in _PIN_SHA256[name]:
+        digest = hashlib.sha256()
+        for w, h in ((8, 8), (16, 16), (32, 16), (48, 32)):
+            if w % mcu_w == 0 and h % mcu_h == 0:
+                digest.update(encode(_pin_raster(kind, w, h, ch), w, h))
+        got[kind] = digest.hexdigest()
+    assert got == _PIN_SHA256[name]

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import tempfile
+
 from pyspark.sql import functions as F
 
 from data_engineer_interview_task_spark.operators import maintenance
@@ -113,10 +115,14 @@ def test_table_checksum_partition_invariant(spark, sf_dir):
     assert diff == [5 % 32]
 
 
-def test_bucketed_join_has_no_join_exchange(spark, sf_dir):
+def test_bucketed_join_has_no_join_exchange(
+    spark, sf_dir, tmp_path, monkeypatch
+):
     # keep_layout=True returns the raw lazy plan (the default path
     # materializes + cleans up, which would hide the shape under test);
-    # this test therefore owns the conf restore
+    # this test therefore owns the conf restore, and the layout dir it
+    # leaves lands under tmp_path
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
     conf_key = "spark.sql.legacy.bucketedTableScan.outputOrdering"
     prior = spark.conf.get(conf_key, None)
     try:

@@ -449,54 +449,6 @@ def test_ivfpq_recall_frontier_shape_and_candidate_nesting(spark, sf_dir):
         assert (q, v) in a2 or (s, -v) < worst2[q], (q, v, s)
 
 
-def test_audio_header_parser_and_varying_shapes(spark, sf_dir):
-    """Parser unit facts (error paths + the PCM no-fact fallback) plus
-    operator non-vacancy: shapes must VARY across docs for every codec
-    arm."""
-    import pytest as _pytest
-
-    from data_engineer_interview_task_spark.functions.audio_meta import (
-        parse_audio_header,
-    )
-    from data_engineer_interview_task_spark.functions.wav_codec import (
-        wav_encode,
-    )
-    from data_engineer_interview_task_spark.operators import multimodal
-
-    # stereo PCM: no fact chunk -> frames from data_bytes // block_align
-    assert parse_audio_header(wav_encode(b"\x00" * 10, 44100, 2)) == (
-        1, 2, 44100, 8, 10, 5,
-    )
-    # malformed-chunk paths must surface as ValueError (ADVICE r10):
-    # fmt body shorter than 16 bytes; PCM block_align 0 with no fact.
-    short_fmt = (
-        b"RIFF\x28\x00\x00\x00WAVE"
-        + b"fmt \x08\x00\x00\x00" + b"\x01\x00\x02\x00\x44\xac\x00\x00"
-        + b"data\x04\x00\x00\x00" + b"\x00" * 4
-    )
-    zero_align = (
-        b"RIFF\x30\x00\x00\x00WAVE"
-        + b"fmt \x10\x00\x00\x00"
-        + b"\x01\x00\x02\x00\x44\xac\x00\x00\x10\xb1\x02\x00\x00\x00\x08\x00"
-        + b"data\x04\x00\x00\x00" + b"\x00" * 4
-    )
-    for bad in (
-        b"", b"RIFFxxxxWAV?", b"not audio at all", short_fmt, zero_align,
-    ):
-        with _pytest.raises(ValueError):
-            parse_audio_header(bad)
-    rows = multimodal.multimodal_audio_metadata(spark, sf_dir).collect()
-    assert len(rows) == 4 * len({r.doc_id for r in rows})
-    shapes = {}
-    for r in rows:
-        shapes.setdefault(r.codec, set()).add(
-            (r.n_channels, r.sample_rate, r.n_samples)
-        )
-    assert set(shapes) == {"pcm", "adpcm", "ulaw", "alaw"}
-    for codec, s in shapes.items():
-        assert len(s) > 1, f"{codec} shapes constant — vacuous fixture"
-
-
 def test_bitmap_ivm_merge_is_nondegenerate_and_exact(spark, sf_dir):
     """Both cutoff sides must be non-empty, at least one week must
     straddle the cutoff (so the OR-merge genuinely dedups a user seen

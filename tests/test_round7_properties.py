@@ -49,119 +49,6 @@ def test_two_phase_ntile_descending_order(spark):
     assert sorted(expect.collect()) == sorted(got.collect())
 
 
-def test_jpeg_420_uniform_mcu_matches_closed_form():
-    """4:2:0 encode∘decode of uniform 16x16 MCUs == COLOR_UNIFORM_RGB
-    per MCU (subsampling is lossless on uniform chroma groups), across
-    random colors — one wrong bit in the MCU interleave, chroma plane
-    layout, or replication upsample breaks full-raster equality."""
-    import hashlib
-
-    from data_engineer_interview_task_spark.functions.jpeg_codec import (
-        COLOR_UNIFORM_RGB,
-        jpeg_decode_color,
-        jpeg_encode_color_420,
-    )
-
-    w = h = 32
-    colors = [
-        tuple(hashlib.md5(f"c{i}".encode()).digest()[:3]) for i in range(16)
-    ]
-    for trial in range(4):
-        quad = colors[4 * trial : 4 * trial + 4]
-        px = bytearray(w * h * 3)
-        for my in range(2):
-            for mx in range(2):
-                r, g, b = quad[my * 2 + mx]
-                for y in range(16):
-                    base = ((my * 16 + y) * w + mx * 16) * 3
-                    for x in range(16):
-                        px[base + 3 * x : base + 3 * x + 3] = bytes((r, g, b))
-        out, ww, hh, nc = jpeg_decode_color(
-            jpeg_encode_color_420(bytes(px), w, h)
-        )
-        assert (ww, hh, nc) == (w, h, 3)
-        expect = bytearray(w * h * 3)
-        for my in range(2):
-            for mx in range(2):
-                er, eg, eb = COLOR_UNIFORM_RGB(*quad[my * 2 + mx])
-                for y in range(16):
-                    base = ((my * 16 + y) * w + mx * 16) * 3
-                    for x in range(16):
-                        expect[base + 3 * x : base + 3 * x + 3] = bytes(
-                            (er, eg, eb)
-                        )
-        assert bytes(out) == bytes(expect)
-
-
-def test_jpeg_420_stream_structure_and_guards():
-    """The 4:2:0 stream declares 2x2 luma sampling in its SOF, carries
-    half the chroma blocks of the 4:4:4 encoding (6 vs 12 blocks per
-    16x16), and the decoder rejects out-of-scope sampling factors."""
-    import random
-
-    from data_engineer_interview_task_spark.functions.jpeg_codec import (
-        jpeg_decode_color,
-        jpeg_encode_color,
-        jpeg_encode_color_420,
-    )
-
-    rng = random.Random(11)
-    px = bytes(rng.randrange(256) for _ in range(32 * 32 * 3))
-    p420 = jpeg_encode_color_420(px, 32, 32)
-    assert b"\x01\x22\x00" in p420  # SOF: Y id 1, 2x2 sampling
-    assert len(p420) < len(jpeg_encode_color(px, 32, 32))
-    # deterministic decode, full-resolution RGB out
-    assert jpeg_decode_color(p420) == jpeg_decode_color(p420)
-    assert len(jpeg_decode_color(p420)[0]) == 32 * 32 * 3
-    # dims must cover whole MCUs
-    with pytest.raises(ValueError):
-        jpeg_encode_color_420(bytes(24 * 24 * 3), 24, 24)
-    # decoder rejects sampling factor 3 (patch the SOF byte in place)
-    i = p420.index(b"\x01\x22\x00")
-    bad = p420[: i + 1] + b"\x33" + p420[i + 2 :]
-    with pytest.raises(ValueError):
-        jpeg_decode_color(bad)
-
-
-def test_jpeg_422_uniform_mcu_matches_closed_form():
-    """4:2:2 (horizontal-only subsampling): uniform 16x8 MCUs decode to
-    COLOR_UNIFORM_RGB; the SOF declares 2x1 luma sampling."""
-    import hashlib
-
-    from data_engineer_interview_task_spark.functions.jpeg_codec import (
-        COLOR_UNIFORM_RGB,
-        jpeg_decode_color,
-        jpeg_encode_color_422,
-    )
-
-    w, h = 32, 16
-    colors = [
-        tuple(hashlib.md5(f"q{i}".encode()).digest()[:3]) for i in range(4)
-    ]
-    px = bytearray(w * h * 3)
-    for my in range(2):
-        for mx in range(2):
-            for y in range(8):
-                base = ((my * 8 + y) * w + mx * 16) * 3
-                for x in range(16):
-                    px[base + 3 * x : base + 3 * x + 3] = bytes(
-                        colors[my * 2 + mx]
-                    )
-    payload = jpeg_encode_color_422(bytes(px), w, h)
-    assert b"\x01\x21\x00" in payload  # SOF: Y id 1, 2x1 sampling
-    out, ww, hh, nc = jpeg_decode_color(payload)
-    assert (ww, hh, nc) == (w, h, 3)
-    for my in range(2):
-        for mx in range(2):
-            exp = COLOR_UNIFORM_RGB(*colors[my * 2 + mx])
-            for y in range(8):
-                base = ((my * 8 + y) * w + mx * 16) * 3
-                for x in range(16):
-                    assert tuple(out[base + 3 * x : base + 3 * x + 3]) == exp
-    with pytest.raises(ValueError):
-        jpeg_encode_color_422(bytes(8 * 8 * 3), 8, 8)  # width % 16 != 0
-
-
 def test_wav_channel_features_matches_md5_replay(spark, sf_dir):
     """Per-(channel, frame) features equal a pure python replay of the
     deinterleave + frame math over the md5-derived stereo stream."""

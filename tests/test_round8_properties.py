@@ -340,151 +340,6 @@ def test_gif_decoder_skips_89a_extensions_and_rejects_non_gif():
         gif_decode(b"NOTAGIF!" + payload[8:])
 
 
-# --- progressive JPEG ------------------------------------------------------
-
-
-def test_progressive_jpeg_equals_baseline_raster():
-    """Spectral selection must reconstruct the exact baseline
-    coefficient array: progressive encode∘decode == baseline
-    encode∘decode on random, uniform and mixed rasters (the mixed shape
-    forces mid-scan EOB-run flushes; uniform forces maximal runs)."""
-    import random
-
-    from data_engineer_interview_task_spark.functions.jpeg_codec import (
-        jpeg_decode,
-        jpeg_decode_progressive,
-        jpeg_encode,
-        jpeg_encode_progressive,
-    )
-
-    rng = random.Random(3)
-    for w, h in [(16, 16), (32, 24), (8, 8)]:
-        px = bytes(rng.randrange(256) for _ in range(w * h))
-        assert jpeg_decode_progressive(
-            jpeg_encode_progressive(px, w, h)
-        ) == jpeg_decode(jpeg_encode(px, w, h))
-    for v in (0, 128, 255):
-        px = bytes([v]) * (48 * 48)
-        assert jpeg_decode_progressive(
-            jpeg_encode_progressive(px, 48, 48)
-        ) == jpeg_decode(jpeg_encode(px, 48, 48))
-    mixed = bytearray(64 * 64)
-    for i in range(64 * 64):
-        mixed[i] = 50 if (i // 64) % 16 < 8 else rng.randrange(256)
-    assert jpeg_decode_progressive(
-        jpeg_encode_progressive(bytes(mixed), 64, 64)
-    ) == jpeg_decode(jpeg_encode(bytes(mixed), 64, 64))
-
-
-def test_progressive_sa_jpeg_equals_baseline_and_guards():
-    """DC-band successive approximation: four scans, exact DC
-    reconstruction ((dc >> 1) << 1 | (dc & 1)), so the raster equals
-    baseline; an AC refinement scan with a WRONG bit step (Ah != Al+1)
-    is rejected (round 9 made single-step AC refinement a supported
-    shape, so the old blanket rejection pin moved to the step guard)."""
-    import random
-
-    from data_engineer_interview_task_spark.functions.jpeg_codec import (
-        jpeg_decode,
-        jpeg_decode_progressive,
-        jpeg_encode,
-        jpeg_encode_progressive_sa,
-    )
-
-    rng = random.Random(11)
-    for w, h in [(16, 16), (32, 24)]:
-        px = bytes(rng.randrange(256) for _ in range(w * h))
-        sa = jpeg_encode_progressive_sa(px, w, h)
-        assert sa.count(b"\xff\xda") == 4
-        assert jpeg_decode_progressive(sa) == jpeg_decode(
-            jpeg_encode(px, w, h)
-        )
-    # patch an AC scan header into a two-bit refinement (Ah=2, Al=0)
-    # -> rejection (single-step Ah=Al+1 is the supported shape)
-    sa = jpeg_encode_progressive_sa(bytes(256), 16, 16)
-    # the third SOS is the first AC scan; its AhAl byte is the 6th of
-    # the SOS payload
-    i = sa.index(b"\xff\xda", sa.index(b"\xff\xda", sa.index(b"\xff\xda") + 2) + 2)
-    ahal_at = i + 2 + 2 + 5  # marker(2) + len(2) + ns,comp,tbl,Ss,Se
-    patched = sa[:ahal_at] + b"\x20" + sa[ahal_at + 1 :]
-    with pytest.raises(ValueError):
-        jpeg_decode_progressive(patched)
-
-
-def test_progressive_jpeg_dispatch_and_guards():
-    from data_engineer_interview_task_spark.functions.jpeg_codec import (
-        jpeg_decode,
-        jpeg_decode_color,
-        jpeg_decode_progressive,
-        jpeg_encode,
-        jpeg_encode_progressive,
-    )
-
-    px = bytes(range(256)) * 1  # 16x16 gradient
-    prog = jpeg_encode_progressive(px, 16, 16)
-    assert b"\xff\xc2" in prog and prog.count(b"\xff\xda") == 3
-    # the general decoder routes SOF2 to the progressive path
-    out, w, h, ct = jpeg_decode_color(prog)
-    assert (w, h, ct) == (16, 16, 1)
-    assert out == jpeg_decode_progressive(prog)[0]
-    # crossing the decoders raises cleanly
-    with pytest.raises(ValueError):
-        jpeg_decode(prog)
-    with pytest.raises(ValueError):
-        jpeg_decode_progressive(jpeg_encode(px, 16, 16))
-
-
-# --- IMA ADPCM --------------------------------------------------------------
-
-
-def test_adpcm_roundtrip_matches_state_machine_replay():
-    """The WAV container round-trip must equal a direct replay of the
-    IMA quantize→reconstruct fold — random lengths (odd nibble counts
-    exercise the pad), extreme samples exercise the int16 clamps, slow
-    ramps exercise the index floor."""
-    import random
-
-    from data_engineer_interview_task_spark.functions.adpcm_codec import (
-        INDEX_TABLE,
-        STEP_TABLE,
-        adpcm_decode_wav,
-        adpcm_encode_wav,
-    )
-
-    def replay(samples):
-        pred, idx = samples[0], 0
-        recon = [pred]
-        for s in samples[1:]:
-            step = STEP_TABLE[idx]
-            diff = s - pred
-            ad = -diff if diff < 0 else diff
-            b4 = 1 if ad >= step else 0
-            r1 = ad - b4 * step
-            b2 = 1 if r1 >= step // 2 else 0
-            r2 = r1 - b2 * (step // 2)
-            b1 = 1 if r2 >= step // 4 else 0
-            diffq = step // 8 + b4 * step + b2 * (step // 2) + b1 * (step // 4)
-            pred = pred - diffq if diff < 0 else pred + diffq
-            pred = max(-32768, min(32767, pred))
-            idx = max(0, min(88, idx + INDEX_TABLE[b4 * 4 + b2 * 2 + b1]))
-            recon.append(pred)
-        return recon
-
-    rng = random.Random(5)
-    cases = [
-        [rng.randrange(-32768, 32768) for _ in range(n)]
-        for n in (2, 3, 17, 128, 129)
-    ]
-    cases.append([-32768, 32767] * 40)      # clamp ping-pong
-    cases.append(list(range(-60, 60)))      # slow ramp, index floor
-    for samples in cases:
-        payload = adpcm_encode_wav(samples)
-        assert payload[:4] == b"RIFF" and b"fact" in payload
-        assert adpcm_decode_wav(payload) == replay(samples)
-    with pytest.raises(ValueError):
-        adpcm_decode_wav(b"RIFF\x00\x00\x00\x00WAVEjunk")
-
-
 # --- plan pins: no corpus-grain unpartitioned window ---------------------
 
 

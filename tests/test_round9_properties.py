@@ -75,55 +75,6 @@ def test_dataset_card_plan_has_no_global_sort_window(spark, sf_dir):
         assert "_pid" in ln, f"value-grain global window: {ln}"
 
 
-# --- G.711 mu-law / A-law codec ------------------------------------------
-
-
-def test_g711_fixed_points_and_reference_values():
-    """Value-level fixed point decode∘encode∘decode == decode for every
-    byte of both laws (the ±0 byte pair makes byte-level idempotence too
-    strong for µ-law — 0xFF and 0x7F both decode to 0), plus the classic
-    reference spot values from the CCITT tables and the WAV walk guards."""
-    from data_engineer_interview_task_spark.functions.g711_codec import (
-        alaw_decode_sample,
-        alaw_decode_wav,
-        alaw_encode_sample,
-        alaw_encode_wav,
-        mulaw_decode_sample,
-        mulaw_decode_wav,
-        mulaw_encode_sample,
-        mulaw_encode_wav,
-    )
-
-    for b in range(256):
-        r = mulaw_decode_sample(b)
-        assert mulaw_decode_sample(mulaw_encode_sample(r)) == r
-        r = alaw_decode_sample(b)
-        assert alaw_decode_sample(alaw_encode_sample(r)) == r
-    assert mulaw_encode_sample(0) == 0xFF
-    assert mulaw_encode_sample(-1) == 0x7F
-    assert mulaw_encode_sample(32635) == 0x80
-    assert mulaw_encode_sample(-32768) == 0x00
-    assert alaw_encode_sample(0) == 0xD5
-    assert alaw_encode_sample(-1) == 0x55
-    assert alaw_encode_sample(32767) == 0xAA
-    assert alaw_encode_sample(-32768) == 0x2A
-
-    import random
-
-    rng = random.Random(2)
-    samples = [rng.randrange(-32768, 32768) for _ in range(64)]
-    assert mulaw_decode_wav(mulaw_encode_wav(samples)) == [
-        mulaw_decode_sample(mulaw_encode_sample(s)) for s in samples
-    ]
-    assert alaw_decode_wav(alaw_encode_wav(samples)) == [
-        alaw_decode_sample(alaw_encode_sample(s)) for s in samples
-    ]
-    with pytest.raises(ValueError):
-        mulaw_decode_wav(alaw_encode_wav(samples))  # fmt tag mismatch
-    with pytest.raises(ValueError):
-        mulaw_encode_wav([])
-
-
 # --- RLE8 BMP codec -------------------------------------------------------
 
 
@@ -246,108 +197,6 @@ def test_two_phase_extra_and_totals_match_builtin(spark, n_parts):
             e["id"], e["cum_w"], e["rk"], e["cum_id"],
         )
         assert g["n"] == 500 and g["tot_w"] == tot_w
-
-
-# --- AC-band successive-approximation JPEG (T.81 G.1.2.3) ----------------
-
-
-def test_ac_sa_progressive_equals_baseline_raster():
-    """The AC-refinement encode/decode pair must reconstruct the exact
-    baseline raster on arbitrary content: random rasters (mixed runs,
-    signs, correction bits 0 and 1), AC-rich gradients (long runs +
-    byte stuffing), and step blocks (the registered fixture shape)."""
-    import random
-
-    from data_engineer_interview_task_spark.functions.jpeg_codec import (
-        jpeg_decode,
-        jpeg_decode_progressive,
-        jpeg_encode,
-        jpeg_encode_progressive_ac_sa,
-    )
-
-    rng = random.Random(11)
-    cases = []
-    for _ in range(8):
-        w = h = 8 * rng.choice([1, 2, 3])
-        cases.append((bytes(rng.randrange(256) for _ in range(w * h)), w, h))
-    for a, b in [(13, 7), (255, 0), (1, 254)]:
-        cases.append((
-            bytes((a * x + b * y) % 256 for y in range(16) for x in range(16)),
-            16, 16,
-        ))
-    for a, b in [(0, 255), (200, 10), (128, 128), (37, 36)]:
-        cases.append((
-            bytes((a if x % 8 < 4 else b) for y in range(16) for x in range(16)),
-            16, 16,
-        ))
-    for px, w, h in cases:
-        base, bw_, bh_ = jpeg_decode(jpeg_encode(px, w, h))
-        sa, sw, sh = jpeg_decode_progressive(
-            jpeg_encode_progressive_ac_sa(px, w, h)
-        )
-        assert (sw, sh) == (bw_, bh_) == (w, h)
-        assert sa == base
-
-
-def test_ac_sa_refinement_zrl_path():
-    """A block whose ONLY nonzero coefficient is a lone +1 at (4,4)
-    (zigzag 35) is invisible to the Al=1 first scan (|1| >> 1 == 0), so
-    the refinement scan must introduce it as newly-nonzero after a
-    29-position still-zero run — exercising the refinement ZRL branch
-    (run > 15) that the step fixture never reaches. The sign-alternating
-    +/-amp pattern of the (4,4) cosine basis quantizes to exactly that
-    lone coefficient for amp in 5..12 (verified against the raw FDCT at
-    authoring time)."""
-    from data_engineer_interview_task_spark.functions.jpeg_codec import (
-        jpeg_decode,
-        jpeg_decode_progressive,
-        jpeg_encode,
-        jpeg_encode_progressive_ac_sa,
-    )
-
-    sgn = (1, -1, -1, 1, 1, -1, -1, 1)
-    for amp in (5, 12):
-        px = bytes(
-            128 + amp * sgn[x] * sgn[y] for y in range(8) for x in range(8)
-        )
-        base, *_ = jpeg_decode(jpeg_encode(px, 8, 8))
-        sa, *_ = jpeg_decode_progressive(
-            jpeg_encode_progressive_ac_sa(px, 8, 8)
-        )
-        assert sa == base
-
-
-def test_ac_sa_encoder_guards():
-    from data_engineer_interview_task_spark.functions.jpeg_codec import (
-        jpeg_encode_progressive_ac_sa,
-    )
-
-    with pytest.raises(ValueError):
-        jpeg_encode_progressive_ac_sa(bytes(100), 10, 10)
-    with pytest.raises(ValueError):
-        jpeg_encode_progressive_ac_sa(bytes(63), 8, 8)
-
-
-def test_plain_progressive_unchanged_by_scan_refactor():
-    """``jpeg_encode_progressive`` now routes through the generalized
-    ``_ac_first_scan`` (al=0); its output must still decode to the
-    baseline raster (the refactor is byte-identical by construction,
-    raster-identical by this pin)."""
-    import random
-
-    from data_engineer_interview_task_spark.functions.jpeg_codec import (
-        jpeg_decode,
-        jpeg_decode_progressive,
-        jpeg_encode,
-        jpeg_encode_progressive,
-    )
-
-    rng = random.Random(4)
-    for _ in range(4):
-        px = bytes(rng.randrange(256) for _ in range(16 * 16))
-        base, *_ = jpeg_decode(jpeg_encode(px, 16, 16))
-        prog, *_ = jpeg_decode_progressive(jpeg_encode_progressive(px, 16, 16))
-        assert prog == base
 
 
 def test_two_phase_grouped_totals_are_per_group(spark):

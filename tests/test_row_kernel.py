@@ -93,6 +93,9 @@ _QUERIES = (
     "multimodal_png_decode",
     "multimodal_g711_roundtrip",
     "multimodal_gif_animation_frames",  # fan-out: 3 rows per document
+    "multimodal_color_jpeg_subsampled_decode",  # the shared JPEG cores
+    "multimodal_progressive_ac_refine_decode",
+    "multimodal_adpcm_roundtrip",  # the shared RIFF chunk walker
 )
 
 
