@@ -900,15 +900,18 @@ def _segments(payload: bytes, qtabs: dict, htabs: dict):
     skips APPn and COM; rejects DRI; and yields ``(marker, body, end)``
     for every other segment up to EOI, ``end`` being the offset right
     after it (where an SOS's entropy-coded data starts). Resumed after
-    an SOS, it skips that data — stuffed 0xFF00 pairs and fill bytes —
-    to the next marker. Raises ``ValueError`` on desync or a segment
-    that runs past the payload."""
+    an SOS, it skips that data — stuffed 0xFF00 pairs — to the next
+    marker. Any run of 0xFF fill bytes before a marker is skipped (ITU-T
+    T.81 B.1.1.2). Raises ``ValueError`` on desync or a segment that
+    runs past the payload."""
     if payload[:2] != b"\xff\xd8":
         raise ValueError("not a JPEG payload (bad SOI)")
     pos = 2
     while pos + 2 <= len(payload):
         if payload[pos] != 0xFF:
             raise ValueError("segment desync (expected marker)")
+        while pos + 2 < len(payload) and payload[pos + 1] == 0xFF:
+            pos += 1  # fill byte
         marker = payload[pos + 1]
         if marker == 0xD9:  # EOI
             return
@@ -1154,8 +1157,9 @@ def jpeg_decode_progressive(payload: bytes) -> tuple[bytes, int, int]:
     coefficient vector (DC scan = baseline DC differentials; AC
     scans = in-band run/size pairs with full EOB-RUN semantics),
     then one dequantize + IDCT per block. Successive approximation
-    (Ah/Al != 0) and multi-component progressive stay behind
-    ``ValueError`` — spectral selection is the shape our encoder
-    writes and the common single-component progressive case."""
+    decodes too: DC and AC first scans at a point transform Al, then
+    refinement scans (Ah = Al + 1) adding one bit each, with EOB runs
+    and correction bits. Multi-component progressive stays behind
+    ``ValueError``: single-component is the shape our encoders write."""
     planes, width, height, _dims = _decode_planes(payload, 0xC2)
     return bytes(planes[0]), width, height

@@ -76,6 +76,7 @@ from ..functions.jpeg_codec import (
 )
 from ..functions.png_codec import PNG_SIGNATURE, png_decode, png_encode
 from ..functions.wav_codec import WAV_SIGNATURE, wav_decode, wav_encode
+from ..plans import prep_worker
 from ..sources import read_table
 
 #: Output schema of the feature extractor — explicit, like any production
@@ -164,6 +165,7 @@ def per_row(
     names = schema.fieldNames()
 
     def _batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        prep_worker()
         for pdf in batches:
             rows = [
                 out for row in zip(*(pdf[c] for c in cols)) for out in fn(*row)
@@ -267,6 +269,7 @@ def user_value_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def _fit(pdf: pd.DataFrame) -> pd.DataFrame:
+        prep_worker()
         pdf = pdf.sort_values("ts")
         t_days = (pdf["ts"].astype("int64") / 1e9 / 86400.0).to_numpy()
         v = pdf["value"].to_numpy(dtype=float)

@@ -9,6 +9,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..plans import prep_worker
 from ..sources import read_table
 
 #: tiny deterministic stopword list for quality scoring
@@ -719,6 +720,7 @@ def chunk_documents_udtf(
     @udtf(returnType="chunk_id int, chunk_text string, n_tokens int")
     class _Chunker:
         def eval(self, text: str):
+            prep_worker()
             toks = text.split(" ")
             n = len(toks)
             last = max(n - 1, 0)

@@ -1,3 +1,3 @@
-from .tuning import prep_session, explain_str
+from .tuning import prep_session, prep_worker, explain_str
 
-__all__ = ["prep_session", "explain_str"]
+__all__ = ["prep_session", "prep_worker", "explain_str"]

@@ -38,6 +38,7 @@ from __future__ import annotations
 
 import atexit
 import hashlib
+import json
 import os
 import shutil
 import tempfile
@@ -46,6 +47,7 @@ import time
 from typing import Callable, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 #: (logical key + input fingerprints) -> published dir (process-level).
 _CACHE: dict[tuple, str] = {}
@@ -61,6 +63,10 @@ _TMP_ROOT: list[str] = []
 #: build, holding the full key) — a dir without it is a torn write from
 #: a killed process and is rebuilt in place.
 _MARKER = "_ARTIFACT_SUCCESS"
+
+#: schema sidecar of an unpartitioned :func:`materialized` artifact (the
+#: leading underscore keeps it out of the parquet scan, like the marker)
+_SCHEMA = "_SCHEMA.json"
 
 #: superseded-fingerprint dirs younger than this are NOT pruned
 #: (ADVICE r7): another live process sharing a persistent
@@ -203,12 +209,29 @@ def materialized(
     ``inputs``, ``base_dir``, lock and publish rules).
     ``partition_by``: hive-layout the artifact on these columns, so
     consumers filtering/joining on them get partition pruning (static or
-    dynamic) on every scan."""
+    dynamic) on every scan.
+
+    An unpartitioned build also writes its schema as ``_SCHEMA.json``
+    next to the parquet files, and the read-back passes it to
+    ``spark.read.schema``: parquet schema inference costs a Spark job per
+    read (a footer read even for one file). Partitioned artifacts, whose
+    scan also discovers partition columns, and directories without the
+    sidecar (persistent roots written before it existed) keep inference."""
 
     def write(tmp: str) -> None:
-        writer = build().write.mode("overwrite")
+        df = build()
+        writer = df.write.mode("overwrite")
         if partition_by:
-            writer = writer.partitionBy(*partition_by)
+            writer.partitionBy(*partition_by).parquet(tmp)
+            return
         writer.parquet(tmp)
+        with open(os.path.join(tmp, _SCHEMA), "w") as fh:
+            fh.write(df.schema.json())
 
-    return spark.read.parquet(materialized_dir(key, prefix, write, inputs, base_dir))
+    path = materialized_dir(key, prefix, write, inputs, base_dir)
+    sidecar = os.path.join(path, _SCHEMA)
+    if partition_by or not os.path.exists(sidecar):
+        return spark.read.parquet(path)
+    with open(sidecar) as fh:
+        schema = StructType.fromJson(json.load(fh))
+    return spark.read.schema(schema).parquet(path)

@@ -9,6 +9,8 @@ parquet handling, AQE for runtime re-planning at scale).
 from __future__ import annotations
 
 import io
+import os
+import sys
 import threading
 import weakref
 from contextlib import redirect_stdout
@@ -97,6 +99,56 @@ def prep_session(spark: SparkSession) -> SparkSession:
             # Non-runtime conf on this build: keep going, defaults are sane.
             pass
     return spark
+
+
+def _stat_key(path: str):
+    """``(st_ino, st_size, st_mtime_ns)`` of ``path``, None if missing."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    return (st.st_ino, st.st_size, st.st_mtime_ns)
+
+
+def prep_worker() -> None:
+    """Worker-side twin of :func:`prep_session`, called at the top of
+    every Python function the package ships to Spark's Python workers.
+
+    Every Python task starts with ``importlib.invalidate_caches()``
+    (``pyspark.worker_util.setup_spark_files``). On CPython < 3.12 that
+    makes each cached ``zipimporter`` re-read its archive's whole
+    directory: 16 re-reads of the 1,328-entry ``pyspark.zip`` per task,
+    most of a trivial task's time. This installs, once per worker
+    process, an ``invalidate_caches`` that re-reads an archive only when
+    its ``(st_ino, st_size, st_mtime_ns)`` changed. The keys of the
+    archives already cached are taken at install time, which is right
+    after the task's own invalidation re-read every one of them. The
+    marker (the keys dict) lives on the ``zipimporter`` class: this
+    module's globals ship by value, so they are fresh in every task,
+    while the class lives as long as the (reused) worker. From 3.12 the
+    invalidation is lazy and this does nothing. The first task of a
+    fresh worker still pays once; every later task in it does not."""
+    if sys.version_info >= (3, 12):
+        return
+    import zipimport
+
+    cls = zipimport.zipimporter
+    if "_archive_keys" in cls.__dict__:
+        return
+    keys = {a: _stat_key(a) for a in list(zipimport._zip_directory_cache)}
+    reread = cls.invalidate_caches
+
+    def invalidate_caches(self):
+        key = _stat_key(self.archive)
+        files = zipimport._zip_directory_cache.get(self.archive)
+        if key is not None and files is not None and keys.get(self.archive) == key:
+            self._files = files
+            return
+        reread(self)
+        keys[self.archive] = key
+
+    cls.invalidate_caches = invalidate_caches
+    cls._archive_keys = keys
 
 
 def explain_str(df: DataFrame, mode: str = "formatted") -> str:

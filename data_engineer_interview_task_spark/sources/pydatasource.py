@@ -29,6 +29,8 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..plans import prep_worker
+
 
 def register_date_spine_source(spark: SparkSession) -> None:
     """Register the ``date_spine`` Python data source on this session.
@@ -57,6 +59,7 @@ def register_date_spine_source(spark: SparkSession) -> None:
             return [InputPartition(i) for i in range(self.parts)]
 
         def read(self, partition):
+            prep_worker()
             first = partition.value
             for idx in range(first, self.days, self.parts):
                 yield (self.start + dt.timedelta(days=idx), idx)
@@ -127,6 +130,7 @@ def register_tick_stream_source(spark: SparkSession) -> None:
             ]
 
         def read(self, start):
+            prep_worker()
             p = int(start["page"])
             if p >= self.pages:
                 return iter([]), start

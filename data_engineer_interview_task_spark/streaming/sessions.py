@@ -36,7 +36,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from ..plans import prep_session
+from ..plans import prep_session, prep_worker
 from .weekly import EVENTS_SCHEMA
 from .util import run_to_memory, staged_events
 
@@ -66,6 +66,7 @@ def _sessionize_fn(gap_minutes: int):
     gap_us = gap_minutes * 60 * 1_000_000
 
     def fn(key, pdfs, state):
+        prep_worker()
         (user_id,) = key
         events = pd.concat(list(pdfs), ignore_index=True)
         events = events.sort_values(["ts", "event_id"])
@@ -131,6 +132,7 @@ def _sessionize_flush_fn(gap_minutes: int):
     gap_us = gap_minutes * 60 * 1_000_000
 
     def fn(key, pdfs, state):
+        prep_worker()
         (user_id,) = key
 
         def frame(sessions):

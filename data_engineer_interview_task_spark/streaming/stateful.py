@@ -36,6 +36,7 @@ from __future__ import annotations
 from collections.abc import Iterator
 from decimal import ROUND_HALF_UP, Decimal
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -50,7 +51,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..plans import prep_session
+from ..plans import prep_session, prep_worker
 from .util import (
     bump_new_files_mtime,
     run_to_memory,
@@ -150,6 +151,7 @@ def running_user_stats_stream_gs(spark: SparkSession, source_dir: str) -> DataFr
     ).parquet(source_dir)
 
     def fold(key, pdfs, state):
+        prep_worker()
         cnt, cents, seq = state.get if state.exists else (0, 0, 0)
         q = Decimal("0.01")
         for pdf in pdfs:
@@ -267,6 +269,32 @@ EWMA_SCHEMA = StructType(
 )
 
 
+def _ewma_fold(key, pdfs, state):
+    """The per-user EWMA step of :func:`user_ewma_stream_gs`: fold this
+    batch's rows for ``key`` into the (acc, n, seq) state in (ts,
+    event_id) order and emit the updated running value. ``ts`` arrives
+    as integer microseconds, so the order is one ``np.lexsort`` over two
+    int64 arrays and the fold runs over a plain list of floats."""
+    prep_worker()
+    acc, n, seq = state.get if state.exists else (0.0, 0, 0)
+    frames = list(pdfs)
+    rows = frames[0] if len(frames) == 1 else pd.concat(frames)
+    order = np.lexsort((rows["event_id"].to_numpy(), rows["ts"].to_numpy()))
+    for v in rows["value"].to_numpy()[order].tolist():
+        acc = v if n == 0 else (acc + v) / 2.0
+        n += 1
+    seq += 1
+    state.update((acc, n, seq))
+    yield pd.DataFrame(
+        {
+            "user_id": [key[0]],
+            "n_events": [n],
+            "ewma_value": [acc],
+            "batch_seq": [seq],
+        }
+    )
+
+
 def user_ewma_stream_gs(spark: SparkSession, source_dir: str) -> DataFrame:
     """Per-user RUNNING EWMA (alpha = 1/2) on ``applyInPandasWithState`` —
     the ORDER-SENSITIVE stateful fold, one notch harder than the running
@@ -274,7 +302,8 @@ def user_ewma_stream_gs(spark: SparkSession, source_dir: str) -> DataFrame:
     not. Two order guarantees make it exact anyway:
 
     - within a micro-batch the group's rows are sorted by (ts, event_id)
-      before folding;
+      before folding (``ts`` enters the stateful op as ``unix_micros``, a
+      bigint in the same order);
     - across batches the harness feeds time-split files oldest-first
       (file-source default), so batch N's events all precede batch N+1's.
 
@@ -292,26 +321,11 @@ def user_ewma_stream_gs(spark: SparkSession, source_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(source_dir)
     )
-
-    def fold(key, pdfs, state):
-        acc, n, seq = state.get if state.exists else (0.0, 0, 0)
-        rows = pd.concat(list(pdfs)).sort_values(["ts", "event_id"])
-        for v in rows["value"]:
-            acc = float(v) if n == 0 else (acc + float(v)) / 2.0
-            n += 1
-        seq += 1
-        state.update((acc, n, seq))
-        yield pd.DataFrame(
-            {
-                "user_id": [key[0]],
-                "n_events": [n],
-                "ewma_value": [acc],
-                "batch_seq": [seq],
-            }
-        )
-
-    return stream.groupBy("user_id").applyInPandasWithState(
-        fold,
+    keyed = stream.select(
+        "user_id", "event_id", F.unix_micros("ts").alias("ts"), "value"
+    )
+    return keyed.groupBy("user_id").applyInPandasWithState(
+        _ewma_fold,
         outputStructType=EWMA_SCHEMA,
         stateStructType="acc DOUBLE, n BIGINT, seq BIGINT",
         outputMode="append",

@@ -120,6 +120,31 @@ def test_stream_parsing_robustness():
     jpeg_decode(bytes(flipped))
 
 
+def test_fill_bytes_before_markers_are_skipped():
+    """ITU-T T.81 B.1.1.2: any marker may be preceded by 0xFF fill
+    bytes. A payload starting ``FF D8 FF FF ...`` and a progressive
+    payload with fill bytes before its second SOS decode to the clean
+    payload's pixels."""
+    import random
+
+    from data_engineer_interview_task_spark.functions.jpeg_codec import (
+        jpeg_decode_progressive,
+        jpeg_encode_progressive,
+    )
+
+    rng = random.Random(9)
+    px = bytes(rng.randrange(256) for _ in range(16 * 16))
+    base = jpeg_encode(px, 16, 16)
+    assert jpeg_decode(base[:2] + b"\xff" + base[2:]) == jpeg_decode(base)
+    prog = jpeg_encode_progressive(px, 16, 16)
+    clean = jpeg_decode_progressive(prog)
+    assert jpeg_decode_progressive(prog[:2] + b"\xff\xff" + prog[2:]) == clean
+    sos = [i for i in range(len(prog) - 1) if prog[i : i + 2] == b"\xff\xda"]
+    assert len(sos) >= 2
+    filled = prog[: sos[1]] + b"\xff\xff\xff" + prog[sos[1] :]
+    assert jpeg_decode_progressive(filled) == clean
+
+
 def test_byte_stuffing_round_trip():
     """Find a payload whose entropy stream contains stuffed 0xFF00 (the
     encoder stuffs; the decoder must unstuff) — scan a value sweep and

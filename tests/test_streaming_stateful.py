@@ -8,7 +8,10 @@ same honest-seam pattern as the multimodal codecs).
 """
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 import pytest
+from pandas.testing import assert_frame_equal
 from pyspark.sql import functions as F
 
 from data_engineer_interview_task_spark.sources import read_table
@@ -182,3 +185,82 @@ def test_streaming_ewma_crosses_batch_boundary(spark, sf_dir, tmp_path):
         for r in out.groupBy("user_id").count().filter("count = 2").collect()
     }
     assert both_sides and both_sides <= two_emissions
+
+
+class _DictState:
+    """The slice of ``GroupState`` a NoTimeout fold uses, over a dict."""
+
+    def __init__(self, store: dict, key):
+        self._store, self._key = store, key
+
+    @property
+    def exists(self) -> bool:
+        return self._key in self._store
+
+    @property
+    def get(self) -> tuple:
+        return self._store[self._key]
+
+    def update(self, value) -> None:
+        self._store[self._key] = tuple(value)
+
+
+def _ewma_batches():
+    """Two time-split batches of (user_id, event_id, ts, value) with ts
+    as integer microseconds, as the fold receives them. Timestamps are
+    drawn from 40 minutes, so ties are common, and each batch arrives
+    shuffled: only the (ts, event_id) sort gives the recurrence order."""
+    rng = np.random.default_rng(11)
+    n = 600
+    events = pd.DataFrame(
+        {
+            "user_id": rng.integers(0, 15, n),
+            "event_id": rng.permutation(n).astype("int64"),
+            "ts": rng.integers(0, 40, n) * 60_000_000,
+            "value": rng.integers(0, 100_000, n) / 100.0,
+        }
+    )
+    cutoff = 25 * 60_000_000
+    return [
+        part.sample(frac=1.0, random_state=i).reset_index(drop=True)
+        for i, part in enumerate(
+            (events[events.ts < cutoff], events[events.ts >= cutoff])
+        )
+    ]
+
+
+def test_ewma_fold_matches_pandas_recurrence():
+    """``_ewma_fold`` driven directly over two micro-batches with a
+    dict-backed state: each user's last emission equals pandas'
+    ``ewm(alpha=0.5, adjust=False)`` over the whole (ts, event_id)-sorted
+    history, bit for bit. A batch's group arrives as several frames, as
+    Arrow batches do."""
+    from data_engineer_interview_task_spark.streaming.stateful import _ewma_fold
+
+    batches = _ewma_batches()
+    store: dict = {}
+    last: dict = {}
+    for batch in batches:
+        for uid, group in batch.groupby("user_id"):
+            frames = [group.iloc[: len(group) // 2], group.iloc[len(group) // 2 :]]
+            for out in _ewma_fold((uid,), iter(frames), _DictState(store, uid)):
+                last[uid] = out
+    got = (
+        pd.concat(last.values())[["user_id", "n_events", "ewma_value"]]
+        .sort_values("user_id")
+        .reset_index(drop=True)
+    )
+
+    ordered = pd.concat(batches).sort_values(["ts", "event_id"])
+    by_user = ordered.groupby("user_id")["value"]
+    want = pd.DataFrame(
+        {
+            "user_id": by_user.size().index.astype("int64"),
+            "n_events": by_user.size().to_numpy().astype("int64"),
+            "ewma_value": by_user.apply(
+                lambda v: v.ewm(alpha=0.5, adjust=False).mean().iloc[-1]
+            ).to_numpy(),
+        }
+    )
+    assert (got["n_events"] > 1).all() and len(got) == 15
+    assert_frame_equal(got, want, check_exact=True)
