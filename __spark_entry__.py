@@ -835,9 +835,10 @@ def _srp_plane_values(n_tables: int, n_planes: int, dim: int = 64) -> str:
 
 def _srp_lsh_sql() -> str:
     """Twin of similarity.srp_lsh_topk: the same 2048 literal hyperplane
-    weights (shared python source of truth), DECIMAL projection sums (sign
-    bits deterministic), bucket collision candidates across 8 tables,
-    exact left-fold-double cosine re-ranking."""
+    weights (shared python source of truth), fixed-point projection sums
+    (BIGINT sums of floor(x*w*1e9), so the sign bits are deterministic),
+    bucket collision candidates across 8 tables, exact left-fold-double
+    cosine re-ranking."""
     values = _srp_plane_values(n_tables=8, n_planes=4)
     fold = (
         "list_reduce(list_transform(range(64), i -> "

@@ -7,12 +7,12 @@ groupBy — no shuffle ever carries vectors to a single node.
 
 Every arithmetic step is chosen for cross-engine bit-identity, which makes
 the WHOLE two-round algorithm oracle-checkable (rare for iterative ML):
-- centroid means: fixed-point floor(x*1e9) long sums / count / 1e9 (the
-  label_centroids rule — floor of a double product is tie-free across
-  engines where double->decimal casts round half-ties differently);
+- centroid means: ``functions.vector.fixed_mean`` (fixed-point long sums
+  / count / 1e9 — floor of a double product is tie-free across engines
+  where double->decimal casts round half-ties differently);
 - distances: strict left-fold double sums in array order (row-local, equal
   to DuckDB's list_reduce bit-for-bit);
-- argmin: row_number with a total tie-break (distance, then cluster id).
+- argmin: ``top_k`` with a total tie-break (distance, then cluster id).
 
 Init = per-label centroids (deterministic; k-means|| sampling would be
 engine-specific). Rounds are unrolled statically — each round is one
@@ -21,46 +21,24 @@ broadcast join + one aggregation, the classic Spark iteration shape.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.vector import fixed_mean_array, top_k
 from ..sources import read_table
 
 #: unrolled Lloyd rounds: assign -> update -> assign
 N_UPDATE_ROUNDS = 1
 
 
-def _centroid_arrays(assigned: DataFrame, cluster_col: str) -> DataFrame:
-    """(cluster, centroid array<double>) via posexplode + exact decimal
-    means + ordered re-assembly. The sort_array(collect_list(struct))
-    re-assembly is deterministic: dim is unique within a group."""
-    ex = assigned.select(
-        F.col(cluster_col).alias("cl"),
-        F.posexplode("embedding").alias("dim", "x"),
-    )
-    means = ex.groupBy("cl", "dim").agg(
-        (
-            F.sum(F.floor(F.col("x").cast("double") * 1e9)).cast("double")
-            / F.count(F.lit(1))
-            / 1e9
-        ).alias("c")
-    )
-    return means.groupBy("cl").agg(
-        F.transform(
-            F.sort_array(F.collect_list(F.struct("dim", "c"))),
-            lambda s: s.getField("c"),
-        ).alias("cent")
-    )
-
-
 def _assign(emb: DataFrame, centroids: DataFrame) -> DataFrame:
-    """Nearest-centroid assignment: broadcast the k centroids, one
-    squared-distance fold per (vector, centroid), argmin per vector with a
-    total tie-break. Map-side except the k-way row_number window."""
-    # r12 opt: spread the one-split embeddings scan before the k-way
-    # fan-out — the per-(vector, centroid) distance fold is an
-    # interpreted lambda, and a broadcast cross-join over a one-split
-    # scan runs every fold on ONE task (SCALE.md one-task trap)
+    """Nearest-centroid assignment: broadcast the k ``(cl, cent)``
+    centroids, one squared-distance fold per (vector, centroid), argmin per
+    vector with a total tie-break. Map-side except the k-way top-1."""
+    # spread the one-split embeddings scan before the k-way fan-out: the
+    # per-(vector, centroid) distance fold is an interpreted lambda, and a
+    # broadcast cross-join over a one-split scan runs every fold on ONE
+    # task (SCALE.md one-task trap)
     paired = emb.repartition(
         emb.sparkSession.sparkContext.defaultParallelism, "vec_id"
     ).crossJoin(F.broadcast(centroids))
@@ -70,15 +48,10 @@ def _assign(emb: DataFrame, centroids: DataFrame) -> DataFrame:
         lambda a, b: (a.cast("double") - b) * (a.cast("double") - b),
     )
     dist = F.aggregate(diff_sq, F.lit(0.0), lambda acc, x: acc + x)
-    w = Window.partitionBy("vec_id").orderBy(
-        F.col("d").asc(), F.col("cl").asc()
-    )
-    return (
-        paired.withColumn("d", dist)
-        .withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") == 1)
-        .select("vec_id", "embedding", F.col("cl").alias("cluster"))
-    )
+    return top_k(
+        paired.withColumn("d", dist), "vec_id",
+        [F.col("d").asc(), F.col("cl").asc()], 1, "rk",
+    ).select("vec_id", "embedding", F.col("cl").alias("cluster"))
 
 
 def kmeans_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -86,12 +59,10 @@ def kmeans_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
     assign, update centroids from the assignment, re-assign. Emits the
     final (vec_id, cluster)."""
     emb = read_table(spark, sf_dir, "embeddings")
-    cent = _centroid_arrays(
-        emb.withColumn("cluster", F.col("label")), "cluster"
-    )
+    cent = fixed_mean_array(emb, "label").toDF("cl", "cent")
     assigned = _assign(emb.select("vec_id", "embedding"), cent)
     for _ in range(N_UPDATE_ROUNDS):
-        cent = _centroid_arrays(assigned, "cluster")
+        cent = fixed_mean_array(assigned, "cluster").toDF("cl", "cent")
         assigned = _assign(emb.select("vec_id", "embedding"), cent)
     return assigned.select(
         "vec_id", F.col("cluster").cast("int").alias("cluster")
@@ -134,7 +105,7 @@ def kcenter_diversity_sample(
     from ..functions.vector import dot_decimal_expr, sq_norm_decimal_expr
 
     emb = read_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    # r12 opt: LAZY localCheckpoint — the argmax collect that follows
+    # LAZY localCheckpoint — the argmax collect that follows
     # materializes the frame in the SAME job (the seed row's first
     # collect, then each round's farthest-point fetch), halving the
     # per-round job count; lineage truncation and values are unchanged

@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.vector import fixed_mean
 from ..sources import read_table
 
 
@@ -264,25 +265,13 @@ def daily_spine_ffill(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-label embedding centroid, one row per (label, dimension) — the
-    vector-aggregate shape behind IVF coarse quantizers and k-means steps.
-    posexplode -> hash aggregate; the mean is an exact FIXED-POINT sum
-    (floor(x*1e9) into long) divided by count then descaled — double sums
-    would be partition-order dependent, and a double->DECIMAL cast is
-    round-half-TIE sensitive across engines (Spark HALF_UP on the
-    shortest decimal repr vs DuckDB's binary-expansion rounding): the
-    sf1 sweep caught a 5e-12 centroid mismatch from exactly one such tie
-    in 1.28M casts, which driver-scale fixtures never hit. floor of the
-    same double product is tie-free and engine-identical (the SRP
-    projection lesson, applied to every centroid in the repo)."""
-    emb = read_table(spark, sf_dir, "embeddings")
-    ex = emb.select("label", F.posexplode("embedding").alias("dim", "x"))
-    return ex.groupBy("label", "dim").agg(
-        (
-            F.sum(F.floor(F.col("x").cast("double") * 1e9)).cast("double")
-            / F.count(F.lit(1))
-            / 1e9
-        ).alias("centroid"),
-        F.count(F.lit(1)).alias("n_vectors"),
+    vector-aggregate shape behind IVF coarse quantizers and k-means steps:
+    the one fixed-point mean, ``functions.vector.fixed_mean`` (posexplode
+    -> hash aggregate; see ``fixed_point`` for why floor of the double
+    product and not a double->DECIMAL cast — the sf1 sweep caught a
+    5e-12 centroid mismatch from exactly one half-tie in 1.28M casts)."""
+    return fixed_mean(read_table(spark, sf_dir, "embeddings"), "label").toDF(
+        "label", "dim", "centroid", "n_vectors"
     )
 
 

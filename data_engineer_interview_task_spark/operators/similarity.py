@@ -6,25 +6,236 @@ Two tiers, per the standard ANN architecture:
 - ``brute_force_topk``: exact cosine top-k, the correctness baseline. The
   oracle-checked variant accumulates in DECIMAL so the DuckDB comparison is
   bit-exact; the bench variant uses double.
-- ``srp_lsh_topk``: sign-random-projection (hyperplane) LSH — bucket
-  vectors by sign bits against deterministic pseudo-random hyperplanes,
-  probe only colliding buckets. Sub-linear candidate sets at scale; exact
-  re-rank inside the candidate set.
+- the approximate variants (SRP-LSH, IVF, PQ/ADC, IVF-PQ, SQ8): each is
+  the same three steps — prune candidates, refine them exactly, merge the
+  top-k — and differs only in the first. The second and third are written
+  once below: ``_probe``/``_probed_cells`` (IVF cell pruning), ``_ranked``,
+  ``_exact_ip`` and ``_vote`` over :func:`functions.vector.top_k`, and
+  ``_recall`` for the audits that compare two rankings.
+
+Conventions every query here keeps (stated once, not per site):
+
+- **Norms are per VECTOR.** Each side's norm is folded once per row before
+  the pair fan-out and carried as a column (``qnrm``/``cnrm``, or the
+  squared ``qn``/``cn``). Array lambdas (``aggregate``/``zip_with``) run
+  interpreted, outside whole-stage codegen, and Spark performs no
+  common-subexpression elimination on them: ``cosine_expr`` inline would
+  re-fold both norms per candidate pair, and ``dot * abs(dot)`` in one
+  projection folds the dot twice (measured exactly 2x at sf0.1). A dot
+  used twice is therefore materialized in its own column (CollapseProject
+  refuses to inline a non-cheap alias referenced more than once).
+  ``dot / (qnrm * cnrm)`` divides the identical doubles in the identical
+  order ``cosine_expr`` does, so every value is bit-unchanged.
+- **No one-task pair fan-out.** The embeddings file is one input split,
+  and a broadcast cross-join over a one-split scan runs the whole
+  interpreted pair projection on ONE task (the SCALE.md one-task trap —
+  AQE cannot see output blow-up). ``_spread`` repartitions the candidate
+  side first, with an explicit width: a bare ``repartition("vec_id")`` is
+  coalesced back to one partition by AQE at this input size.
+- **Fixed point and total orders.** Centroids are
+  :func:`functions.vector.fixed_mean`, quantized components
+  :func:`functions.vector.fixed_point`, and every top-k ends in a unique
+  id, which is what makes the approximate family exactly oracle-checkable.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+import functools
+import operator
+
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.vector import (
-    cosine_expr,
     dot_decimal_expr,
     dot_expr,
+    fixed_mean_array,
+    fixed_point,
     norm_expr,
     sq_norm_decimal_expr,
+    top_k,
 )
 from ..sources import read_table
+
+
+def _spread(df: DataFrame) -> DataFrame:
+    """Spread a one-split candidate scan before the pair fan-out (module
+    docstring)."""
+    return df.repartition(df.sparkSession.sparkContext.defaultParallelism, "vec_id")
+
+
+def _dec_nsq(c: Column) -> Column:
+    """Exact squared norm (DECIMAL accumulation), emitted as double."""
+    return sq_norm_decimal_expr(c).cast("double")
+
+
+def _cos_qc() -> Column:
+    """Double cosine of the ``q``/``c`` pair over carried norms."""
+    return dot_expr(F.col("q"), F.col("c")) / (F.col("qnrm") * F.col("cnrm"))
+
+
+def _cos2_key(pairs: DataFrame, dot: Column) -> DataFrame:
+    """``ord_key = dot * |dot| / (qn * cn)`` over squared norms: sign(cos)
+    x cos², monotone in cosine, so no sqrt enters the comparison. Squaring
+    happens in double — a decimal square would overflow p38."""
+    return pairs.withColumn("dot", dot).withColumn(
+        "ord_key",
+        F.col("dot") * F.abs(F.col("dot")) / (F.col("qn") * F.col("cn")),
+    )
+
+
+def _ranked(pairs: DataFrame, key: Column, k: int) -> DataFrame:
+    """Per-query top-k by ``key`` DESC, ``neighbor_id`` ASC, projected to
+    ``(query_id, neighbor_id, rank int)``."""
+    return top_k(
+        pairs, "query_id", [key.desc(), F.col("neighbor_id").asc()], k
+    ).select("query_id", "neighbor_id", F.col("rank").cast("int").alias("rank"))
+
+
+def _exact_ip(pairs: DataFrame, k: int) -> DataFrame:
+    """Per-query exact top-k of a ``(query_id, q, neighbor_id, c, ...)``
+    pair frame by the DECIMAL inner product ``q·c`` (``dot_decimal_expr``:
+    one rounding per element product, exact accumulation), ties on
+    ``neighbor_id``. The product is an ORDER KEY ONLY, never emitted: the
+    engines' double->DECIMAL(28,14) element roundings can differ in the
+    last place (HALF_UP vs round-half-even), so the raw score is not
+    hash-transportable while the ranking it induces is stable (measured
+    at sf0.001: one 1-ulp score divergence, zero rank divergences)."""
+    scored = pairs.withColumn("ord_key", dot_decimal_expr(F.col("q"), F.col("c")))
+    return top_k(
+        scored, "query_id", [F.col("ord_key").desc(), F.col("neighbor_id").asc()], k
+    )
+
+
+def _probe(
+    emb: DataFrame, cents: DataFrame, n_queries: int, n_probe: int, *carry: Column
+) -> DataFrame:
+    """The IVF cell probe: for each query (``vec_id < n_queries``), the
+    ``n_probe`` centroid cells of highest double cosine, ties on cell id.
+    Rows are ``(query_id, *carry, q, qnrm, cell, cell_cos, cr)`` with
+    ``cr`` the cell's probe rank; the query norm is carried for the
+    rerank."""
+    queries = emb.filter(F.col("vec_id") < n_queries).select(
+        F.col("vec_id").alias("query_id"),
+        *carry,
+        F.col("embedding").alias("q"),
+        norm_expr(F.col("embedding")).alias("qnrm"),
+    )
+    cell_cos = dot_expr(F.col("q"), F.col("centroid")) / (
+        F.col("qnrm") * norm_expr(F.col("centroid"))
+    )
+    qcells = queries.crossJoin(F.broadcast(cents)).select(
+        *queries.columns, "cell", cell_cos.alias("cell_cos")
+    )
+    return top_k(
+        qcells, "query_id", [F.col("cell_cos").desc(), F.col("cell").asc()],
+        n_probe, "cr",
+    )
+
+
+def _probed_cells(probed: DataFrame) -> list:
+    """The union of probed cell ids — index METADATA (at most n_queries x
+    n_probe values), collected to become a static partition-pruning
+    predicate on a cell-partitioned layout: the plan shows it as
+    PartitionFilters, and files of unprobed cells are never opened."""
+    return sorted({r.cell for r in probed.select("cell").distinct().collect()})
+
+
+def _vote(top: DataFrame, label: str | Column) -> DataFrame:
+    """Majority vote of each query's top-k neighbor labels (``label``,
+    named ``cand_label``): a (query, label) count with a (votes DESC,
+    label ASC) argmax. Both tie-breaks are total, so the prediction is
+    bit-deterministic."""
+    votes = top.groupBy("query_id", "true_label", label).agg(
+        F.count(F.lit(1)).cast("long").alias("n_votes")
+    )
+    return top_k(
+        votes, "query_id",
+        [F.col("n_votes").desc(), F.col("cand_label").asc()], 1, "vr",
+    ).select(
+        "query_id",
+        F.col("true_label").cast("int").alias("true_label"),
+        F.col("cand_label").cast("int").alias("predicted_label"),
+        "n_votes",
+    )
+
+
+def _recall(
+    exact: DataFrame, ann: DataFrame, grid: DataFrame | None = None
+) -> DataFrame:
+    """Per-query recall of ``ann`` against ``exact`` (both keyed
+    ``(query_id, neighbor_id)``): ``k_exact``, ``n_hits`` (0 when nothing
+    hit) and ``recall_millis = n_hits * 1000 DIV k_exact``. With ``grid``
+    (one row per arm, e.g. ``n_probe``), ``ann`` carries the arm column
+    and the report has one row per (arm, query)."""
+    base = exact.groupBy("query_id").agg(
+        F.count(F.lit(1)).cast("long").alias("k_exact")
+    )
+    keys = ["query_id"]
+    if grid is not None:
+        base, keys = grid.crossJoin(base), [*grid.columns, "query_id"]
+    hits = (
+        exact.join(ann, ["query_id", "neighbor_id"])
+        .groupBy(*keys)
+        .agg(F.count(F.lit(1)).cast("long").alias("n_hits"))
+    )
+    return (
+        base.join(hits, keys, "left_outer")
+        .select(
+            *keys,
+            "k_exact",
+            F.coalesce(F.col("n_hits"), F.lit(0)).cast("long").alias("n_hits"),
+        )
+        .withColumn(
+            "recall_millis", F.expr("n_hits * 1000 DIV k_exact").cast("long")
+        )
+    )
+
+
+def _cosine_pairs(
+    ex: DataFrame,
+    norms: DataFrame,
+    block: tuple[str, ...],
+    keep: tuple[str, ...],
+    threshold: float,
+) -> DataFrame:
+    """Blocked near-dup pairs ``(*keep, id_a, id_b)``, ``id_a < id_b``
+    sharing every ``block`` key, with exact decimal cosine >= threshold.
+
+    ``ex`` is the exploded ``(vec_id, *block, dim, x)`` frame and ``norms``
+    ``(vec_id, nsq)``. The per-PAIR dot is a self-join on (*block, dim)
+    plus a hash aggregate, NOT an array-lambda fold: ``F.aggregate``
+    lambdas run interpreted outside whole-stage codegen and are re-entered
+    per pair (measured 19.8s -> ~2s at sf0.1 on the semantic_dedup
+    consumer), while the join keeps the multiply + decimal sum in codegen.
+    DECIMAL addition is exact and commutative, so the hash aggregate's
+    arbitrary order gives the bit-identical total of the oracle's ordered
+    ``list_sum`` fold. Per-vector norms are one lambda fold per vector."""
+    on = [F.col(f"a.{c}") == F.col(f"b.{c}") for c in (*block, "dim")]
+    cond = functools.reduce(operator.and_, on) & (
+        F.col("a.vec_id") < F.col("b.vec_id")
+    )
+    prod = (F.col("a.x").cast("double") * F.col("b.x").cast("double")).cast(
+        "decimal(28,14)"
+    )
+    dots = (
+        ex.alias("a")
+        .join(ex.alias("b"), cond)
+        .groupBy(
+            *[F.col(f"a.{c}").alias(c) for c in keep],
+            F.col("a.vec_id").alias("id_a"),
+            F.col("b.vec_id").alias("id_b"),
+        )
+        .agg(F.sum(prod).cast("double").alias("dot"))
+    )
+    na = norms.select(F.col("vec_id").alias("id_a"), F.col("nsq").alias("na"))
+    nb = norms.select(F.col("vec_id").alias("id_b"), F.col("nsq").alias("nb"))
+    key = F.col("dot") * F.abs(F.col("dot")) / (F.col("na") * F.col("nb"))
+    return (
+        dots.join(F.broadcast(na), "id_a")
+        .join(F.broadcast(nb), "id_b")
+        .filter(key >= threshold * abs(threshold))
+    )
 
 
 def brute_force_topk(
@@ -49,26 +260,18 @@ def brute_force_topk(
     sign(dot) * dot² / (|a|²|b|²) which is monotone in cosine.
     """
     emb = read_table(spark, sf_dir, "embeddings")
-    # norms are per-VECTOR: compute them once on each side before the pair
-    # join instead of per pair (array lambdas are interpreted, not
-    # codegen'd — per-pair norm recomputation tripled the hot-loop cost)
     if exact_decimal:
-        norm_of = lambda c: sq_norm_decimal_expr(c).cast("double")  # noqa: E731
+        norm_of = _dec_nsq
+        dot = dot_decimal_expr(F.col("q"), F.col("c")).cast("double")
     else:
         norm_of = lambda c: norm_expr(c) * norm_expr(c)  # noqa: E731
+        dot = dot_expr(F.col("q"), F.col("c"))
     queries = emb.filter(F.col("vec_id") < n_queries).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("q"),
         norm_of(F.col("embedding")).alias("qn"),
     )
-    # spread the candidate side before the pair fan-out: the embeddings
-    # file is one split, and a broadcast cross-join over a one-split scan
-    # runs the whole interpreted-lambda pair projection on ONE task (the
-    # SCALE.md one-task trap — AQE cannot see output blow-up, and a
-    # keyed repartition without an explicit width gets coalesced back to
-    # one partition by AQE at this input size) (r12 opt, guide §2.5)
-    par = spark.sparkContext.defaultParallelism
-    cands = emb.repartition(par, "vec_id").select(
+    cands = _spread(emb).select(
         F.col("vec_id").alias("neighbor_id"),
         F.col("embedding").alias("c"),
         norm_of(F.col("embedding")).alias("cn"),
@@ -76,31 +279,7 @@ def brute_force_topk(
     joined = cands.crossJoin(F.broadcast(queries)).filter(
         F.col("query_id") != F.col("neighbor_id")
     )
-    if exact_decimal:
-        # DECIMAL-accumulated dot (partition-order independent), then a
-        # handful of IEEE ops: key = dot*|dot| / (|q|^2 |c|^2), monotone in
-        # cosine. Squaring happens in double — decimal^2 would overflow p38.
-        dot = dot_decimal_expr(F.col("q"), F.col("c")).cast("double")
-    else:
-        dot = dot_expr(F.col("q"), F.col("c"))
-    # materialize the dot ONCE: Spark performs no common-subexpression
-    # elimination on interpreted lambda aggregates, so `dot * abs(dot)`
-    # inside one projection runs the whole 64-element fold twice
-    # (measured exactly 2x at sf0.1); the extra Project survives the
-    # optimizer because CollapseProject refuses to inline a non-cheap
-    # alias referenced more than once (r12 opt, guide §4)
-    scored = joined.withColumn("dot", dot).withColumn(
-        "ord_key",
-        F.col("dot") * F.abs(F.col("dot")) / (F.col("qn") * F.col("cn")),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("ord_key").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.col("rank").cast("int").alias("rank"))
-    )
+    return _ranked(_cos2_key(joined, dot), F.col("ord_key"), k)
 
 
 def _srp_plane_weight(t: int, p: int, d: int) -> float:
@@ -145,17 +324,10 @@ def _srp_bucket_df(
         .groupBy("vec_id", "t", "p")
         # FIXED-POINT projection sums: a double sum is partition-order
         # dependent, so a projection near zero could flip its sign bit
-        # between runs/engines. floor(term * 1e9) -> exact long addition
-        # makes every bucket id deterministic (which lets the whole
-        # approximate operator family be oracle-checked exactly) at
-        # long-adder speed — DECIMAL accumulation here cost 5x (Decimal128
-        # adds on 10M rows); floor matches across engines where plain
-        # double->bigint CAST does not (Spark truncates, DuckDB rounds)
-        .agg(
-            F.sum(
-                F.floor(F.col("x").cast("double") * F.col("w") * 1e9)
-            ).alias("s")
-        )
+        # between runs/engines; exact long addition of fixed_point(x*w)
+        # makes every bucket id deterministic at long-adder speed
+        # (DECIMAL accumulation here cost 5x: Decimal128 adds on 10M rows)
+        .agg(F.sum(fixed_point(F.col("x").cast("double") * F.col("w"))).alias("s"))
         .withColumn(
             "bit",
             F.when(F.col("s") >= 0, F.expr("shiftleft(1L, p)")).otherwise(F.lit(0)),
@@ -176,12 +348,14 @@ def srp_lsh_topk(
 ) -> DataFrame:
     """Approximate top-k via multi-table sign-random-projection LSH.
 
-    Hyperplanes are deterministic pseudo-random vectors derived JVM-side
-    from xxhash64(table, plane, dimension), centered on zero — no
-    driver-side RNG, no UDF. Per table, bucket = the ``n_planes`` sign bits
-    of plane·vector; a candidate is any vector sharing a (table, bucket)
-    with the query (OR-amplification across ``n_tables`` tables raises
-    recall: P = 1-(1-p^b)^L). Exact cosine re-ranks the deduped candidates.
+    Hyperplanes are deterministic pseudo-random weights in [-0.5, 0.5),
+    derived driver-side from md5(table, plane, dimension)
+    (``_srp_plane_weight``) and broadcast as a tiny literal table — no
+    RNG, no UDF. Per table, bucket = the ``n_planes`` sign bits of the
+    fixed-point plane·vector sum; a candidate is any vector sharing a
+    (table, bucket) with the query (OR-amplification across ``n_tables``
+    tables raises recall: P = 1-(1-p^b)^L). Exact cosine re-ranks the
+    deduped candidates.
 
     At scale: bucketing is one narrow map + an equi-join on (table, bucket)
     — never all-pairs; candidate volume per query ~ L * N / 2^b, tuned by
@@ -189,10 +363,7 @@ def srp_lsh_topk(
     """
     emb = read_table(spark, sf_dir, "embeddings")
     buckets = _srp_bucket_df(spark, emb, n_planes, n_tables, dim)
-    # r12 opt: the L2 norm is folded once per VECTOR (before the x8
-    # table fan-out) and carried — `cosine_expr` inline would re-fold
-    # both norms per candidate pair (interpreted lambdas, no CSE); the
-    # rerank divides the identical doubles in the identical order
+    # the norm is folded before the x n_tables fan-out (module docstring)
     bucketed = (
         emb.withColumn("nrm", norm_expr(F.col("embedding")))
         .join(buckets, "vec_id")
@@ -224,45 +395,7 @@ def srp_lsh_topk(
             F.first("cnrm").alias("cnrm"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        (
-            dot_expr(F.col("q"), F.col("c"))
-            / (F.col("qnrm") * F.col("cnrm"))
-        ).desc(),
-        F.col("neighbor_id").asc(),
-    )
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.col("rank").cast("int").alias("rank"))
-    )
-
-
-def _ivf_centroids(emb: DataFrame) -> DataFrame:
-    """Centroid per label cell: posexplode + mean, then re-assemble arrays.
-    FIXED-POINT mean (floor(x*1e9) long sums), not avg(double): a double
-    mean is partition-order dependent, and a centroid that wobbles at
-    the last ulp can reorder the probed cells — exact long addition
-    makes the whole probe deterministic and the operator exactly
-    oracle-checkable (label_centroids rule; see its docstring for why
-    decimal casts are tie-unsafe at scale)."""
-    return (
-        emb.select("label", F.posexplode("embedding").alias("dim", "x"))
-        .groupBy("label", "dim")
-        .agg(
-            (
-                F.sum(F.floor(F.col("x").cast("double") * 1e9)).cast("double")
-                / F.count(F.lit(1))
-                / 1e9
-            ).alias("c")
-        )
-        .groupBy("label")
-        .agg(F.array_sort(F.collect_list(F.struct("dim", "c"))).alias("pairs"))
-        .select(
-            F.col("label").alias("cell"),
-            F.transform("pairs", lambda p: p["c"]).alias("centroid"),
-        )
-    )
+    return _ranked(pairs, _cos_qc(), k)
 
 
 def ivf_topk(
@@ -275,44 +408,19 @@ def ivf_topk(
     """IVF-style ANN: coarse-quantize vectors to centroid cells, probe only
     the ``n_probe`` cells nearest each query, exact-rerank inside them.
 
-    The coarse quantizer here is the per-label centroid table (the
-    k-means-seeded cell structure; `extended.label_centroids` is the same
+    The coarse quantizer here is the per-label fixed-point centroid table
+    (``fixed_mean_array``; `extended.label_centroids` is the same
     computation exposed as a query). Assignment and probing are broadcast
     joins against the tiny centroid table; the big side is scanned once.
     At 100 TB this is the standard sharded-ANN layout: partition the
     corpus BY cell so a probe touches only n_probe/256ths of the data.
     """
     emb = read_table(spark, sf_dir, "embeddings")
-    cents = _ivf_centroids(emb)
-    # distance of each query to each cell centroid -> top n_probe cells.
-    # r12 opt: the query norm is computed ONCE per query and carried —
-    # `cosine_expr` inline would re-fold norm(q) per candidate row in
-    # the rerank (interpreted lambdas, no CSE); dot/(qn*cn) multiplies
-    # and divides the identical doubles, so every value is bit-unchanged
-    queries = emb.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q"),
-        norm_expr(F.col("embedding")).alias("qnrm"),
+    cents = fixed_mean_array(emb, "label").withColumnRenamed("label", "cell")
+    probed = _probe(emb, cents, n_queries, n_probe).select(
+        "query_id", "q", "qnrm", "cell"
     )
-    qcells = queries.crossJoin(F.broadcast(cents)).select(
-        "query_id",
-        "q",
-        "qnrm",
-        "cell",
-        (
-            dot_expr(F.col("q"), F.col("centroid"))
-            / (F.col("qnrm") * norm_expr(F.col("centroid")))
-        ).alias("cell_cos"),
-    )
-    w_cells = Window.partitionBy("query_id").orderBy(
-        F.col("cell_cos").desc(), F.col("cell").asc()
-    )
-    probed = qcells.withColumn("cr", F.row_number().over(w_cells)).filter(
-        F.col("cr") <= n_probe
-    ).select("query_id", "q", "qnrm", "cell")
-    # probe: candidates only from the chosen cells (equi-join on cell);
-    # candidate norms are per-VECTOR folds (one per row of emb), not
-    # per-pair folds
+    # probe: candidates only from the chosen cells (equi-join on cell)
     cands = emb.select(
         F.col("vec_id").alias("neighbor_id"),
         F.col("embedding").alias("c"),
@@ -322,18 +430,7 @@ def ivf_topk(
     pairs = cands.join(F.broadcast(probed), "cell").filter(
         F.col("query_id") != F.col("neighbor_id")
     )
-    w = Window.partitionBy("query_id").orderBy(
-        (
-            dot_expr(F.col("q"), F.col("c"))
-            / (F.col("qnrm") * F.col("cnrm"))
-        ).desc(),
-        F.col("neighbor_id").asc(),
-    )
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.col("rank").cast("int").alias("rank"))
-    )
+    return _ranked(pairs, _cos_qc(), k)
 
 
 def embedding_near_dup_pairs(
@@ -342,22 +439,11 @@ def embedding_near_dup_pairs(
     """Embedding-cosine near-dup pairs, blocked by ``label`` (the cluster
     id) so the pair join is an equi-join on the block key instead of
     all-pairs — the embedding analog of shingle blocking. Exact DECIMAL
-    cosine so the DuckDB oracle hash-matches.
-
-    Formulation: the per-PAIR dot product is a posexplode join + hash
-    aggregate, NOT an array-lambda fold. ``F.aggregate`` lambdas run
-    interpreted outside whole-stage codegen and are re-entered per pair
-    (measured 19.8s -> ~2s at sf0.1 on the semantic_dedup consumer);
-    exploding to (id, dim, x) rows and joining on (label, dim) keeps the
-    multiply + decimal-sum in codegen. DECIMAL addition is exact and
-    commutative, so the hash aggregate's arbitrary order produces the
-    bit-identical total the oracle's ordered list_sum fold produces.
-    Per-vector norms use the (tiny, |vectors|-sized) lambda fold — one
-    fold per vector, not per pair."""
+    cosine so the DuckDB oracle hash-matches; the per-pair dot is the
+    codegen'd posexplode join of ``_cosine_pairs``."""
     emb = read_table(spark, sf_dir, "embeddings")
-    norm_of = lambda c: sq_norm_decimal_expr(c).cast("double")  # noqa: E731
     norms = emb.select(
-        "vec_id", "label", norm_of(F.col("embedding")).alias("nsq")
+        "vec_id", "label", _dec_nsq(F.col("embedding")).alias("nsq")
     ).localCheckpoint()
     # EXPLOSIVE-join parallelism: the embeddings table is one input split
     # at test scale, and with the pair join broadcastable there is no
@@ -369,32 +455,8 @@ def embedding_near_dup_pairs(
     ex = emb.select(
         "vec_id", "label", F.posexplode("embedding").alias("dim", "x")
     ).repartition(par, "label", "dim")
-    prod = (F.col("a.x").cast("double") * F.col("b.x").cast("double")).cast(
-        "decimal(28,14)"
-    )
-    dots = (
-        ex.alias("a")
-        .join(
-            ex.alias("b"),
-            (F.col("a.label") == F.col("b.label"))
-            & (F.col("a.dim") == F.col("b.dim"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .groupBy(
-            F.col("a.label").alias("label"),
-            F.col("a.vec_id").alias("id_a"),
-            F.col("b.vec_id").alias("id_b"),
-        )
-        .agg(F.sum(prod).cast("double").alias("dot"))
-    )
-    na = norms.select(F.col("vec_id").alias("id_a"), F.col("nsq").alias("na"))
-    nb = norms.select(F.col("vec_id").alias("id_b"), F.col("nsq").alias("nb"))
-    key = F.col("dot") * F.abs(F.col("dot")) / (F.col("na") * F.col("nb"))
-    return (
-        dots.join(F.broadcast(na), "id_a")
-        .join(F.broadcast(nb), "id_b")
-        .filter(key >= threshold * abs(threshold))
-        .select("label", "id_a", "id_b")
+    return _cosine_pairs(ex, norms, ("label",), ("label",), threshold).select(
+        "label", "id_a", "id_b"
     )
 
 
@@ -460,7 +522,9 @@ def ivf_index_build(spark: SparkSession, sf_dir: str, index_dir: str) -> None:
     n_probe directories, not the corpus). The 100 TB deployment runs this
     on ingest/compaction; queries amortize it forever."""
     emb = read_table(spark, sf_dir, "embeddings")
-    _ivf_centroids(emb).write.mode("overwrite").parquet(f"{index_dir}/centroids")
+    fixed_mean_array(emb, "label").withColumnRenamed("label", "cell").write.mode(
+        "overwrite"
+    ).parquet(f"{index_dir}/centroids")
     (
         emb.select("vec_id", "embedding", F.col("label").alias("cell"))
         .write.mode("overwrite")
@@ -485,6 +549,8 @@ def _cached_ivf_index(spark: SparkSession, sf_dir: str) -> str:
     )
 
 
+
+
 def ivf_topk_prebuilt(
     spark: SparkSession,
     sf_dir: str,
@@ -495,48 +561,22 @@ def ivf_topk_prebuilt(
 ) -> DataFrame:
     """IVF ANN against the PERSISTED index (``ivf_index_build``): probe
     cells are chosen from the stored centroid table, the chosen cell ids
-    (index METADATA — n_queries x n_probe rows, not data) prune the
-    partitioned vector layout, and the exact re-rank runs only inside the
-    pruned partitions. Bit-identical to the in-memory ``ivf_topk`` (same
-    decimal centroid arithmetic, same tie-break order), so it shares its
-    oracle. The plan shows the cell filter as PartitionFilters on the
-    vectors scan — data files of unprobed cells are never opened."""
+    (``_probed_cells``) prune the partitioned vector layout, and the exact
+    re-rank runs only inside the pruned partitions. Bit-identical to the
+    in-memory ``ivf_topk`` (same fixed-point centroid arithmetic, same
+    tie-break order), so it shares its oracle. The plan shows the cell
+    filter as PartitionFilters on the vectors scan — data files of
+    unprobed cells are never opened."""
     if index_dir is None:
         index_dir = _cached_ivf_index(spark, sf_dir)
     cents = spark.read.parquet(f"{index_dir}/centroids")
     emb = read_table(spark, sf_dir, "embeddings")
-    # r12 opt: per-vector norms carried as columns instead of per-pair
-    # `cosine_expr` re-folds (interpreted lambdas, no CSE); identical
-    # doubles in the identical order, so every value is bit-unchanged
-    queries = emb.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q"),
-        norm_expr(F.col("embedding")).alias("qnrm"),
+    probed = _probe(emb, cents, n_queries, n_probe).select(
+        "query_id", "q", "qnrm", "cell"
     )
-    qcells = queries.crossJoin(F.broadcast(cents)).select(
-        "query_id",
-        "q",
-        "qnrm",
-        "cell",
-        (
-            dot_expr(F.col("q"), F.col("centroid"))
-            / (F.col("qnrm") * norm_expr(F.col("centroid")))
-        ).alias("cell_cos"),
-    )
-    w_cells = Window.partitionBy("query_id").orderBy(
-        F.col("cell_cos").desc(), F.col("cell").asc()
-    )
-    probed = (
-        qcells.withColumn("cr", F.row_number().over(w_cells))
-        .filter(F.col("cr") <= n_probe)
-        .select("query_id", "q", "qnrm", "cell")
-    )
-    # index metadata, not data: the probed cell ids (<= n_queries*n_probe
-    # values) come to the driver to become a partition-pruning predicate
-    cells = sorted({r.cell for r in probed.select("cell").distinct().collect()})
     vectors = (
         spark.read.parquet(f"{index_dir}/vectors")
-        .filter(F.col("cell").isin(cells))
+        .filter(F.col("cell").isin(_probed_cells(probed)))
         .select(
             F.col("vec_id").alias("neighbor_id"),
             F.col("embedding").alias("c"),
@@ -547,18 +587,7 @@ def ivf_topk_prebuilt(
     pairs = vectors.join(F.broadcast(probed), "cell").filter(
         F.col("query_id") != F.col("neighbor_id")
     )
-    w = Window.partitionBy("query_id").orderBy(
-        (
-            dot_expr(F.col("q"), F.col("c"))
-            / (F.col("qnrm") * F.col("cnrm"))
-        ).desc(),
-        F.col("neighbor_id").asc(),
-    )
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.col("rank").cast("int").alias("rank"))
-    )
+    return _ranked(pairs, _cos_qc(), k)
 
 
 def semantic_dedup(
@@ -643,15 +672,13 @@ def semantic_dedup_scaled(
     keys (single-split inputs otherwise run the fan-out join one-task —
     SCALE.md round-4 lesson) -> per-(table, pair) threshold filter ->
     distinct dominated ids -> broadcast anti-join. The per-pair dot is
-    the posexplode + DECIMAL hash-aggregate ladder of
-    ``embedding_near_dup_pairs`` (codegen'd, partition-order exact); a
-    pair colliding in both tables computes its dot twice — accepted at
+    ``_cosine_pairs``, shared with ``embedding_near_dup_pairs``; a pair
+    colliding in both tables computes its dot twice — accepted at
     n_tables=2 in exchange for skipping a candidate-dedup shuffle before
     the heavy stage."""
     emb = read_table(spark, sf_dir, "embeddings")
     buckets = _srp_bucket_df(spark, emb, n_planes, n_tables)
-    norm_of = lambda c: sq_norm_decimal_expr(c).cast("double")  # noqa: E731
-    norms = emb.select("vec_id", norm_of(F.col("embedding")).alias("nsq"))
+    norms = emb.select("vec_id", _dec_nsq(F.col("embedding")).alias("nsq"))
     par = spark.sparkContext.defaultParallelism
     ex = (
         emb.select(
@@ -660,33 +687,8 @@ def semantic_dedup_scaled(
         .join(buckets, "vec_id")
         .repartition(par, "label", "t", "bucket", "dim")
     )
-    prod = (F.col("a.x").cast("double") * F.col("b.x").cast("double")).cast(
-        "decimal(28,14)"
-    )
-    dots = (
-        ex.alias("a")
-        .join(
-            ex.alias("b"),
-            (F.col("a.label") == F.col("b.label"))
-            & (F.col("a.t") == F.col("b.t"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.dim") == F.col("b.dim"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .groupBy(
-            F.col("a.t").alias("t"),
-            F.col("a.vec_id").alias("id_a"),
-            F.col("b.vec_id").alias("id_b"),
-        )
-        .agg(F.sum(prod).cast("double").alias("dot"))
-    )
-    na = norms.select(F.col("vec_id").alias("id_a"), F.col("nsq").alias("na"))
-    nb = norms.select(F.col("vec_id").alias("id_b"), F.col("nsq").alias("nb"))
-    key = F.col("dot") * F.abs(F.col("dot")) / (F.col("na") * F.col("nb"))
     dominated = (
-        dots.join(F.broadcast(na), "id_a")
-        .join(F.broadcast(nb), "id_b")
-        .filter(key >= threshold * abs(threshold))
+        _cosine_pairs(ex, norms, ("label", "t", "bucket"), ("t",), threshold)
         .select(F.col("id_b").alias("vec_id"))
         .distinct()
     )
@@ -708,67 +710,28 @@ def knn_label_vote(
     Plan: same broadcast-queries × candidate-scan shape as
     ``brute_force_topk`` (DECIMAL-accumulated dot, cos²·sign ordering
     key — cross-engine bit-exact), with the candidate's label carried
-    through the rank filter; the vote is a (query, label) count with a
-    (votes DESC, label ASC) argmax window. Both tie-breaks are total
+    through the rank filter into ``_vote``. Both tie-breaks are total
     (neighbor_id on rank ties, label on vote ties), so the prediction is
     bit-deterministic."""
     emb = read_table(spark, sf_dir, "embeddings")
-    norm_of = lambda c: sq_norm_decimal_expr(c).cast("double")  # noqa: E731
     queries = emb.filter(F.col("vec_id") < n_queries).select(
         F.col("vec_id").alias("query_id"),
         F.col("label").alias("true_label"),
         F.col("embedding").alias("q"),
-        norm_of(F.col("embedding")).alias("qn"),
+        _dec_nsq(F.col("embedding")).alias("qn"),
     )
-    cands = (
-        emb.filter(F.col("vec_id") >= n_queries)
-        # the broadcast cross-join multiplies each candidate row by
-        # n_queries decimal-dot evaluations; a one-split embeddings file
-        # would run ALL of them on one task (the SCALE.md one-task trap —
-        # AQE can't see output blow-up), so spread candidates first.
-        # The width is EXPLICIT: a bare repartition("vec_id") is an
-        # AQE-optimizable shuffle that gets coalesced back to one
-        # partition at this input size, re-serializing the lambda work
-        # (r12 opt, measured single-task stage in the before-plan)
-        .repartition(spark.sparkContext.defaultParallelism, "vec_id")
-        .select(
-            F.col("vec_id").alias("neighbor_id"),
-            F.col("label").alias("cand_label"),
-            F.col("embedding").alias("c"),
-            norm_of(F.col("embedding")).alias("cn"),
-        )
+    cands = _spread(emb.filter(F.col("vec_id") >= n_queries)).select(
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("label").alias("cand_label"),
+        F.col("embedding").alias("c"),
+        _dec_nsq(F.col("embedding")).alias("cn"),
     )
-    joined = cands.crossJoin(F.broadcast(queries))
     dot = dot_decimal_expr(F.col("q"), F.col("c")).cast("double")
-    # dot materialized once — interpreted lambda aggregates are not
-    # subexpression-eliminated, so `dot * abs(dot)` in one projection
-    # would run the 64-element fold twice (r12 opt, guide §4)
-    scored = joined.withColumn("dot", dot).withColumn(
-        "ord_key",
-        F.col("dot") * F.abs(F.col("dot")) / (F.col("qn") * F.col("cn")),
+    scored = _cos2_key(cands.crossJoin(F.broadcast(queries)), dot)
+    top = top_k(
+        scored, "query_id", [F.col("ord_key").desc(), F.col("neighbor_id").asc()], k
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("ord_key").desc(), F.col("neighbor_id").asc()
-    )
-    top = scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
-    votes = top.groupBy("query_id", "true_label", "cand_label").agg(
-        F.count(F.lit(1)).cast("long").alias("n_votes")
-    )
-    wv = Window.partitionBy("query_id").orderBy(
-        F.col("n_votes").desc(), F.col("cand_label").asc()
-    )
-    return (
-        votes.withColumn("vr", F.row_number().over(wv))
-        .filter(F.col("vr") == 1)
-        .select(
-            "query_id",
-            F.col("true_label").cast("int").alias("true_label"),
-            F.col("cand_label").cast("int").alias("predicted_label"),
-            "n_votes",
-        )
-    )
+    return _vote(top, "cand_label")
 
 
 def knn_label_vote_ivf(
@@ -801,41 +764,12 @@ def knn_label_vote_ivf(
         index_dir = _cached_ivf_index(spark, sf_dir)
     cents = spark.read.parquet(f"{index_dir}/centroids")
     emb = read_table(spark, sf_dir, "embeddings")
-    # r12 opt: query/candidate norms are per-VECTOR folds carried as
-    # columns — `cosine_expr` inline re-folds both norms per PAIR row
-    # (interpreted lambdas, no CSE); dot/(qn*cn) over the identical
-    # doubles is bit-unchanged
-    queries = emb.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("label").alias("true_label"),
-        F.col("embedding").alias("q"),
-        norm_expr(F.col("embedding")).alias("qnrm"),
-    )
-    qcells = queries.crossJoin(F.broadcast(cents)).select(
-        "query_id",
-        "true_label",
-        "q",
-        "qnrm",
-        "cell",
-        (
-            dot_expr(F.col("q"), F.col("centroid"))
-            / (F.col("qnrm") * norm_expr(F.col("centroid")))
-        ).alias("cell_cos"),
-    )
-    w_cells = Window.partitionBy("query_id").orderBy(
-        F.col("cell_cos").desc(), F.col("cell").asc()
-    )
-    probed = (
-        qcells.withColumn("cr", F.row_number().over(w_cells))
-        .filter(F.col("cr") <= n_probe)
-        .select("query_id", "true_label", "q", "qnrm", "cell")
-    )
-    # index metadata, not data: probed cell ids (<= n_queries*n_probe
-    # values) come to the driver to become a partition-pruning predicate
-    cells = sorted({r.cell for r in probed.select("cell").distinct().collect()})
+    probed = _probe(
+        emb, cents, n_queries, n_probe, F.col("label").alias("true_label")
+    ).select("query_id", "true_label", "q", "qnrm", "cell")
     vectors = (
         spark.read.parquet(f"{index_dir}/vectors")
-        .filter(F.col("cell").isin(cells))
+        .filter(F.col("cell").isin(_probed_cells(probed)))
         .filter(F.col("vec_id") >= n_queries)
         .select(
             F.col("vec_id").alias("neighbor_id"),
@@ -845,32 +779,10 @@ def knn_label_vote_ivf(
         )
     )
     pairs = vectors.join(F.broadcast(probed), "cell")
-    w = Window.partitionBy("query_id").orderBy(
-        (
-            dot_expr(F.col("q"), F.col("c"))
-            / (F.col("qnrm") * F.col("cnrm"))
-        ).desc(),
-        F.col("neighbor_id").asc(),
+    top = top_k(
+        pairs, "query_id", [_cos_qc().desc(), F.col("neighbor_id").asc()], k
     )
-    top = pairs.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
-    votes = top.groupBy(
-        "query_id", "true_label", F.col("cell").alias("cand_label")
-    ).agg(F.count(F.lit(1)).cast("long").alias("n_votes"))
-    wv = Window.partitionBy("query_id").orderBy(
-        F.col("n_votes").desc(), F.col("cand_label").asc()
-    )
-    return (
-        votes.withColumn("vr", F.row_number().over(wv))
-        .filter(F.col("vr") == 1)
-        .select(
-            "query_id",
-            F.col("true_label").cast("int").alias("true_label"),
-            F.col("cand_label").cast("int").alias("predicted_label"),
-            "n_votes",
-        )
-    )
+    return _vote(top, F.col("cell").alias("cand_label"))
 
 
 def embedding_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -896,18 +808,13 @@ def embedding_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
             "label",
             F.slice("embedding", 1 + 32 * half, 32).alias("embedding"),
         )
-        cents = _ivf_centroids(sub)
-        # r12 opt: vector norm folded once per vector and the centroid
-        # norm once per (tiny, broadcast) centroid row — `cosine_expr`
-        # inline would re-fold both per (vector, cell) row; the division
-        # runs over the identical doubles in the identical order
+        cents = fixed_mean_array(sub, "label").withColumnRenamed("label", "cell")
+        # vector and (broadcast) centroid norms folded once per row
         scored = (
             sub.withColumn("vnrm", norm_expr(F.col("embedding")))
             .crossJoin(
                 F.broadcast(
-                    cents.withColumn(
-                        "cnrm", norm_expr(F.col("centroid"))
-                    )
+                    cents.withColumn("cnrm", norm_expr(F.col("centroid")))
                 )
             )
             .select(
@@ -919,14 +826,9 @@ def embedding_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).alias("cos"),
             )
         )
-        w = Window.partitionBy("vec_id").orderBy(
-            F.col("cos").desc(), F.col("cell").asc()
-        )
-        pick = (
-            scored.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .select("vec_id", F.col("cell").cast("long").alias(name))
-        )
+        pick = top_k(
+            scored, "vec_id", [F.col("cos").desc(), F.col("cell").asc()], 1, "rn"
+        ).select("vec_id", F.col("cell").cast("long").alias(name))
         codes = pick if codes is None else codes.join(pick, "vec_id")
     assert codes is not None
     return codes
@@ -947,8 +849,8 @@ def pq_search_adc(
 
     Exactness contract (what makes the whole approximate operator
     oracle-checkable): codebook entries are INTEGER floor-means of the
-    1e-9 fixed-point components (``(csum - pmod) div cnt`` — exact at any
-    count, unlike a double mean), the query is 1e-6 fixed-point, so every
+    1e-9 fixed-point components (``_int_codebook`` — exact at any count,
+    unlike a double mean), the query is 1e-6 fixed-point, so every
     score is a plain BIGINT sum of 64 bounded products (|q|<=1e6,
     |c|<=1e9, 64 * 1e15 << 2^63 — no pre-cast overflow at any corpus
     size) and ranking has a total (score DESC, vec_id ASC) tie-break.
@@ -966,38 +868,37 @@ def pq_search_adc(
     return _adc_rank(codes, dtabs, k)
 
 
+def _int_codebook(emb: DataFrame, half: int) -> DataFrame:
+    """The exact integer floor-mean codebook of PQ half ``half``, one row
+    per (label, dim): ``cfp = floor(sum(fixed_point(x)) / cnt)`` as
+    ``(csum - pmod(csum, cnt)) div cnt`` — the nonnegative-remainder floor,
+    since Spark DIV truncates where DuckDB // floors."""
+    return (
+        emb.select(
+            "label",
+            F.posexplode(F.slice("embedding", 1 + 32 * half, 32)).alias("dim", "x"),
+        )
+        .groupBy("label", "dim")
+        .agg(
+            F.sum(fixed_point(F.col("x"))).alias("csum"),
+            F.count(F.lit(1)).alias("cnt"),
+        )
+        .select(
+            "label", "dim", F.expr("(csum - pmod(csum, cnt)) div cnt").alias("cfp")
+        )
+    )
+
+
 def _adc_distance_tables(emb: DataFrame, n_queries: int) -> list[DataFrame]:
     """The per-query ADC lookup tables, one per PQ half: exact integer
     floor-mean codebooks x 1e-6 fixed-point query halves (see
     :func:`pq_search_adc` for the exactness contract)."""
     dtabs = []
     for half, name in ((0, "ip_a"), (1, "ip_b")):
-        sub = emb.select(
-            "label",
-            F.posexplode(F.slice("embedding", 1 + 32 * half, 32)).alias(
-                "dim", "x"
-            ),
-        )
-        # exact integer floor-mean codebook: floor(sum(floor(x*1e9))/cnt)
         cbook = (
-            sub.groupBy("label", "dim")
-            .agg(
-                F.sum(
-                    F.floor(F.col("x").cast("double") * 1e9).cast("long")
-                ).alias("csum"),
-                F.count(F.lit(1)).alias("cnt"),
-            )
-            .select(
-                "label",
-                "dim",
-                F.expr("(csum - pmod(csum, cnt)) div cnt").alias("cfp"),
-            )
+            _int_codebook(emb, half)
             .groupBy("label")
-            .agg(
-                F.array_sort(F.collect_list(F.struct("dim", "cfp"))).alias(
-                    "p"
-                )
-            )
+            .agg(F.array_sort(F.collect_list(F.struct("dim", "cfp"))).alias("p"))
             .select(
                 F.col("label").cast("long").alias("cell"),
                 F.transform("p", lambda s: s["cfp"]).alias("cvec"),
@@ -1024,17 +925,18 @@ def _adc_distance_tables(emb: DataFrame, n_queries: int) -> list[DataFrame]:
     return dtabs
 
 
-def _adc_rank(codes: DataFrame, dtabs: list[DataFrame], k: int) -> DataFrame:
-    """Score a (query_id?, vec_id, code_a, code_b) candidate frame via the
-    broadcast ADC tables and emit the per-query top-k. If ``codes``
-    already carries a ``query_id`` (probe-restricted candidates), the
-    table joins are per that query; otherwise every query ranks the whole
-    frame."""
-    per_query = "query_id" in codes.columns
+def _adc_scores(
+    codes: DataFrame, dtabs: list[DataFrame], *carry: str
+) -> DataFrame:
+    """Score a (query_id?, vec_id, code_a, code_b, *carry) candidate frame
+    via the broadcast ADC tables into (query_id, vec_id, *carry, score).
+    If ``codes`` already carries a ``query_id`` (probe-restricted
+    candidates), the table joins are per that query; otherwise every
+    query scores the whole frame."""
     cond_a = F.col("code_a") == F.col("cell_ip_a")
-    if per_query:
+    if "query_id" in codes.columns:
         cond_a = cond_a & (codes["query_id"] == dtabs[0]["query_id"])
-    scored = (
+    return (
         codes.join(F.broadcast(dtabs[0]), cond_a)
         .join(
             F.broadcast(dtabs[1]),
@@ -1044,18 +946,20 @@ def _adc_rank(codes: DataFrame, dtabs: list[DataFrame], k: int) -> DataFrame:
         .select(
             dtabs[0]["query_id"].alias("query_id"),
             "vec_id",
+            *carry,
             (F.col("ip_a") + F.col("ip_b")).alias("score"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("vec_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", F.col("rank").cast("long").alias("rank"),
-                "vec_id", "score")
-    )
+
+
+def _adc_rank(codes: DataFrame, dtabs: list[DataFrame], k: int) -> DataFrame:
+    """The per-query ADC top-k of ``_adc_scores``, ties on vec_id."""
+    return top_k(
+        _adc_scores(codes, dtabs),
+        "query_id",
+        [F.col("score").desc(), F.col("vec_id").asc()],
+        k,
+    ).select("query_id", F.col("rank").cast("long").alias("rank"), "vec_id", "score")
 
 
 def pq_codes_artifact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1090,6 +994,21 @@ def pq_codes_artifact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _probed_codes(
+    spark: SparkSession, sf_dir: str, probed: DataFrame, n_queries: int
+) -> DataFrame:
+    """Candidate PQ codes restricted to each query's OWN probed cells: a
+    partition-pruned scan of ``pq_codes_artifact`` (``_probed_cells``)
+    joined back to ``probed``, so a candidate competes only for the
+    queries that probed its cell. Query vectors are not candidates."""
+    return (
+        pq_codes_artifact(spark, sf_dir)
+        .filter(F.col("cell").isin(_probed_cells(probed)))
+        .filter(F.col("vec_id") >= n_queries)
+        .join(F.broadcast(probed), "cell")
+    )
+
+
 def ivfpq_search(
     spark: SparkSession,
     sf_dir: str,
@@ -1109,43 +1028,17 @@ def ivfpq_search(
 
     Every stage keeps the deterministic contracts of its parents (double
     cosine probe order with total tie-break — same as the attested IVF
-    family; BIGINT ADC scores), so results are exactly reproducible.
-    Registration note: the round-6 window was full when this landed —
-    correctness is carried by the bit-level replay test
-    (tests/test_round6_properties.py) until round 7 registers it with
-    its oracle (CLAUDE.md round-7 starters, item 1)."""
+    family; BIGINT ADC scores), so results are exactly reproducible. The
+    registered DuckDB oracle checks it, and a plain-python replay test
+    (``tests/test_dedup_similarity.py``) pins it bit-for-bit."""
     index_dir = _cached_ivf_index(spark, sf_dir)
     cents = spark.read.parquet(f"{index_dir}/centroids")
     emb = read_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q"),
+    probed = _probe(emb, cents, n_queries, n_probe).select(
+        "query_id", F.col("cell").cast("long").alias("cell")
     )
-    qcells = queries.crossJoin(F.broadcast(cents)).select(
-        "query_id",
-        "cell",
-        cosine_expr(F.col("q"), F.col("centroid")).alias("cell_cos"),
-    )
-    w_cells = Window.partitionBy("query_id").orderBy(
-        F.col("cell_cos").desc(), F.col("cell").asc()
-    )
-    probed = (
-        qcells.withColumn("cr", F.row_number().over(w_cells))
-        .filter(F.col("cr") <= n_probe)
-        .select("query_id", F.col("cell").cast("long").alias("cell"))
-    )
-    # index metadata, not data: the union of probed cell ids becomes a
-    # static partition-pruning predicate on the codes artifact (the same
-    # collect-as-predicate pattern as ivf_topk_prebuilt)
-    cells = sorted({r.cell for r in probed.select("cell").distinct().collect()})
-    candidates = (
-        pq_codes_artifact(spark, sf_dir)
-        .filter(F.col("cell").isin(cells))
-        .filter(F.col("vec_id") >= n_queries)
-        # per-query restriction: a candidate competes only for queries
-        # that probed ITS cell
-        .join(F.broadcast(probed), "cell")
-        .select("query_id", "vec_id", "code_a", "code_b")
+    candidates = _probed_codes(spark, sf_dir, probed, n_queries).select(
+        "query_id", "vec_id", "code_a", "code_b"
     )
     return _adc_rank(candidates, _adc_distance_tables(emb, n_queries), k)
 
@@ -1232,7 +1125,7 @@ def embedding_stats_per_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.posexplode("embedding").alias("pos", "v")
     ).select(
         (F.col("pos") + 1).cast("long").alias("dim"),
-        F.floor(F.col("v").cast("double") * 1e9).alias("v_fp"),
+        fixed_point(F.col("v")).alias("v_fp"),
     )
     agg = vals.groupBy("dim").agg(
         F.count(F.lit(1)).cast("long").alias("n"),
@@ -1257,6 +1150,8 @@ def embedding_stats_per_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+
+
 def ivf_recall_report(
     spark: SparkSession,
     sf_dir: str,
@@ -1271,29 +1166,9 @@ def ivf_recall_report(
     ``ivf_topk``) on (query, neighbor) and reports hits; the oracle
     composes both queries' oracle SQL verbatim, so the report is
     hash-exact end to end. ``recall_millis = hits * 1000 DIV k``."""
-    exact = brute_force_topk(spark, sf_dir, n_queries, k)
-    ann = ivf_topk(spark, sf_dir, n_queries, k, n_probe)
-    ek = exact.groupBy("query_id").agg(
-        F.count(F.lit(1)).cast("long").alias("k_exact")
-    )
-    hits = (
-        exact.join(ann, ["query_id", "neighbor_id"])
-        .groupBy("query_id")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_hits"))
-    )
-    return (
-        ek.join(hits, "query_id", "left_outer")
-        .select(
-            "query_id",
-            "k_exact",
-            F.coalesce(F.col("n_hits"), F.lit(0))
-            .cast("long")
-            .alias("n_hits"),
-        )
-        .withColumn(
-            "recall_millis",
-            F.expr("n_hits * 1000 DIV k_exact").cast("long"),
-        )
+    return _recall(
+        brute_force_topk(spark, sf_dir, n_queries, k),
+        ivf_topk(spark, sf_dir, n_queries, k, n_probe),
     )
 
 
@@ -1334,32 +1209,19 @@ def matryoshka_rank_agreement(
     queries = emb.filter(F.col("vec_id") < n_queries).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("q"),
-        sq_norm_decimal_expr(F.col("embedding")).cast("double").alias("qn"),
-        sq_norm_decimal_expr(h(F.col("embedding")))
-        .cast("double")
-        .alias("qn32"),
+        _dec_nsq(F.col("embedding")).alias("qn"),
+        _dec_nsq(h(F.col("embedding"))).alias("qn32"),
     )
-    # spread the one-split candidate scan before the pair fan-out (the
-    # SCALE.md one-task trap, explicit width — r12 opt)
-    cands = emb.filter(F.col("vec_id") >= n_queries).repartition(
-        spark.sparkContext.defaultParallelism, "vec_id"
-    ).select(
+    cands = _spread(emb.filter(F.col("vec_id") >= n_queries)).select(
         F.col("vec_id").alias("neighbor_id"),
         F.col("embedding").alias("c"),
-        sq_norm_decimal_expr(F.col("embedding")).cast("double").alias("cn"),
-        sq_norm_decimal_expr(h(F.col("embedding")))
-        .cast("double")
-        .alias("cn32"),
+        _dec_nsq(F.col("embedding")).alias("cn"),
+        _dec_nsq(h(F.col("embedding"))).alias("cn32"),
     )
-    # r12 opt: (a) each decimal dot is materialized ONCE per pair —
-    # interpreted lambda aggregates are not subexpression-eliminated,
-    # so the old `key_of` (dot * abs(dot) inline) folded each pair's
-    # arrays FOUR times; (b) the scored frame is localCheckpoint'd: it
-    # feeds five consumers (n_queries TakeOrdered tops + the rank
-    # aggregate), each of which would otherwise re-execute the whole
-    # cross-join + dot projection (no exchange underneath to reuse).
-    # Identical values — the same deterministic FP expressions computed
-    # once and reused (guide §4, §5 localCheckpoint-to-truncate).
+    # each decimal dot is materialized once per pair (module docstring),
+    # and the scored frame is localCheckpoint'd: it feeds n_queries
+    # TakeOrdered tops + the rank aggregate, each of which would otherwise
+    # re-execute the whole cross-join + dot projection
     d64 = dot_decimal_expr(F.col("q"), F.col("c")).cast("double")
     d32 = dot_decimal_expr(h(F.col("q")), h(F.col("c"))).cast("double")
     joined = (
@@ -1456,7 +1318,7 @@ def embedding_label_centroid_distances(
     ).select(
         "label",
         (F.col("pos") + 1).cast("long").alias("dim"),
-        F.floor(F.col("v").cast("double") * 1e9).alias("v_fp"),
+        fixed_point(F.col("v")).alias("v_fp"),
     )
     cent = vals.groupBy("label", "dim").agg(
         F.count(F.lit(1)).cast("long").alias("n"),
@@ -1511,7 +1373,8 @@ def pq_distortion_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     deployment tunes.
 
     Exactness: elements are floor(x*1e9) fixed point, codebook entries
-    the exact integer floor-means (the ``pq_search_adc`` contract), so
+    the exact integer floor-means (``_int_codebook``, the
+    ``pq_search_adc`` contract), so
     each squared diff is a BIGINT product summed in DECIMAL(38,0)
     (diff <= ~2e9, diff^2 <= 4e18, x64 crosses 2^63 — the isotonic
     lesson); per-label sums stay well under 10^38 and scale back to
@@ -1529,34 +1392,8 @@ def pq_distortion_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.posexplode(F.slice("embedding", 1 + 32 * half, 32)).alias(
                 "dim", "x"
             ),
-        ).select(
-            "vec_id",
-            "label",
-            "dim",
-            F.floor(F.col("x").cast("double") * 1e9).cast("long").alias(
-                "vfp"
-            ),
-        )
-        cbook = (
-            emb.select(
-                "label",
-                F.posexplode(
-                    F.slice("embedding", 1 + 32 * half, 32)
-                ).alias("dim", "x"),
-            )
-            .groupBy(F.col("label").alias("cell"), "dim")
-            .agg(
-                F.sum(
-                    F.floor(F.col("x").cast("double") * 1e9).cast("long")
-                ).alias("csum"),
-                F.count(F.lit(1)).alias("cnt"),
-            )
-            .select(
-                "cell",
-                "dim",
-                F.expr("(csum - pmod(csum, cnt)) div cnt").alias("cfp"),
-            )
-        )
+        ).select("vec_id", "label", "dim", fixed_point(F.col("x")).alias("vfp"))
+        cbook = _int_codebook(emb, half).withColumnRenamed("label", "cell")
         j = (
             vals.join(
                 codes.select("vec_id", F.col(code).alias("cell")), "vec_id"
@@ -1619,8 +1456,9 @@ def ivfpq_recall_frontier(
 
     The exact reference arm ranks the SAME candidate universe the PQ
     path searches (``vec_id >= n_queries`` — query vectors are not
-    candidates) by the EXACT decimal INNER PRODUCT — the metric the ADC
-    score approximates (``ipa + ipb`` reconstructs q·centroid(code)),
+    candidates) by the EXACT decimal INNER PRODUCT (``_exact_ip``) — the
+    metric the ADC score approximates (``ipa + ipb`` reconstructs
+    q·centroid(code)),
     so recall is apples-to-apples; the oracle composes the
     parameterized IVF-PQ SQL once per probe value. NOTE the curve need
     NOT be monotone in ``n_probe``: a wider probe can only ADD
@@ -1630,7 +1468,7 @@ def ivfpq_recall_frontier(
     (pinned by test: the candidate sets are nested, the hit counts are
     free to dip).
 
-    Scale shape (r12 opt — the three arms SHARE one pass): probe
+    Scale shape (the arms SHARE one pass): probe
     ranking runs once at ``max(probes)`` and each candidate carries its
     cell's probe rank ``cr``; a candidate belongs to every arm
     ``p >= cr`` (probe sets are nested by construction — the same
@@ -1661,84 +1499,24 @@ def ivfpq_recall_frontier(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("q"),
     )
-    # spread the one-split candidate scan before the pair fan-out (the
-    # SCALE.md one-task trap, explicit width — r12 opt)
-    cands = emb.filter(F.col("vec_id") >= n_queries).repartition(
-        spark.sparkContext.defaultParallelism, "vec_id"
-    ).select(
+    cands = _spread(emb.filter(F.col("vec_id") >= n_queries)).select(
         F.col("vec_id").alias("neighbor_id"),
         F.col("embedding").alias("c"),
     )
-    # exact max-inner-product: the DECIMAL dot is the ordering key
-    # directly (no floats anywhere in the reference arm)
-    scored = cands.crossJoin(F.broadcast(queries)).withColumn(
-        "ord_key", dot_decimal_expr(F.col("q"), F.col("c"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("ord_key").desc(), F.col("neighbor_id").asc()
-    )
-    exact = (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id")
-    )
-    ek = exact.groupBy("query_id").agg(
-        F.count(F.lit(1)).cast("long").alias("k_exact")
+    exact = _exact_ip(cands.crossJoin(F.broadcast(queries)), k).select(
+        "query_id", "neighbor_id"
     )
     # ---- shared IVF-PQ pass over all probe arms (see docstring) ----
     p_max = max(int(p) for p in probes)
     index_dir = _cached_ivf_index(spark, sf_dir)
     cents = spark.read.parquet(f"{index_dir}/centroids")
-    aq = emb.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q"),
-        norm_expr(F.col("embedding")).alias("qnrm"),
+    probed = _probe(emb, cents, n_queries, p_max).select(
+        "query_id", F.col("cell").cast("long").alias("cell"), "cr"
     )
-    qcells = aq.crossJoin(F.broadcast(cents)).select(
-        "query_id",
-        "cell",
-        (
-            dot_expr(F.col("q"), F.col("centroid"))
-            / (F.col("qnrm") * norm_expr(F.col("centroid")))
-        ).alias("cell_cos"),
+    candidates = _probed_codes(spark, sf_dir, probed, n_queries).select(
+        "query_id", "vec_id", "code_a", "code_b", "cr"
     )
-    w_cells = Window.partitionBy("query_id").orderBy(
-        F.col("cell_cos").desc(), F.col("cell").asc()
-    )
-    probed = (
-        qcells.withColumn("cr", F.row_number().over(w_cells))
-        .filter(F.col("cr") <= p_max)
-        .select(
-            "query_id", F.col("cell").cast("long").alias("cell"), "cr"
-        )
-    )
-    cells = sorted({r.cell for r in probed.select("cell").distinct().collect()})
-    candidates = (
-        pq_codes_artifact(spark, sf_dir)
-        .filter(F.col("cell").isin(cells))
-        .filter(F.col("vec_id") >= n_queries)
-        .join(F.broadcast(probed), "cell")
-        .select("query_id", "vec_id", "code_a", "code_b", "cr")
-    )
-    dtabs = _adc_distance_tables(emb, n_queries)
-    adc = (
-        candidates.join(
-            F.broadcast(dtabs[0]),
-            (F.col("code_a") == F.col("cell_ip_a"))
-            & (candidates["query_id"] == dtabs[0]["query_id"]),
-        )
-        .join(
-            F.broadcast(dtabs[1]),
-            (F.col("code_b") == F.col("cell_ip_b"))
-            & (dtabs[0]["query_id"] == dtabs[1]["query_id"]),
-        )
-        .select(
-            dtabs[0]["query_id"].alias("query_id"),
-            "vec_id",
-            "cr",
-            (F.col("ip_a") + F.col("ip_b")).alias("score"),
-        )
-    )
+    adc = _adc_scores(candidates, _adc_distance_tables(emb, n_queries), "cr")
     # a candidate whose best probed cell has rank cr belongs to every
     # arm p >= cr — the nested-candidate-set theorem the shape test pins
     arms_arr = F.array(*[F.lit(int(p)).cast("long") for p in probes])
@@ -1746,37 +1524,14 @@ def ivfpq_recall_frontier(
         "n_probe",
         F.explode(F.filter(arms_arr, lambda p: p >= F.col("cr"))),
     )
-    w_arm = Window.partitionBy("n_probe", "query_id").orderBy(
-        F.col("score").desc(), F.col("vec_id").asc()
-    )
-    ann = (
-        armed.withColumn("rank", F.row_number().over(w_arm))
-        .filter(F.col("rank") <= rerank_k)
-        .select("n_probe", "query_id", F.col("vec_id").alias("neighbor_id"))
-    )
-    hits = (
-        exact.join(ann, ["query_id", "neighbor_id"])
-        .groupBy("n_probe", "query_id")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_hits"))
-    )
-    grid = spark.createDataFrame(
-        [(int(p),) for p in probes], "n_probe long"
-    ).crossJoin(ek)
-    return (
-        grid.join(hits, ["n_probe", "query_id"], "left_outer")
-        .select(
-            "n_probe",
-            "query_id",
-            "k_exact",
-            F.coalesce(F.col("n_hits"), F.lit(0)).cast("long").alias(
-                "n_hits"
-            ),
-        )
-        .withColumn(
-            "recall_millis",
-            F.expr("n_hits * 1000 DIV k_exact").cast("long"),
-        )
-    )
+    ann = top_k(
+        armed,
+        ["n_probe", "query_id"],
+        [F.col("score").desc(), F.col("vec_id").asc()],
+        rerank_k,
+    ).select("n_probe", "query_id", F.col("vec_id").alias("neighbor_id"))
+    grid = spark.createDataFrame([(int(p),) for p in probes], "n_probe long")
+    return _recall(exact, ann, grid)
 
 
 def hard_negative_mining(
@@ -1788,15 +1543,9 @@ def hard_negative_mining(
     contrastive/embedding fine-tune wants in its batch (random negatives
     are too easy; these sit closest to the decision boundary).
 
-    Scoring is the exact DECIMAL inner product (``dot_decimal_expr`` —
-    one rounding per element product, exact accumulation) used as the
-    ORDER KEY ONLY, never emitted (the ``similarity_topk`` convention:
-    the two engines' double→DECIMAL(28,14) element roundings can differ
-    in the last place — HALF_UP vs round-half-even — so the raw score
-    is not hash-transportable, while the RANKING it induces is stable;
-    measured at sf0.001 registration: one 1-ulp score divergence, zero
-    rank divergences). Rank is total-ordered by
-    ``(score DESC, neighbor_id)``.
+    Scoring is the exact DECIMAL inner product of ``_exact_ip``, used as
+    the ORDER KEY ONLY, never emitted (the ``similarity_topk``
+    convention). Rank is total-ordered by ``(score DESC, neighbor_id)``.
 
     Scale shape: ``n_queries`` is bounded (the query batch), so the plan
     is a broadcast of the query rows against one linear candidate scan;
@@ -1818,24 +1567,15 @@ def hard_negative_mining(
         F.col("embedding").alias("c"),
         F.col("label").alias("neighbor_label"),
     )
-    scored = (
-        cands.crossJoin(F.broadcast(queries))
-        .filter(F.col("neighbor_label") != F.col("query_label"))
-        .withColumn("ord_key", dot_decimal_expr(F.col("q"), F.col("c")))
+    pairs = cands.crossJoin(F.broadcast(queries)).filter(
+        F.col("neighbor_label") != F.col("query_label")
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("ord_key").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "query_label",
-            F.col("rank").cast("long").alias("rank"),
-            "neighbor_id",
-            "neighbor_label",
-        )
+    return _exact_ip(pairs, k).select(
+        "query_id",
+        "query_label",
+        F.col("rank").cast("long").alias("rank"),
+        "neighbor_id",
+        "neighbor_label",
     )
 
 
@@ -1857,9 +1597,8 @@ def sq8_recall_report(
     nonneg floor division; DECIMAL(38,0)/HUGEINT score products — recon
     ≤ ~2³⁰ fixed-point × element 2³⁰ × 64 dims ≈ 2⁶⁶ needs the wide
     accumulator) and is an ORDER KEY ONLY (the ``hard_negative_mining``
-    rank-only convention); the exact arm is the attested
-    ``dot_decimal_expr`` ranking. Ties break by neighbor_id on both
-    engines.
+    rank-only convention); the exact arm is ``_exact_ip``. Ties break by
+    neighbor_id on both engines.
 
     Scale shape: per-dim stats are one map-side-combined groupBy to a
     64-row broadcast frame; quantization + scoring is ONE pass over the
@@ -1871,7 +1610,6 @@ def sq8_recall_report(
     k=10``) — the oracle hardcodes both (the ivfpq_recall_frontier
     convention)."""
     emb = read_table(spark, sf_dir, "embeddings")
-    e9 = "transform({c}, x -> CAST(floor(CAST(x AS DOUBLE) * 1e9) AS BIGINT))"
     queries = emb.filter(F.col("vec_id") < n_queries).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("q")
     )
@@ -1879,8 +1617,7 @@ def sq8_recall_report(
         F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("c")
     )
     cd = cands.select(
-        "neighbor_id",
-        F.posexplode(F.expr(e9.format(c="c"))).alias("dim", "v"),
+        "neighbor_id", F.posexplode(F.transform("c", fixed_point)).alias("dim", "v")
     )
     stats = cd.groupBy("dim").agg(
         F.min("v").alias("lo"), F.max("v").alias("hi")
@@ -1895,8 +1632,7 @@ def sq8_recall_report(
         ).alias("r"),
     )
     qd = queries.select(
-        "query_id",
-        F.posexplode(F.expr(e9.format(c="q"))).alias("dim", "qv"),
+        "query_id", F.posexplode(F.transform("q", fixed_point)).alias("dim", "qv")
     )
     approx = (
         recon.join(F.broadcast(qd), "dim")
@@ -1905,44 +1641,10 @@ def sq8_recall_report(
             F.sum(F.expr("CAST(r AS DECIMAL(38,0)) * qv")).alias("s")
         )
     )
-    wa = Window.partitionBy("query_id").orderBy(
-        F.col("s").desc(), F.col("neighbor_id").asc()
+    ann = top_k(
+        approx, "query_id", [F.col("s").desc(), F.col("neighbor_id").asc()], k, "rn"
+    ).select("query_id", "neighbor_id")
+    exact = _exact_ip(cands.crossJoin(F.broadcast(queries)), k).select(
+        "query_id", "neighbor_id"
     )
-    ann = (
-        approx.withColumn("rn", F.row_number().over(wa))
-        .filter(F.col("rn") <= k)
-        .select("query_id", "neighbor_id")
-    )
-    scored = cands.crossJoin(F.broadcast(queries)).withColumn(
-        "ord_key", dot_decimal_expr(F.col("q"), F.col("c"))
-    )
-    we = Window.partitionBy("query_id").orderBy(
-        F.col("ord_key").desc(), F.col("neighbor_id").asc()
-    )
-    exact = (
-        scored.withColumn("rank", F.row_number().over(we))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id")
-    )
-    ek = exact.groupBy("query_id").agg(
-        F.count(F.lit(1)).cast("long").alias("k_exact")
-    )
-    hits = (
-        exact.join(ann, ["query_id", "neighbor_id"])
-        .groupBy("query_id")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_hits"))
-    )
-    return (
-        ek.join(hits, "query_id", "left_outer")
-        .select(
-            "query_id",
-            "k_exact",
-            F.coalesce(F.col("n_hits"), F.lit(0)).cast("long").alias(
-                "n_hits"
-            ),
-        )
-        .withColumn(
-            "recall_millis",
-            F.expr("n_hits * 1000 DIV k_exact").cast("long"),
-        )
-    )
+    return _recall(exact, ann)

@@ -409,46 +409,6 @@ def test_perplexity_buckets_partition_each_source(spark, sf_dir):
         )
 
 
-def test_ivfpq_recall_frontier_shape_and_candidate_nesting(spark, sf_dir):
-    """Shape: one row per (probe, query) with hits bounded by k_exact and
-    a nonzero curve somewhere (non-vacuous fixture). NOTE per-query hit
-    counts are NOT asserted monotone in n_probe — a wider probe only adds
-    candidates, but an added candidate with a higher APPROXIMATE score
-    can push a true neighbor out of the fixed-size ADC window (the first
-    draft asserted monotonicity and real data refuted it). What IS a
-    theorem is candidate-set nesting, asserted directly on the search
-    path: every ADC window member at probe p is a member at p+1 OR was
-    displaced by something with a better (score, vec_id) key there."""
-    from collections import defaultdict
-
-    from data_engineer_interview_task_spark.operators import similarity
-
-    rows = similarity.ivfpq_recall_frontier(spark, sf_dir).collect()
-    assert len(rows) == 3 * len({r.query_id for r in rows})
-    per_q = defaultdict(dict)
-    for r in rows:
-        per_q[r.query_id][r.n_probe] = r.n_hits
-        assert 0 <= r.n_hits <= r.k_exact
-    assert any(h > 0 for c in per_q.values() for h in c.values())
-    for curve in per_q.values():
-        assert sorted(curve) == [1, 2, 3]
-    # nesting: probe-1 ADC results keyed (score, vec_id) must reappear
-    # at probe 2 unless outscored by the 50th key there
-    a1 = {
-        (r.query_id, r.vec_id): r.score
-        for r in similarity.ivfpq_search(spark, sf_dir, 4, 50, 1).collect()
-    }
-    a2_rows = similarity.ivfpq_search(spark, sf_dir, 4, 50, 2).collect()
-    a2 = {(r.query_id, r.vec_id) for r in a2_rows}
-    worst2 = {}
-    for r in a2_rows:
-        key = (r.score, -r.vec_id)
-        if r.query_id not in worst2 or key < worst2[r.query_id]:
-            worst2[r.query_id] = key
-    for (q, v), s in a1.items():
-        assert (q, v) in a2 or (s, -v) < worst2[q], (q, v, s)
-
-
 def test_bitmap_ivm_merge_is_nondegenerate_and_exact(spark, sf_dir):
     """Both cutoff sides must be non-empty, at least one week must
     straddle the cutoff (so the OR-merge genuinely dedups a user seen

@@ -154,18 +154,6 @@ def test_dhash_pairs_plan_is_banded_not_all_pairs(spark, sf_dir):
     assert "windowspecdefinition" not in plan
 
 
-def test_hard_negative_mining_plan_group_limit(spark, sf_dir):
-    """The rank<=k filter over the per-query window must compile to
-    WindowGroupLimit (map-side per-group top-k before the shuffle — the
-    priority_sample_per_source shape), and the query side must broadcast."""
-    from data_engineer_interview_task_spark.operators import similarity
-    from data_engineer_interview_task_spark.plans import explain_str
-
-    plan = explain_str(similarity.hard_negative_mining(spark, sf_dir))
-    assert "WindowGroupLimit" in plan
-    assert "CartesianProduct" not in plan
-
-
 def test_lateral_topk_decorrelates(spark, sf_dir):
     """Catalyst must decorrelate the LATERAL ORDER BY/LIMIT subquery into
     a per-group rank filter (window group-limit / rank over join) — never

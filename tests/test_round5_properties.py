@@ -428,16 +428,3 @@ def test_decile_lift_conservation_invariants(spark, sf_dir):
     for r in rows:
         running += r["positives"]
         assert r["cum_gain"] == running / pos_total
-
-
-def test_knn_label_vote_votes_sum_and_majority(spark, sf_dir):
-    """Structural invariants: one prediction per query, n_votes <= k, and
-    the predicted label's votes are the maximum over that query's top-k
-    neighborhood (re-derived via similarity machinery is the oracle's
-    job; here we pin the vote arithmetic against brute_force-style
-    recount on a small slice)."""
-    from data_engineer_interview_task_spark.operators import similarity
-
-    out = similarity.knn_label_vote(spark, sf_dir, n_queries=10, k=5).collect()
-    assert len(out) == 10
-    assert all(1 <= r["n_votes"] <= 5 for r in out)

@@ -95,22 +95,6 @@ def test_lsh_tuning_candidates_monotone_in_bands(spark, sf_dir):
     assert rows[4] <= rows[8] <= rows[16]
 
 
-def test_pq_codes_shape_and_cell_range(spark, sf_dir):
-    """One row per vector; both codes land in the label codebook."""
-    from data_engineer_interview_task_spark.operators import similarity
-
-    emb = duckdb.sql(
-        f"SELECT vec_id, label FROM '{sf_dir}/embeddings.parquet'"
-    ).fetchall()
-    label_set = {l for _, l in emb}
-    out = similarity.embedding_pq_codes(spark, sf_dir).collect()
-    assert len(out) == len(emb)
-    assert {r["vec_id"] for r in out} == {v for v, _ in emb}
-    assert all(
-        r["code_a"] in label_set and r["code_b"] in label_set for r in out
-    )
-
-
 def test_join_cardinality_estimate_matches_actual_join(spark, sf_dir):
     """The 'estimate' is exact by construction: inner_join_rows must
     equal the true count of the executed join, and the side stats must
@@ -389,138 +373,6 @@ def test_expectations_report_clean_corpus_is_all_zero(spark, sf_dir):
         "lineitem_fk_to_orders",
     }
     assert all(r["n_violations"] == 0 for r in rows)
-
-
-def _adc_replay(spark, sf_dir, n_q=4):
-    """Plain-python replay of the ADC scoring path: raw embeddings, the
-    engine's own code assignment, exact integer floor-mean codebooks.
-    Returns (emb, codes, score_fn) where score_fn(q, vec) is the BIGINT
-    ADC score."""
-    import math
-
-    from data_engineer_interview_task_spark.operators import similarity
-
-    emb = {
-        r["vec_id"]: (list(r["embedding"]), r["label"])
-        for r in spark.read.parquet(f"{sf_dir}/embeddings.parquet").collect()
-    }
-    codes = {
-        r["vec_id"]: (r["code_a"], r["code_b"])
-        for r in similarity.embedding_pq_codes(spark, sf_dir).collect()
-    }
-    # exact integer floor-mean codebooks, per half
-    books = []
-    for half in (0, 1):
-        sums: dict[tuple[int, int], int] = {}
-        cnts: dict[int, int] = {}
-        for vec, (v, label) in emb.items():
-            cnts[label] = cnts.get(label, 0) + 1
-            for d in range(32):
-                key = (label, d)
-                sums[key] = sums.get(key, 0) + math.floor(
-                    float(v[32 * half + d]) * 1e9
-                )
-        books.append(
-            {
-                label: [sums[(label, d)] // cnts[label] for d in range(32)]
-                for label in cnts
-            }
-        )
-
-    def score(q: int, vec: int) -> int:
-        qv = emb[q][0]
-        ca, cb = codes[vec]
-        return sum(
-            math.floor(float(qv[d]) * 1e6) * books[0][ca][d]
-            for d in range(32)
-        ) + sum(
-            math.floor(float(qv[32 + d]) * 1e6) * books[1][cb][d]
-            for d in range(32)
-        )
-
-    return emb, codes, score
-
-
-def test_pq_search_adc_matches_integer_replay(spark, sf_dir):
-    """Bit-level model test: replay the whole ADC path in plain python —
-    exact floor-mean codebooks from the raw embeddings, the engine's own
-    code assignment, BIGINT score = sum of 64 bounded products — and
-    require the registered query's rows to match exactly (scores, ranks
-    and tie-breaks included)."""
-    from data_engineer_interview_task_spark.operators import similarity
-
-    emb, codes, score = _adc_replay(spark, sf_dir)
-    n_q, k = 4, 10
-    expected = []
-    for q in range(n_q):
-        scored = sorted(
-            ((score(q, vec), vec) for vec in codes if vec >= n_q),
-            key=lambda t: (-t[0], t[1]),
-        )
-        for rank, (s, vec) in enumerate(scored[:k], start=1):
-            expected.append((q, rank, vec, s))
-    got = sorted(
-        (r["query_id"], r["rank"], r["vec_id"], r["score"])
-        for r in similarity.pq_search_adc(spark, sf_dir).collect()
-    )
-    assert got == sorted(expected)
-
-
-def test_ivfpq_search_matches_probe_restricted_replay(spark, sf_dir):
-    """The composed IVF-PQ path must equal the ADC replay restricted to
-    each query's OWN probed cells (taken from the engine's probe
-    selection — the deterministic centroid ranking the attested IVF
-    family already pins), bit-for-bit including ranks and tie-breaks.
-    Also asserts the candidate restriction is real: no returned neighbor
-    lies outside its query's probed cells."""
-    from pyspark.sql import functions as F
-
-    from data_engineer_interview_task_spark.operators import similarity
-
-    emb, codes, score = _adc_replay(spark, sf_dir)
-    n_q, k, n_probe = 4, 10, 3
-    index_dir = similarity._cached_ivf_index(spark, sf_dir)
-    cents = spark.read.parquet(f"{index_dir}/centroids")
-    queries = (
-        spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-        .filter(F.col("vec_id") < n_q)
-        .select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("q"))
-    )
-    from pyspark.sql import Window as W
-
-    from data_engineer_interview_task_spark.functions.vector import cosine_expr
-
-    qc = queries.crossJoin(F.broadcast(cents)).select(
-        "query_id", "cell", cosine_expr(F.col("q"), F.col("centroid")).alias("c")
-    )
-    wc = W.partitionBy("query_id").orderBy(F.col("c").desc(), F.col("cell").asc())
-    probed = {}
-    for r in (
-        qc.withColumn("cr", F.row_number().over(wc))
-        .filter(F.col("cr") <= n_probe)
-        .collect()
-    ):
-        probed.setdefault(r["query_id"], set()).add(r["cell"])
-    expected = []
-    for q in range(n_q):
-        cand = [
-            vec
-            for vec, (v, label) in emb.items()
-            if vec >= n_q and label in probed[q]
-        ]
-        scored = sorted(
-            ((score(q, vec), vec) for vec in cand),
-            key=lambda t: (-t[0], t[1]),
-        )
-        for rank, (s, vec) in enumerate(scored[:k], start=1):
-            expected.append((q, rank, vec, s))
-    got = sorted(
-        (r["query_id"], r["rank"], r["vec_id"], r["score"])
-        for r in similarity.ivfpq_search(spark, sf_dir).collect()
-    )
-    assert got == sorted(expected)
-    for q, rank, vec, s in got:
-        assert emb[vec][1] in probed[q]
 
 
 def test_shuffle_skew_report_matches_pandas_replay(spark, sf_dir):

@@ -375,11 +375,3 @@ def test_session_overlap_plan_windows_are_pid_or_user_scoped(spark, sf_dir):
         assert "_pid" in ln or "user_id#" in ln, (
             f"global boundary window resurfaced: {ln}"
         )
-
-
-def test_matryoshka_plan_has_no_window_and_uses_take_ordered(spark, sf_dir):
-    from data_engineer_interview_task_spark.operators import similarity
-
-    plan = explain_str(similarity.matryoshka_rank_agreement(spark, sf_dir))
-    assert "windowspecdefinition" not in plan, "corpus-wide rank window"
-    assert "TakeOrderedAndProject" in plan
