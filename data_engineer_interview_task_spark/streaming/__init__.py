@@ -37,9 +37,7 @@ from .joins import (
 from .stateful import (
     run_running_user_stats_once,
     run_user_ewma_once,
-    running_user_stats_stream,
     running_user_stats_stream_gs,
-    transform_with_state_available,
 )
 from .dedup import (
     dedup_then_rollup_stream,
@@ -68,9 +66,7 @@ __all__ = [
     "run_first_events_once",
     "run_running_user_stats_once",
     "run_user_ewma_once",
-    "running_user_stats_stream",
     "running_user_stats_stream_gs",
-    "transform_with_state_available",
     "sessionize_stream",
     "sessionize_stream_flushing",
     "run_sessionize_once",

@@ -5,7 +5,9 @@
 State per user: the open session (start, last event ts, count, value sum).
 Each micro-batch appends events, closes sessions whose gap exceeded the
 threshold (emitting them), and keeps the still-open session in state.
-State size is O(users), independent of stream length.
+State size is O(users), independent of stream length. The gap walk is
+one pure step, :func:`_gap_step`, run on the package's one fold kernel
+(``stateful.group_fold``); the flushing variant wraps that same fold.
 
 ORDERING ASSUMPTION (the price of NoTimeout + no watermark): events are
 sorted (ts, event_id) only WITHIN each micro-batch, so per-user arrival
@@ -24,7 +26,6 @@ session must eventually emit: it adds an event-time timeout at
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming.state import GroupStateTimeout
 from pyspark.sql.types import (
@@ -37,8 +38,9 @@ from pyspark.sql.types import (
 )
 
 from ..plans import prep_session, prep_worker
-from .weekly import EVENTS_SCHEMA
+from .stateful import emitter, group_fold, stateful_stream
 from .util import run_to_memory, staged_events
+from .weekly import EVENTS_SCHEMA
 
 SESSION_SCHEMA = StructType(
     [
@@ -60,27 +62,21 @@ STATE_SCHEMA = StructType(
     ]
 )
 
+#: no open session yet
+_NO_SESSION = (None, None, 0, 0.0)
 
-def _sessionize_fn(gap_minutes: int):
-    """Build the per-group stateful function for a ``gap_minutes`` gap."""
+
+def _gap_step(gap_minutes: int):
+    """The sessionizer fold for a ``gap_minutes`` gap: walk the batch's
+    (ts, event_id)-ordered events, close the open session whenever the
+    next event is more than the gap after its last one, and keep the
+    still-open session as the state. Emits the closed sessions."""
     gap_us = gap_minutes * 60 * 1_000_000
 
-    def fn(key, pdfs, state):
-        prep_worker()
-        (user_id,) = key
-        events = pd.concat(list(pdfs), ignore_index=True)
-        events = events.sort_values(["ts", "event_id"])
-        ts_us = (events["ts"].astype("int64") // 1000).tolist()
-        vals = events["value"].tolist()
-
-        if state.exists:
-            start_us, last_us, n, vsum = state.get
-        else:
-            start_us = last_us = None
-            n, vsum = 0, 0.0
-
+    def step(acc, ts, values):
+        start_us, last_us, n, vsum = acc
         closed = []
-        for t, v in zip(ts_us, vals):
+        for t, v in zip((ts.astype("int64") // 1000).tolist(), values.tolist()):
             if last_us is not None and t - last_us > gap_us:
                 closed.append((start_us, last_us, n, vsum))
                 start_us, n, vsum = t, 0, 0.0
@@ -88,21 +84,23 @@ def _sessionize_fn(gap_minutes: int):
                 start_us = t
             last_us = t
             n += 1
-            vsum += float(v)
+            vsum += v
+        return (start_us, last_us, n, vsum), closed
 
-        state.update((start_us, last_us, n, vsum))
-        if closed:
-            yield pd.DataFrame(
-                {
-                    "user_id": [user_id] * len(closed),
-                    "session_start": pd.to_datetime([c[0] for c in closed], unit="us"),
-                    "session_end": pd.to_datetime([c[1] for c in closed], unit="us"),
-                    "n_events": [c[2] for c in closed],
-                    "total_value": [c[3] for c in closed],
-                }
-            )
+    return step
 
-    return fn
+
+def _sessionize_fold(gap_minutes: int):
+    """The NoTimeout sessionizer on the :func:`stateful.group_fold`
+    kernel: ``ts`` arrives as a timestamp and the step works in integer
+    microseconds."""
+    return group_fold(
+        _gap_step(gap_minutes),
+        _NO_SESSION,
+        SESSION_SCHEMA,
+        ("ts", "value"),
+        ordered=True,
+    )
 
 
 def sessionize_stream(
@@ -112,79 +110,33 @@ def sessionize_stream(
     session when a later event proves it closed (gap exceeded). The open
     session per user stays in the state store across micro-batches."""
     stream = spark.readStream.schema(EVENTS_SCHEMA).parquet(source_dir)
-    return (
-        stream.groupBy("user_id")
-        .applyInPandasWithState(
-            _sessionize_fn(gap_minutes),
-            outputStructType=SESSION_SCHEMA,
-            stateStructType=STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return stateful_stream(
+        stream, _sessionize_fold(gap_minutes), SESSION_SCHEMA, STATE_SCHEMA
     )
 
 
-def _sessionize_flush_fn(gap_minutes: int):
-    """Per-group stateful function for the WATERMARK-FLUSHING variant:
-    same gap logic, plus an event-time timeout at (last event + gap) so
-    the open session is emitted once the watermark proves no in-gap event
-    can still arrive."""
+def _flushing_fold(gap_minutes: int):
+    """The WATERMARK-FLUSHING sessionizer: the same fold, plus an
+    event-time timeout at (last event + gap) so the open session is
+    emitted once the watermark proves no in-gap event can still arrive.
+    The timeout is set after the fold's output is exhausted, which is
+    before PySpark reads the state back."""
     gap_us = gap_minutes * 60 * 1_000_000
+    fold = _sessionize_fold(gap_minutes)
+    emit = emitter(SESSION_SCHEMA)
 
     def fn(key, pdfs, state):
         prep_worker()
-        (user_id,) = key
-
-        def frame(sessions):
-            return pd.DataFrame(
-                {
-                    "user_id": [user_id] * len(sessions),
-                    "session_start": pd.to_datetime(
-                        [s[0] for s in sessions], unit="us"
-                    ),
-                    "session_end": pd.to_datetime(
-                        [s[1] for s in sessions], unit="us"
-                    ),
-                    "n_events": [s[2] for s in sessions],
-                    "total_value": [s[3] for s in sessions],
-                }
-            )
-
         if state.hasTimedOut:
             # watermark passed last_event + gap: the open session is closed
             # by time itself — flush and clear
-            start_us, last_us, n, vsum = state.get
+            session = state.get
             state.remove()
-            yield frame([(start_us, last_us, n, vsum)])
+            yield emit(key, [session])
             return
-
-        events = pd.concat(list(pdfs), ignore_index=True)
-        events = events.sort_values(["ts", "event_id"])
-        ts_us = (events["ts"].astype("int64") // 1000).tolist()
-        vals = events["value"].tolist()
-
-        if state.exists:
-            start_us, last_us, n, vsum = state.get
-        else:
-            start_us = last_us = None
-            n, vsum = 0, 0.0
-
-        closed = []
-        for t, v in zip(ts_us, vals):
-            if last_us is not None and t - last_us > gap_us:
-                closed.append((start_us, last_us, n, vsum))
-                start_us, n, vsum = t, 0, 0.0
-            if start_us is None:
-                start_us = t
-            last_us = t
-            n += 1
-            vsum += float(v)
-
-        state.update((start_us, last_us, n, vsum))
+        yield from fold(key, pdfs, state)
         # fire when the event-time watermark passes the gap horizon (ms)
-        state.setTimeoutTimestamp((last_us + gap_us) // 1000)
-        if closed:
-            yield frame(closed)
+        state.setTimeoutTimestamp((state.get[1] + gap_us) // 1000)
 
     return fn
 
@@ -199,18 +151,16 @@ def sessionize_stream_flushing(
     unbounded stream every session is eventually emitted, not only those
     closed by a later event. ``watermark_delay`` is the out-of-orderness
     budget: events later than the watermark are the operator's blind spot
-    (the tradeoff the NoTimeout variant's docstring describes)."""
+    (the tradeoff the NoTimeout variant's docstring describes). ``ts``
+    stays a timestamp column into the grouped input: an event-time
+    timeout needs the watermarked column itself."""
     stream = spark.readStream.schema(EVENTS_SCHEMA).parquet(source_dir)
-    return (
-        stream.withWatermark("ts", watermark_delay)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _sessionize_flush_fn(gap_minutes),
-            outputStructType=SESSION_SCHEMA,
-            stateStructType=STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
+    return stateful_stream(
+        stream.withWatermark("ts", watermark_delay),
+        _flushing_fold(gap_minutes),
+        SESSION_SCHEMA,
+        STATE_SCHEMA,
+        GroupStateTimeout.EventTimeTimeout,
     )
 
 

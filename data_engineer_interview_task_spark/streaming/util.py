@@ -220,7 +220,25 @@ def _build_flushed(spark, sf_dir: str, path: str) -> None:
     bump_new_files_mtime(path, before)
 
 
-_EVENT_FLAVORS = {"plain": _build_plain, "flushed": _build_flushed}
+def _build_split(spark, sf_dir: str, path: str) -> None:
+    from ..sources import read_table
+
+    events = read_table(spark, sf_dir, "events")
+    cols = ("user_id", "event_id", "ts", "value")
+    cutoff = F.lit("2024-01-15").cast("timestamp")
+    events.filter(F.col("ts") < cutoff).select(*cols).coalesce(1).write.parquet(path)
+    before = snapshot_parquet_files(path)
+    events.filter(F.col("ts") >= cutoff).select(*cols).coalesce(1).write.mode(
+        "append"
+    ).parquet(path)
+    bump_new_files_mtime(path, before)
+
+
+_EVENT_FLAVORS = {
+    "plain": _build_plain,
+    "flushed": _build_flushed,
+    "split": _build_split,
+}
 
 
 def staged_events(spark: SparkSession, sf_dir: str, flavor: str = "plain") -> str:
@@ -238,6 +256,11 @@ def staged_events(spark: SparkSession, sf_dir: str, flavor: str = "plain") -> st
       ``joins._run_outer_join_once``); ``maxFilesPerTrigger=1`` then
       yields the bulk batch, the watermark-advancing flush batch, and
       the trailing no-data batch.
+    - ``split``: ``(user_id, event_id, ts, value)`` as TWO files split at
+      2024-01-15, the later one strictly newer — the input of the
+      stateful folds: ``maxFilesPerTrigger=1`` yields two micro-batches
+      in time order, so cross-batch state is actually exercised, and the
+      order-sensitive EWMA recurrence sees its events oldest-first.
     """
     if flavor not in _EVENT_FLAVORS:
         raise ValueError(f"unknown staging flavor: {flavor}")

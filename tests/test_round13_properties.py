@@ -1,20 +1,17 @@
 """Round-13 optimization-round property tests.
 
 Every test here pins the CONTRACT of an r13 optimization, not its speed:
-artifact-backed builds must be row-identical to the direct builds, the
-staging memos must be reuse-stable and staleness-keyed, the state
-partition derivation must honor the env dial and the volume ladder, and
-prep_session must re-assert the determinism trio after an external
-driver mutates it (ADVICE r12).
+artifact-backed builds must be row-identical to the direct builds, a
+repeated harness call must be idempotent, and prep_session must
+re-assert the determinism trio after an external driver mutates it
+(ADVICE r12). The staging-memo and state-partition tests live in
+``tests/test_streaming_runner.py``.
 """
 
 from __future__ import annotations
 
 import os
 import time
-
-import pytest
-from pyspark.sql import functions as F
 
 from tests.conftest import SF_DIR
 
@@ -104,73 +101,6 @@ def test_bpe_trained_artifact_matches_direct_loop(spark):
     assert bl_direct == bl_art and len(bl_art) > 0
 
 
-# ------------------------------------------------- streaming staging memo
-
-
-def test_staged_events_memoizes_and_flush_ordering(spark):
-    from data_engineer_interview_task_spark.streaming.util import (
-        staged_events,
-    )
-
-    p1 = staged_events(spark, SF_DIR, "plain")
-    p2 = staged_events(spark, SF_DIR, "plain")
-    assert p1 == p2 and os.path.isdir(p1)
-
-    fl = staged_events(spark, SF_DIR, "flushed")
-    assert fl != p1
-    parts = sorted(
-        (os.path.getmtime(os.path.join(fl, f)), f)
-        for f in os.listdir(fl)
-        if f.endswith(".parquet")
-    )
-    # exactly bulk + flush, and the flush file is strictly newer
-    assert len(parts) == 2 and parts[0][0] < parts[1][0]
-    flush_rows = (
-        spark.read.parquet(fl).filter(F.col("user_id") < 0).collect()
-    )
-    assert sorted(r.event_type for r in flush_rows) == ["click", "purchase"]
-
-
-def test_staged_custom_keys_on_input_fingerprint(spark, tmp_path):
-    """A mutated input table re-stages instead of serving stale files."""
-    import shutil
-
-    from data_engineer_interview_task_spark.streaming.util import (
-        staged_custom,
-    )
-
-    src_dir = str(tmp_path / "sfx")
-    os.makedirs(src_dir)
-    src = f"{SF_DIR}/events.parquet"
-    dst = f"{src_dir}/events.parquet"
-    if os.path.isdir(src):
-        shutil.copytree(src, dst)
-    else:
-        shutil.copy(src, dst)
-    calls = []
-
-    def build(path):
-        calls.append(path)
-        os.makedirs(path, exist_ok=True)
-
-    a = staged_custom(spark, src_dir, "t13", build)
-    b = staged_custom(spark, src_dir, "t13", build)
-    assert a == b and len(calls) == 1
-    # mutate the input: the memo must rebuild under a fresh key
-    stamp = time.time() + 5
-    if os.path.isdir(dst):
-        victim = next(
-            os.path.join(root, f)
-            for root, _d, fs in os.walk(dst)
-            for f in fs
-        )
-    else:
-        victim = dst
-    os.utime(victim, (stamp, stamp))
-    c = staged_custom(spark, src_dir, "t13", build)
-    assert c != a and len(calls) == 2
-
-
 def test_dhash_index_harness_repeat_is_idempotent(spark):
     """Two harness calls in one process must return the SAME index rows
     (the old per-call append grew the feed and duplicated every doc)."""
@@ -184,41 +114,6 @@ def test_dhash_index_harness_repeat_is_idempotent(spark):
     n2 = r2.count()
     assert n1 == n2 > 0
     assert r1.select("doc_id").distinct().count() == n1
-
-
-# ------------------------------------------------------ state partitions
-
-
-def test_state_partitions_env_override(spark, monkeypatch):
-    from data_engineer_interview_task_spark.streaming import util
-
-    monkeypatch.setenv(util.STATE_PARTITIONS_ENV, "17")
-    assert util.state_partitions(spark, None) == "17"
-
-
-def test_state_partitions_volume_ladder(spark, monkeypatch, tmp_path):
-    from data_engineer_interview_task_spark.streaming import util
-
-    monkeypatch.delenv(util.STATE_PARTITIONS_ENV, raising=False)
-    # no src / tiny src: the floor
-    assert util.state_partitions(spark, None) == str(
-        util.STATE_PARTITIONS_FLOOR
-    )
-    small = tmp_path / "small"
-    small.mkdir()
-    (small / "a.parquet").write_bytes(b"x" * 1024)
-    assert util.state_partitions(spark, str(small)) == str(
-        util.STATE_PARTITIONS_FLOOR
-    )
-    # large src: one partition per STATE_TARGET_BYTES, capped at cores
-    monkeypatch.setattr(util, "_dir_bytes", lambda p: 6 * util.STATE_TARGET_BYTES)
-    derived = int(util.state_partitions(spark, str(small)))
-    cores = spark.sparkContext.defaultParallelism
-    assert derived == min(6, cores) and derived >= util.STATE_PARTITIONS_FLOOR
-    monkeypatch.setattr(
-        util, "_dir_bytes", lambda p: 10_000 * util.STATE_TARGET_BYTES
-    )
-    assert int(util.state_partitions(spark, str(small))) == cores
 
 
 # -------------------------------------------------- prep_session contract

@@ -4,7 +4,9 @@ conf or scratch directory; the partition window reaches the checkpoint;
 every harness removes its scratch directory before it returns; the tick
 feed delivers every page under availableNow; a torn staged build is
 never published; concurrent callers of the store's entry points neither
-collide nor serialize on unrelated keys."""
+collide nor serialize on unrelated keys; each staged flavor is built once
+and orders its files, and re-stages when its input changes; the
+state-partition count follows the env dial and the volume ladder."""
 
 from __future__ import annotations
 
@@ -14,6 +16,7 @@ import os
 import sys
 import tempfile
 import threading
+import time
 from concurrent.futures import ThreadPoolExecutor
 
 import pytest
@@ -29,6 +32,7 @@ from data_engineer_interview_task_spark.streaming import util
 from data_engineer_interview_task_spark.streaming.util import (
     run_to_memory,
     staged_custom,
+    staged_events,
 )
 from tests.conftest import SF_DIR
 
@@ -305,3 +309,105 @@ def test_dhash_stream_concurrent_callers_agree(spark):
     n_docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").count()
     assert a == b and len(a) == n_docs
     assert len({r[0] for r in a}) == n_docs
+
+
+def _parquet_parts(path: str) -> list[tuple[float, str]]:
+    """``(mtime, name)`` of each parquet part file in ``path``, oldest first."""
+    return sorted(
+        (os.path.getmtime(os.path.join(path, f)), f)
+        for f in os.listdir(path)
+        if f.endswith(".parquet")
+    )
+
+
+def test_staged_events_memoizes_and_flush_ordering(spark):
+    p1 = staged_events(spark, SF_DIR, "plain")
+    p2 = staged_events(spark, SF_DIR, "plain")
+    assert p1 == p2 and os.path.isdir(p1)
+
+    fl = staged_events(spark, SF_DIR, "flushed")
+    assert fl != p1
+    parts = _parquet_parts(fl)
+    # exactly bulk + flush, and the flush file is strictly newer
+    assert len(parts) == 2 and parts[0][0] < parts[1][0]
+    flush_rows = (
+        spark.read.parquet(fl).filter(F.col("user_id") < 0).collect()
+    )
+    assert sorted(r.event_type for r in flush_rows) == ["click", "purchase"]
+
+    # split: the fold columns as an early and a strictly newer late file
+    sp = staged_events(spark, SF_DIR, "split")
+    assert sp == staged_events(spark, SF_DIR, "split") and sp not in (p1, fl)
+    parts = _parquet_parts(sp)
+    assert len(parts) == 2 and parts[0][0] < parts[1][0]
+    cutoff = F.lit("2024-01-15").cast("timestamp")
+    early, late = (spark.read.parquet(os.path.join(sp, f)) for _t, f in parts)
+    assert early.columns == late.columns == ["user_id", "event_id", "ts", "value"]
+    assert early.filter(F.col("ts") >= cutoff).count() == 0 < early.count()
+    assert late.filter(F.col("ts") < cutoff).count() == 0 < late.count()
+    events = spark.read.parquet(p1)
+    assert early.count() + late.count() == events.count()
+
+
+def test_staged_custom_keys_on_input_fingerprint(spark, tmp_path):
+    """A mutated input table re-stages instead of serving stale files."""
+    import shutil
+
+    src_dir = str(tmp_path / "sfx")
+    os.makedirs(src_dir)
+    src = f"{SF_DIR}/events.parquet"
+    dst = f"{src_dir}/events.parquet"
+    if os.path.isdir(src):
+        shutil.copytree(src, dst)
+    else:
+        shutil.copy(src, dst)
+    calls = []
+
+    def build(path):
+        calls.append(path)
+        os.makedirs(path, exist_ok=True)
+
+    a = staged_custom(spark, src_dir, "t13", build)
+    b = staged_custom(spark, src_dir, "t13", build)
+    assert a == b and len(calls) == 1
+    # mutate the input: the memo must rebuild under a fresh key
+    stamp = time.time() + 5
+    if os.path.isdir(dst):
+        victim = next(
+            os.path.join(root, f)
+            for root, _d, fs in os.walk(dst)
+            for f in fs
+        )
+    else:
+        victim = dst
+    os.utime(victim, (stamp, stamp))
+    c = staged_custom(spark, src_dir, "t13", build)
+    assert c != a and len(calls) == 2
+
+
+def test_state_partitions_env_override(spark, monkeypatch):
+    monkeypatch.setenv(util.STATE_PARTITIONS_ENV, "17")
+    assert util.state_partitions(spark, None) == "17"
+
+
+def test_state_partitions_volume_ladder(spark, monkeypatch, tmp_path):
+    monkeypatch.delenv(util.STATE_PARTITIONS_ENV, raising=False)
+    # no src / tiny src: the floor
+    assert util.state_partitions(spark, None) == str(
+        util.STATE_PARTITIONS_FLOOR
+    )
+    small = tmp_path / "small"
+    small.mkdir()
+    (small / "a.parquet").write_bytes(b"x" * 1024)
+    assert util.state_partitions(spark, str(small)) == str(
+        util.STATE_PARTITIONS_FLOOR
+    )
+    # large src: one partition per STATE_TARGET_BYTES, capped at cores
+    monkeypatch.setattr(util, "_dir_bytes", lambda p: 6 * util.STATE_TARGET_BYTES)
+    derived = int(util.state_partitions(spark, str(small)))
+    cores = spark.sparkContext.defaultParallelism
+    assert derived == min(6, cores) and derived >= util.STATE_PARTITIONS_FLOOR
+    monkeypatch.setattr(
+        util, "_dir_bytes", lambda p: 10_000 * util.STATE_TARGET_BYTES
+    )
+    assert int(util.state_partitions(spark, str(small))) == cores

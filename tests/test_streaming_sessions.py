@@ -1,13 +1,24 @@
 """Stateful streaming sessionizer vs the batch window implementation: the
 sessions a single availableNow pass can CLOSE (every session except each
-user's final, still-open one) must match the batch operator exactly."""
+user's final, still-open one) must match the batch operator exactly. Both
+gap folds are also driven directly over simulated micro-batches against a
+pandas twin."""
 
 from __future__ import annotations
 
+import functools
+import operator
+
+import numpy as np
+import pandas as pd
+from pandas.testing import assert_frame_equal
 from pyspark.sql import functions as F
 
 from data_engineer_interview_task_spark.operators import relational
 from data_engineer_interview_task_spark.streaming import run_sessionize_once
+from tests.test_streaming_stateful import _DictState, _drive, _frames
+
+GAP = 30
 
 
 def test_stateful_sessions_match_batch(spark, sf_dir):
@@ -141,3 +152,118 @@ def test_builtin_session_window_stream_equals_batch(spark, sf_dir):
     assert sorted(map(tuple, streamed.select(cols).collect())) == sorted(
         map(tuple, batch.select(cols).collect())
     )
+
+
+def _session_batches() -> list[pd.DataFrame]:
+    """Three time-ordered micro-batches of (user_id, event_id, ts, value),
+    each shuffled. ``ts`` sits on a 10-minute grid, so equal timestamps and
+    gaps of exactly ``GAP`` minutes are both common; users 0-4 stop after
+    the first batch, so their open sessions can time out mid-stream."""
+    rng = np.random.default_rng(5)
+    n = 900
+    events = pd.DataFrame(
+        {
+            "user_id": rng.integers(0, 20, n),
+            "event_id": rng.permutation(n).astype("int64"),
+            "ts": pd.Timestamp("2024-03-01")
+            + pd.to_timedelta(rng.integers(0, 90, n) * 10, unit="min"),
+            "value": rng.integers(0, 100_000, n) / 100.0,
+        }
+    )
+    t = events.ts - pd.Timestamp("2024-03-01")
+    cuts = [pd.Timedelta(hours=5), pd.Timedelta(hours=10)]
+    parts = [t < cuts[0], (t >= cuts[0]) & (t < cuts[1]), t >= cuts[1]]
+    parts[1] &= events.user_id >= 5
+    parts[2] &= events.user_id >= 5
+    return [
+        events[p].sample(frac=1.0, random_state=i).reset_index(drop=True)
+        for i, p in enumerate(parts)
+    ]
+
+
+def _sessions_twin(batches: list[pd.DataFrame]) -> pd.DataFrame:
+    """Every gap session of the whole history in pandas, with
+    ``open=True`` on each user's last one. Values add left to right, as
+    the fold adds them."""
+    ev = pd.concat(batches).sort_values(["user_id", "ts", "event_id"])
+    gap = ev.groupby("user_id")["ts"].diff() > pd.Timedelta(minutes=GAP)
+    ev["sid"] = gap.groupby(ev["user_id"]).cumsum()
+    out = (
+        ev.groupby(["user_id", "sid"])
+        .agg(
+            session_start=("ts", "min"),
+            session_end=("ts", "max"),
+            n_events=("ts", "size"),
+            total_value=(
+                "value",
+                lambda v: functools.reduce(operator.add, v.tolist(), 0.0),
+            ),
+        )
+        .reset_index()
+    )
+    out["open"] = out["sid"] == out.groupby("user_id")["sid"].transform("max")
+    diffs = ev.groupby("user_id")["ts"].diff()
+    # the batches must hold both equal timestamps and gaps of exactly GAP
+    assert (diffs == pd.Timedelta(0)).any()
+    assert (diffs == pd.Timedelta(minutes=GAP)).any()
+    return out.drop(columns="sid")
+
+
+def _sorted(frame: pd.DataFrame) -> pd.DataFrame:
+    cols = ["user_id", "session_start", "session_end", "n_events", "total_value"]
+    frame = frame[cols].astype({"user_id": "int64", "n_events": "int64"})
+    return frame.sort_values(cols[:2]).reset_index(drop=True)
+
+
+def test_sessionize_fold_matches_pandas_twin():
+    """The NoTimeout gap fold over three micro-batches (each user's rows
+    shuffled and cut into three frames) emits exactly the twin's closed
+    sessions: every session but each user's last."""
+    from data_engineer_interview_task_spark.streaming.sessions import _sessionize_fold
+
+    batches = _session_batches()
+    emitted = _drive(_sessionize_fold(GAP), batches)
+    got = _sorted(pd.concat(f for frames in emitted.values() for f in frames))
+    twin = _sessions_twin(batches)
+    want = _sorted(twin[~twin.open])
+    assert len(want) > 50
+    assert_frame_equal(got, want, check_exact=True)
+
+
+def test_flushing_fold_matches_pandas_twin():
+    """The watermark-flushing fold over the same batches, with timeouts
+    fired as Spark fires them (after a batch's data groups, for keys
+    without data whose timeout is below the watermark of the batches
+    before) and a final watermark past every event: it emits every one of
+    the twin's sessions, open ones included, some of them mid-stream."""
+    from data_engineer_interview_task_spark.streaming.sessions import _flushing_fold
+
+    fold = _flushing_fold(GAP)
+    batches = _session_batches()
+    store: dict = {}
+    timeouts: dict = {}
+    emitted: list[pd.DataFrame] = []
+    flushed_mid_stream = 0
+
+    def fire(watermark_ms, skip=()):
+        fired = 0
+        for uid in sorted(k for k, ms in timeouts.items() if ms < watermark_ms):
+            if uid not in skip:
+                state = _DictState(store, uid, timeouts, timed_out=True)
+                emitted.extend(fold((uid,), iter(()), state))
+                fired += 1
+        return fired
+
+    watermark_ms = None
+    for batch in batches:
+        for uid, group in batch.groupby("user_id"):
+            state = _DictState(store, uid, timeouts)
+            emitted.extend(fold((uid,), iter(_frames(group)), state))
+        if watermark_ms is not None:
+            flushed_mid_stream += fire(watermark_ms, skip=set(batch.user_id))
+        watermark_ms = batch.ts.max().value // 1_000_000
+    fire(float("inf"))
+
+    assert flushed_mid_stream > 0 and not store and not timeouts
+    got = _sorted(pd.concat(emitted))
+    assert_frame_equal(got, _sorted(_sessions_twin(batches)), check_exact=True)

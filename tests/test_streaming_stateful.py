@@ -1,24 +1,21 @@
-"""Running per-user aggregate via arbitrary stateful streaming.
-
-The GroupState implementation (`applyInPandasWithState`) is the
-registered, everywhere-runnable form; transformWithStateInPandas is the
-Spark 4.x successor API whose Python state client needs protobuf —
-absent in this container, so its test skip-guards on availability (the
-same honest-seam pattern as the multimodal codecs).
-"""
+"""Per-user state folded across micro-batches on the one fold kernel
+(``stateful.group_fold``): the registered harnesses against their batch
+twins, the cross-batch state path, each fold driven directly over
+simulated micro-batches against a pandas twin, and a source scan that
+keeps the kernel the only fold body in the package."""
 from __future__ import annotations
+
+import ast
+import pathlib
 
 import numpy as np
 import pandas as pd
-import pytest
 from pandas.testing import assert_frame_equal
 from pyspark.sql import functions as F
 
+import data_engineer_interview_task_spark
 from data_engineer_interview_task_spark.sources import read_table
-from data_engineer_interview_task_spark.streaming import (
-    run_running_user_stats_once,
-    transform_with_state_available,
-)
+from data_engineer_interview_task_spark.streaming import run_running_user_stats_once
 
 
 def _batch_reference(spark, sf_dir):
@@ -87,42 +84,6 @@ def test_running_stats_state_is_exercised_across_batches(spark, sf_dir, tmp_path
         assert v[0][1] < v[1][1]  # running count strictly grows
 
 
-@pytest.mark.skipif(
-    not transform_with_state_available(),
-    reason="transformWithStateInPandas state client needs protobuf "
-    "(pyspark.sql.streaming.proto), not present in this environment",
-)
-def test_transform_with_state_twin_equals_batch(spark, sf_dir):
-    out = run_running_user_stats_once(
-        spark, sf_dir, use_transform_with_state=True
-    )
-    got = {r.user_id: (r.n_events, r.total_value) for r in out.collect()}
-    assert got == _batch_reference(spark, sf_dir)
-
-
-def test_transform_with_state_seam_shape():
-    """Even without protobuf, the TWS processor class must keep the
-    documented shape so the swap is a flag flip when the dependency
-    lands: a StatefulProcessor with the three lifecycle methods and the
-    same output schema as the GroupState twin."""
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    from data_engineer_interview_task_spark.streaming.stateful import (
-        RUNNING_SCHEMA,
-        RunningUserStats,
-    )
-
-    assert issubclass(RunningUserStats, StatefulProcessor)
-    for m in ("init", "handleInputRows", "close"):
-        assert callable(getattr(RunningUserStats, m))
-    assert [f.name for f in RUNNING_SCHEMA.fields] == [
-        "user_id",
-        "n_events",
-        "total_cents",
-        "batch_seq",
-    ]
-
-
 def test_streaming_ewma_equals_batch_fold_bitwise(spark, sf_dir):
     from data_engineer_interview_task_spark.operators import relational
     from data_engineer_interview_task_spark.streaming import run_user_ewma_once
@@ -188,10 +149,15 @@ def test_streaming_ewma_crosses_batch_boundary(spark, sf_dir, tmp_path):
 
 
 class _DictState:
-    """The slice of ``GroupState`` a NoTimeout fold uses, over a dict."""
+    """The slice of ``GroupState`` the folds use, over dicts: ``store``
+    maps a key to its state tuple and ``timeouts`` to its event-time
+    timeout in ms; ``timed_out`` marks a call made because the key's
+    timeout fired."""
 
-    def __init__(self, store: dict, key):
+    def __init__(self, store: dict, key, timeouts=None, timed_out=False):
         self._store, self._key = store, key
+        self._timeouts = {} if timeouts is None else timeouts
+        self._timed_out = timed_out
 
     @property
     def exists(self) -> bool:
@@ -201,8 +167,38 @@ class _DictState:
     def get(self) -> tuple:
         return self._store[self._key]
 
+    @property
+    def hasTimedOut(self) -> bool:
+        return self._timed_out
+
     def update(self, value) -> None:
         self._store[self._key] = tuple(value)
+
+    def remove(self) -> None:
+        del self._store[self._key]
+        self._timeouts.pop(self._key, None)
+
+    def setTimeoutTimestamp(self, ms: int) -> None:
+        self._timeouts[self._key] = ms
+
+
+def _frames(group: pd.DataFrame, parts: int = 3) -> list[pd.DataFrame]:
+    """``group`` cut into ``parts`` consecutive frames, as a micro-batch's
+    Arrow batches deliver one user's rows."""
+    cuts = np.linspace(0, len(group), parts + 1).astype(int)
+    return [group.iloc[a:b] for a, b in zip(cuts[:-1], cuts[1:])]
+
+
+def _drive(fold, batches: list[pd.DataFrame]) -> dict:
+    """Run ``fold`` over ``batches`` as successive micro-batches with a
+    dict-backed state; returns each user's emitted frames in order."""
+    store: dict = {}
+    emitted: dict = {}
+    for batch in batches:
+        for uid, group in batch.groupby("user_id"):
+            for out in fold((uid,), iter(_frames(group)), _DictState(store, uid)):
+                emitted.setdefault(uid, []).append(out)
+    return emitted
 
 
 def _ewma_batches():
@@ -264,3 +260,78 @@ def test_ewma_fold_matches_pandas_recurrence():
     )
     assert (got["n_events"] > 1).all() and len(got) == 15
     assert_frame_equal(got, want, check_exact=True)
+
+
+def test_running_fold_matches_pandas_totals():
+    """The running-totals fold driven directly over two time-split
+    micro-batches (each shuffled, each user's rows in three frames):
+    each user's last emission equals pandas' count and integer-cents sum
+    over all of the user's events, and ``batch_seq`` counts the batches
+    the user appeared in."""
+    from data_engineer_interview_task_spark.streaming.stateful import _running_fold
+
+    rng = np.random.default_rng(7)
+    n = 600
+    cents = rng.integers(0, 100_000, n)
+    events = pd.DataFrame(
+        {
+            "user_id": rng.integers(0, 15, n),
+            "ts": rng.integers(0, 40, n) * 60_000_000,
+            "value": cents / 100.0,
+            "cents": cents,
+        }
+    )
+    cutoff = 25 * 60_000_000
+    batches = [
+        part.sample(frac=1.0, random_state=i).reset_index(drop=True)
+        for i, part in enumerate(
+            (events[events.ts < cutoff], events[events.ts >= cutoff])
+        )
+    ]
+    emitted = _drive(_running_fold, batches)
+    got = (
+        pd.concat(frames[-1] for frames in emitted.values())
+        .sort_values("user_id")
+        .reset_index(drop=True)
+    )
+
+    by_user = events.groupby("user_id")
+    seen = pd.concat(b[["user_id"]].drop_duplicates() for b in batches)
+    want = pd.DataFrame(
+        {
+            "user_id": by_user.size().index.astype("int64"),
+            "n_events": by_user.size().to_numpy().astype("int64"),
+            "total_cents": by_user["cents"].sum().to_numpy().astype("int64"),
+            "batch_seq": seen.groupby("user_id").size().to_numpy().astype("int64"),
+        }
+    )
+    assert (want["batch_seq"] == 2).all() and len(got) == 15
+    assert_frame_equal(got, want, check_exact=True)
+
+
+def test_group_fold_is_the_only_fold_body():
+    """The package has one grouped-state fold body: ``applyInPandasWithState(``
+    is called from one function (``stateful.stateful_stream``), state is
+    written only in ``stateful.group_fold``, and no ``StatefulProcessor``
+    twin is left."""
+    root = pathlib.Path(data_engineer_interview_task_spark.__file__).parent
+    found: dict[str, list[str]] = {"applyInPandasWithState(": [], "state.update(": []}
+    for path in sorted(root.rglob("*.py")):
+        src = path.read_text()
+        assert "StatefulProcessor" not in src, path
+        owners = {
+            node.name: ast.get_source_segment(src, node)
+            for node in ast.parse(src).body
+            if isinstance(node, ast.FunctionDef)
+        }
+        for needle, where in found.items():
+            in_functions = 0
+            for name, body in owners.items():
+                if needle in body:
+                    where.append(f"{path.relative_to(root)}::{name}")
+                    in_functions += body.count(needle)
+            assert src.count(needle) == in_functions, (path, needle)
+    assert found == {
+        "applyInPandasWithState(": ["streaming/stateful.py::stateful_stream"],
+        "state.update(": ["streaming/stateful.py::group_fold"],
+    }
